@@ -5,13 +5,17 @@ JSON line:
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-value = total wall-clock over the headline set (lower is better).
+value = total wall-clock over the headline set (lower is better).  Extras
+and the scale tiers go to stderr and the BENCH_extras*.json sidecar; each
+tier runs as `bench.py --scale-tier <factor> <sf_dir>` in its own process.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -205,9 +209,59 @@ EXTRA = [
 ]
 
 
-class _HeadlineOnly(Exception):
-    """Control-flow marker: SPARK_GRAFT_BENCH_HEADLINE_ONLY=1 skips the
-    extras and scale tiers for fast variance re-measurement."""
+# Scale tiers: corpus factor -> entries, timed on a factor-x corpus built
+# from $SPARK_GRAFT_SF_DIR by _make_scaled_dir (text word order
+# hash-permuted per replica so replicas are not near-dups; embeddings
+# rotated so directions decorrelate).  Sub-linear growth between tiers is
+# the empirical check on the "bucketed, not all-pairs" design claims.  An
+# entry is a registry query name, or a SCALE_FIXTURES name when the gate's
+# own call shape does not scale.
+SCALE_TIERS = {
+    30: [
+        "dedup_exact",
+        "dedup_minhash_lsh",
+        "dedup_ngram_jaccard",
+        "dedup_embedding_cosine_pruned",
+        "corpus_curation_pipeline",
+        "similarity_ivf",
+        # near-clique dedup graph, so propagation should stay ahead; the
+        # cc_chain fixtures below are where star/hybrid win
+        "dedup_connected_components",
+        "dedup_connected_components_star",
+        "dedup_connected_components_hybrid",
+        "dedup_winnowing_fingerprints",
+        # substring REWRITE is gram-linear with the df cap bounding the
+        # pair fan-out, same contract as minhash
+        "dedup_substring_clean",
+        "corpus_domain_quality_filter",
+        # IVF-PQ: ADC volume is nprobe/n_cells of the corpus
+        "similarity_ivf_pq_topk",
+        # NSW walk: the banded graph build plus queries x beam rows per hop
+        "similarity_graph_search",
+        # k-means is iterations x one scan + model-sized collects; LPA is
+        # rounds x (vertex join + argmax groupBy)
+        "cluster_kmeans_embeddings",
+        "graph_label_propagation",
+        "dedup_embedding_auto_t90",
+        "graph_kcore",
+        "similarity_knn_graph",
+        "cc_chain_propagation",
+        "cc_chain_star",
+        "cc_chain_hybrid",
+    ],
+    # the second decade, on the core curation family the dedup/ANN claims
+    # rest on (sf1-equivalent from sf0.1)
+    100: [
+        "dedup_exact",
+        "dedup_minhash_lsh",
+        "corpus_curation_pipeline",
+        "dedup_connected_components_hybrid",
+        "similarity_ivf_pq_topk",
+        "dedup_embedding_auto_t90",
+    ],
+    # one more decade on the entry closest to linear
+    300: ["dedup_minhash_lsh"],
+}
 
 
 def _calibrate(n: int = 15_000_000) -> float:
@@ -265,33 +319,10 @@ def _sidecar_target(prev, sf, loadavg, repo_dir: str) -> tuple:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    # Host-state annotations BEFORE the JVM spins up: a 1-min load average
-    # over ~2 means another workload (e.g. the correctness sweep) is still
-    # draining and every timing below will be inflated — annotate loudly
-    # rather than refuse, so the driver's invocation always yields a line.
-    # Headline load-drain (VERDICT r10 #5, tightened per VERDICT r12 #8):
-    # the driver's end-of-round invocation lands right after the
-    # correctness sweep, and r10's committed record ran at loadavg 4.65 ->
-    # 76.8 s (2.76x the idle anchor).  Two of three r12 records started at
-    # 1-min load ~1.0 with the 5-min average still ~1.5 — drained by the
-    # old 1-min<1.0 rule but demonstrably still inflated.  Wait until BOTH
-    # the 1-min and 5-min averages are under 0.4 (cap 4 min), then
-    # proceed-with-warning if the host never cools — the driver must
-    # always get a line.
-    try:
-        waited = 0.0
-        while max(os.getloadavg()[:2]) > 0.4 and waited < 240.0:
-            time.sleep(5.0)
-            waited += 5.0
-        if waited:
-            la = os.getloadavg()
-            print(
-                f"BENCH-HEADLINE-DRAIN: waited {waited:.0f}s for load "
-                f"{la[0]:.2f}/{la[1]:.2f}",
-                file=sys.stderr,
-            )
-    except OSError:
-        pass
+    # Headline drain waits on BOTH the 1-min and 5-min averages: two of
+    # three r12 records started at 1-min load ~1.0 with the 5-min average
+    # still ~1.5, and were demonstrably inflated.
+    _drain("BENCH-HEADLINE-DRAIN", (0.4, 0.4))
     try:
         loadavg = round(os.getloadavg()[0], 2)
     except OSError:
@@ -311,48 +342,16 @@ def main() -> None:
 
     # Warm the JVM/session so per-query numbers measure the plan, not init.
     registry.QUERIES["agg_pricing_summary"](spark, sf_dir).count()
-    # Warm the Structured-Streaming machinery too (micro-batch engine, state
-    # store and sink classes JIT on first use — ~2s of fixed cost that would
-    # otherwise land on the first streaming query's measurement).  The warmup
-    # runs a minimal availableNow file-stream at the smallest SF.
     try:
-        # session-window warms the STATEFUL machinery (state store
-        # provider, watermark tracking, streaming JIT) WITHOUT pre-running
-        # any HEADLINE query — streaming_windowed_agg itself still runs
-        # cold, so round-over-round trend numbers stay comparable
+        # session-window warms the STATEFUL streaming machinery (state
+        # store provider, watermark tracking, streaming JIT — ~2 s of fixed
+        # cost) WITHOUT pre-running any HEADLINE query, so
+        # streaming_windowed_agg itself still runs cold and round-over-round
+        # trend numbers stay comparable
         registry.QUERIES["streaming_session_window"](spark, "/root/testdata/sf0.001").count()
     except Exception:
         pass  # warmup is best-effort; the measured query still runs cold
-    try:
-        # spin up the Python/Arrow worker pool (pyspark daemon fork, Arrow
-        # + numpy import in each worker) with a no-op mapInPandas — the
-        # pandas-kernel queries (similarity_*, dedup_embedding_*) otherwise
-        # pay ~1-2 s of one-time process startup inside their measurement.
-        # No HEADLINE query or table is touched.
-        spark.range(64, numPartitions=8).mapInPandas(
-            lambda it: it, "id long"
-        ).count()
-    except Exception:
-        pass
-    try:
-        # warm the whole-stage-codegen COMPILER (janino) on the session's
-        # biggest generated classes: the first wide-aggregate compile in a
-        # fresh JVM pays 5-15 s of one-time compiler/JIT cost (measured),
-        # dwarfing the actual sf0.1 work.  Run the minhash-LSH pipeline
-        # SHAPE on a 20-row in-memory frame — identical expression tree,
-        # so the codegen cache is hot when the measured query compiles the
-        # same classes; no HEADLINE table or query is pre-run.
-        from pyspark.sql import functions as _F
-
-        from moosestack_spark.ops.dedup import minhash_lsh_pairs
-
-        tiny = spark.createDataFrame(
-            [(i, "w%d x y z q r s t u v" % (i % 3)) for i in range(20)],
-            "doc_id long, text string",
-        )
-        minhash_lsh_pairs(tiny, "doc_id", "text", n=5, threshold=0.5).count()
-    except Exception:
-        pass
+    _warm_up(spark)
 
     def run_suite(names: list[str]) -> dict[str, float | None]:
         out: dict[str, float | None] = {}
@@ -371,23 +370,15 @@ def main() -> None:
         return out
 
     timings = run_suite(HEADLINE)
-    # SPARK_GRAFT_BENCH_HEADLINE_ONLY=1 skips extras + the scale tier — a
-    # fast re-measurement knob for variance checks; the driver's default
-    # invocation (no env) is unchanged.
-    headline_only = os.environ.get("SPARK_GRAFT_BENCH_HEADLINE_ONLY") == "1"
     # Scaling probe (VERDICT r12 #3): the driver re-runs bench.py at a
     # LOWER core count to measure per-query parallel scaling, but the full
-    # extras + 30x/100x/300x tiers cannot finish at 8 cores inside its
-    # timeout (BENCH_r12_c8 exited rc 124, leaving PERF's scaling block
-    # empty).  The scaling evidence lives entirely in the headline
-    # `queries` dict of the one-line JSON, so a low-core invocation skips
-    # the sidecar work: headline per-query numbers land within the
-    # timeout, extras/tiers remain the full-core run's artifact.
+    # extras + scale tiers cannot finish at 8 cores inside its timeout
+    # (BENCH_r12_c8 exited rc 124).  The scaling evidence lives entirely in
+    # the headline `queries` dict of the one-line JSON, so a low-core
+    # invocation skips the sidecar work.
     host_cpus = os.cpu_count() or 32
-    if not headline_only and _is_low_core_probe(
-        os.environ.get("SPARK_GRAFT_CPUS"), host_cpus
-    ):
-        headline_only = True
+    headline_only = _is_low_core_probe(os.environ.get("SPARK_GRAFT_CPUS"), host_cpus)
+    if headline_only:
         print(
             f"BENCH-SCALING-PROBE: SPARK_GRAFT_CPUS="
             f"{os.environ.get('SPARK_GRAFT_CPUS')} < host {host_cpus} "
@@ -400,46 +391,29 @@ def main() -> None:
     # extra_queries still gives per-round perf evidence for recent work.
     extras = {} if headline_only else run_suite(EXTRA)
 
-    # TRUE fresh JVM for the scale tier, via a SUBPROCESS.  Round 7 tried
-    # spark.stop() + get_spark() in-process, but PySpark reuses the same
-    # JVM through the persistent py4j gateway, so the "fresh session" kept
-    # the hot JVM's accumulated JIT/GC/listener state and the early scale
-    # queries still ran 2-10x slow (measured this round: minhash 30x at
-    # 69 s in-tier vs 9.8 s in a genuinely fresh process, idle machine both
-    # times).  The scale tier is the artifact the 100 TB claims rest on, so
-    # it now runs in its own python+JVM; startup is outside every timer.
-    SCALE_FACTOR = 30
-    scale_queries: dict = {}
-    scale_queries_100x: dict = {}
-    scale_queries_300x: dict = {}
+    # Each scale tier runs in its own python+JVM SUBPROCESS.  spark.stop()
+    # + get_spark() in-process reuses the same JVM through the py4j
+    # gateway, and the hot JVM's accumulated JIT/GC/listener state slowed
+    # the early scale queries 2-10x (minhash 30x: 69 s in-process vs 9.8 s
+    # in a fresh process, idle machine both times).  Startup is outside
+    # every timer.
+    tiers: dict = {factor: {} for factor in SCALE_TIERS}
     if not headline_only:
         spark.stop()
-        import subprocess
-
-        for flag, sink in (
-            ("--scale-tier", scale_queries),
-            ("--scale-tier-100", scale_queries_100x),
-            ("--scale-tier-300", scale_queries_300x),
-        ):
+        for factor, sink in tiers.items():
             try:
                 proc = subprocess.run(
-                    [
-                        sys.executable,
-                        os.path.abspath(__file__),
-                        flag,
-                        sf_dir,
-                    ],
+                    [sys.executable, os.path.abspath(__file__),
+                     "--scale-tier", str(factor), sf_dir],
                     capture_output=True,
                     text=True,
                     timeout=3600,
                 )
                 sys.stderr.write(proc.stderr[-4000:])
-                sink.update(
-                    json.loads(proc.stdout.strip().splitlines()[-1])
-                )
+                sink.update(json.loads(proc.stdout.strip().splitlines()[-1]))
             except Exception as exc:
                 print(
-                    f"BENCH-SCALE-SETUP-ERROR ({flag}): {exc!r}"[:500],
+                    f"BENCH-SCALE-SETUP-ERROR ({factor}x): {exc!r}"[:500],
                     file=sys.stderr,
                 )
 
@@ -449,9 +423,7 @@ def main() -> None:
     # (~1.3 kB); extras + scale tiers go to stderr AND a sidecar file so
     # per-round perf evidence for newer operators is still committed.
     try:
-        import subprocess as _sp
-
-        git_rev = _sp.run(
+        git_rev = subprocess.run(
             ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
              "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True, timeout=10,
@@ -460,33 +432,15 @@ def main() -> None:
         git_rev = None
     sidecar = {
         "extra_queries": extras,
-        "scale_queries": {"factor": SCALE_FACTOR, **scale_queries},
-        "scale_queries_100x": {"factor": 100, **scale_queries_100x},
-        # 300x spot entry (VERDICT r11 #6): ONE more decade of evidence on
-        # the entry closest to linear — dedup_minhash_lsh only
-        "scale_queries_300x": {"factor": 300, **scale_queries_300x},
-        # the scale claim, measured two decades out: per-query growth
-        # 30x -> 100x (corpus grows 3.33x; sub-linear operators stay
-        # under ~3.3x)
-        "scale_growth_100x_over_30x": {
-            k: round(v / scale_queries[k], 2)
-            for k, v in scale_queries_100x.items()
-            if not k.endswith(("_raw", "_mode", "_error"))
-            and k != "factor"
-            and isinstance(v, (int, float))
-            and isinstance(scale_queries.get(k), (int, float))
-            and scale_queries[k] > 0
+        **{
+            "scale_queries" + _tier_suffix(f): {"factor": f, **t}
+            for f, t in tiers.items()
         },
-        # 100x -> 300x corpus step is 3.0x; sub-linear stays under ~3.3
-        "scale_growth_300x_over_100x": {
-            k: round(v / scale_queries_100x[k], 2)
-            for k, v in scale_queries_300x.items()
-            if not k.endswith(("_raw", "_mode", "_error"))
-            and k != "factor"
-            and isinstance(v, (int, float))
-            and isinstance(scale_queries_100x.get(k), (int, float))
-            and scale_queries_100x[k] > 0
-        },
+        # per-query growth between tiers: the corpus grows 3.33x from 30x
+        # to 100x and 3.0x from 100x to 300x, so sub-linear operators stay
+        # under ~3.3x
+        "scale_growth_100x_over_30x": _growth(tiers[100], tiers[30]),
+        "scale_growth_300x_over_100x": _growth(tiers[300], tiers[100]),
         "sf": sf,
         "calib_sec": calib,
         "loadavg_start": loadavg,
@@ -498,66 +452,39 @@ def main() -> None:
         "headline_norm_units": round(total / calib, 3) if calib else None,
         "scale_norm_units": {
             k: (round(v / calib, 3) if isinstance(v, (int, float)) and calib else v)
-            for k, v in scale_queries.items()
-            if not k.endswith(("_raw", "_mode", "_error")) and k != "factor"
+            for k, v in tiers[30].items()
+            if not k.endswith(("_raw", "_error"))
         },
-        # self-reported raw spread (max/min of the timed triple) per scale
-        # query: after the warmup lap removed per-shape codegen, residual
-        # spread is single-run host/GC spikes on this shared VM — the
-        # MEDIAN is the comparable statistic, and a spread near 1.0 marks
-        # queries whose raw numbers can be compared directly.  The window
-        # (tail-3 vs central-3) follows the recorded <name>_mode, so the
-        # spread always describes the same runs the median came from.
-        "scale_spread": {
-            k[: -len("_raw")]: _spread(
-                v, scale_queries.get(k[: -len("_raw")] + "_mode")
-            )
-            for k, v in scale_queries.items()
-            if k.endswith("_raw")
-        },
-        "scale_spread_100x": {
-            k[: -len("_raw")]: _spread(
-                v, scale_queries_100x.get(k[: -len("_raw")] + "_mode")
-            )
-            for k, v in scale_queries_100x.items()
-            if k.endswith("_raw")
-        },
-        "scale_spread_300x": {
-            k[: -len("_raw")]: _spread(
-                v, scale_queries_300x.get(k[: -len("_raw")] + "_mode")
-            )
-            for k, v in scale_queries_300x.items()
-            if k.endswith("_raw")
+        # max/min of each entry's three timed laps: how far the median can
+        # be trusted; a spread near 1.0 marks laps comparable directly
+        **{
+            "scale_spread" + _tier_suffix(f): {
+                k[: -len("_raw")]: _spread(v)
+                for k, v in t.items()
+                if k.endswith("_raw")
+            }
+            for f, t in tiers.items()
         },
     }
     print(json.dumps(sidecar), file=sys.stderr)
-    try:
-        if headline_only:
-            raise _HeadlineOnly  # never clobber the committed sidecar
+    if not headline_only:  # a headline-only run never clobbers the sidecar
         repo_dir = os.path.dirname(os.path.abspath(__file__))
-        sidecar_path = os.path.join(repo_dir, "BENCH_extras.json")
-        # Clobber guard (VERDICT r8 "what's wrong" #1): the driver's
-        # end-of-round invocation runs right after the correctness sweep,
-        # so its scale numbers can be load-inflated; round 8's run
-        # overwrote the committed idle median-of-3 record with
-        # loadavg-6.38 numbers.  If a sidecar from the SAME code revision
-        # with a LOWER starting load already exists, this run's record
-        # goes to BENCH_extras.hot.json instead — the clean record
-        # survives, the hot one is still persisted with its provenance.
+        # Clobber guard (VERDICT r8 "what's wrong" #1): a load-inflated or
+        # other-SF run must not overwrite the committed clean record; see
+        # _sidecar_target for where it goes instead.
         try:
-            with open(sidecar_path) as fh:
+            with open(os.path.join(repo_dir, "BENCH_extras.json")) as fh:
                 prev = json.load(fh)
         except (OSError, ValueError):
             prev = None  # no prior sidecar or unreadable: write fresh
         target, why = _sidecar_target(prev, sf, loadavg, repo_dir)
         if why:
             print(f"BENCH-SIDECAR-GUARD: {why}", file=sys.stderr)
-        with open(target, "w") as fh:
-            json.dump(sidecar, fh, indent=1)
-    except _HeadlineOnly:
-        pass
-    except OSError as exc:
-        print(f"BENCH-SIDECAR-ERROR: {exc!r}", file=sys.stderr)
+        try:
+            with open(target, "w") as fh:
+                json.dump(sidecar, fh, indent=1)
+        except OSError as exc:
+            print(f"BENCH-SIDECAR-ERROR: {exc!r}", file=sys.stderr)
     line = json.dumps(
         {
             "metric": "headline_suite_total_sec",
@@ -581,6 +508,71 @@ def main() -> None:
             }
         )
     print(line)
+
+
+def _drain(label: str, limits: tuple) -> None:
+    """Wait (cap 4 min) until the load averages are under ``limits`` —
+    1-min first, then 5-min when a second limit is given — before any
+    timer starts.  bench.py runs right after other heavy work (the
+    correctness sweep, the headline+extras suite), and a still-draining
+    host inflates the first timed queries 2-3x (measured: minhash 28.7 s at
+    1-min load 1.6 vs 8.0 s at 0.02; r10's headline 76.8 s at load 4.65).
+    A host that never cools proceeds with a note, so the driver always
+    gets a line."""
+    try:
+        waited = 0.0
+        while waited < 240.0 and any(
+            avg > lim for avg, lim in zip(os.getloadavg(), limits)
+        ):
+            time.sleep(5.0)
+            waited += 5.0
+        if waited:
+            la = os.getloadavg()
+            print(
+                f"{label}: waited {waited:.0f}s for load {la[0]:.2f}/{la[1]:.2f}",
+                file=sys.stderr,
+            )
+    except OSError:
+        pass
+
+
+def _warm_up(spark) -> None:
+    """Pay a fresh JVM's two one-time costs outside every timer: the
+    Python/Arrow worker pool (pyspark daemon fork, Arrow + numpy import per
+    worker — ~1-2 s inside the first pandas-kernel query) and the
+    whole-stage-codegen compiler on the session's biggest generated
+    classes (the first wide-aggregate compile pays 5-15 s; the first
+    minhash run at 30x paid ~20 s).  The minhash-LSH pipeline SHAPE runs on
+    a 20-row in-memory frame, so no measured query or table is pre-run."""
+    try:
+        from moosestack_spark.ops.dedup import minhash_lsh_pairs
+
+        spark.range(64, numPartitions=8).mapInPandas(
+            lambda it: it, "id long"
+        ).count()
+        tiny = spark.createDataFrame(
+            [(i, "w%d x y z q r s t u v" % (i % 3)) for i in range(20)],
+            "doc_id long, text string",
+        )
+        minhash_lsh_pairs(tiny, "doc_id", "text", n=5, threshold=0.5).count()
+    except Exception as exc:  # best-effort: the measured query still runs
+        print(f"BENCH-WARMUP-WARNING: {exc!r}"[:300], file=sys.stderr)
+
+
+def _tier_suffix(factor: int) -> str:
+    """Sidecar key suffix of a tier: 30x is the unsuffixed original."""
+    return "" if factor == 30 else f"_{factor}x"
+
+
+def _growth(hi: dict, lo: dict) -> dict:
+    """Per-entry median ratio between two tiers, for entries timed in both."""
+    return {
+        k: round(v / lo[k], 2)
+        for k, v in hi.items()
+        if isinstance(v, (int, float))
+        and isinstance(lo.get(k), (int, float))
+        and lo[k] > 0
+    }
 
 
 def _make_scaled_dir(spark, sf_dir: str, factor: int) -> str:
@@ -680,619 +672,217 @@ def _is_low_core_probe(cpus_env: str | None, host_cpus: int) -> bool:
     return 0 < req < host_cpus
 
 
-def _central3(vals: list) -> list:
-    """The central 3 of the sorted list (the median's neighborhood)."""
-    s = sorted(vals)
-    if len(s) > 3:
-        lo = (len(s) - 3) // 2
-        s = s[lo : lo + 3]
-    return s
-
-
-def _is_rising(ok: list) -> bool:
-    """Tail-3 median more than 1.2x the central-3 median: the raw list is
-    TRENDING UP (accumulating JVM/GC/host state), so the tail is
-    contamination, not steady state.  VERDICT r12 #4: FORCE_SETTLE's
-    unconditional tail-3 median was biased UP on monotonically-rising
-    lists (hybrid-CC 100x read 30.7 s settle-mode where the same-code
-    interleaved A/B measured 21.8 s); a rising list must fall back to the
-    central median and stop burning extra settle runs."""
-    if len(ok) < 4:
-        return False
-    t = sorted(ok[-3:])
-    c = _central3(ok)
-    return t[len(t) // 2] > 1.2 * c[len(c) // 2]
-
-
-def _is_decaying(ok: list) -> bool:
-    """A raw list whose FIRST run is >= 1.5x its LAST is a cold-start
-    decay (JIT compilation, GC heap settling, page-cache fill spanning
-    several runs — the r11 record showed minhash 18.0/24.6/9.1/5.8/4.9
-    and cc_chain_propagation 41.8/46.7/25.5/23.8/24.3), not host noise:
-    the steady state is the TAIL of the sequence, not its center."""
-    return len(ok) >= 3 and ok[0] >= 1.5 * ok[-1]
-
-
-def _spread(v, mode: str | None = None) -> float | None:
-    """max/min over the representative 3-run window: the LAST 3 runs for
-    a cold-start-decaying list (see _is_decaying — the tail is the steady
-    state _timed3's median reports), else the CENTRAL 3 sorted runs — the
-    spread of the median's neighborhood.  When _timed3's escalation took
-    extra runs because a host/GC spike blew the first-3 spread past 1.5x,
-    the spike stays auditable in the *_raw list but no longer defines the
-    spread statistic (VERDICT r9 #3: the median is the comparable number;
-    the spread should say how trustworthy THAT is, not re-report the
-    spike).
-
-    ``mode`` (VERDICT r11 #2): when the sidecar recorded which median
-    mode _timed3 actually used ('settle' = tail-3, 'central' = central-3),
-    the spread uses the SAME window, so the two statistics always describe
-    the same three runs; without a recorded mode the window is re-inferred
-    from the raw list as before."""
-    if not (
-        isinstance(v, list)
-        and v
-        and all(isinstance(x, (int, float)) and x > 0 for x in v)
-    ):
+def _spread(laps) -> float | None:
+    """max/min of an entry's timed laps; None unless every lap succeeded."""
+    if not laps or any(x is None or x <= 0 for x in laps):
         return None
-    settle = mode == "settle" if mode in ("settle", "central") else _is_decaying(v)
-    if settle:
-        s = sorted(v[-3:])
-    else:
-        s = sorted(v)
-        if len(s) > 3:
-            lo = (len(s) - 3) // 2
-            s = s[lo : lo + 3]
-    return round(max(s) / min(s), 2)
-
-
-# Entries with a KNOWN multi-run warm-in (VERDICT r11 #2: the committed
-# curation 100x median read 31.6 s where a same-code idle run read 18.7 s
-# purely because one raw list tripped _is_decaying and the other missed it
-# by a hair).  For these, _timed3 ALWAYS settles — extends until the last-3
-# window stabilizes and reports the tail-3 median — so the statistic's mode
-# can never flip between runs of the same code.
-FORCE_SETTLE = {
-    "corpus_curation_pipeline",
-    "dedup_connected_components_hybrid",
-    # r12-documented multi-run warm-in (23 -> 40 -> 10 -> 8.3 s at 30x:
-    # numpy/BLAS page-in + GC heap growth for the GEMM kernels); settle
-    # mode reports the steady state, and the r13 trend-aware window keeps
-    # a rising list from inflating it.
-    "dedup_embedding_cosine_pruned",
-}
+    return round(max(laps) / min(laps), 2)
 
 
 def _timed3(name: str, fn, cleanup=None) -> tuple:
-    """Median-of-3 with raw runs (VERDICT r8 #5: the 30x tier's 2.6-3.7x
-    run-to-run spread across single-pass records made scale regressions
-    unfalsifiable).  One UNTIMED warmup lap runs first — each query's
-    generated whole-stage-codegen classes are shape-specific, so the
-    first execution pays a 2-8 s one-time compile that is JIT cost, not
-    plan cost (measured: minhash raw triple 12.0/4.6/4.5 without the lap,
-    ~1.1x spread with it) — then 3 timed runs, consecutive per query so
-    host drift between queries doesn't leak into one query's spread;
-    callers persist the raw list next to the median so any reader can
-    audit the spread without trusting the median.  Same philosophy as the
-    r8 headline warmups: measure the plan, not JIT.  ``cleanup`` (if
-    given) runs between attempts, outside every timer.
+    """One untimed warm-up lap, then exactly 3 timed laps; returns
+    ``(median, laps, last_error)``.
 
-    Spread escalation (VERDICT r9 #3): if the first-3 spread (max/min)
-    exceeds 1.5x — single-run host/GC spikes on this shared VM — up to 2
-    extra timed runs are taken and the median widens to 5.  Extra
-    wall-time is paid ONLY by noisy entries; the raw list keeps every
-    attempt so the escalation is auditable."""
-    runs: list = []
+    The warm-up lap pays each query's shape-specific whole-stage-codegen
+    compile (2-8 s of JIT, not plan cost: minhash laps read 12.0/4.6/4.5
+    without it).  The timed laps run back to back so host drift between
+    entries does not leak into one entry's laps.  The median is the middle
+    of the sorted successful laps whatever order they came in, so a rising
+    or decaying list cannot switch the statistic; the raw laps go into the
+    record next to it, and a failed lap is None there.  ``cleanup`` (if
+    given) runs after every lap, outside the timer."""
+    laps: list = []
     errs: list = []
-    try:
-        fn()  # warmup lap: codegen/JIT compile, untimed
-    except Exception as exc:
-        print(f"BENCH-SCALE-ERROR {name} (warmup): {exc!r}"[:500], file=sys.stderr)
-        errs.append(f"warmup: {exc!r}"[:300])
-    if cleanup is not None:
-        cleanup()
-
-    def one_run() -> None:
+    for i in range(4):
         start = time.perf_counter()
         try:
             fn()
-            runs.append(round(time.perf_counter() - start, 3))
+            sec = round(time.perf_counter() - start, 3)
         except Exception as exc:
-            print(f"BENCH-SCALE-ERROR {name}: {exc!r}"[:500], file=sys.stderr)
-            errs.append(f"{exc!r}"[:300])
-            runs.append(None)
+            where = "warmup: " if i == 0 else ""
+            print(f"BENCH-SCALE-ERROR {name}: {where}{exc!r}"[:500], file=sys.stderr)
+            errs.append(f"{where}{exc!r}"[:300])
+            sec = None
+        if i:
+            laps.append(sec)
         if cleanup is not None:
             cleanup()
-
-    for _ in range(3):
-        one_run()
-    ok = [r for r in runs if r is not None]
-    while ok and max(ok) / min(ok) > 1.5 and len(runs) < 5:
-        print(
-            f"BENCH-SCALE-SPREAD {name}: {round(max(ok) / min(ok), 2)}x "
-            f"over {runs} — escalating to median-of-{len(runs) + 1}",
-            file=sys.stderr,
-        )
-        one_run()
-        ok = [r for r in runs if r is not None]
-    # Cold-start decay guard: a monotone-settling raw list (first run
-    # >= 1.5x the last — multi-run JIT/GC/page-cache warm-in, see
-    # _is_decaying) means the MEDIAN of all runs overstates steady state.
-    # Extend until the LAST THREE runs agree within 1.5x (cap 8 total)
-    # and report THEIR median; every attempt stays in the raw list so the
-    # mode is auditable, and _spread applies the same tail-3 window.
-    # FORCE_SETTLE entries always take this branch (VERDICT r11 #2: the
-    # settle/central choice was run-order dependent for queries whose
-    # warm-in sometimes dodged the _is_decaying trigger, and medians from
-    # differently-moded runs of the same code differed 1.7x).
-    force = name in FORCE_SETTLE
-
-    def _tail3(vals: list) -> list:
-        return sorted(vals[-3:])
-
-    while (
-        ok
-        and (force or _is_decaying(ok))
-        and not _is_rising(ok)  # a rising tail never stabilizes — stop early
-        and len(ok) >= 3
-        and _tail3(ok)[-1] / _tail3(ok)[0] > 1.5
-        and len(runs) < 8
-    ):
-        print(
-            f"BENCH-SCALE-SETTLE {name}: raw list {runs} — "
-            f"extending until the last-3 window stabilizes",
-            file=sys.stderr,
-        )
-        one_run()
-        ok = [r for r in runs if r is not None]
-    # Residual-noise guard (VERDICT r11 #4: a committed raw list with
-    # 2.9x total spread still produced a tight-LOOKING central-3): when
-    # the full raw spread exceeds 2x and the list is not settling, take
-    # one more run so the median has a wider neighborhood before it is
-    # trusted.
-    if (
-        ok
-        and not (force or _is_decaying(ok))
-        and max(ok) / min(ok) > 2.0
-        and len(runs) < 8
-    ):
-        print(
-            f"BENCH-SCALE-RESPREAD {name}: raw spread "
-            f"{round(max(ok) / min(ok), 2)}x over {runs} — one extra run",
-            file=sys.stderr,
-        )
-        one_run()
-        ok = [r for r in runs if r is not None]
-    settle = bool(ok) and (force or _is_decaying(ok))
-    # Trend-aware window (VERDICT r12 #4): settle mode exists for lists
-    # that DECAY to a steady state; when the list instead trends UP the
-    # tail-3 median reports the most-contaminated runs.  Fall back to the
-    # central median so a monotonically-rising raw list cannot inflate
-    # the statistic; the recorded mode says which window was used.
-    if settle and _is_rising(ok):
-        settle = False
-    if settle:
-        tail = _tail3(ok)
-        med = tail[len(tail) // 2]
-    else:
-        s = sorted(ok)
-        med = s[len(s) // 2] if s else None
-    # VERDICT r10 #1: an errored entry must carry its error string in the
-    # sidecar, not a silent null — the last error is the diagnostic one.
-    mode = ("settle" if settle else "central") if ok else None
-    return med, runs, (errs[-1] if errs else None), mode
+    ok = sorted(x for x in laps if x is not None)
+    return (ok[len(ok) // 2] if ok else None), laps, (errs[-1] if errs else None)
 
 
-def _record_timed(
-    scale_queries: dict, name: str, med, runs, err, mode=None
-) -> None:
-    """Persist one _timed3 result into the sidecar dict.  An entry that
-    errored carries the error string under ``<name>_error`` (VERDICT r10
-    #1: the r10 record published silent cc_chain nulls); the median MODE
-    ('settle' = tail-3 of a warm-in list, 'central' = central-3) rides
-    under ``<name>_mode`` so the statistic's provenance is in the record
-    (VERDICT r11 #1/#2)."""
-    scale_queries[name] = med
-    scale_queries[name + "_raw"] = runs
-    if mode is not None:
-        scale_queries[name + "_mode"] = mode
+def _record_timed(sidecar: dict, name: str, med, laps, err) -> None:
+    """Persist one _timed3 result into a tier's sidecar dict.  An entry
+    that errored carries its last error string under ``<name>_error``
+    (VERDICT r10 #1: the r10 record published silent cc_chain nulls)."""
+    sidecar[name] = med
+    sidecar[name + "_raw"] = laps
     if err is not None:
-        scale_queries[name + "_error"] = err
+        sidecar[name + "_error"] = err
 
 
-def _run_scale_tier(sf_dir: str) -> dict:
-    """Scale-shape validation for the dedup/similarity/curation family in
-    an ISOLATED python+JVM (invoked as `bench.py --scale-tier <dir>` by
-    main; importable for ad-hoc runs).  Runs the gate queries on a 30x
-    corpus synthesized from sf_dir (text word-order hash-permuted per
-    replica so replicas are NOT near-dups of each other; embeddings
-    circularly rotated so directions decorrelate).  Sub-linear wall-clock
-    blowup vs the sf0.1 extras is the empirical check on the "bucketed,
-    not all-pairs" design claims; 30x is high enough that any quadratic
-    residue shows before a real cluster does."""
-    # The tier always starts right after the 130-query headline+extras
-    # suite; even in a fresh process the still-draining host inflates the
-    # first queries 2-3x (measured: minhash 28.7 s at 1-min load 1.6 vs
-    # 8.0 s at load 0.02, same code/corpus/protocol).  Wait for the load
-    # to drain (cap 4 min) before any timer starts.
-    try:
-        waited = 0.0
-        while os.getloadavg()[0] > 1.0 and waited < 240.0:
-            time.sleep(5.0)
-            waited += 5.0
-        if waited:
-            print(
-                f"BENCH-SCALE-DRAIN: waited {waited:.0f}s for load "
-                f"{os.getloadavg()[0]:.2f}",
-                file=sys.stderr,
-            )
-    except OSError:
-        pass
-    registry.load_all()
-    spark = get_spark("moosestack-spark-bench-scale")
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        # spin up the Arrow worker pool outside the timers
-        spark.range(64, numPartitions=8).mapInPandas(
-            lambda it: it, "id long"
+# -- direct-operator fixtures ----------------------------------------------
+#
+# Scale entries whose gate call shape does not scale; a fixture shadows the
+# registry query of the same name.  Each builds its input once, outside the
+# timer, and returns (lap, keep) — a zero-arg callable running one lap, and
+# the RDD ids the between-lap sweep must keep alive.
+
+
+def _embedding_auto_t90(spark, data_dir: str) -> tuple:
+    """Occupancy-targeted banding at a realistic near-dup threshold (t=0.9,
+    recall 0.9).  The fixed 4-plane/16-bucket gate config grows O(n^2/16)
+    per band (8.3 s at 10x -> 84.6 s at 30x); the auto config holds
+    expected bucket occupancy constant, so verify work is linear in n."""
+    from moosestack_spark.ops.dedup import embedding_cosine_pairs_pruned_auto
+
+    emb = spark.read.parquet(f"{data_dir}/embeddings.parquet")
+    n_emb = emb.count()
+    return (
+        lambda: embedding_cosine_pairs_pruned_auto(
+            emb, "vec_id", "embedding", threshold=0.9, dim=64, n_rows=n_emb
         ).count()
-    except Exception:
-        pass
-    try:
-        # warm whole-stage-codegen on the minhash expression SHAPE, same
-        # as main(): this subprocess is a FRESH JVM, and without the
-        # warmup the first minhash run at 30x paid ~20 s of one-time
-        # compile (r9 raw triple 28.5/5.5/9.8) that is not plan cost.
-        from moosestack_spark.ops.dedup import minhash_lsh_pairs
+    ), frozenset()
 
-        tiny = spark.createDataFrame(
-            [(i, "w%d x y z q r s t u v" % (i % 3)) for i in range(20)],
-            "doc_id long, text string",
-        )
-        minhash_lsh_pairs(tiny, "doc_id", "text", n=5, threshold=0.5).count()
-    except Exception:
-        pass
-    scale_queries: dict = {}
-    cleanup = lambda: _scale_run_cleanup(spark)  # noqa: E731
-    try:
-        scaled_dir = _make_scaled_dir(spark, sf_dir, factor=30)
-        scale_names = [
-            "dedup_exact",
-            "dedup_minhash_lsh",
-            "dedup_ngram_jaccard",
-            "dedup_embedding_cosine_pruned",
-            "corpus_curation_pipeline",
-            "similarity_ivf",
-            # CC family at 10x: near-clique dedup graph, so propagation
-            # should stay ahead; the chain fixture below is where star wins
-            "dedup_connected_components",
-            "dedup_connected_components_star",
-            "dedup_connected_components_hybrid",
-            # round-6 second session: winnowing is shingle-linear
-            "dedup_winnowing_fingerprints",
-            # round-9: substring REWRITE is gram-linear with the df cap
-            # bounding the pair fan-out, same contract as minhash
-            "dedup_substring_clean",
-            "corpus_domain_quality_filter",
-            # round-9: IVF-PQ — ADC volume is nprobe/n_cells of the corpus
-            "similarity_ivf_pq_topk",
-            # round-10: NSW walk — cost is the banded graph build (two
-            # knn_graph passes) + one shuffle-free hub assign; the walk
-            # itself is queries x beam rows per hop
-            "similarity_graph_search",
-            # round-7 ML/graph family: k-means is iterations x one scan +
-            # model-sized collects; LPA is rounds x (vertex join + argmax
-            # groupBy).  knn-graph runs occupancy-targeted below (the
-            # 6-plane gate config is the correctness shape; at 30x the
-            # plane count must grow with n to hold bucket occupancy).
-            "cluster_kmeans_embeddings",
-            "graph_label_propagation",
-        ]
-        for name in scale_names:
-            med, runs, err, mode = _timed3(
-                name,
-                lambda n=name: registry.QUERIES[n](spark, scaled_dir).count(),
-                cleanup=cleanup,
-            )
-            _record_timed(scale_queries, name, med, runs, err, mode)
-    except Exception as exc:
-        print(f"BENCH-SCALE-SETUP-ERROR: {exc!r}"[:500], file=sys.stderr)
-        scale_queries["setup_error"] = f"{exc!r}"[:300]
 
-    # Occupancy-targeted banding vs the fixed gate config, same scaled
-    # corpus and a realistic near-dup threshold (t=0.9, recall 0.9).  The
-    # fixed 4-plane/16-bucket config above is the correctness-gate shape
-    # and grows O(n^2/16) per band (8.3 s at 10x -> 84.6 s at 30x); the
-    # auto config holds expected bucket occupancy constant so verify work
-    # is linear in n.  The pair of numbers is the scale claim, measured.
-    try:
-        from moosestack_spark.ops.dedup import (
-            embedding_cosine_pairs_pruned_auto,
+def _graph_kcore(spark, data_dir: str) -> tuple:
+    """k-core peel over a deterministic 5-out-edge graph on the scaled doc
+    ids: at 30x it needs 15 peels, past the gate's 12-iteration oracle
+    unroll, so the operator runs directly with a higher bound.  Per-round
+    cost stays two semi-joins + one groupBy on a SHRINKING vertex set."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from moosestack_spark.ops.graph import k_core
+
+    docs = spark.read.parquet(f"{data_dir}/documents.parquet").select("doc_id")
+    dense = docs.withColumn(
+        "i", F.row_number().over(Window.orderBy("doc_id")) - 1
+    ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
+    ids = dense.select(F.col("i").alias("ti"), F.col("doc_id").alias("t_doc"))
+
+    def link(expr: str, quarter: bool):
+        src = dense.filter(F.col("i") % 4 == 0) if quarter else dense
+        src = src.select(F.col("doc_id").alias("s_doc"), F.expr(expr).alias("t"))
+        tgt = ids.filter(F.col("ti") % 4 == 0) if quarter else ids
+        return src.join(tgt, src.t == tgt.ti).select(
+            F.col("s_doc").alias("src"), F.col("t_doc").alias("dst")
         )
 
-        semb = spark.read.parquet(f"{scaled_dir}/embeddings.parquet")
-        n_emb = semb.count()
-        med, runs, err, mode = _timed3(
-            "dedup_embedding_auto_t90",
-            lambda: embedding_cosine_pairs_pruned_auto(
-                semb, "vec_id", "embedding", threshold=0.9, dim=64, n_rows=n_emb
-            ).count(),
-            cleanup=cleanup,
+    directed = (
+        link("(i * 7 + 3) % n", False)
+        .union(link("(i * 13 + 5) % n", False))
+        .union(link("(i * 3 + 4) % (n - n % 4)", True))
+        .union(link("(i * 5 + 8) % (n - n % 4)", True))
+        .union(link("(i * 9 + 12) % (n - n % 4)", True))
+    )
+    edges = (
+        directed.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
-        _record_timed(scale_queries, "dedup_embedding_auto_t90", med, runs, err, mode)
-    except Exception as exc:
-        print(f"BENCH-SCALE-ERROR dedup_embedding_auto_t90: {exc!r}"[:500],
-              file=sys.stderr)
-        scale_queries["dedup_embedding_auto_t90"] = None
-        scale_queries["dedup_embedding_auto_t90_error"] = f"{exc!r}"[:300]
-
-    # k-core peel at 30x vertices: the scaled graph needs 15 peels (vs 11
-    # at gate scale), past the gate's 12-iteration oracle unroll — so the
-    # scale tier calls the operator directly with a higher bound.  What
-    # this measures: per-round cost stays two semi-joins + one groupBy on
-    # a SHRINKING vertex set.
-    try:
-        from pyspark.sql import Window as _W
-        from pyspark.sql import functions as _F
-
-        from moosestack_spark.ops.graph import k_core
-
-        d30 = spark.read.parquet(f"{scaled_dir}/documents.parquet").select(
-            "doc_id"
-        )
-        w_ = _W.orderBy("doc_id")
-        dense = d30.withColumn(
-            "i", _F.row_number().over(w_) - 1
-        ).withColumn("n", _F.count(_F.lit(1)).over(_W.partitionBy()))
-        ids = dense.select(
-            _F.col("i").alias("ti"), _F.col("doc_id").alias("t_doc")
-        )
-
-        def _lk(expr, quarter):
-            a_ = dense.filter(_F.col("i") % 4 == 0) if quarter else dense
-            a_ = a_.select(
-                _F.col("doc_id").alias("s_doc"), _F.expr(expr).alias("t")
-            )
-            tgt = ids.filter(_F.col("ti") % 4 == 0) if quarter else ids
-            return a_.join(tgt, a_.t == tgt.ti).select(
-                _F.col("s_doc").alias("src"), _F.col("t_doc").alias("dst")
-            )
-
-        de30 = (
-            _lk("(i * 7 + 3) % n", False)
-            .union(_lk("(i * 13 + 5) % n", False))
-            .union(_lk("(i * 3 + 4) % (n - n % 4)", True))
-            .union(_lk("(i * 5 + 8) % (n - n % 4)", True))
-            .union(_lk("(i * 9 + 12) % (n - n % 4)", True))
-        )
-        ue30 = (
-            de30.filter(_F.col("src") != _F.col("dst"))
-            .select(
-                _F.least("src", "dst").alias("u"),
-                _F.greatest("src", "dst").alias("v"),
-            )
-            .distinct()
-        )
-        med, runs, err, mode = _timed3(
-            "graph_kcore",
-            lambda: k_core(ue30, k=4, max_iters=25).count(),
-            cleanup=cleanup,
-        )
-        _record_timed(scale_queries, "graph_kcore", med, runs, err, mode)
-    except Exception as exc:
-        print(f"BENCH-SCALE-ERROR graph_kcore: {exc!r}"[:500], file=sys.stderr)
-        scale_queries["graph_kcore"] = None
-        scale_queries["graph_kcore_error"] = f"{exc!r}"[:300]
-
-    # knn-graph at 30x with occupancy-targeted planes: planes =
-    # ceil(log2(n / 64)) holds expected bucket occupancy ~64, so the
-    # bucket self-join stays linear in n instead of n^2/buckets — the
-    # same dial documented on the operator (plane count = recall/cost).
-    try:
-        import math as _math
-
-        from moosestack_spark.ops.similarity import knn_graph
-
-        semb = spark.read.parquet(f"{scaled_dir}/embeddings.parquet")
-        n_emb = semb.count()
-        planes = max(6, _math.ceil(_math.log2(max(n_emb, 128) / 64)))
-        med, runs, err, mode = _timed3(
-            "similarity_knn_graph",
-            lambda: knn_graph(semb, dim=64, k=5, n_planes=planes).count(),
-            cleanup=cleanup,
-        )
-        _record_timed(scale_queries, "similarity_knn_graph", med, runs, err, mode)
-    except Exception as exc:
-        print(f"BENCH-SCALE-ERROR similarity_knn_graph: {exc!r}"[:500],
-              file=sys.stderr)
-        scale_queries["similarity_knn_graph"] = None
-        scale_queries["similarity_knn_graph_error"] = f"{exc!r}"[:300]
-
-    # Chain-heavy CC fixture: 1024 disjoint 64-node chains (diameter 64 —
-    # the pathological shape for O(diameter) label propagation, the home
-    # turf of the O(log n) star variant).  This is the empirical backing
-    # for the star/hybrid scale claim: star/hybrid round counts are
-    # logarithmic in chain length, propagation pays 2 shuffles per hop.
-    try:
-        from moosestack_spark.ops.components import (
-            connected_components,
-            connected_components_auto,
-            connected_components_star,
-        )
-
-        # The fixture is checkpointed ONCE, outside the run loop; its
-        # blocks must survive the between-run unpersist sweep (VERDICT
-        # r10 #1: the r10 cleanup swept them, and every subsequent run
-        # died CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — silently nulling the
-        # record).  Diff the persistent-RDD ids around the checkpoint and
-        # pass them as the cleanup's keep-set.
-        before_ids = _persistent_rdd_ids(spark)
-        chain = spark.range(1024 * 64).selectExpr(
-            "id AS src", "id + 1 AS dst"
-        ).where("pmod(id, 64) != 63").localCheckpoint()
-        chain_ids = frozenset(_persistent_rdd_ids(spark) - before_ids)
-        chain_cleanup = lambda: _scale_run_cleanup(spark, keep=chain_ids)  # noqa: E731
-        for cname, cfn in [
-            ("cc_chain_propagation", lambda e: connected_components(e, max_rounds=70)),
-            ("cc_chain_star", connected_components_star),
-            ("cc_chain_hybrid", connected_components_auto),
-        ]:
-            med, runs, err, mode = _timed3(
-                cname, lambda f=cfn: f(chain).count(), cleanup=chain_cleanup
-            )
-            _record_timed(scale_queries, cname, med, runs, err, mode)
-    except Exception as exc:
-        print(f"BENCH-SCALE-SETUP-ERROR chain: {exc!r}"[:500], file=sys.stderr)
-        scale_queries["cc_chain_error"] = f"{exc!r}"[:300]
-    return scale_queries
+        .distinct()
+    )
+    return (lambda: k_core(edges, k=4, max_iters=25).count()), frozenset()
 
 
-def _run_scale_tier_100(sf_dir: str) -> dict:
-    """100x tier (VERDICT r9 #1): the second decade of the scale story.
-    The 30x tier has shown sub-linear growth three rounds running, but
-    100 TB claims rested on extrapolating TWO decades from it; a 100x
-    point (sf1-equivalent: ~50k docs / 200k embeddings from sf0.1) halves
-    that.  Core curation family only — the six operators whose scale
-    behavior the dedup/ANN claims rest on — same isolated-JVM, load-drain,
-    warmup-lap, median-of-3(+spread escalation) discipline as the 30x
-    tier; the sidecar records per-query 30x->100x growth ratios (linear
-    would be ~3.3x)."""
-    try:
-        waited = 0.0
-        while os.getloadavg()[0] > 1.0 and waited < 240.0:
-            time.sleep(5.0)
-            waited += 5.0
-        if waited:
-            print(
-                f"BENCH-SCALE100-DRAIN: waited {waited:.0f}s for load "
-                f"{os.getloadavg()[0]:.2f}",
-                file=sys.stderr,
-            )
-    except OSError:
-        pass
+def _similarity_knn_graph(spark, data_dir: str) -> tuple:
+    """knn-graph with occupancy-targeted planes: ceil(log2(n / 64)) planes
+    hold expected bucket occupancy ~64, so the bucket self-join stays
+    linear in n instead of n^2/buckets (the 6-plane gate config is the
+    correctness shape)."""
+    import math
+
+    from moosestack_spark.ops.similarity import knn_graph
+
+    emb = spark.read.parquet(f"{data_dir}/embeddings.parquet")
+    planes = max(6, math.ceil(math.log2(max(emb.count(), 128) / 64)))
+    return (lambda: knn_graph(emb, dim=64, k=5, n_planes=planes).count()), frozenset()
+
+
+def _cc_chain(variant: str, spark, data_dir: str) -> tuple:
+    """Chain-heavy CC fixture, independent of data_dir: 1024 disjoint
+    64-node chains (diameter 64 — the pathological shape for O(diameter)
+    label propagation, where the O(log n) star/hybrid variants win).
+
+    The chain is checkpointed ONCE, outside the laps, and unpersisting a
+    checkpoint's blocks is not recoverable (VERDICT r10 #1: every later lap
+    died CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), so its RDD ids are the keep-set."""
+    from moosestack_spark.ops import components as cc
+
+    run = {
+        "propagation": lambda e: cc.connected_components(e, max_rounds=70),
+        "star": cc.connected_components_star,
+        "hybrid": cc.connected_components_auto,
+    }[variant]
+    before = _persistent_rdd_ids(spark)
+    chain = (
+        spark.range(1024 * 64)
+        .selectExpr("id AS src", "id + 1 AS dst")
+        .where("pmod(id, 64) != 63")
+        .localCheckpoint()
+    )
+    keep = frozenset(_persistent_rdd_ids(spark) - before)
+    return (lambda: run(chain).count()), keep
+
+
+SCALE_FIXTURES = {
+    "dedup_embedding_auto_t90": _embedding_auto_t90,
+    "graph_kcore": _graph_kcore,
+    "similarity_knn_graph": _similarity_knn_graph,
+    "cc_chain_propagation": functools.partial(_cc_chain, "propagation"),
+    "cc_chain_star": functools.partial(_cc_chain, "star"),
+    "cc_chain_hybrid": functools.partial(_cc_chain, "hybrid"),
+}
+
+
+def _scale_entry(spark, name: str, data_dir: str) -> tuple:
+    """(lap, keep) for one scale entry on data_dir: its fixture's, or a
+    registry query forced by count()."""
+    if name in SCALE_FIXTURES:
+        return SCALE_FIXTURES[name](spark, data_dir)
+    query = registry.QUERIES[name]
+    return (lambda: query(spark, data_dir).count()), frozenset()
+
+
+def _run_scale_tier(factor: int, sf_dir: str) -> dict:
+    """Time SCALE_TIERS[factor] on a factor-x corpus synthesized from
+    sf_dir, in this process's fresh JVM (main runs it as
+    `bench.py --scale-tier <factor> <sf_dir>`).  The corpus is deleted
+    afterwards."""
+    import shutil
+
+    _drain("BENCH-SCALE-DRAIN", (1.0,))
     registry.load_all()
-    spark = get_spark("moosestack-spark-bench-scale100")
+    spark = get_spark(f"moosestack-spark-bench-scale{factor}")
     spark.sparkContext.setLogLevel("ERROR")
+    _warm_up(spark)
     try:
-        spark.range(64, numPartitions=8).mapInPandas(
-            lambda it: it, "id long"
-        ).count()
-    except Exception:
-        pass
-    try:
-        from moosestack_spark.ops.dedup import minhash_lsh_pairs
-
-        tiny = spark.createDataFrame(
-            [(i, "w%d x y z q r s t u v" % (i % 3)) for i in range(20)],
-            "doc_id long, text string",
-        )
-        minhash_lsh_pairs(tiny, "doc_id", "text", n=5, threshold=0.5).count()
-    except Exception:
-        pass
-    scale_queries: dict = {}
-    cleanup = lambda: _scale_run_cleanup(spark)  # noqa: E731
-    try:
-        scaled_dir = _make_scaled_dir(spark, sf_dir, factor=100)
-        for name in [
-            "dedup_exact",
-            "dedup_minhash_lsh",
-            "corpus_curation_pipeline",
-            "dedup_connected_components_hybrid",
-            "similarity_ivf_pq_topk",
-        ]:
-            med, runs, err, mode = _timed3(
-                name,
-                lambda n=name: registry.QUERIES[n](spark, scaled_dir).count(),
-                cleanup=cleanup,
-            )
-            _record_timed(scale_queries, name, med, runs, err, mode)
-        # occupancy-auto embedding dedup, same call shape as the 30x tier
-        from moosestack_spark.ops.dedup import (
-            embedding_cosine_pairs_pruned_auto,
-        )
-
-        semb = spark.read.parquet(f"{scaled_dir}/embeddings.parquet")
-        n_emb = semb.count()
-        med, runs, err, mode = _timed3(
-            "dedup_embedding_auto_t90",
-            lambda: embedding_cosine_pairs_pruned_auto(
-                semb, "vec_id", "embedding", threshold=0.9, dim=64,
-                n_rows=n_emb,
-            ).count(),
-            cleanup=cleanup,
-        )
-        _record_timed(scale_queries, "dedup_embedding_auto_t90", med, runs, err, mode)
+        scaled_dir = _make_scaled_dir(spark, sf_dir, factor)
     except Exception as exc:
-        print(f"BENCH-SCALE100-SETUP-ERROR: {exc!r}"[:500], file=sys.stderr)
-        scale_queries["setup_error"] = f"{exc!r}"[:300]
-    return scale_queries
-
-
-def _run_scale_tier_300(sf_dir: str) -> dict:
-    """300x SPOT tier (VERDICT r11 #6): one more decade of evidence on the
-    entry closest to linear.  dedup_minhash_lsh's judge-confirmed 30x->100x
-    growth was 3.08x on a 3.33x step — sub-linear, but with only one decade
-    of margin; a single 300x point (sf3-equivalent: ~150k docs) proves or
-    falsifies the next decade (100x -> 300x corpus step is 3.0x).  ONLY
-    minhash runs here — the full tiers stay at 30x/100x so the round's
-    wall-clock budget is bounded — with the same isolated-JVM, load-drain,
-    warmup-lap, median-of-3 + settle discipline as the other tiers."""
+        print(f"BENCH-SCALE-SETUP-ERROR ({factor}x): {exc!r}"[:500], file=sys.stderr)
+        return {"setup_error": f"{exc!r}"[:300]}
+    out: dict = {}
     try:
-        waited = 0.0
-        while os.getloadavg()[0] > 1.0 and waited < 240.0:
-            time.sleep(5.0)
-            waited += 5.0
-        if waited:
-            print(
-                f"BENCH-SCALE300-DRAIN: waited {waited:.0f}s for load "
-                f"{os.getloadavg()[0]:.2f}",
-                file=sys.stderr,
+        for name in SCALE_TIERS[factor]:
+            try:
+                lap, keep = _scale_entry(spark, name, scaled_dir)
+            except Exception as exc:
+                print(f"BENCH-SCALE-ERROR {name}: {exc!r}"[:500], file=sys.stderr)
+                out[name] = None
+                out[name + "_error"] = f"{exc!r}"[:300]
+                continue
+            med, laps, err = _timed3(
+                name, lap, cleanup=lambda: _scale_run_cleanup(spark, keep=keep)
             )
-    except OSError:
-        pass
-    registry.load_all()
-    spark = get_spark("moosestack-spark-bench-scale300")
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        spark.range(64, numPartitions=8).mapInPandas(
-            lambda it: it, "id long"
-        ).count()
-    except Exception:
-        pass
-    try:
-        from moosestack_spark.ops.dedup import minhash_lsh_pairs
-
-        tiny = spark.createDataFrame(
-            [(i, "w%d x y z q r s t u v" % (i % 3)) for i in range(20)],
-            "doc_id long, text string",
-        )
-        minhash_lsh_pairs(tiny, "doc_id", "text", n=5, threshold=0.5).count()
-    except Exception:
-        pass
-    scale_queries: dict = {}
-    cleanup = lambda: _scale_run_cleanup(spark)  # noqa: E731
-    try:
-        scaled_dir = _make_scaled_dir(spark, sf_dir, factor=300)
-        med, runs, err, mode = _timed3(
-            "dedup_minhash_lsh",
-            lambda: registry.QUERIES["dedup_minhash_lsh"](
-                spark, scaled_dir
-            ).count(),
-            cleanup=cleanup,
-        )
-        _record_timed(scale_queries, "dedup_minhash_lsh", med, runs, err, mode)
-    except Exception as exc:
-        print(f"BENCH-SCALE300-SETUP-ERROR: {exc!r}"[:500], file=sys.stderr)
-        scale_queries["setup_error"] = f"{exc!r}"[:300]
-    return scale_queries
+            _record_timed(out, name, med, laps, err)
+    finally:
+        shutil.rmtree(scaled_dir, ignore_errors=True)
+    return out
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--scale-tier":
-        print(json.dumps(_run_scale_tier(sys.argv[2])))
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--scale-tier-100":
-        print(json.dumps(_run_scale_tier_100(sys.argv[2])))
-    elif len(sys.argv) >= 3 and sys.argv[1] == "--scale-tier-300":
-        print(json.dumps(_run_scale_tier_300(sys.argv[2])))
+    if len(sys.argv) >= 4 and sys.argv[1] == "--scale-tier":
+        print(json.dumps(_run_scale_tier(int(sys.argv[2]), sys.argv[3])))
     else:
         main()

@@ -185,8 +185,3 @@ def versioned_collapsing_resolve(
             *[F.col(c) for c in unord],
         )
     )
-
-
-def aggregate_condition(cond: Column, value: Column) -> Column:
-    """CH `xIf` combinator building block: value where cond else NULL."""
-    return F.when(cond, value)

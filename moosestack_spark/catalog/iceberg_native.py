@@ -1353,18 +1353,6 @@ def _bound_bytes(v, typ: str) -> bytes | None:
     raise NotImplementedError(f"bound serialization for {typ}")
 
 
-def _bound_value(b: bytes | None, typ: str):
-    if b is None:
-        return None
-    if typ == "string":
-        return b.decode("utf-8")
-    if typ == "int":
-        return int.from_bytes(b, "little", signed=True)
-    if typ == "long":
-        return int.from_bytes(b, "little", signed=True)
-    raise NotImplementedError(f"bound deserialization for {typ}")
-
-
 def _summaries_match(
     summaries: list[dict], part_names: list[str], flt: dict
 ) -> bool:

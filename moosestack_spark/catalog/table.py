@@ -33,12 +33,13 @@ import math
 import os
 import re
 import shutil
+import threading
 from datetime import datetime, timedelta, timezone
 from collections.abc import Iterable, Iterator, Sequence
 from dataclasses import dataclass, field
 from typing import Any, Generic, Optional, TypeVar
 
-from pydantic import BaseModel, ValidationError
+from pydantic import BaseModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,6 +65,21 @@ from moosestack_spark.datamodel.reflection import to_columns, to_struct_type
 _MANIFEST_RE = re.compile(r"^v\d+\.json$")
 
 T = TypeVar("T", bound=BaseModel)
+
+_PATH_LOCKS: dict[str, threading.RLock] = {}
+_PATH_LOCKS_GUARD = threading.Lock()
+
+
+def path_lock(path: str) -> threading.RLock:
+    """The in-process lock serializing appends and snapshot commits on one
+    directory.  Two concurrent Spark appends to one path share its
+    ``_temporary/0`` staging dir, so one fails with FileNotFoundException
+    (or TASK_WRITE_FAILED); two commits can both pick version max+1 and
+    one manifest is lost.  Re-entrant: an append holds it through its
+    commit."""
+    with _PATH_LOCKS_GUARD:
+        return _PATH_LOCKS.setdefault(os.path.abspath(path), threading.RLock())
+
 
 STREAM_INSERT_BATCH = 1000  # olap_table.py:961
 MAX_INSERT_BLOCK = 100_000  # olap_table.py:736-739
@@ -216,32 +232,30 @@ class OlapTable(Generic[T]):
             row = {**row, col.name: out}
         return row
 
+    def _validate_row(self, r: dict | T) -> dict:
+        """One row as it is stored: Pydantic validation, then the
+        insert-time checks the Spark types can't express.  Raises
+        ValueError (Pydantic's ValidationError is one) on a bad row."""
+        row = r.model_dump() if isinstance(r, BaseModel) else self.model(**r).model_dump()
+        row = self._split_json_columns(row)
+        err = self._range_check(row)
+        if err is not None:
+            raise ValueError(err)
+        return row
+
     def _validate_rows(
         self, rows: Sequence[dict | T], options: InsertOptions
     ) -> tuple[list[dict], list[tuple[dict, str]]]:
         ok: list[dict] = []
         failed: list[tuple[dict, str]] = []
         for r in rows:
-            if isinstance(r, BaseModel):
-                ok.append(self._split_json_columns(r.model_dump()))
-                continue
             try:
-                ok.append(self._split_json_columns(self.model(**r).model_dump()))
-            except ValidationError as exc:
+                ok.append(self._validate_row(r))
+            except ValueError as exc:
                 if options.strategy == "fail-fast":
                     raise
                 failed.append((r, str(exc)))
-        # extra insert-time checks the Spark types can't express
-        checked: list[dict] = []
-        for row in ok:
-            err = self._range_check(row)
-            if err is None:
-                checked.append(row)
-            elif options.strategy == "fail-fast":
-                raise ValueError(err)
-            else:
-                failed.append((row, err))
-        return checked, failed
+        return ok, failed
 
     def _range_check(self, row: dict) -> Optional[str]:
         """FixedString length + unsigned range checks (SURVEY §7 part 6)."""
@@ -347,7 +361,8 @@ class OlapTable(Generic[T]):
             # direct-path engine: rows land at the external location
             # (s3a:// on a cluster; any hadoop-fs path locally) in the
             # engine's format (blocks.py:318-347)
-            df.write.mode("append").format(eng.format).save(eng.path)
+            with path_lock(eng.path):
+                df.write.mode("append").format(eng.format).save(eng.path)
             return
         writer = df
         if self.config.order_by_fields:
@@ -370,10 +385,11 @@ class OlapTable(Generic[T]):
             out = out.option(k, v)
         if self.config.partition_by:
             out = out.partitionBy(self.config.partition_by)
-        out.parquet(self.path)
-        if self.config.projections:
-            self._write_projections(df)
-        self._commit_snapshot("append")
+        with path_lock(self.path):
+            out.parquet(self.path)
+            if self.config.projections:
+                self._write_projections(df)
+            self._commit_snapshot("append")
 
     # -- snapshots / time travel --------------------------------------------
     #
@@ -411,15 +427,16 @@ class OlapTable(Generic[T]):
         import json as _json
 
         os.makedirs(self._snapdir, exist_ok=True)
-        # max+1, not count+1: vacuum may have dropped old manifests and a
-        # reused number would sort a NEW snapshot before the current head
-        snaps = self.snapshots()
-        version = (snaps[-1]["version"] + 1) if snaps else 1
-        manifest = {"version": version, "op": op, "files": self._data_files()}
-        tmp = os.path.join(self._snapdir, f".v{version}.json.tmp")
-        with open(tmp, "w") as fh:
-            _json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self._snapdir, f"v{version}.json"))
+        with path_lock(self.path):
+            # max+1, not count+1: vacuum may have dropped old manifests and
+            # a reused number would sort a NEW snapshot before the head
+            snaps = self.snapshots()
+            version = (snaps[-1]["version"] + 1) if snaps else 1
+            manifest = {"version": version, "op": op, "files": self._data_files()}
+            tmp = os.path.join(self._snapdir, f".v{version}.json.tmp")
+            with open(tmp, "w") as fh:
+                _json.dump(manifest, fh)
+            os.replace(tmp, os.path.join(self._snapdir, f"v{version}.json"))
         return version
 
     def snapshots(self) -> list[dict]:
@@ -594,14 +611,18 @@ class OlapTable(Generic[T]):
         ok, failed = self._validate_rows(rows, options)
         self._check_thresholds(len(ok), failed, options)
         if ok:
-            df = self.spark.createDataFrame(ok, self.schema)
-            # one part file per ~MAX_INSERT_BLOCK rows, like a MergeTree
-            # insert writing one part per block — without this, a 1-row
-            # insert fans out into a file per default partition (32 mostly
-            # empty files per append: the small-files explosion)
-            n_files = max(1, math.ceil(len(ok) / MAX_INSERT_BLOCK))
-            self._append_df(df.coalesce(n_files))
+            self._append_rows(ok)
         return InsertResult(len(ok), len(failed), [e for _, e in failed])
+
+    def _append_rows(self, rows: list[dict]) -> None:
+        """Append already-validated rows (_validate_row output)."""
+        df = self.spark.createDataFrame(rows, self.schema)
+        # one part file per ~MAX_INSERT_BLOCK rows, like a MergeTree
+        # insert writing one part per block — without this, a 1-row
+        # insert fans out into a file per default partition (32 mostly
+        # empty files per append: the small-files explosion)
+        n_files = max(1, math.ceil(len(rows) / MAX_INSERT_BLOCK))
+        self._append_df(df.coalesce(n_files))
 
     def _insert_isolate(self, rows: list, options: InsertOptions) -> InsertResult:
         """Binary-split retry (olap_table.py:821-874): try the whole block;
@@ -612,15 +633,7 @@ class OlapTable(Generic[T]):
 
         def attempt(chunk: list) -> None:
             try:
-                validated = [
-                    r.model_dump() if isinstance(r, BaseModel) else self.model(**r).model_dump()
-                    for r in chunk
-                ]
-                for row in validated:
-                    err = self._range_check(row)
-                    if err:
-                        raise ValueError(err)
-                ok_rows.extend(validated)
+                ok_rows.extend([self._validate_row(r) for r in chunk])
             except Exception as exc:
                 if len(chunk) == 1:
                     failures.append((chunk[0], str(exc)))

@@ -361,7 +361,3 @@ def to_columns(model: type[BaseModel]) -> list[Column]:
 def to_struct_type(model: type[BaseModel]) -> st.StructType:
     """Pydantic model -> Spark StructType with metadata."""
     return st.StructType([c.to_struct_field() for c in to_columns(model)])
-
-
-def primary_key_fields(model: type[BaseModel]) -> list[str]:
-    return [c.name for c in to_columns(model) if c.primary_key]

@@ -1639,7 +1639,6 @@ def graph_search_topk(
     )
 
     ranked = None
-    prev_cp_ids: set = set()
     for hop in range(hops):
         expanded = sym.join(
             F.broadcast(frontier), sym["src"] == frontier["__node"]
@@ -1677,9 +1676,7 @@ def graph_search_topk(
         # between hops costs one small job and makes every hop's scoring
         # run exactly once.  The last hop stays lazy — the caller's
         # action computes it, and a checkpoint here would just run the
-        # same scoring twice.  Frontier blocks from two hops back are
-        # superseded (only the NEXT hop's plan reads a frontier
-        # checkpoint) and unpersisted inside the loop.
+        # same scoring twice.
         if hop < hops - 1:
             # LAZY checkpoint: materializes inside the next action's job
             # (no per-hop blocking barrier), then both of cand_h's

@@ -63,13 +63,6 @@ def token_count(c: Column) -> Column:
     ).cast("bigint")
 
 
-def bpe_ish_token_count(c: Column) -> Column:
-    """Sub-word-ish count: split on word/punct boundaries (regexp), the
-    cheap stand-in for a BPE tokenizer's piece count."""
-    pieces = F.regexp_extract_all(c, F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"), 0)
-    return F.size(pieces).cast("bigint")
-
-
 def stopword_ratio(c: Column, stopwords: tuple[str, ...]) -> Column:
     toks = tokens(F.lower(c))
     hits = F.size(F.filter(toks, lambda w: w.isin(*stopwords)))

@@ -24,7 +24,7 @@ from pydantic import BaseModel, ValidationError
 from pyspark.sql import DataFrame, SparkSession
 
 from moosestack_spark.catalog.engines import OlapConfig
-from moosestack_spark.catalog.table import InsertOptions, OlapTable
+from moosestack_spark.catalog.table import OlapTable, path_lock
 from moosestack_spark.streaming.dlq import DLQ_SCHEMA
 from moosestack_spark.streaming.stream import Stream
 
@@ -70,29 +70,32 @@ class IngestPipeline(Generic[T]):
     # the POST /ingest/{model} semantics (local_webserver.rs:1509-1748):
     # parse+validate per record; poison -> DLQ; healthy -> stream -> table
     def ingest(self, records: Sequence[dict]) -> dict:
+        """Validate each record once — Pydantic, plus the table's range and
+        FixedString checks — append the valid ones and dead-letter the rest,
+        so one bad record never fails the whole body."""
         if not self.config.ingest_api:
             raise PermissionError(f"pipeline {self.name} has no ingest api")
+        validate = (
+            self.table._validate_row
+            if self.table is not None
+            else lambda rec: self.model(**rec).model_dump()
+        )
         ok: list[dict] = []
-        dead: list[dict] = []
+        dead: list[tuple[dict, str]] = []
         for rec in records:
             try:
-                ok.append(self.model(**rec).model_dump())
-            except ValidationError as exc:
-                dead.append(
-                    {
-                        "original_record": json.dumps(rec, default=str),
-                        "error_message": str(exc.errors()[0].get("msg", exc)),
-                        "error_type": "ValidationError",
-                        "failed_at": datetime.now(timezone.utc),
-                        "source": "api",  # ingest-side failure (stream.py:425)
-                    }
+                ok.append(validate(rec))
+            except ValueError as exc:  # Pydantic's ValidationError is one
+                msg = (
+                    exc.errors()[0].get("msg", str(exc))
+                    if isinstance(exc, ValidationError)
+                    else str(exc)
                 )
+                dead.append((rec, msg))
         if ok and self.table is not None:
-            self.table.insert(ok, InsertOptions(strategy="fail-fast"))
-        if dead and self.dlq_path:
-            self.spark.createDataFrame(dead, DLQ_SCHEMA).write.mode("append").parquet(
-                self.dlq_path
-            )
+            self.table._append_rows(ok)
+        # source "api": an ingest-side failure (stream.py:425)
+        self._append_dlq(dead, "ValidationError", "api")
         return {"inserted": len(ok), "dead_lettered": len(dead)}
 
     def dead_letter(
@@ -105,22 +108,32 @@ class IngestPipeline(Generic[T]):
         """Route raw records straight to the DLQ (the whole-body-parse-failure
         salvage path of local_webserver.rs handle_json_array_body: records
         recovered from an unparseable body are never silently dropped)."""
-        if not self.dlq_path or not records:
+        return self._append_dlq(
+            [(rec, error_message) for rec in records], error_type, source
+        )
+
+    def _append_dlq(
+        self, failures: list[tuple[dict, str]], error_type: str, source: str
+    ) -> int:
+        """Append (record, error message) pairs to the DLQ in the
+        DeadLetterModel envelope; returns how many were written."""
+        if not self.dlq_path or not failures:
             return 0
         now = datetime.now(timezone.utc)
         dead = [
             {
                 "original_record": json.dumps(rec, default=str),
-                "error_message": error_message,
+                "error_message": msg,
                 "error_type": error_type,
                 "failed_at": now,
                 "source": source,
             }
-            for rec in records
+            for rec, msg in failures
         ]
-        self.spark.createDataFrame(dead, DLQ_SCHEMA).write.mode("append").parquet(
-            self.dlq_path
-        )
+        with path_lock(self.dlq_path):
+            self.spark.createDataFrame(dead, DLQ_SCHEMA).write.mode(
+                "append"
+            ).parquet(self.dlq_path)
         return len(dead)
 
     def read_dlq(self) -> DataFrame:

@@ -21,6 +21,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's MemTotal, in whole GiB (1-24g): the rest is left to
+    the Python/Arrow workers, the JVM's off-heap memory and the OS.  A heap
+    larger than physical memory (the old fixed 24g on a 15 GB host with no
+    swap) turns a memory-heavy gate into an OOM kill instead of a GC.  24g
+    when MemTotal cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kib = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{min(24, max(1, kib // 2 // (1 << 20)))}g"
+
+
 def get_spark(app_name: str = "moosestack-spark", **extra_conf: str) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -38,7 +52,10 @@ def get_spark(app_name: str = "moosestack-spark", **extra_conf: str) -> SparkSes
         # events.parquet stores TIMESTAMP(NANOS) which Spark's reader
         # rejects; read as long and convert in tables.t().
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in extra_conf.items():

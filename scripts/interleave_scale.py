@@ -18,8 +18,9 @@ Usage:
       --factors 100,300 --rounds 4 [--arm label=repo_root ...] \
       [--out results.json]
 
-With no --arm, the current repo is the single arm.  Scaled dirs are
-built once per factor under /tmp/r13_scaled_<factor>x and reused across
+With no --arm, the current repo is the single arm.  Every arm is timed
+with this checkout's bench.py entries and warm-up.  Scaled dirs are built
+once per factor under $TMPDIR/interleave_scaled_<factor>x and reused across
 laps (inputs only — every timed lap recomputes the query from parquet).
 
 Lap mode (internal): interleave_scale.py --lap <repo_root> <query> <dir>
@@ -40,7 +41,9 @@ REPO = os.path.dirname(HERE)
 
 
 def _build_scaled_dir(factor: int) -> str:
-    out = f"/tmp/r13_scaled_{factor}x"
+    import tempfile
+
+    out = os.path.join(tempfile.gettempdir(), f"interleave_scaled_{factor}x")
     marker = os.path.join(out, "_COMPLETE")
     if os.path.exists(marker):
         return out
@@ -64,74 +67,30 @@ def _build_scaled_dir(factor: int) -> str:
 
 
 def _lap(repo_root: str, query: str, data_dir: str) -> None:
-    sys.path.insert(0, repo_root)
+    # The arm's engine, timed by this harness's bench spec, warm-up and
+    # cleanup: the package is imported from repo_root first, so the
+    # bench.py loaded by path below resolves every moosestack_spark import
+    # against the arm.
+    import importlib.util
     import time
 
-    import bench
+    sys.path.insert(0, repo_root)
     from moosestack_spark import registry
     from moosestack_spark.session import get_spark
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(REPO, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
 
     registry.load_all()
     spark = get_spark("interleave-scale-lap")
     spark.sparkContext.setLogLevel("ERROR")
-    # bench-identical warmups, outside every timer
-    try:
-        spark.range(64, numPartitions=8).mapInPandas(
-            lambda it: it, "id long"
-        ).count()
-    except Exception:
-        pass
-    try:
-        from moosestack_spark.ops.dedup import minhash_lsh_pairs
-
-        tiny = spark.createDataFrame(
-            [(i, "w%d x y z q r s t u v" % (i % 3)) for i in range(20)],
-            "doc_id long, text string",
-        )
-        minhash_lsh_pairs(tiny, "doc_id", "text", n=5, threshold=0.5).count()
-    except Exception:
-        pass
-    keep_ids: frozenset = frozenset()
-    if query == "dedup_embedding_auto_t90":
-        # bench scale-tier call shape: the occupancy-auto embedding dedup
-        from moosestack_spark.ops.dedup import (
-            embedding_cosine_pairs_pruned_auto,
-        )
-
-        semb = spark.read.parquet(f"{data_dir}/embeddings.parquet")
-        n_emb = semb.count()
-        fn = lambda: embedding_cosine_pairs_pruned_auto(  # noqa: E731
-            semb, "vec_id", "embedding", threshold=0.9, dim=64, n_rows=n_emb
-        ).count()
-    elif query.startswith("cc_chain_"):
-        # bench chain fixture: 1024 disjoint 64-node chains, dir-independent
-        from moosestack_spark.ops.components import (
-            connected_components,
-            connected_components_auto,
-            connected_components_star,
-        )
-
-        before_ids = bench._persistent_rdd_ids(spark)
-        chain = (
-            spark.range(1024 * 64)
-            .selectExpr("id AS src", "id + 1 AS dst")
-            .where("pmod(id, 64) != 63")
-            .localCheckpoint()
-        )
-        keep_ids = frozenset(bench._persistent_rdd_ids(spark) - before_ids)
-        cfn = {
-            "cc_chain_propagation": lambda e: connected_components(
-                e, max_rounds=70
-            ),
-            "cc_chain_star": connected_components_star,
-            "cc_chain_hybrid": connected_components_auto,
-        }[query]
-        fn = lambda: cfn(chain).count()  # noqa: E731
-    else:
-        qfn = registry.QUERIES[query]
-        fn = lambda: qfn(spark, data_dir).count()  # noqa: E731
+    bench._warm_up(spark)
+    fn, keep = bench._scale_entry(spark, query, data_dir)
     fn()  # warmup lap: codegen/JIT, untimed
-    bench._scale_run_cleanup(spark, keep=keep_ids)
+    bench._scale_run_cleanup(spark, keep=keep)
     calib = bench._calibrate()
     start = time.perf_counter()
     fn()

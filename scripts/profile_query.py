@@ -21,6 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from moosestack_spark import registry
 from moosestack_spark.session import get_spark
 
@@ -39,11 +40,8 @@ def main() -> None:
     registry.load_all()
     spark = get_spark("moosestack-spark-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    # Arrow worker pool + codegen warm, same as bench.py
-    spark.range(64, numPartitions=8).mapInPandas(lambda it: it, "id long").count()
+    bench._warm_up(spark)
     if scale:
-        import bench
-
         sf_dir = bench._make_scaled_dir(spark, sf_dir, factor=scale)
         print(f"scaled dir ({scale}x): {sf_dir}")
     fn = registry.QUERIES[name]

@@ -13,6 +13,7 @@ import pytest
 from pydantic import BaseModel, Field
 
 from moosestack_spark.api import Api, clear_apis
+from moosestack_spark.datamodel import UInt8
 from moosestack_spark.http_server import (
     JwtConfig,
     MooseHttpServer,
@@ -151,6 +152,34 @@ def test_auth_and_errors(server):
         f"{base}/ingest/events_http", None, token="sekrit", raw=b"{not json"
     )
     assert code == 400
+
+
+def test_ingest_dead_letters_out_of_range_record(spark, tmp_path):
+    """Pydantic accepts UInt8 = 300; the table's range check rejects it.
+    The record must go to the DLQ with the rest of the body inserted, not
+    turn the whole body into a 500."""
+
+    class Reading(BaseModel):
+        id: int
+        level: UInt8
+
+    clear_apis()
+    pipe = IngestPipeline("range_http", Reading, spark, str(tmp_path))
+    srv = MooseHttpServer(spark)
+    srv.add_pipeline(pipe)
+    port = srv.start()
+    try:
+        body = [{"id": i, "level": 7 * i} for i in range(5)]
+        body[2]["level"] = 300
+        code, out = _post(f"http://127.0.0.1:{port}/ingest/range_http", body)
+        assert (code, out) == (200, {"inserted": 4, "dead_lettered": 1})
+        assert sorted(r.id for r in pipe.table.read().collect()) == [0, 1, 3, 4]
+        dlq = pipe.read_dlq().collect()
+        assert len(dlq) == 1 and dlq[0].error_type == "ValidationError"
+        assert json.loads(dlq[0].original_record) == {"id": 2, "level": 300}
+        assert "UInt8 out of range" in dlq[0].error_message
+    finally:
+        srv.stop()
 
 
 def test_body_size_limit(spark, tmp_path):

@@ -132,6 +132,36 @@ def test_unsigned_range_check(spark, warehouse):
     assert res.inserted == 1 and res.failed == 2
 
 
+def test_concurrent_inserts_into_one_table(spark, warehouse):
+    """Two threads inserting into one table: every insert lands, the row
+    count is exact and every append commits its own snapshot version
+    (unserialized appends shared Spark's <path>/_temporary/0 and failed,
+    and two commits could pick the same version)."""
+    import threading
+
+    t = OlapTable("conc", Event, spark, warehouse)
+    n = 4
+    errors: list = []
+
+    def client(c: int) -> None:
+        try:
+            for i in range(n):
+                t.insert([{"id": c * 100 + i * 10 + j, "kind": "k", "amount": 1.0}
+                          for j in range(3)])
+        except Exception as exc:  # surfaced in the main thread below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=client, args=(c,)) for c in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert errors == []
+    assert t.read().count() == 2 * n * 3
+    versions = [s["version"] for s in t.snapshots()]
+    assert sorted(versions) == list(range(1, 2 * n + 1))
+
+
 def test_versioned_physical_name(spark, warehouse):
     t = OlapTable("users", Event, spark, warehouse, OlapConfig(version="1.2"))
     assert t.physical_name == "users_1_2"

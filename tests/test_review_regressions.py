@@ -394,143 +394,121 @@ def test_scale_cleanup_preserves_kept_checkpoints(spark):
     bench._scale_run_cleanup(spark)
 
 
+def _fake_clock_laps(bench, monkeypatch, durations):
+    """A lap callable that advances bench's clock by the next duration,
+    so _timed3's laps are exact; returns (lap, calls)."""
+    import types
+
+    now = [0.0]
+    calls = []
+    it = iter(durations)
+    monkeypatch.setattr(
+        bench, "time", types.SimpleNamespace(perf_counter=lambda: now[0])
+    )
+
+    def lap():
+        calls.append(1)
+        now[0] += next(it)
+
+    return lap, calls
+
+
 def test_timed3_reports_error_string_not_silent_null():
     """VERDICT r10 #1 (second half): an errored tier entry must carry the
-    error string in the sidecar instead of a bare null."""
+    error string in the sidecar instead of a bare null, also when every
+    lap, the warm-up included, fails."""
     bench = _load_bench_module()
 
     def boom():
         raise RuntimeError("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND repro")
 
-    med, runs, err, mode = bench._timed3("boom_entry", boom)
+    med, runs, err = bench._timed3("boom_entry", boom)
     assert med is None
     assert runs == [None, None, None]
     assert err is not None and "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in err
-    assert mode is None  # no successful run: no median, no mode
 
     sidecar: dict = {}
-    bench._record_timed(sidecar, "boom_entry", med, runs, err, mode)
+    bench._record_timed(sidecar, "boom_entry", med, runs, err)
     assert sidecar["boom_entry"] is None
+    assert sidecar["boom_entry_raw"] == [None, None, None]
     assert "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in sidecar["boom_entry_error"]
-    assert "boom_entry_mode" not in sidecar
+    assert "boom_entry_mode" not in sidecar  # one statistic, no mode key
+    assert bench._spread(runs) is None
 
     ok: dict = {}
-    bench._record_timed(ok, "fine", 1.5, [1.4, 1.5, 1.6], None, "central")
-    assert "fine_error" not in ok
-    assert ok["fine_mode"] == "central"
+    bench._record_timed(ok, "fine", 1.5, [1.4, 1.5, 1.6], None)
+    assert ok == {"fine": 1.5, "fine_raw": [1.4, 1.5, 1.6]}
 
 
-def test_timed3_cold_start_decay_settles_on_tail():
-    """r11 record: minhash raw [18.0, 24.6, 9.1, 5.8, 4.9] — a monotone
-    cold-start decay whose central-3 median (9.1) overstates steady state
-    by ~2x.  _timed3 must extend a decaying sequence until the last-3
-    window stabilizes and report ITS median; _spread must use the same
-    tail window."""
+def test_timed3_takes_exactly_three_timed_laps(monkeypatch):
+    """One untimed warm-up lap, then exactly 3 timed laps whatever their
+    spread or trend: r11's decaying minhash list and a 10x outlier get no
+    extra laps, so a tier's wall time is bounded by 4 laps an entry."""
     bench = _load_bench_module()
 
-    assert bench._is_decaying([18.0, 24.6, 9.1, 5.8, 4.9])
-    assert not bench._is_decaying([1.4, 1.5, 1.6])
-    assert not bench._is_decaying([14.8, 14.5, 22.5, 21.5, 19.2])  # rising
+    for durations in (
+        [30.0, 18.0, 24.6, 9.1, 5.8, 4.9],  # cold-start decay
+        [1.0, 1.0, 10.0, 1.0, 1.0, 1.0],  # one outlier lap
+        [2.0, 1.4, 1.5, 1.6, 1.5, 1.5],  # stable
+    ):
+        lap, calls = _fake_clock_laps(bench, monkeypatch, durations)
+        med, runs, err = bench._timed3("entry", lap)
+        assert len(calls) == 4 and err is None
+        assert runs == durations[1:4]  # the warm-up lap is not recorded
+        assert med == sorted(runs)[1]
+        assert bench._spread(runs) == round(max(runs) / min(runs), 2)
 
-    # _spread: decaying list -> tail-3 window; stable list -> central-3
-    assert bench._spread([10.0, 9.0, 3.0, 2.9, 2.8]) == round(3.0 / 2.8, 2)
-    assert bench._spread([1.4, 1.5, 1.6]) == round(1.6 / 1.4, 2)
+    cleanups = []
+    lap, _ = _fake_clock_laps(bench, monkeypatch, [1.0] * 4)
+    bench._timed3("entry", lap, cleanup=lambda: cleanups.append(1))
+    assert len(cleanups) == 4  # after every lap, warm-up included
 
-    # live decay: sleeps settle after the first timed runs; the reported
-    # median must come from the settled tail, not the center
-    import time as _time
+    # a failed timed lap stays in the raw list as None; the median comes
+    # from the laps that succeeded and the error string is kept
+    lap, calls = _fake_clock_laps(bench, monkeypatch, [1.0, 2.0, 3.0])
 
-    sleeps = iter([0.3, 0.45, 0.4, 0.05, 0.05, 0.05, 0.05, 0.05, 0.05])
+    def flaky():
+        if len(calls) == 2:
+            calls.append(1)
+            raise RuntimeError("lap failed")
+        lap()
 
-    def decaying():
-        _time.sleep(next(sleeps))
-
-    med, runs, err, mode = bench._timed3("decay_entry", decaying)
-    assert err is None
-    assert len(runs) >= 4  # extended past the base 3
-    assert med < 0.2, (med, runs)  # settled-tail median, not ~0.4
-    assert mode == "settle"
+    med, runs, err = bench._timed3("flaky", flaky)
+    assert runs == [2.0, None, 3.0]
+    assert med == 3.0 and "lap failed" in err
 
 
-def test_timed3_mode_emission_and_force_settle():
-    """VERDICT r11 #1/#2: the sidecar must say WHICH median mode produced
-    each number (<name>_mode), and FORCE_SETTLE entries always take the
-    settle branch so the statistic cannot flip modes between runs of the
-    same code."""
+def test_timed3_rising_list_reports_central_not_tail(monkeypatch):
+    """The r13 record's curation 100x laps rose 21.6/21.5/34.6/41.1/49.6
+    and the old trend heuristics reported the tail-3 median 41.07 s.  The
+    median of a rising list is the middle sorted lap, like any other."""
     bench = _load_bench_module()
 
-    # stable timings -> central mode, recorded in the sidecar
-    import time as _time
-
-    med, runs, err, mode = bench._timed3("stable_entry", lambda: _time.sleep(0.02))
-    assert err is None and mode == "central"
-    sidecar: dict = {}
-    bench._record_timed(sidecar, "stable_entry", med, runs, err, mode)
-    assert sidecar["stable_entry_mode"] == "central"
-
-    # a FORCE_SETTLE name reports settle mode even on a stable list
-    assert "corpus_curation_pipeline" in bench.FORCE_SETTLE
-    assert "dedup_connected_components_hybrid" in bench.FORCE_SETTLE
-    med, runs, err, mode = bench._timed3(
-        "corpus_curation_pipeline", lambda: _time.sleep(0.02)
-    )
-    assert err is None and mode == "settle"
-
-    # _spread honors a recorded mode over re-inference: this list is NOT
-    # decaying (first < 1.5x last), but a settle-moded entry still gets
-    # the tail-3 window
-    v = [1.0, 3.0, 2.0, 1.1, 1.2, 1.3]
-    assert bench._spread(v, "settle") == round(1.3 / 1.1, 2)
-    assert bench._spread(v, "central") == bench._spread(v)
+    for timed in ([21.6, 21.5, 34.6], [1.0, 1.5, 2.2], [1.0, 2.0, 4.0]):
+        lap, calls = _fake_clock_laps(bench, monkeypatch, [50.0, *timed, 99.0])
+        med, runs, err = bench._timed3("corpus_curation_pipeline", lap)
+        assert err is None and runs == timed and len(calls) == 4
+        assert med == sorted(timed)[1] < max(timed)
 
 
-def test_timed3_rising_list_reports_central_not_tail():
-    """VERDICT r12 #4: FORCE_SETTLE's unconditional tail-3 median was
-    biased UP when the raw list trends upward (accumulating JVM/GC/host
-    state): hybrid-CC 100x read 30.7 s settle-mode where the same-code
-    interleaved A/B measured 21.8 s.  A rising list must (a) stop the
-    settle extension early instead of burning runs on ever-worse laps and
-    (b) report the central median with mode 'central'."""
+def test_scale_tier_entries_resolve():
+    """Every scale-tier entry names a registered query or a fixture, so a
+    typo or a renamed gate fails here rather than as a null in the
+    record."""
+    from moosestack_spark import registry
+
     bench = _load_bench_module()
-
-    # _is_rising: tail-3 median > 1.2x central-3 median
-    assert bench._is_rising([1.0, 1.5, 2.2, 3.0, 4.0])
-    assert not bench._is_rising([1.0, 1.1, 1.0, 1.05])
-    assert not bench._is_rising([5.0, 3.0, 1.2, 1.1, 1.0])  # decaying
-    assert not bench._is_rising([1.0, 2.0, 3.0])  # too short to tell
-
-    # live rising FORCE_SETTLE entry: sleeps grow monotonically, so the
-    # old behavior extended to 8 runs and reported the tail-3 median of
-    # the WORST laps; now the extension stops once the rise is detected
-    # and the reported median is the central one.
-    import time as _time
-
-    sleeps = iter([0.02, 0.02, 0.06, 0.14, 0.32, 0.5, 0.7, 0.9, 1.1])
-
-    def rising():
-        _time.sleep(next(sleeps))
-
-    assert "corpus_curation_pipeline" in bench.FORCE_SETTLE
-    med, runs, err, mode = bench._timed3("corpus_curation_pipeline", rising)
-    assert err is None
-    assert mode == "central", (mode, runs)
-    assert len(runs) <= 6, runs  # stopped extending once the rise showed
-    # central median, not the tail-3 median of the worst laps
-    ok = sorted(r for r in runs if r is not None)
-    assert med == ok[len(ok) // 2], (med, runs)
-    assert med < max(ok), (med, runs)
-
-    # a decaying FORCE_SETTLE list still settles on the tail (unchanged)
-    sleeps2 = iter([0.4, 0.3, 0.05, 0.04, 0.05, 0.04, 0.04, 0.04])
-
-    def decaying():
-        _time.sleep(next(sleeps2))
-
-    med2, runs2, err2, mode2 = bench._timed3(
-        "dedup_connected_components_hybrid", decaying
-    )
-    assert err2 is None and mode2 == "settle"
-    assert med2 < 0.2, (med2, runs2)
+    registry.load_all()
+    assert set(bench.SCALE_TIERS) == {30, 100, 300}
+    for factor, names in bench.SCALE_TIERS.items():
+        assert len(names) == len(set(names)), factor
+        for name in names:
+            assert name in registry.QUERIES or callable(
+                bench.SCALE_FIXTURES.get(name)
+            ), (factor, name)
+    # every fixture is used by some tier
+    used = {n for names in bench.SCALE_TIERS.values() for n in names}
+    assert set(bench.SCALE_FIXTURES) <= used
 
 
 def test_bench_low_core_invocation_is_headline_only():
@@ -551,3 +529,19 @@ def test_bench_low_core_invocation_is_headline_only():
     assert not bench._is_low_core_probe("abc", 32)
     assert not bench._is_low_core_probe("0", 32)
     assert not bench._is_low_core_probe("-4", 32)
+
+
+def test_driver_memory_default_follows_host(tmp_path):
+    """The driver heap defaults to half of MemTotal (whole GiB, 1-24g):
+    the old fixed 24g exceeded a 15 GB host with no swap."""
+    from moosestack_spark.session import default_driver_memory
+
+    def meminfo(kib: int) -> str:
+        p = tmp_path / f"meminfo_{kib}"
+        p.write_text(f"MemTotal:       {kib} kB\nMemFree:        1024 kB\n")
+        return str(p)
+
+    assert default_driver_memory(meminfo(15_999_000)) == "7g"
+    assert default_driver_memory(meminfo(128 << 20)) == "24g"
+    assert default_driver_memory(meminfo(1 << 20)) == "1g"
+    assert default_driver_memory(str(tmp_path / "missing")) == "24g"
