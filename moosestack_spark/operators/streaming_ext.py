@@ -17,15 +17,13 @@ contract) with
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from moosestack_spark.operators._determinism import dsum, sql_dsum
-from moosestack_spark.operators.streaming_ops import _stream_state_partitions
 from moosestack_spark.registry import query
+from moosestack_spark.streaming.runner import available_now, commit_table
 from moosestack_spark.tables import normalize_event_ts
 
 
@@ -55,20 +53,9 @@ def streaming_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes its end.  The oracle replays the same two-starts
     expansion and the availableNow emission cutoff (window_end <= max(ts) -
     delay)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_hop_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_hop_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_hop_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
+    with available_now(spark) as r:
         stream = (
-            normalize_event_ts(spark.readStream.schema(events_schema).parquet(src_dir))
+            normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
             .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "2 hours", "1 hour"), F.col("event_type"))
             .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
@@ -81,58 +68,44 @@ def streaming_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir).localCheckpoint()
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return r.to_parquet(stream).localCheckpoint()
 
 
 def upsert_batch(table_dir: str, key_cols: list[str], order_cols: list[str]):
     """Build a foreachBatch callback MERGEing each micro-batch into a keyed
     parquet table: per key keep the single row that sorts first by
     ``order_cols`` (descending) — latest-wins upsert.  The merge reads the
-    current table, unions the batch, re-ranks, and atomically replaces the
-    table (write-new + swap).  At scale the same callback body targets a
-    Delta/Iceberg MERGE INTO (per-key shuffle bounded by |batch| + matched
-    keys, not table history)."""
+    current table, unions the batch, re-ranks, and commits the result as
+    the new version (streaming/runner.commit_table).  At scale the same
+    callback body targets a Delta/Iceberg MERGE INTO (per-key shuffle
+    bounded by |batch| + matched keys, not table history)."""
+    rank_w = Window.partitionBy(*key_cols).orderBy(
+        *[F.col(c).desc() for c in order_cols]
+    )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        rank_w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        current_dir = os.path.join(table_dir, "current")
-        merged = batch_df
-        if os.path.exists(current_dir):
-            merged = batch_df.unionByName(spark.read.parquet(current_dir))
-        winners = (
-            merged.withColumn("__rn", F.row_number().over(rank_w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            # materialize BEFORE the swap: the plan reads the files the swap
-            # replaces
-            .localCheckpoint()
-        )
-        next_dir = os.path.join(table_dir, f"next_{batch_id}")
-        winners.write.mode("overwrite").parquet(next_dir)
-        old = os.path.join(table_dir, f"old_{batch_id}")
-        if os.path.exists(current_dir):
-            os.rename(current_dir, old)
-        os.rename(next_dir, current_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        def merge(prev):
+            merged = batch_df if prev is None else batch_df.unionByName(prev)
+            return (
+                merged.withColumn("__rn", F.row_number().over(rank_w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn")
+            )
+
+        commit_table(batch_df.sparkSession, table_dir, batch_id, merge)
 
     return _apply
+
+
+def _upsert_replay(r, sf_dir: str) -> DataFrame:
+    """Replay events through the latest-wins upsert keyed by user (ts,
+    event_id order); returns the final table."""
+    table_dir = r.dir("table")
+    stream = normalize_event_ts(r.source(f"{sf_dir}/events.parquet")).select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    r.for_each_batch(stream, upsert_batch(table_dir, ["user_id"], ["ts", "event_id"]))
+    return r.spark.read.parquet(os.path.join(table_dir, "current"))
 
 
 @query(
@@ -153,42 +126,14 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user latest-event table (latest ts, event_id tiebreak — the same
     total order the Replacing engine view uses).  Final table state must
     equal the batch 'latest row per user' query."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_ups_src_")
-    table_dir = tempfile.mkdtemp(prefix="msk_ups_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="msk_ups_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
-        stream = normalize_event_ts(
-            spark.readStream.schema(events_schema).parquet(src_dir)
-        ).select("event_id", "ts", "user_id", "event_type", "value")
-        q = (
-            stream.writeStream.foreachBatch(
-                upsert_batch(table_dir, ["user_id"], ["ts", "event_id"])
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        final = spark.read.parquet(os.path.join(table_dir, "current"))
+    with available_now(spark) as r:
+        final = _upsert_replay(r, sf_dir)
         return final.select(
             "user_id",
             F.col("event_type").alias("last_event_type"),
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
             F.col("value").alias("last_value"),
         ).localCheckpoint()
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(table_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(
@@ -211,66 +156,35 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     up automatically.  The aggregate accumulates across batches through a
     latest-wins upsert on the group key (count monotonicity makes
     last-write-wins correct under availableNow replay)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("segment")
     )
-    src_dir = tempfile.mkdtemp(prefix="msk_enr_src_")
-    table_dir = tempfile.mkdtemp(prefix="msk_enr_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="msk_enr_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
+    with available_now(spark) as r:
+        table_dir = r.dir("table")
         enriched = (
-            spark.readStream.schema(events_schema)
-            .parquet(src_dir)
+            r.source(f"{sf_dir}/events.parquet")
             .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
             .select("segment", "event_type")
         )
 
         def accumulate(batch_df: DataFrame, batch_id: int) -> None:
-            sp = batch_df.sparkSession
             counts = batch_df.groupBy("segment", "event_type").agg(
                 F.count(F.lit(1)).alias("n")
             )
-            current_dir = os.path.join(table_dir, "current")
-            if os.path.exists(current_dir):
-                prev = sp.read.parquet(current_dir)
-                counts = (
+
+            def merge(prev):
+                if prev is None:
+                    return counts
+                return (
                     counts.unionByName(prev)
                     .groupBy("segment", "event_type")
                     .agg(F.sum("n").cast("bigint").alias("n"))
                 )
-            merged = counts.localCheckpoint()
-            next_dir = os.path.join(table_dir, f"next_{batch_id}")
-            merged.write.mode("overwrite").parquet(next_dir)
-            old = os.path.join(table_dir, f"old_{batch_id}")
-            if os.path.exists(current_dir):
-                os.rename(current_dir, old)
-            os.rename(next_dir, current_dir)
-            shutil.rmtree(old, ignore_errors=True)
 
-        q = (
-            enriched.writeStream.foreachBatch(accumulate)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return (
-            spark.read.parquet(os.path.join(table_dir, "current"))
-            .localCheckpoint()
-        )
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(table_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            commit_table(batch_df.sparkSession, table_dir, batch_id, merge)
+
+        r.for_each_batch(enriched, accumulate)
+        return spark.read.parquet(os.path.join(table_dir, "current")).localCheckpoint()
 
 
 @query(
@@ -298,31 +212,8 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted key — the tombstone outranks it in the (ts, event_id) order.
     Only the read view filters tombstones.  State size is bounded by live
     keys + deleted keys, compacted to one row per key every merge."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_cdc_src_")
-    table_dir = tempfile.mkdtemp(prefix="msk_cdc_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="msk_cdc_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
-        stream = normalize_event_ts(
-            spark.readStream.schema(events_schema).parquet(src_dir)
-        ).select("event_id", "ts", "user_id", "event_type", "value")
-        q = (
-            stream.writeStream.foreachBatch(
-                upsert_batch(table_dir, ["user_id"], ["ts", "event_id"])
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        state = spark.read.parquet(os.path.join(table_dir, "current"))
+    with available_now(spark) as r:
+        state = _upsert_replay(r, sf_dir)
         return (
             state.filter(F.col("event_type") != "error")  # tombstones hidden
             .select(
@@ -333,11 +224,6 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(table_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -383,21 +269,8 @@ def streaming_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive.  Gate aggregates per user the total emitted rows and how many
     actually matched — pinning both the join semantics and the
     watermark-gated outer emission."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_ssjo_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_ssjo_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_ssjo_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
-        src = normalize_event_ts(
-            spark.readStream.schema(events_schema).parquet(src_dir)
-        )
+    with available_now(spark) as r:
+        src = normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
         clicks = (
             src.filter(F.col("event_type") == "click")
             .select(
@@ -423,17 +296,8 @@ def streaming_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
             "leftOuter",
         ).select("c_user", "c_event_id", "p_value")
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return (
-            spark.read.parquet(out_dir)
+            r.to_parquet(joined)
             .groupBy(F.col("c_user").alias("user_id"))
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
@@ -441,11 +305,6 @@ def streaming_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -525,20 +384,9 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DuckDB, including the availableNow emission cutoff."""
     from moosestack_spark.operators.aggregates import hll_finalize, hll_idx_rank_expr
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_hll_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_hll_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_hll_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
+    with available_now(spark) as r:
         stream = (
-            normalize_event_ts(spark.readStream.schema(events_schema).parquet(src_dir))
+            normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
             .select("ts", F.expr(hll_idx_rank_expr("user_id")).alias("ir"))
             .select("ts", F.col("ir.idx").alias("idx"), F.col("ir.rank").alias("rank"))
             .withWatermark("ts", "1 day")
@@ -550,22 +398,7 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "m_j",
             )
         )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        regs = spark.read.parquet(out_dir)
-        return hll_finalize(regs, ["window_start"]).localCheckpoint()
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return hll_finalize(r.to_parquet(stream), ["window_start"]).localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -601,20 +434,9 @@ SELECT window_start, event_type, n, rnk FROM (
 def streaming_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 event types per closed 1-day window: watermarked streaming
     rollup (append-once per window) + batch-side rank over the sink."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_wtk_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_wtk_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_wtk_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
+    with available_now(spark) as r:
         stream = (
-            normalize_event_ts(spark.readStream.schema(events_schema).parquet(src_dir))
+            normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
             .withWatermark("ts", "1 day")
             .groupBy(F.window("ts", "1 day"), F.col("event_type"))
             .agg(F.count(F.lit(1)).alias("n"))
@@ -624,16 +446,7 @@ def streaming_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n",
             )
         )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rollup = spark.read.parquet(out_dir)
+        rollup = r.to_parquet(stream)
         w = Window.partitionBy("window_start").orderBy(
             F.col("n").desc(), F.col("event_type").asc()
         )
@@ -643,11 +456,6 @@ def streaming_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("window_start", "event_type", "n", "rnk")
             .localCheckpoint()
         )
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -706,22 +514,9 @@ def streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from moosestack_spark.operators.aggregates import fmix32_expr
     from moosestack_spark.ops.sketches import mincount_finalize
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_kmv_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_kmv_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_kmv_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
+    with available_now(spark) as r:
         stream = (
-            normalize_event_ts(
-                spark.readStream.schema(events_schema).parquet(src_dir)
-            )
+            normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
             .select(
                 "ts", F.expr(fmix32_expr("user_id")).cast("bigint").alias("h32")
             )
@@ -735,24 +530,9 @@ def streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "m",
             )
         )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        minima = spark.read.parquet(out_dir)
         return mincount_finalize(
-            minima, ["window_start"], k=_KMV_K
+            r.to_parquet(stream), ["window_start"], k=_KMV_K
         ).localCheckpoint()
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -807,18 +587,7 @@ def streaming_quantile_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     state per open window is the bounded bucket-count table, emitted on
     window close (1-day watermark, availableNow cutoff replayed by the
     oracle), finalized batch-side with the exact integer rank rule."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_qt_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_qt_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_qt_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
+    with available_now(spark) as r:
         ms = F.floor(F.col("value") * 97).cast("bigint")
         b = (
             F.when(ms >= 30000, F.lit(30000))
@@ -828,9 +597,7 @@ def streaming_quantile_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         stream = (
-            normalize_event_ts(
-                spark.readStream.schema(events_schema).parquet(src_dir)
-            )
+            normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
             .select("ts", b.alias("b"))
             .withWatermark("ts", "1 day")
             .groupBy(F.window("ts", "1 day"), F.col("b"))
@@ -843,17 +610,7 @@ def streaming_quantile_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cnt",
             )
         )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        hist = spark.read.parquet(out_dir)
-        cum = hist.select(
+        cum = r.to_parquet(stream).select(
             "window_start", "b", "cnt",
             F.sum("cnt").over(
                 Window.partitionBy("window_start").orderBy("b")
@@ -878,11 +635,6 @@ def streaming_quantile_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -933,15 +685,6 @@ def streaming_space_saving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     CAP, KEEP = 128, 64
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_sss_src_")
-    ckpt = tempfile.mkdtemp(prefix="msk_sss_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    sink_name = f"msk_sss_{abs(hash(src_dir)) % 10**9}"
     out_schema = "cohort bigint, key string, est bigint, e bigint"
     state_schema = "keys string, cnts string, e bigint"
 
@@ -981,62 +724,31 @@ def streaming_space_saving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
-        keyed = (
-            spark.readStream.schema(events_schema)
-            .parquet(src_dir)
-            .select(
-                (F.col("user_id") % 4).cast("bigint").alias("cohort"),
-                F.when(
-                    F.col("user_id") % 10 < 7,
-                    F.concat(
-                        F.lit("hot-"), (F.col("user_id") % 3).cast("string")
-                    ),
-                )
-                .otherwise(
-                    F.concat(
-                        F.lit("cold-"),
-                        (F.col("user_id") % 5000).cast("string"),
-                    )
-                )
-                .alias("key"),
+    def keyed(df: DataFrame) -> DataFrame:
+        return df.select(
+            (F.col("user_id") % 4).cast("bigint").alias("cohort"),
+            F.when(
+                F.col("user_id") % 10 < 7,
+                F.concat(F.lit("hot-"), (F.col("user_id") % 3).cast("string")),
+            )
+            .otherwise(
+                F.concat(F.lit("cold-"), (F.col("user_id") % 5000).cast("string"))
+            )
+            .alias("key"),
+        )
+
+    with available_now(spark) as r:
+        stream = (
+            keyed(r.source(f"{sf_dir}/events.parquet"))
+            .groupBy("cohort")
+            .applyInPandasWithState(
+                update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
             )
         )
-        stream = keyed.groupBy("cohort").applyInPandasWithState(
-            update, out_schema, state_schema, "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sketch = spark.table(sink_name)
+        sketch = r.to_memory(stream, "update")
         # batch-side exact counts (what the oracle replays)
         exact = (
-            normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-            .select(
-                (F.col("user_id") % 4).cast("bigint").alias("cohort"),
-                F.when(
-                    F.col("user_id") % 10 < 7,
-                    F.concat(
-                        F.lit("hot-"), (F.col("user_id") % 3).cast("string")
-                    ),
-                )
-                .otherwise(
-                    F.concat(
-                        F.lit("cold-"),
-                        (F.col("user_id") % 5000).cast("string"),
-                    )
-                )
-                .alias("key"),
-            )
+            keyed(normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet")))
             .groupBy("cohort", "key")
             .agg(F.count(F.lit(1)).alias("exact_cnt"))
         )
@@ -1061,10 +773,6 @@ def streaming_space_saving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("cohort", "key")
         )
         return out.localCheckpoint()
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1088,11 +796,15 @@ def scd2_merge_batch(table_dir: str, key: str, order_cols: list[str]):
     rows into the SCD2 history at ``table_dir`` (affected keys only)."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        cur_path = os.path.join(table_dir, "current")
-        new_rows = batch.select(key, *order_cols, "cents")
-        if os.path.exists(cur_path):
-            old = spark.read.parquet(cur_path)
+        commit_table(
+            batch.sparkSession,
+            table_dir,
+            batch_id,
+            lambda old: merge(batch.select(key, *order_cols, "cents"), old),
+        )
+
+    def merge(new_rows: DataFrame, old) -> DataFrame:
+        if old is not None:
             affected = new_rows.select(key).distinct()
             # untouched keys: materialized intervals carried through as-is
             keep = old.join(affected, key, "left_anti")
@@ -1101,7 +813,7 @@ def scd2_merge_batch(table_dir: str, key: str, order_cols: list[str]):
                 .select(key, *order_cols, "cents")
                 .unionByName(new_rows)
                 # foreachBatch is at-least-once: a replayed micro-batch
-                # (sink renamed, checkpoint commit lost in a crash) must be
+                # (table swapped, checkpoint commit lost in a crash) must be
                 # a no-op.  A version row is identified by (key, order
                 # cols), so deduping here makes the merge idempotent under
                 # replay — the exactly-once half of the kill-and-resume
@@ -1121,12 +833,7 @@ def scd2_merge_batch(table_dir: str, key: str, order_cols: list[str]):
             nxt.alias("valid_to"),
             nxt.isNull().alias("is_current"),
         )
-        merged = redone if keep is None else keep.unionByName(redone)
-        out = os.path.join(table_dir, f"stage_{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        if os.path.exists(cur_path):
-            shutil.rmtree(cur_path)
-        os.rename(out, cur_path)
+        return redone if keep is None else keep.unionByName(redone)
 
     return apply
 
@@ -1150,14 +857,8 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the one-shot batch build (table_scd2_build's oracle) because
     per-key recompute is order-independent — the hard-oracle contract
     for this streaming op."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_scd2_src_")
-    table_dir = tempfile.mkdtemp(prefix="msk_scd2_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="msk_scd2_ckpt_")
-    scope = _stream_state_partitions(spark)
-    scope.__enter__()
-    try:
+    with available_now(spark) as r:
+        src_dir, table_dir = r.dir("slices"), r.dir("table")
         ev = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
         # three deterministic time slices -> three ordered source files
         bounds = ev.agg(
@@ -1172,13 +873,13 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("event_id") > bounds.b2),
         ]
         for i, sl in enumerate(slices):
-            tmp = os.path.join(src_dir, f"_tmp{i}")
+            # written outside the source dir; the replay's root holds both
+            tmp = os.path.join(r.root, f"slice{i}")
             sl.coalesce(1).write.parquet(tmp)
             part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
             os.rename(
                 os.path.join(tmp, part), os.path.join(src_dir, f"batch{i}.parquet")
             )
-            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema(slices[0].schema)
             .option("maxFilesPerTrigger", 1)
@@ -1190,15 +891,9 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
             )
         )
-        q = (
-            stream.writeStream.foreachBatch(
-                scd2_merge_batch(table_dir, "user_id", ["ts", "event_id"])
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        r.for_each_batch(
+            stream, scd2_merge_batch(table_dir, "user_id", ["ts", "event_id"])
         )
-        q.awaitTermination()
         # the intervals are MATERIALIZED by the merges — the read is a
         # plain projection, no window (that's the point of SCD2 storage)
         hist = spark.read.parquet(os.path.join(table_dir, "current"))
@@ -1214,8 +909,3 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        scope.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(table_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)

@@ -16,16 +16,12 @@ The transform under test (expression flavor — JVM-side):
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from moosestack_spark.operators._determinism import dsum, sql_dsum
 from moosestack_spark.registry import query
-from moosestack_spark.streaming.runner import run_file_stream
+from moosestack_spark.streaming.runner import available_now, run_file_stream
 from moosestack_spark.streaming.stream import ExpressionTransform, Stream
 from moosestack_spark.tables import normalize_event_ts, t
 
@@ -89,23 +85,11 @@ SELECT event_id, user_id, event_type, value, k FROM (
 def streaming_zero_or_many_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events.parquet as a stream -> transform -> parquet sink; read
     the sink back.  Exactly-once to the sink via checkpoint."""
-    # raw parquet schema (ts as nanos-long) — the file stream must read
-    # the file as stored; the transform does not use ts.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = Stream(name="events").add_transform("processed", _transform())
-    out_dir = tempfile.mkdtemp(prefix="msk_stream_out_")
-    try:
-        paths = run_file_stream(
-            spark,
-            source_path=f"{sf_dir}/events.parquet",
-            source_schema=events_schema,
-            stream=stream,
-            out_dir=out_dir,
-        )
+    with available_now(spark) as r:
+        # the transform does not use ts, so the file streams as stored
+        paths = run_file_stream(r, r.source(f"{sf_dir}/events.parquet"), stream)
         return spark.read.parquet(paths["processed"]).localCheckpoint()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 @query(
@@ -126,20 +110,9 @@ def streaming_dlq_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stream.py:425-448).  failed_at is wall-clock and original_record is the
     full-record JSON; for the deterministic gate we surface the offending
     payload extracted from the envelope plus the static fields."""
-    # raw parquet schema (ts as nanos-long) — the file stream must read
-    # the file as stored; the transform does not use ts.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = Stream(name="events").add_transform("processed", _transform())
-    out_dir = tempfile.mkdtemp(prefix="msk_dlq_out_")
-    try:
-        paths = run_file_stream(
-            spark,
-            source_path=f"{sf_dir}/events.parquet",
-            source_schema=events_schema,
-            stream=stream,
-            out_dir=out_dir,
-        )
+    with available_now(spark) as r:
+        paths = run_file_stream(r, r.source(f"{sf_dir}/events.parquet"), stream)
         dlq = spark.read.parquet(paths["processed__dlq"])
         return dlq.select(
             F.get_json_object(F.col("original_record"), "$.props").alias(
@@ -149,31 +122,6 @@ def streaming_dlq_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
             "error_type",
             "source",
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
-
-
-class _stream_state_partitions:
-    """Scoped shuffle-partition override for stateful streaming queries.
-
-    A streaming aggregation creates one state store per shuffle partition;
-    the bounded gate replays hold a few thousand windows/sessions, where 32
-    stores are pure per-batch overhead (measured 4.6s -> 1.9s at 8 for the
-    windowed agg).  At 100 TB you size this UP to the state volume instead
-    — the knob is per-query, which is exactly what this context manager
-    expresses.  (Set at query START: the checkpoint pins it afterwards.)
-    """
-
-    def __init__(self, spark: SparkSession, n: int = 8):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
 
 
 # --------------------------------------------------------------------------
@@ -212,20 +160,9 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once, when the watermark passes its end — the incremental-MV
     shape for time-series rollups at 100 TB (state scales with open windows,
     not with history)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_wagg_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_wagg_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_wagg_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    stack = _stream_state_partitions(spark)
-    stack.__enter__()
-    try:
+    with available_now(spark) as r:
         stream = (
-            normalize_event_ts(spark.readStream.schema(events_schema).parquet(src_dir))
+            normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
             .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
             .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
@@ -238,21 +175,7 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir).localCheckpoint()
-    finally:
-        stack.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return r.to_parquet(stream).localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -291,20 +214,9 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete-mode memory sink for the bounded gate replay; the production
     path is append + watermark to a table sink (state per OPEN session —
     bounded by active users, not history — the scalable shape)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_sess_src_")
-    ckpt = tempfile.mkdtemp(prefix="msk_sess_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    sink_name = f"msk_sessions_{abs(hash(src_dir)) % 10**9}"
-    stack = _stream_state_partitions(spark)
-    stack.__enter__()
-    try:
+    with available_now(spark) as r:
         stream = (
-            normalize_event_ts(spark.readStream.schema(events_schema).parquet(src_dir))
+            normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
             .groupBy(F.session_window("ts", "6 hours"), F.col("user_id"))
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(
@@ -318,19 +230,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(sink_name).localCheckpoint()
-    finally:
-        stack.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return r.to_memory(stream, "complete").localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -362,16 +262,6 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_state_src_")
-    ckpt = tempfile.mkdtemp(prefix="msk_state_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    sink_name = f"msk_user_stats_{abs(hash(src_dir)) % 10**9}"
-
     out_schema = (
         "user_id bigint, n_events bigint, first_ts string, last_ts string"
     )
@@ -397,31 +287,16 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
             }
         )
 
-    stack = _stream_state_partitions(spark)
-    stack.__enter__()
-    try:
+    with available_now(spark) as r:
         stream = (
-            spark.readStream.schema(events_schema)
-            .parquet(src_dir)
+            r.source(f"{sf_dir}/events.parquet")
             .select("user_id", "ts")
             .groupBy("user_id")
             .applyInPandasWithState(
                 update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
             )
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(sink_name).localCheckpoint()
-    finally:
-        stack.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return r.to_memory(stream, "update").localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -443,9 +318,6 @@ WHERE event_type = 'click'
 """,
 )
 def streaming_multi_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
     def route():
         return (
             F.when(F.col("event_type") == "purchase", F.lit("purchases"))
@@ -456,25 +328,15 @@ def streaming_multi_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = Stream(name="events").set_multi_transform(
         route, ["purchases", "clicks"]
     )
-    out_dir = tempfile.mkdtemp(prefix="msk_route_out_")
-    try:
-        paths = run_file_stream(
-            spark,
-            source_path=f"{sf_dir}/events.parquet",
-            source_schema=events_schema,
-            stream=stream,
-            out_dir=out_dir,
-        )
-        frames = []
-        for dest in ("purchases", "clicks"):
-            frames.append(
-                spark.read.parquet(paths[dest]).select(
-                    F.lit(dest).alias("destination"), "event_id", "value"
-                )
+    with available_now(spark) as r:
+        paths = run_file_stream(r, r.source(f"{sf_dir}/events.parquet"), stream)
+        frames = [
+            spark.read.parquet(paths[dest]).select(
+                F.lit(dest).alias("destination"), "event_id", "value"
             )
+            for dest in ("purchases", "clicks")
+        ]
         return frames[0].unionByName(frames[1]).localCheckpoint()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -543,18 +405,9 @@ def streaming_dlq_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from moosestack_spark.streaming.stream import dlq_as_typed
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = Stream(name="events").add_transform("processed", _transform())
-    out_dir = tempfile.mkdtemp(prefix="msk_dlqrec_out_")
-    try:
-        paths = run_file_stream(
-            spark,
-            source_path=f"{sf_dir}/events.parquet",
-            source_schema=events_schema,
-            stream=stream,
-            out_dir=out_dir,
-        )
+    with available_now(spark) as r:
+        paths = run_file_stream(r, r.source(f"{sf_dir}/events.parquet"), stream)
         dlq = spark.read.parquet(paths["processed__dlq"])
         typed = dlq_as_typed(
             dlq,
@@ -568,8 +421,6 @@ def streaming_dlq_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         return typed.localCheckpoint()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -601,13 +452,8 @@ def streaming_topic_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from moosestack_spark.streaming.topic_sync import (
-        TopicToTopicSync,
-        run_file_topic_sync,
-    )
+    from moosestack_spark.streaming.topic_sync import TopicToTopicSync
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    source_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     v2 = StructType(
         [
             StructField("event_id", LongType()),
@@ -623,18 +469,9 @@ def streaming_topic_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_schema=v2,
         defaults={"schema_version": 2},
     )
-    out_dir = tempfile.mkdtemp(prefix="msk_topic_sync_")
-    try:
-        path = run_file_topic_sync(
-            spark,
-            source_path=f"{sf_dir}/events.parquet",
-            source_schema=source_schema,
-            sync=sync,
-            out_dir=out_dir,
-        )
-        return spark.read.parquet(path).localCheckpoint()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    with available_now(spark) as r:
+        source = r.source(f"{sf_dir}/events.parquet")
+        return r.to_parquet(sync.conform(source)).localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -668,21 +505,8 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two watermarked streams (clicks, purchases) interval-joined on
     (user_id, purchase within [click, click+1h]); joined pairs land in an
     append parquet sink, then the gate aggregates attribution per user."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_ssj_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_ssj_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_ssj_ckpt_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    stack = _stream_state_partitions(spark)
-    stack.__enter__()
-    try:
-        src = normalize_event_ts(
-            spark.readStream.schema(events_schema).parquet(src_dir)
-        )
+    with available_now(spark) as r:
+        src = normalize_event_ts(r.source(f"{sf_dir}/events.parquet"))
         clicks = (
             src.filter(F.col("event_type") == "click")
             .select(
@@ -708,17 +532,8 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
             "inner",
         ).select("c_user", "c_event_id", "p_value")
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return (
-            spark.read.parquet(out_dir)
+            r.to_parquet(joined)
             .groupBy(F.col("c_user").alias("user_id"))
             .agg(
                 F.count(F.lit(1)).alias("n_attributed"),
@@ -726,11 +541,6 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        stack.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -755,41 +565,17 @@ GROUP BY event_type
 """,
 )
 def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="msk_sdedup_src_")
-    out_dir = tempfile.mkdtemp(prefix="msk_sdedup_out_")
-    ckpt = tempfile.mkdtemp(prefix="msk_sdedup_ckpt_")
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    # the same file twice = planted exact duplicates in the stream
-    os.symlink(src, os.path.join(src_dir, "events_a.parquet"))
-    os.symlink(src, os.path.join(src_dir, "events_b.parquet"))
-    stack = _stream_state_partitions(spark)
-    stack.__enter__()
-    try:
+    with available_now(spark) as r:
+        # the same file twice = planted exact duplicates in the stream
         deduped = (
-            normalize_event_ts(spark.readStream.schema(events_schema).parquet(src_dir))
+            normalize_event_ts(r.source(f"{sf_dir}/events.parquet", links=2))
             .withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark(["event_id", "user_id", "event_type", "ts"])
             .select("event_id", "user_id", "event_type", "ts")
         )
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return (
-            spark.read.parquet(out_dir)
+            r.to_parquet(deduped)
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_distinct"))
             .localCheckpoint()
         )
-    finally:
-        stack.__exit__()
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)

@@ -97,6 +97,10 @@ def _propagate(
     sum across a whole batch therefore soundly means the fixpoint
     predates the batch, and labels past the fixpoint are no-op rounds
     with identical output — batching changes job count, never labels.
+    The final round always runs as its own batch, so a fixpoint reached
+    one round before ``max_rounds`` reports converged=True exactly as the
+    unbatched loop does (a final 2-round batch would compare sum(6) with
+    sum(4) and miss it).
     (A fixed K or an always-doubling K were measured/analyzed losers in
     r12 — they double the shuffle work of the fast-converging oracle
     gates; the escalation only triggers where driver round-trips
@@ -111,6 +115,8 @@ def _propagate(
     while done < max_rounds:
         k = 1 if done < _PROPAGATE_ESCALATE_AFTER else batch
         k = min(k, max_rounds - done)
+        if k > 1 and done + k == max_rounds:
+            k -= 1  # the last round is checked alone, as the unbatched loop does
         for _ in range(k):
             labels = (
                 sym_self.join(labels, sym_self.src == labels.v)

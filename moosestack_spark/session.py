@@ -35,8 +35,15 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{min(24, max(1, kib // 2 // (1 << 20)))}g"
 
 
+def default_cpus() -> str:
+    """The cores this process may run on (its CPU affinity), so a 4-core
+    host gets local[4] rather than a fixed local[32].  SPARK_GRAFT_CPUS
+    overrides it."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "moosestack-spark", **extra_conf: str) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -20,12 +20,10 @@ scales with source partitions.
 
 from __future__ import annotations
 
-import os
-import tempfile
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -36,7 +34,12 @@ class TopicToTopicSync:
 
     ``defaults`` supplies values for columns that exist only in the target
     version (the reference requires new-version columns to be nullable or
-    defaulted for exactly this reason)."""
+    defaulted for exactly this reason).
+
+    The ``streaming_topic_sync`` gate runs ``conform`` over a parquet
+    stand-in for the source topic into a parquet sink (one
+    ``streaming.runner.available_now`` replay); against a live broker, swap
+    the reader for ``format("kafka")`` and the writer for a kafka sink."""
 
     source: str
     target: str
@@ -61,34 +64,3 @@ class TopicToTopicSync:
             else:
                 cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
         return df.select(*cols)
-
-
-def run_file_topic_sync(
-    spark: SparkSession,
-    source_path: str,
-    source_schema: StructType,
-    sync: TopicToTopicSync,
-    out_dir: str,
-    checkpoint_dir: Optional[str] = None,
-) -> str:
-    """Run the bridge over a parquet-directory stand-in for the source topic
-    (same harness as streaming/runner.py; swap the reader for
-    ``format("kafka")`` + the writer for a kafka sink against a live
-    broker).  Returns the target sink path."""
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="msk_sync_ckpt_")
-    if os.path.isfile(source_path):
-        link_dir = tempfile.mkdtemp(prefix="msk_sync_src_")
-        os.symlink(source_path, os.path.join(link_dir, os.path.basename(source_path)))
-        source_path = link_dir
-    target_path = os.path.join(out_dir, sync.target)
-    reader = spark.readStream.schema(source_schema).parquet(source_path)
-    q = (
-        sync.conform(reader)
-        .writeStream.format("parquet")
-        .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return target_path

@@ -207,3 +207,21 @@ def test_propagate_escalating_batches_match_unbatched(spark):
     assert not converged
     got = {r["v"]: r["lbl"] for r in out.collect()}
     assert got == {i: max(1, i - k) for i in range(1, 25)}
+
+
+def test_propagate_converged_flag_matches_unbatched_at_the_cap(spark):
+    """A fixpoint reached one round before max_rounds: the unbatched loop
+    sees the last round change nothing and returns converged=True.  The
+    batched loop must too, even when the cap falls inside a doubled batch
+    (max_rounds=6 used to compare sum(6) with sum(4) and return False)."""
+    from moosestack_spark.ops.components import _propagate, _sym_and_labels
+
+    # 6-node path: the last label change is at round 5, so the unbatched
+    # loop converges iff it may run round 6
+    edges = spark.createDataFrame([(i, i + 1) for i in range(1, 6)], ["src", "dst"])
+    for max_rounds in (5, 6, 7, 8):
+        sym, labels = _sym_and_labels(edges, "src", "dst")
+        out, converged = _propagate(sym, labels, max_rounds=max_rounds)
+        assert converged == (max_rounds >= 6), max_rounds
+        got = {r["v"]: r["lbl"] for r in out.collect()}
+        assert got == {i: max(1, i - max_rounds) for i in range(1, 7)}

@@ -545,3 +545,17 @@ def test_driver_memory_default_follows_host(tmp_path):
     assert default_driver_memory(meminfo(128 << 20)) == "24g"
     assert default_driver_memory(meminfo(1 << 20)) == "1g"
     assert default_driver_memory(str(tmp_path / "missing")) == "24g"
+
+
+def test_cpus_default_follows_affinity(monkeypatch):
+    """get_spark() runs on the cores this process may use unless
+    SPARK_GRAFT_CPUS says otherwise: the old fixed default gave local[32]
+    on a 4-core host."""
+    import os
+
+    from moosestack_spark.session import default_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == "3"

@@ -189,7 +189,7 @@ def test_scd2_kill_and_resume(spark, sf_dir, tmp_path):
     import time
 
     from moosestack_spark.operators.streaming_ext import scd2_merge_batch
-    from moosestack_spark.operators.streaming_ops import _stream_state_partitions
+    from moosestack_spark.streaming.runner import _stream_state_partitions
     from pyspark.sql import Window
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
