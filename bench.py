@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from moosestack_spark import registry
-from moosestack_spark.session import get_spark
+from moosestack_spark.session import get_spark, materialization_scope
 
 HEADLINE = [
     "agg_pricing_summary",
@@ -357,35 +357,22 @@ def main() -> None:
         out: dict[str, float | None] = {}
         for name in names:
             fn = registry.QUERIES[name]
-            start = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                # Force full execution without driver-side materialization
-                # cost dominating: count() collapses to one long.
-                df.count()
-                out[name] = round(time.perf_counter() - start, 3)
-            except Exception as exc:  # one broken query must never zero the run
-                print(f"BENCH-ERROR {name}: {exc!r}"[:500], file=sys.stderr)
-                out[name] = None
+            # the scope frees the query's checkpoint blocks after the timer
+            with materialization_scope(spark):
+                start = time.perf_counter()
+                try:
+                    df = fn(spark, sf_dir)
+                    # Force full execution without driver-side materialization
+                    # cost dominating: count() collapses to one long.
+                    df.count()
+                    out[name] = round(time.perf_counter() - start, 3)
+                except Exception as exc:  # one broken query must never zero the run
+                    print(f"BENCH-ERROR {name}: {exc!r}"[:500], file=sys.stderr)
+                    out[name] = None
         return out
 
     timings = run_suite(HEADLINE)
-    # Scaling probe (VERDICT r12 #3): the driver re-runs bench.py at a
-    # LOWER core count to measure per-query parallel scaling, but the full
-    # extras + scale tiers cannot finish at 8 cores inside its timeout
-    # (BENCH_r12_c8 exited rc 124).  The scaling evidence lives entirely in
-    # the headline `queries` dict of the one-line JSON, so a low-core
-    # invocation skips the sidecar work.
-    host_cpus = os.cpu_count() or 32
-    headline_only = _is_low_core_probe(os.environ.get("SPARK_GRAFT_CPUS"), host_cpus)
-    if headline_only:
-        print(
-            f"BENCH-SCALING-PROBE: SPARK_GRAFT_CPUS="
-            f"{os.environ.get('SPARK_GRAFT_CPUS')} < host {host_cpus} "
-            f"cores — low-core scaling run, headline only (extras and "
-            f"scale tiers are the full-core run's artifact).",
-            file=sys.stderr,
-        )
+    headline_only = _headline_only()
     # Newer operators measured OUTSIDE the headline total: the HEADLINE list
     # and its `value` stay frozen for round-over-round comparability, while
     # extra_queries still gives per-round perf evidence for recent work.
@@ -616,43 +603,6 @@ def _make_scaled_dir(spark, sf_dir: str, factor: int) -> str:
     return out
 
 
-
-
-def _scale_run_cleanup(spark, keep=frozenset()) -> None:
-    """Between-run hygiene for the 30x tier: the iterative ops
-    (k-means/CC/k-core) localCheckpoint per round, and those cached RDD
-    blocks accumulate across the 3x loops — the round-9 record showed
-    LATER runs degrading (cc_hybrid 20->84 s, embedding prune 33->69 s),
-    which is memory pressure, not plan shape.  Unpersist everything no
-    longer referenced and nudge the JVM GC so each run starts clean.
-
-    ``keep`` is a set of RDD ids that must SURVIVE the sweep (VERDICT r10
-    #1): long-lived fixtures like the cc_chain localCheckpoint are created
-    once outside the run loop, and unpersisting a checkpoint's blocks is
-    not recoverable — every later run dies CHECKPOINT_RDD_BLOCK_ID_NOT_
-    FOUND.  Callers that hold a checkpointed fixture pass its RDD ids."""
-    try:
-        # py4j auto-converts the java map to a Python dict (MapConverter),
-        # so iterate Python-side; keys are RDD ids, values JavaRDD handles
-        for rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-            if rid in keep:
-                continue
-            rdd.unpersist(False)
-        spark.sparkContext._jvm.System.gc()
-    except Exception as exc:  # hygiene must never fail a measurement
-        print(f"BENCH-SCALE-CLEANUP-WARNING: {exc!r}"[:200], file=sys.stderr)
-
-
-def _persistent_rdd_ids(spark) -> set:
-    """Snapshot the ids of currently-persisted RDDs (checkpoint blocks
-    included) — diffing before/after a localCheckpoint identifies the
-    fixture's blocks so _scale_run_cleanup can be told to keep them."""
-    try:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    except Exception:
-        return set()
-
-
 def _is_low_core_probe(cpus_env: str | None, host_cpus: int) -> bool:
     """True when this invocation is the driver's LOW-CORE scaling probe:
     $SPARK_GRAFT_CPUS explicitly requests fewer cores than the host has.
@@ -669,6 +619,28 @@ def _is_low_core_probe(cpus_env: str | None, host_cpus: int) -> bool:
     return 0 < req < host_cpus
 
 
+def _headline_only() -> bool:
+    """Scaling probe (VERDICT r12 #3): the driver re-runs bench.py at a
+    LOWER core count to measure per-query parallel scaling, but the full
+    extras + scale tiers cannot finish at 8 cores inside its timeout
+    (BENCH_r12_c8 exited rc 124).  The scaling evidence lives entirely in
+    the headline `queries` dict of the one-line JSON, so a low-core
+    invocation skips the sidecar work.  The host's cores are the ones this
+    process may run on, counted as get_spark() counts them: under taskset,
+    os.cpu_count() would take a full-core run for a low-core probe."""
+    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
+    host_cpus = len(os.sched_getaffinity(0))
+    if not _is_low_core_probe(cpus_env, host_cpus):
+        return False
+    print(
+        f"BENCH-SCALING-PROBE: SPARK_GRAFT_CPUS={cpus_env} < host "
+        f"{host_cpus} cores — low-core scaling run, headline only (extras "
+        f"and scale tiers are the full-core run's artifact).",
+        file=sys.stderr,
+    )
+    return True
+
+
 def _spread(laps) -> float | None:
     """max/min of an entry's timed laps; None unless every lap succeeded."""
     if not laps or any(x is None or x <= 0 for x in laps):
@@ -676,7 +648,7 @@ def _spread(laps) -> float | None:
     return round(max(laps) / min(laps), 2)
 
 
-def _timed3(name: str, fn, cleanup=None) -> tuple:
+def _timed3(name: str, fn) -> tuple:
     """One untimed warm-up lap, then exactly 3 timed laps; returns
     ``(median, laps, last_error)``.
 
@@ -686,8 +658,7 @@ def _timed3(name: str, fn, cleanup=None) -> tuple:
     entries does not leak into one entry's laps.  The median is the middle
     of the sorted successful laps whatever order they came in, so a rising
     or decaying list cannot switch the statistic; the raw laps go into the
-    record next to it, and a failed lap is None there.  ``cleanup`` (if
-    given) runs after every lap, outside the timer."""
+    record next to it, and a failed lap is None there."""
     laps: list = []
     errs: list = []
     for i in range(4):
@@ -702,8 +673,6 @@ def _timed3(name: str, fn, cleanup=None) -> tuple:
             sec = None
         if i:
             laps.append(sec)
-        if cleanup is not None:
-            cleanup()
     ok = sorted(x for x in laps if x is not None)
     return (ok[len(ok) // 2] if ok else None), laps, (errs[-1] if errs else None)
 
@@ -722,11 +691,10 @@ def _record_timed(sidecar: dict, name: str, med, laps, err) -> None:
 #
 # Scale entries whose gate call shape does not scale; a fixture shadows the
 # registry query of the same name.  Each builds its input once, outside the
-# timer, and returns (lap, keep) — a zero-arg callable running one lap, and
-# the RDD ids the between-lap sweep must keep alive.
+# timer, and returns the body of one lap, a zero-arg callable.
 
 
-def _embedding_auto_t90(spark, data_dir: str) -> tuple:
+def _embedding_auto_t90(spark, data_dir: str):
     """Occupancy-targeted banding at a realistic near-dup threshold (t=0.9,
     recall 0.9).  The fixed 4-plane/16-bucket gate config grows O(n^2/16)
     per band (8.3 s at 10x -> 84.6 s at 30x); the auto config holds
@@ -735,14 +703,12 @@ def _embedding_auto_t90(spark, data_dir: str) -> tuple:
 
     emb = spark.read.parquet(f"{data_dir}/embeddings.parquet")
     n_emb = emb.count()
-    return (
-        lambda: embedding_cosine_pairs_pruned_auto(
-            emb, "vec_id", "embedding", threshold=0.9, dim=64, n_rows=n_emb
-        ).count()
-    ), frozenset()
+    return lambda: embedding_cosine_pairs_pruned_auto(
+        emb, "vec_id", "embedding", threshold=0.9, dim=64, n_rows=n_emb
+    ).count()
 
 
-def _graph_kcore(spark, data_dir: str) -> tuple:
+def _graph_kcore(spark, data_dir: str):
     """k-core peel over a deterministic 5-out-edge graph on the scaled doc
     ids: at 30x it needs 15 peels, past the gate's 12-iteration oracle
     unroll, so the operator runs directly with a higher bound.  Per-round
@@ -780,10 +746,10 @@ def _graph_kcore(spark, data_dir: str) -> tuple:
         )
         .distinct()
     )
-    return (lambda: k_core(edges, k=4, max_iters=25).count()), frozenset()
+    return lambda: k_core(edges, k=4, max_iters=25).count()
 
 
-def _similarity_knn_graph(spark, data_dir: str) -> tuple:
+def _similarity_knn_graph(spark, data_dir: str):
     """knn-graph with occupancy-targeted planes: ceil(log2(n / 64)) planes
     hold expected bucket occupancy ~64, so the bucket self-join stays
     linear in n instead of n^2/buckets (the 6-plane gate config is the
@@ -794,17 +760,18 @@ def _similarity_knn_graph(spark, data_dir: str) -> tuple:
 
     emb = spark.read.parquet(f"{data_dir}/embeddings.parquet")
     planes = max(6, math.ceil(math.log2(max(emb.count(), 128) / 64)))
-    return (lambda: knn_graph(emb, dim=64, k=5, n_planes=planes).count()), frozenset()
+    return lambda: knn_graph(emb, dim=64, k=5, n_planes=planes).count()
 
 
-def _cc_chain(variant: str, spark, data_dir: str) -> tuple:
+def _cc_chain(variant: str, spark, data_dir: str):
     """Chain-heavy CC fixture, independent of data_dir: 1024 disjoint
     64-node chains (diameter 64 — the pathological shape for O(diameter)
     label propagation, where the O(log n) star/hybrid variants win).
 
-    The chain is checkpointed ONCE, outside the laps, and unpersisting a
-    checkpoint's blocks is not recoverable (VERDICT r10 #1: every later lap
-    died CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), so its RDD ids are the keep-set."""
+    The chain is checkpointed ONCE, outside the laps, so each lap's
+    materialization scope leaves its blocks alone (VERDICT r10 #1: a sweep
+    that freed them killed every later lap with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
     from moosestack_spark.ops import components as cc
 
     run = {
@@ -812,15 +779,13 @@ def _cc_chain(variant: str, spark, data_dir: str) -> tuple:
         "star": cc.connected_components_star,
         "hybrid": cc.connected_components_auto,
     }[variant]
-    before = _persistent_rdd_ids(spark)
     chain = (
         spark.range(1024 * 64)
         .selectExpr("id AS src", "id + 1 AS dst")
         .where("pmod(id, 64) != 63")
         .localCheckpoint()
     )
-    keep = frozenset(_persistent_rdd_ids(spark) - before)
-    return (lambda: run(chain).count()), keep
+    return lambda: run(chain).count()
 
 
 SCALE_FIXTURES = {
@@ -833,13 +798,22 @@ SCALE_FIXTURES = {
 }
 
 
-def _scale_entry(spark, name: str, data_dir: str) -> tuple:
-    """(lap, keep) for one scale entry on data_dir: its fixture's, or a
-    registry query forced by count()."""
+def _scale_entry(spark, name: str, data_dir: str):
+    """One lap of a scale entry on data_dir: its fixture's body, or a
+    registry query forced by count(), run inside a materialization scope,
+    so the lap frees its own checkpoint blocks and never the fixture's
+    input, built before it."""
     if name in SCALE_FIXTURES:
-        return SCALE_FIXTURES[name](spark, data_dir)
-    query = registry.QUERIES[name]
-    return (lambda: query(spark, data_dir).count()), frozenset()
+        body = SCALE_FIXTURES[name](spark, data_dir)
+    else:
+        query = registry.QUERIES[name]
+        body = lambda: query(spark, data_dir).count()  # noqa: E731
+
+    def lap() -> None:
+        with materialization_scope(spark):
+            body()
+
+    return lap
 
 
 def _run_scale_tier(factor: int, sf_dir: str) -> dict:
@@ -863,16 +837,13 @@ def _run_scale_tier(factor: int, sf_dir: str) -> dict:
     try:
         for name in SCALE_TIERS[factor]:
             try:
-                lap, keep = _scale_entry(spark, name, scaled_dir)
+                lap = _scale_entry(spark, name, scaled_dir)
             except Exception as exc:
                 print(f"BENCH-SCALE-ERROR {name}: {exc!r}"[:500], file=sys.stderr)
                 out[name] = None
                 out[name + "_error"] = f"{exc!r}"[:300]
                 continue
-            med, laps, err = _timed3(
-                name, lap, cleanup=lambda: _scale_run_cleanup(spark, keep=keep)
-            )
-            _record_timed(out, name, med, laps, err)
+            _record_timed(out, name, *_timed3(name, lap))
     finally:
         shutil.rmtree(scaled_dir, ignore_errors=True)
     return out

@@ -25,7 +25,9 @@ equivalent of that decision.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,13 +62,15 @@ def ensure_bucket_db(spark: SparkSession, name: str = "bucket_demo") -> str:
     (saveAsTable refuses to overwrite an on-disk path its catalog doesn't
     own: LOCATION_ALREADY_EXISTS).  The cache lives ON the session object —
     an id(spark)-keyed dict would false-hit when CPython reuses a dead
-    session's object id."""
+    session's object id.  The location holds copies of the bucketed
+    tables, so it is deleted when the process exits."""
     cache = getattr(spark, "_msk_bucket_dbs", None)
     if cache is None:
         cache = set()
         spark._msk_bucket_dbs = cache
     if name not in cache:
         loc = tempfile.mkdtemp(prefix=f"msk_{name}_")
+        atexit.register(shutil.rmtree, loc, ignore_errors=True)
         os.rmdir(loc)  # CREATE DATABASE wants to own the directory
         spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
         spark.sql(f"CREATE DATABASE {name} LOCATION '{loc}'")

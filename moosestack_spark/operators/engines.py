@@ -8,6 +8,8 @@ semantics in ANSI SQL.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -191,18 +193,16 @@ FROM supplier
 """,
 )
 def source_csv_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     src = t(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_name",
         F.col("s_acctbal").cast("decimal(18,2)").alias("bal"),
     )
     schema = "s_suppkey bigint, s_name string, bal decimal(18,2)"
-    csv_dir = tempfile.mkdtemp(prefix="msk_src_csv_")
-    jsonl_dir = tempfile.mkdtemp(prefix="msk_src_jsonl_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_src_csv_jsonl_", ignore_cleanup_errors=True
+    ) as base:
+        csv_dir, jsonl_dir = f"{base}/csv", f"{base}/jsonl"
         src.write.mode("overwrite").option("header", True).csv(csv_dir)
         src.write.mode("overwrite").json(jsonl_dir)  # JSONEachRow layout
         frames = []
@@ -220,9 +220,6 @@ def source_csv_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).select(F.lit(fmt).alias("fmt"), "n", "total_bal")
             )
         return frames[0].unionByName(frames[1]).localCheckpoint()
-    finally:
-        shutil.rmtree(csv_dir, ignore_errors=True)
-        shutil.rmtree(jsonl_dir, ignore_errors=True)
 
 
 @query(
@@ -244,16 +241,14 @@ def source_orc_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     the o_orderstatus <> 'P' filter eliminates whole directories before any
     ORC byte is read (at 100 TB this IS the dominant optimization; verified
     in tests/test_plans.py by asserting the pruned scan's partition count)."""
-    import shutil
-    import tempfile
-
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
         "o_orderstatus",
     )
-    orc_dir = tempfile.mkdtemp(prefix="msk_src_orc_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_src_orc_", ignore_cleanup_errors=True
+    ) as orc_dir:
         src.write.mode("overwrite").partitionBy("o_orderstatus").orc(orc_dir)
         back = spark.read.orc(orc_dir).filter(F.col("o_orderstatus") != "P")
         return (
@@ -264,8 +259,6 @@ def source_orc_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
             )
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(orc_dir, ignore_errors=True)
 
 
 @query(
@@ -290,9 +283,6 @@ def source_schema_evolution_defaults(spark: SparkSession, sf_dir: str) -> DataFr
 
     Scale: mergeSchema costs one footer read per file at planning time;
     the data path is unchanged (still pruned columnar scans)."""
-    import shutil
-    import tempfile
-
     src = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 23 == 0)
     old_part = src.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -300,8 +290,9 @@ def source_schema_evolution_defaults(spark: SparkSession, sf_dir: str) -> DataFr
     new_part = src.filter(F.col("o_orderkey") % 2 != 0).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    base = tempfile.mkdtemp(prefix="msk_src_evo_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_src_evo_", ignore_cleanup_errors=True
+    ) as base:
         old_part.write.mode("overwrite").parquet(f"{base}/batch=0")
         new_part.write.mode("overwrite").parquet(f"{base}/batch=1")
         back = spark.read.option("mergeSchema", "true").parquet(base)
@@ -310,8 +301,6 @@ def source_schema_evolution_defaults(spark: SparkSession, sf_dir: str) -> DataFr
             "o_totalprice",
             F.coalesce(F.col("o_orderpriority"), F.lit("NONE")).alias("priority"),
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -335,9 +324,6 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     live table has both.  The oracle states the construction-implied
     per-version counts and exact-decimal totals, so a manifest that leaks
     or loses files fails the hash."""
-    import shutil
-    import tempfile
-
     from pydantic import BaseModel
 
     from moosestack_spark.catalog.table import OlapTable
@@ -351,8 +337,9 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 17 == 0)
         .select("o_orderkey", "o_totalprice")
     )
-    wh = tempfile.mkdtemp(prefix="msk_time_travel_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_time_travel_", ignore_cleanup_errors=True
+    ) as wh:
         table = OlapTable("tt_orders", OrderRow, spark, wh, register=False)
         table.insert(src.filter(F.col("o_orderkey") % 2 == 0))
         table.insert(src.filter(F.col("o_orderkey") % 2 != 0))
@@ -368,8 +355,6 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         frame = outs[0].unionByName(outs[1])
         # materialize before the temp warehouse disappears
         return frame.localCheckpoint()
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 @query(
@@ -388,16 +373,14 @@ def source_gzip_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     note .gz files are NOT splittable, so at 100 TB the landing zone
     should prefer zstd/parquet or many small .gz objects — one task per
     file is the parallelism unit here)."""
-    import shutil
-    import tempfile
-
     src = t(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_nationkey",
         F.col("s_acctbal").cast("decimal(18,2)").alias("bal"),
     )
-    gz_dir = tempfile.mkdtemp(prefix="msk_src_gz_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_src_gz_", ignore_cleanup_errors=True
+    ) as gz_dir:
         src.write.mode("overwrite").option("compression", "gzip").json(gz_dir)
         import glob as _glob
 
@@ -410,8 +393,6 @@ def source_gzip_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bal").cast("double").alias("total_bal"),
             F.count_distinct("s_nationkey").alias("nations"),
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(gz_dir, ignore_errors=True)
 
 
 @query(
@@ -436,9 +417,6 @@ def source_iceberg_native_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     files.  Reference: blocks.py:425-478 configures IcebergS3 and delegates
     to ClickHouse's reader; here the metadata layer is native (no jars).
     The oracle replays the same subset directly from orders."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_native import IcebergNativeTable
     from moosestack_spark.tables import t as _t
 
@@ -451,8 +429,9 @@ def source_iceberg_native_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice").cast("double").alias("o_totalprice"),
         )
     )
-    base = _tempfile.mkdtemp(prefix="msk_iceberg_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_iceberg_", ignore_cleanup_errors=True
+    ) as base:
         table = IcebergNativeTable.write(
             src, base + "/orders_ice", partition_by="o_orderpriority"
         )
@@ -473,8 +452,6 @@ def source_iceberg_native_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         out = parts[0].unionByName(parts[1])
         return out.localCheckpoint()  # result survives the temp-dir cleanup
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -499,9 +476,6 @@ def source_delta_native_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-column reconstruction, and pruning before any file opens are
     all on the hash-gated path.  The oracle replays both batches' union
     directly from orders."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.delta_native import DeltaNativeTable
     from moosestack_spark.tables import t as _t
 
@@ -510,8 +484,9 @@ def source_delta_native_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         F.col("o_totalprice").cast("double").alias("o_totalprice"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_delta_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_delta_", ignore_cleanup_errors=True
+    ) as base:
         path = base + "/orders_delta"
         DeltaNativeTable.write(
             orders.filter(F.col("o_orderkey") % 7 == 0),
@@ -540,8 +515,6 @@ def source_delta_native_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         return parts[0].unionByName(parts[1]).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -567,18 +540,16 @@ def source_ch_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSONCompactEachRow (one JSON ARRAY per line, positional columns —
     written as text, read back via from_json(array<string>) + positional
     casts).  Both round-trips aggregate to the oracle's direct numbers."""
-    import shutil
-    import tempfile
-
     src = t(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_name",
         "s_nationkey",
         F.col("s_acctbal").cast("decimal(18,2)").alias("bal"),
     )
-    tsv_dir = tempfile.mkdtemp(prefix="msk_src_tsv_")
-    jc_dir = tempfile.mkdtemp(prefix="msk_src_jc_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_src_tsv_jc_", ignore_cleanup_errors=True
+    ) as base:
+        tsv_dir, jc_dir = f"{base}/tsv", f"{base}/jc"
         # TabSeparatedWithNames
         src.write.mode("overwrite").option("header", True).option(
             "sep", "\t"
@@ -628,9 +599,6 @@ def source_ch_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).select(F.lit(fmt).alias("fmt"), "n", "total_bal", "nations")
             )
         return frames[0].unionByName(frames[1]).localCheckpoint()
-    finally:
-        shutil.rmtree(tsv_dir, ignore_errors=True)
-        shutil.rmtree(jc_dir, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -713,9 +681,6 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition) by the distributed sink, read back through binaryFile +
     per-file decode, aggregated — exact integer cents, so the roundtrip is
     value-hash-checked against the parquet original."""
-    import shutil
-    import tempfile
-
     src = t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("long").alias("s_suppkey"),
         F.col("s_nationkey").cast("long").alias("s_nationkey"),
@@ -734,8 +699,9 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"name": "s_name", "type": "string"},
         ],
     }
-    avro_dir = tempfile.mkdtemp(prefix="msk_src_avro_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_src_avro_", ignore_cleanup_errors=True
+    ) as avro_dir:
         n_files = write_avro_dir(src, avro_dir, schema)
         assert n_files >= 1
         back = read_avro_dir(
@@ -748,8 +714,6 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("s_nationkey").alias("nations"),
             F.min("s_name").alias("first_name"),
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(avro_dir, ignore_errors=True)
 
 
 @query(
@@ -786,9 +750,6 @@ def source_iceberg_deletes_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra directly on supplier.  Reference: blocks.py:425-478 delegates
     Iceberg reads to ClickHouse; the delete semantics here follow the
     public Iceberg v2 table spec."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_native import IcebergNativeTable
 
     src = t(spark, sf_dir, "supplier").select(
@@ -799,8 +760,9 @@ def source_iceberg_deletes_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bal_cents"),
         F.col("s_name").alias("s_name"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_del_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_del_", ignore_cleanup_errors=True
+    ) as base:
         path = base + "/supplier_ice"
         table = IcebergNativeTable.write(
             src.filter(F.col("s_suppkey") % 2 == 0), path
@@ -819,8 +781,6 @@ def source_iceberg_deletes_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("s_nationkey").alias("nations"),
             F.min("s_name").alias("first_name"),
         ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -851,9 +811,6 @@ def source_delta_dv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops rows with one anti-join on parquet _metadata positions; the
     oracle replays the surviving-row algebra.  Formats: delta-io
     PROTOCOL.md deletion vectors + RoaringFormatSpec."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.delta_native import DeltaNativeTable
 
     src = t(spark, sf_dir, "supplier").select(
@@ -864,8 +821,9 @@ def source_delta_dv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bal_cents"),
         F.col("s_name").alias("s_name"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_delta_dv_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_delta_dv_", ignore_cleanup_errors=True
+    ) as base:
         path = base + "/supplier_delta"
         table = DeltaNativeTable.write(
             src.filter(F.col("s_suppkey") % 2 == 0), path
@@ -881,8 +839,6 @@ def source_delta_dv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("s_nationkey").alias("nations"),
             F.min("s_name").alias("first_name"),
         ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -992,8 +948,6 @@ def source_rowbinary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read back via binaryFile + per-file decode, aggregated in exact
     integer cents — value-hash-checked against the parquet original."""
     import os
-    import shutil
-    import tempfile
 
     import pandas as pd
 
@@ -1015,7 +969,6 @@ def source_rowbinary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_comment"
         ),
     )
-    out_dir = tempfile.mkdtemp(prefix="msk_rowbin_")
 
     def sink(batches):
         from pyspark import TaskContext
@@ -1040,7 +993,9 @@ def source_rowbinary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 assert names == [c[0] for c in cols]
                 yield pd.DataFrame(rows, columns=names)
 
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_rowbin_", ignore_cleanup_errors=True
+    ) as out_dir:
         n_files = src.mapInPandas(sink, "file string, n long").count()
         assert n_files >= 1
         files = (
@@ -1058,8 +1013,6 @@ def source_rowbinary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("s_name").alias("first_name"),
             F.max("s_comment").alias("last_comment"),
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 @query(
@@ -1084,9 +1037,6 @@ def source_iceberg_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete files and manifests physically removed), then read and
     aggregate.  The oracle replays the surviving-row algebra; matching
     values prove the rewrite lost and invented nothing."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_native import IcebergNativeTable
 
     src = t(spark, sf_dir, "supplier").select(
@@ -1096,8 +1046,9 @@ def source_iceberg_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("bal_cents"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_opt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_opt_", ignore_cleanup_errors=True
+    ) as base:
         path = base + "/supplier_ice"
         table = IcebergNativeTable.write(src.repartition(4), path)
         table.delete_where("s_suppkey % 7 = 3")
@@ -1112,8 +1063,6 @@ def source_iceberg_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bal_cents").cast("bigint").alias("bal_cents"),
             F.count_distinct("s_nationkey").alias("nations"),
         ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1135,9 +1084,6 @@ def source_iceberg_bucket_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     key lookups each read through partition_filter on the SOURCE column —
     the metadata walk hashes the key and opens only that bucket's files
     (asserted in-gate).  The oracle replays the plain IN filter."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_native import IcebergNativeTable
 
     # one-third subsample keeps the 8 per-bucket write passes cheap at
@@ -1150,8 +1096,9 @@ def source_iceberg_bucket_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_bkt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_bkt_", ignore_cleanup_errors=True
+    ) as base:
         path = base + "/orders_ice"
         table = IcebergNativeTable.write(src, path, bucket_by=("o_orderkey", 8))
         n_dirs = {f.rsplit("/", 1)[0] for f in table.data_files()}
@@ -1170,8 +1117,6 @@ def source_iceberg_bucket_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.sum("cents").cast("bigint").alias("sum_cents"),
         ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1198,8 +1143,6 @@ def source_iceberg_multifield_read(spark: SparkSession, sf_dir: str) -> DataFram
     filters; the re-applied exact predicate makes values bucket-independent
     the same way source_iceberg_bucket_read's is."""
     import datetime as _dt
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from moosestack_spark.catalog.iceberg_native import IcebergNativeTable
 
@@ -1212,8 +1155,9 @@ def source_iceberg_multifield_read(spark: SparkSession, sf_dir: str) -> DataFram
         .cast("long")
         .alias("cents"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_mf_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_mf_", ignore_cleanup_errors=True
+    ) as base:
         path = base + "/orders_ice"
         table = IcebergNativeTable.write(
             src,
@@ -1240,8 +1184,6 @@ def source_iceberg_multifield_read(spark: SparkSession, sf_dir: str) -> DataFram
             F.count(F.lit(1)).alias("n"),
             F.sum("cents").cast("bigint").alias("sum_cents"),
         ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1265,9 +1207,6 @@ def source_iceberg_clustered_read(spark: SparkSession, sf_dir: str) -> DataFrame
     scan-side.  The in-gate assertion pins that the filtered columns'
     pushed filters reach the parquet scan; the oracle replays the plain
     predicate — clustering must change the LAYOUT only."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_native import IcebergNativeTable
 
     src = t(spark, sf_dir, "orders").filter(
@@ -1279,8 +1218,9 @@ def source_iceberg_clustered_read(spark: SparkSession, sf_dir: str) -> DataFrame
         .cast("long")
         .alias("cents"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_clus_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_clus_", ignore_cleanup_errors=True
+    ) as base:
         path = base + "/orders_ice"
         table = IcebergNativeTable.write(
             path=path, df=src, cluster_by=("o_custkey", "o_orderkey"),
@@ -1298,8 +1238,6 @@ def source_iceberg_clustered_read(spark: SparkSession, sf_dir: str) -> DataFrame
             F.count(F.lit(1)).alias("n"),
             F.sum("cents").cast("bigint").alias("sum_cents"),
         ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1321,8 +1259,6 @@ def source_delta_mapped_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving rows from the unmapped original."""
     import json as _json
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from moosestack_spark.catalog.delta_native import DeltaNativeTable
 
@@ -1333,8 +1269,9 @@ def source_delta_mapped_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("col-2"),
         F.col("s_name").alias("col-3"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_delta_map_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="msk_delta_map_", ignore_cleanup_errors=True
+    ) as base:
         path = base + "/supplier_mapped"
         _os.makedirs(_os.path.join(path, "_delta_log"))
         src.coalesce(2).write.mode("overwrite").parquet(
@@ -1382,8 +1319,6 @@ def source_delta_mapped_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("bal_cents").cast("bigint").alias("bal_cents"),
             F.min("s_name").alias("first_name"),
         ).localCheckpoint()
-    finally:
-        _shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1408,9 +1343,6 @@ def source_iceberg_rest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     final read resolves the table by (namespace, name) through the
     catalog.  The oracle is the full supplier aggregate — the catalog
     protocol must change WHERE metadata lives, never the rows."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_rest import (
         CommitConflict,
         IcebergRestCatalog,
@@ -1425,37 +1357,38 @@ def source_iceberg_rest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("bal_cents"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_rest_")
     server = IcebergRestCatalogServer(prefix="lake", token="gate-token")
-    try:
-        port = server.start()
-        cat = IcebergRestCatalog(f"http://127.0.0.1:{port}", token="gate-token")
-        cat.create_namespace("tpch")
-        handle = IcebergRestTable.create(
-            cat, "tpch", "supplier", src.filter("s_suppkey % 2 = 0"),
-            base + "/supplier_ice",
-        )
-        loaded_v1 = cat.load_table("tpch", "supplier")
-        handle.append(src.filter("s_suppkey % 2 = 1"))
-        # replaying a commit based on the PRE-append snapshot must conflict
-        stale_reqs = [{
-            "type": "assert-ref-snapshot-id", "ref": "main",
-            "snapshot-id": loaded_v1["metadata"]["current-snapshot-id"],
-        }]
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_rest_", ignore_cleanup_errors=True
+    ) as base:
         try:
-            cat.commit_table("tpch", "supplier", stale_reqs, [])
-            raise AssertionError("stale commit did not 409")
-        except CommitConflict:
-            pass
-        assert cat.list_tables("tpch") == ["supplier"]
-        return handle.read(spark).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("bal_cents").cast("bigint").alias("bal_cents"),
-            F.min("s_name").alias("first_name"),
-        ).localCheckpoint()
-    finally:
-        server.stop()
-        _shutil.rmtree(base, ignore_errors=True)
+            port = server.start()
+            cat = IcebergRestCatalog(f"http://127.0.0.1:{port}", token="gate-token")
+            cat.create_namespace("tpch")
+            handle = IcebergRestTable.create(
+                cat, "tpch", "supplier", src.filter("s_suppkey % 2 = 0"),
+                base + "/supplier_ice",
+            )
+            loaded_v1 = cat.load_table("tpch", "supplier")
+            handle.append(src.filter("s_suppkey % 2 = 1"))
+            # replaying a commit based on the PRE-append snapshot must conflict
+            stale_reqs = [{
+                "type": "assert-ref-snapshot-id", "ref": "main",
+                "snapshot-id": loaded_v1["metadata"]["current-snapshot-id"],
+            }]
+            try:
+                cat.commit_table("tpch", "supplier", stale_reqs, [])
+                raise AssertionError("stale commit did not 409")
+            except CommitConflict:
+                pass
+            assert cat.list_tables("tpch") == ["supplier"]
+            return handle.read(spark).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("bal_cents").cast("bigint").alias("bal_cents"),
+                F.min("s_name").alias("first_name"),
+            ).localCheckpoint()
+        finally:
+            server.stop()
 
 
 @query(
@@ -1473,9 +1406,6 @@ def source_iceberg_rest_timetravel(spark: SparkSession, sf_dir: str) -> DataFram
     server-authored add-snapshot history must retain every prior snapshot
     (readers pin analysis-time views while writers commit).  The oracle
     replays only the pre-append half."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_rest import (
         IcebergRestCatalog,
         IcebergRestCatalogServer,
@@ -1488,27 +1418,28 @@ def source_iceberg_rest_timetravel(spark: SparkSession, sf_dir: str) -> DataFram
         .cast("long")
         .alias("bal_cents"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_rest_tt_")
     server = IcebergRestCatalogServer(prefix="lake")
-    try:
-        server.start()
-        cat = IcebergRestCatalog(f"http://127.0.0.1:{server.port}")
-        cat.create_namespace("tpch")
-        handle = IcebergRestTable.create(
-            cat, "tpch", "supplier", src.filter("s_suppkey % 2 = 0"),
-            base + "/supplier_ice",
-        )
-        first_snap = handle.snapshots()[0]["snapshot-id"]
-        handle.append(src.filter("s_suppkey % 2 = 1"))
-        snaps = handle.snapshots()
-        assert len(snaps) == 2 and snaps[0]["snapshot-id"] == first_snap
-        return handle.read(spark, snapshot_id=first_snap).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("bal_cents").cast("bigint").alias("bal_cents"),
-        ).localCheckpoint()
-    finally:
-        server.stop()
-        _shutil.rmtree(base, ignore_errors=True)
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_rest_tt_", ignore_cleanup_errors=True
+    ) as base:
+        try:
+            server.start()
+            cat = IcebergRestCatalog(f"http://127.0.0.1:{server.port}")
+            cat.create_namespace("tpch")
+            handle = IcebergRestTable.create(
+                cat, "tpch", "supplier", src.filter("s_suppkey % 2 = 0"),
+                base + "/supplier_ice",
+            )
+            first_snap = handle.snapshots()[0]["snapshot-id"]
+            handle.append(src.filter("s_suppkey % 2 = 1"))
+            snaps = handle.snapshots()
+            assert len(snaps) == 2 and snaps[0]["snapshot-id"] == first_snap
+            return handle.read(spark, snapshot_id=first_snap).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("bal_cents").cast("bigint").alias("bal_cents"),
+            ).localCheckpoint()
+        finally:
+            server.stop()
 
 
 @query(
@@ -1526,9 +1457,6 @@ def source_iceberg_rest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog-pinned metadata and committed (add-snapshot carrying a
     content=1 manifest), then the catalog-resolved read applies the
     deletes.  The oracle keeps the surviving rows."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_rest import (
         IcebergRestCatalog,
         IcebergRestCatalogServer,
@@ -1541,28 +1469,29 @@ def source_iceberg_rest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("bal_cents"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_rest_del_")
     server = IcebergRestCatalogServer(prefix="lake")
-    try:
-        server.start()
-        cat = IcebergRestCatalog(f"http://127.0.0.1:{server.port}")
-        cat.create_namespace("tpch")
-        handle = IcebergRestTable.create(
-            cat, "tpch", "supplier", src, base + "/supplier_ice"
-        )
-        loc_before = cat.load_table("tpch", "supplier")["metadata-location"]
-        n = handle.delete_where(spark, "s_suppkey % 3 = 1")
-        assert n > 0
-        loc_after = cat.load_table("tpch", "supplier")["metadata-location"]
-        assert loc_after != loc_before and "rest-metadata" in loc_after
-        assert handle.delete_where(spark, "s_suppkey < 0") == 0  # no-op path
-        return handle.read(spark).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("bal_cents").cast("bigint").alias("bal_cents"),
-        ).localCheckpoint()
-    finally:
-        server.stop()
-        _shutil.rmtree(base, ignore_errors=True)
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_rest_del_", ignore_cleanup_errors=True
+    ) as base:
+        try:
+            server.start()
+            cat = IcebergRestCatalog(f"http://127.0.0.1:{server.port}")
+            cat.create_namespace("tpch")
+            handle = IcebergRestTable.create(
+                cat, "tpch", "supplier", src, base + "/supplier_ice"
+            )
+            loc_before = cat.load_table("tpch", "supplier")["metadata-location"]
+            n = handle.delete_where(spark, "s_suppkey % 3 = 1")
+            assert n > 0
+            loc_after = cat.load_table("tpch", "supplier")["metadata-location"]
+            assert loc_after != loc_before and "rest-metadata" in loc_after
+            assert handle.delete_where(spark, "s_suppkey < 0") == 0  # no-op path
+            return handle.read(spark).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("bal_cents").cast("bigint").alias("bal_cents"),
+            ).localCheckpoint()
+        finally:
+            server.stop()
 
 
 @query(
@@ -1588,9 +1517,6 @@ def source_iceberg_rest_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay must 409 with NEITHER table advancing (all-or-nothing), and
     the read-after-commit sees both tables holding the full supplier set
     — the oracle is the full aggregate twice, tagged per table."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from moosestack_spark.catalog.iceberg_rest import (
         CommitConflict,
         IcebergRestCatalog,
@@ -1605,55 +1531,56 @@ def source_iceberg_rest_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("bal_cents"),
     )
-    base = _tempfile.mkdtemp(prefix="msk_ice_rest_txn_")
     server = IcebergRestCatalogServer(prefix="lake")
-    try:
-        server.start()
-        cat = IcebergRestCatalog(f"http://127.0.0.1:{server.port}")
-        cat.create_namespace("tpch")
-        cat.update_namespace_properties("tpch", updates={"owner": "gate"})
-        ha = IcebergRestTable.create(
-            cat, "tpch", "sup_a", src.filter("s_suppkey % 2 = 0"),
-            base + "/sup_a",
-        )
-        hb = IcebergRestTable.create(
-            cat, "tpch", "sup_b", src.filter("s_suppkey % 2 = 1"),
-            base + "/sup_b",
-        )
-        la = cat.load_table("tpch", "sup_a")
-        multi_table_append(
-            [
-                (ha, src.filter("s_suppkey % 2 = 1")),
-                (hb, src.filter("s_suppkey % 2 = 0")),
-            ]
-        )
-        # replaying a transaction based on the PRE-txn snapshot of sup_a
-        # must 409 and advance NEITHER pointer (all-or-nothing)
-        lb_now = cat.load_table("tpch", "sup_b")["metadata-location"]
-        stale = [
-            (
-                "tpch", "sup_a",
-                [{
-                    "type": "assert-ref-snapshot-id", "ref": "main",
-                    "snapshot-id": la["metadata"]["current-snapshot-id"],
-                }],
-                [],
-            ),
-            ("tpch", "sup_b", [], []),
-        ]
+    with tempfile.TemporaryDirectory(
+        prefix="msk_ice_rest_txn_", ignore_cleanup_errors=True
+    ) as base:
         try:
-            cat.commit_transaction(stale)
-            raise AssertionError("stale transaction did not 409")
-        except CommitConflict:
-            pass
-        assert cat.load_table("tpch", "sup_b")["metadata-location"] == lb_now
-        assert cat.load_namespace("tpch")["properties"]["owner"] == "gate"
-        agg = lambda h, tag: h.read(spark).agg(  # noqa: E731
-            F.lit(tag).alias("src"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("bal_cents").cast("bigint").alias("bal_cents"),
-        ).select("src", "n", "bal_cents")
-        return agg(ha, "a").unionByName(agg(hb, "b")).localCheckpoint()
-    finally:
-        server.stop()
-        _shutil.rmtree(base, ignore_errors=True)
+            server.start()
+            cat = IcebergRestCatalog(f"http://127.0.0.1:{server.port}")
+            cat.create_namespace("tpch")
+            cat.update_namespace_properties("tpch", updates={"owner": "gate"})
+            ha = IcebergRestTable.create(
+                cat, "tpch", "sup_a", src.filter("s_suppkey % 2 = 0"),
+                base + "/sup_a",
+            )
+            hb = IcebergRestTable.create(
+                cat, "tpch", "sup_b", src.filter("s_suppkey % 2 = 1"),
+                base + "/sup_b",
+            )
+            la = cat.load_table("tpch", "sup_a")
+            multi_table_append(
+                [
+                    (ha, src.filter("s_suppkey % 2 = 1")),
+                    (hb, src.filter("s_suppkey % 2 = 0")),
+                ]
+            )
+            # replaying a transaction based on the PRE-txn snapshot of sup_a
+            # must 409 and advance NEITHER pointer (all-or-nothing)
+            lb_now = cat.load_table("tpch", "sup_b")["metadata-location"]
+            stale = [
+                (
+                    "tpch", "sup_a",
+                    [{
+                        "type": "assert-ref-snapshot-id", "ref": "main",
+                        "snapshot-id": la["metadata"]["current-snapshot-id"],
+                    }],
+                    [],
+                ),
+                ("tpch", "sup_b", [], []),
+            ]
+            try:
+                cat.commit_transaction(stale)
+                raise AssertionError("stale transaction did not 409")
+            except CommitConflict:
+                pass
+            assert cat.load_table("tpch", "sup_b")["metadata-location"] == lb_now
+            assert cat.load_namespace("tpch")["properties"]["owner"] == "gate"
+            agg = lambda h, tag: h.read(spark).agg(  # noqa: E731
+                F.lit(tag).alias("src"),
+                F.count(F.lit(1)).alias("n"),
+                F.sum("bal_cents").cast("bigint").alias("bal_cents"),
+            ).select("src", "n", "bal_cents")
+            return agg(ha, "a").unionByName(agg(hb, "b")).localCheckpoint()
+        finally:
+            server.stop()

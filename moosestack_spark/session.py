@@ -16,7 +16,9 @@ a 1000-executor cluster against ~100 TB:
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -68,3 +70,24 @@ def get_spark(app_name: str = "moosestack-spark", **extra_conf: str) -> SparkSes
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def materialization_scope(spark: SparkSession) -> Iterator[None]:
+    """Free, on every exit path, the blocks of each RDD persisted inside
+    the block: the ``localCheckpoint()`` results a gate leaves behind once
+    the caller has consumed them.  RDDs already persisted on entry (a
+    fixture checkpointed before a timed lap, say) are never touched, and
+    the release is non-blocking, so it costs a few driver calls.
+
+    Do not wrap concurrent work on one session in a scope: it would
+    release the blocks another thread persisted meanwhile.  The HTTP
+    server and the ingest path do not use it for that reason."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        yield
+    finally:
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in before:
+                rdd.unpersist(False)

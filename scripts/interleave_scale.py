@@ -19,9 +19,11 @@ Usage:
       [--out results.json]
 
 With no --arm, the current repo is the single arm.  Every arm is timed
-with this checkout's bench.py entries and warm-up.  Scaled dirs are built
-once per factor under $TMPDIR/interleave_scaled_<factor>x and reused across
-laps (inputs only — every timed lap recomputes the query from parquet).
+with this checkout's bench.py entries and warm-up, and each lap runs inside
+session.materialization_scope, so an arm's engine must provide it.  Scaled
+dirs are built once per factor under $TMPDIR/interleave_scaled_<factor>x
+and reused across laps (inputs only — every timed lap recomputes the query
+from parquet).
 
 Lap mode (internal): interleave_scale.py --lap <repo_root> <query> <dir>
 prints one JSON line {"calib": s, "sec": s}.
@@ -67,10 +69,9 @@ def _build_scaled_dir(factor: int) -> str:
 
 
 def _lap(repo_root: str, query: str, data_dir: str) -> None:
-    # The arm's engine, timed by this harness's bench spec, warm-up and
-    # cleanup: the package is imported from repo_root first, so the
-    # bench.py loaded by path below resolves every moosestack_spark import
-    # against the arm.
+    # The arm's engine, timed by this harness's bench spec and warm-up: the
+    # package is imported from repo_root first, so the bench.py loaded by
+    # path below resolves every moosestack_spark import against the arm.
     import importlib.util
     import time
 
@@ -88,12 +89,11 @@ def _lap(repo_root: str, query: str, data_dir: str) -> None:
     spark = get_spark("interleave-scale-lap")
     spark.sparkContext.setLogLevel("ERROR")
     bench._warm_up(spark)
-    fn, keep = bench._scale_entry(spark, query, data_dir)
-    fn()  # warmup lap: codegen/JIT, untimed
-    bench._scale_run_cleanup(spark, keep=keep)
+    lap = bench._scale_entry(spark, query, data_dir)  # runs in a scope
+    lap()  # warmup lap: codegen/JIT, untimed
     calib = bench._calibrate()
     start = time.perf_counter()
-    fn()
+    lap()
     sec = round(time.perf_counter() - start, 3)
     print(json.dumps({"calib": calib, "sec": sec}))
 

@@ -7,7 +7,9 @@ Usage: python scripts/profile_query.py <name> [reps] [--scale N]
   (default 3) after one untimed warmup lap, printing each lap;
 - `--scale N` synthesizes the N-x scaled corpus first (same generator as
   bench.py's scale tiers) and runs the query against it;
-- jobs are labelled with setJobDescription for UI/event-log reading.
+- jobs are labelled with setJobDescription for UI/event-log reading;
+- each lap runs inside a materialization scope, which frees the lap's
+  checkpoint blocks after its timer stops.
 
 The noop sink computes every column of every row, so this times the
 computation, not the sink or a count()'s column pruning.
@@ -23,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from moosestack_spark import registry
-from moosestack_spark.session import get_spark
+from moosestack_spark.session import get_spark, materialization_scope
 
 
 def main() -> None:
@@ -48,9 +50,10 @@ def main() -> None:
 
     def one(tag: str) -> float:
         spark.sparkContext.setJobDescription(f"{name} [{tag}]")
-        start = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - start
+        with materialization_scope(spark):
+            start = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dt = time.perf_counter() - start
         spark.sparkContext.setJobDescription(None)
         return dt
 

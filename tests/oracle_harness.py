@@ -12,6 +12,7 @@ import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
+from moosestack_spark.session import materialization_scope
 from moosestack_spark.tables import TABLE_NAMES
 
 
@@ -60,23 +61,24 @@ def compare_query(
 ) -> tuple[bool, str]:
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    df = fn(spark, sf_dir)
-    # Driver-canon contract: the driver sorts result rows with pandas
-    # sort_values, which raises on list/dict cells — an oracled gate whose
-    # schema contains a complex type records ERR regardless of correctness
-    # (r4: agg_group_array_sorted).  Serialize arrays/maps to strings on
-    # both sides (registry.canon_arrays) instead of emitting them.
-    complex_cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
-    if complex_cols:
-        return False, (
-            f"driver-canon contract violation: complex-typed output columns "
-            f"{complex_cols} (serialize with registry.canon_arrays)"
-        )
-    sdf = df.toPandas()
+    with materialization_scope(spark):
+        df = fn(spark, sf_dir)
+        # Driver-canon contract: the driver sorts result rows with pandas
+        # sort_values, which raises on list/dict cells — an oracled gate whose
+        # schema contains a complex type records ERR regardless of correctness
+        # (r4: agg_group_array_sorted).  Serialize arrays/maps to strings on
+        # both sides (registry.canon_arrays) instead of emitting them.
+        complex_cols = [
+            f.name
+            for f in df.schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        ]
+        if complex_cols:
+            return False, (
+                f"driver-canon contract violation: complex-typed output columns "
+                f"{complex_cols} (serialize with registry.canon_arrays)"
+            )
+        sdf = df.toPandas()
     con = duckdb_conn(sf_dir)
     try:
         odf = con.execute(oracle).df()

@@ -75,3 +75,42 @@ def test_bucketed_join_matches_plain_join(spark, bucketed_pair):
         .collect()
     }
     assert got == want
+
+
+def test_bucket_db_location_removed_at_exit(tmp_path):
+    """ensure_bucket_db's warehouse holds copies of the bucketed tables, so
+    it must go when the process exits instead of piling up in $TMPDIR once
+    per session.  Runs in a subprocess so the process really exits."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        """
+        import glob, os, tempfile
+        from moosestack_spark.operators.bucketed import ensure_bucket_db, write_bucketed
+        from moosestack_spark.session import get_spark
+
+        spark = get_spark("bucket-db-exit")
+        db = ensure_bucket_db(spark, "bucket_exit")
+        write_bucketed(spark.range(100), f"{db}.t", "id", 2)
+        (loc,) = glob.glob(os.path.join(tempfile.gettempdir(), "msk_bucket_exit_*"))
+        print(sum(len(files) for _, _, files in os.walk(loc)))
+        """
+    )
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp_path),
+        PYTHONPATH=repo,
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert int(proc.stdout.split()[-1]) > 0  # the tables were written there
+    assert not list(tmp_path.glob("msk_*"))

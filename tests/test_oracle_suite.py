@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from moosestack_spark import registry
+from moosestack_spark.session import materialization_scope
 from tests.oracle_harness import compare_query
 
 registry.load_all()
@@ -26,6 +27,6 @@ def test_oracle_match(spark, sf_dir, name):
 
 @pytest.mark.parametrize("name", _ROWS_ONLY)
 def test_rows_only_runs(spark, sf_dir, name):
-    df = registry.QUERIES[name](spark, sf_dir)
-    n = df.count()
+    with materialization_scope(spark):
+        n = registry.QUERIES[name](spark, sf_dir).count()
     assert n >= 0

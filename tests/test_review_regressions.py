@@ -366,32 +366,55 @@ def _load_bench_module():
 
 
 def test_scale_cleanup_preserves_kept_checkpoints(spark):
-    """VERDICT r10 #1: _scale_run_cleanup unpersisted the cc_chain
-    fixture's localCheckpoint blocks (created once, outside the run loop),
-    so every later run died CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND and the
-    committed record carried silent nulls.  The keep-set must shield a
-    still-referenced checkpoint while everything else is swept."""
-    bench = _load_bench_module()
+    """VERDICT r10 #1: a between-lap sweep unpersisted the cc_chain
+    fixture's localCheckpoint blocks (created once, outside the laps), so
+    every later lap died CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.  A
+    materialization scope frees only what was persisted inside it: a
+    checkpoint made before the scope stays readable after it, and blocks
+    made inside are gone, also when the block raises."""
+    from moosestack_spark.session import materialization_scope
 
-    before = bench._persistent_rdd_ids(spark)
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
     fixture = spark.range(256).selectExpr("id AS src", "id + 1 AS dst").localCheckpoint()
-    fixture_ids = frozenset(bench._persistent_rdd_ids(spark) - before)
-    assert fixture_ids, "localCheckpoint should register persistent blocks"
+    with_fixture = persisted()
+    assert with_fixture > before, "localCheckpoint should register persistent blocks"
 
-    disposable = spark.range(128).cache()
-    disposable.count()
-
-    bench._scale_run_cleanup(spark, keep=fixture_ids)
-    # the fixture must still be readable AFTER the sweep (this is exactly
-    # the call pattern that died in the r10 record)
+    with materialization_scope(spark):
+        inner = spark.range(128).localCheckpoint()
+        assert inner.count() == 128
+        assert persisted() > with_fixture
+    # the fixture is still readable AFTER the scope (exactly the call
+    # pattern that died in the r10 record), and the inner blocks are gone
     assert fixture.count() == 256
     assert fixture.where("src < 10").count() == 10
-    # and the sweep still did its job on unprotected blocks
-    surviving = bench._persistent_rdd_ids(spark)
-    assert fixture_ids <= surviving
+    assert persisted() == with_fixture
 
-    # legacy call shape (no keep-set) sweeps everything and must not raise
-    bench._scale_run_cleanup(spark)
+    with pytest.raises(RuntimeError, match="lap failed"):
+        with materialization_scope(spark):
+            spark.range(64).localCheckpoint().count()
+            raise RuntimeError("lap failed")
+    assert persisted() == with_fixture
+    assert fixture.count() == 256
+
+
+def test_compare_query_leaves_no_persisted_rdds(spark, sf_dir):
+    """graph_kcore checkpoints every peel round; compare_query used to
+    leave 17 of its RDDs persisted after the comparison was done."""
+    from moosestack_spark import registry
+    from tests.oracle_harness import compare_query
+
+    registry.load_all()
+    name = "graph_kcore"
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    ok, msg = compare_query(
+        spark, name, registry.QUERIES[name], registry.ORACLES[name], sf_dir
+    )
+    assert ok, msg
+    left = set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
+    assert not left, f"{len(left)} RDDs still persisted: {sorted(left)}"
 
 
 def _fake_clock_laps(bench, monkeypatch, durations):
@@ -457,11 +480,6 @@ def test_timed3_takes_exactly_three_timed_laps(monkeypatch):
         assert runs == durations[1:4]  # the warm-up lap is not recorded
         assert med == sorted(runs)[1]
         assert bench._spread(runs) == round(max(runs) / min(runs), 2)
-
-    cleanups = []
-    lap, _ = _fake_clock_laps(bench, monkeypatch, [1.0] * 4)
-    bench._timed3("entry", lap, cleanup=lambda: cleanups.append(1))
-    assert len(cleanups) == 4  # after every lap, warm-up included
 
     # a failed timed lap stays in the raw list as None; the median comes
     # from the laps that succeeded and the error string is kept
@@ -529,6 +547,23 @@ def test_bench_low_core_invocation_is_headline_only():
     assert not bench._is_low_core_probe("abc", 32)
     assert not bench._is_low_core_probe("0", 32)
     assert not bench._is_low_core_probe("-4", 32)
+
+
+def test_bench_host_cores_follow_affinity(monkeypatch):
+    """Under taskset the host is the cores this process may run on, as
+    get_spark() counts them: os.cpu_count() counts the whole machine, so
+    a full-core run pinned to 4 of 32 cores was taken for a low-core probe
+    and skipped extras and scale tiers."""
+    bench = _load_bench_module()
+    monkeypatch.setattr(bench.os, "sched_getaffinity", lambda pid: {0, 1, 2, 3})
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 32)
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert not bench._headline_only()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    assert bench._headline_only()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert not bench._headline_only()
 
 
 def test_driver_memory_default_follows_host(tmp_path):
