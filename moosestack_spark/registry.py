@@ -11,14 +11,31 @@ non-SQL-expressible ops (the driver then records a weaker rows-only check).
 
 Column-name discipline: the driver sorts columns by name before hashing, so
 every computed column is aliased identically in the Spark code and the SQL.
+
+Correctness window: the correctness run hash-checks only a prefix of
+``QUERIES``, so ``load_all()`` orders it by ``window_order`` from the
+``CORRECTNESS_r*.json`` records and the ledger ``plans/fingerprints.json``:
+each gate's module fingerprint when a record last hash-matched it.  Never
+hand-edit the order; once a record is committed, rebuild the ledger with
+``python -m moosestack_spark.registry``.
 """
 
 from __future__ import annotations
 
+import hashlib
+import importlib
+import json
+import os
+import pkgutil
+import subprocess
+import sys
 from collections.abc import Callable
+from pathlib import Path
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from moosestack_spark.session import REPO_ROOT
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -65,455 +82,99 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# The driver's CORRECTNESS run checks the first 50 registered queries per
-# round.  After round 8, every oracled gate EXCEPT the 12 in _R9_BACKLOG
-# has a green driver row in some round (union r1-r8 = 332 oracled-green).
-# The round-9 window therefore leads with this round's NEW gates, then the
-# 12-gate backlog (all judge-green, never driver-sampled), and fills the
-# remaining slots with the OLDEST driver-green gates — the 44 whose only
-# hash is from round 1 — as hash-drift canaries, exactly as VERDICT r8
-# prescribed.  The window is COMPUTED so adding a new r9 gate automatically
-# displaces the newest canary while the meta-test's exactly-50 invariant
-# holds.
-_R9_NEW: list[str] = [
-    # new round-9 gates, in landing order (first driver hash on new code
-    # beats re-confirming stable queries)
-    "source_iceberg_rest_read",
-    "multimodal_avi_frames",
-    "dedup_substring_clean",
-    "sql_ch_dialect_vocab_r9",
-    "sql_ch_dialect_vocab_r9b",
-    "source_iceberg_rest_timetravel",
-    "corpus_domain_quality_filter",
-    "source_iceberg_rest_delete",
-    "similarity_ivf_pq_topk",
-    "multimodal_motion_frames",
-    "sql_ch_dialect_vocab_r9c",
-    "graph_pagerank_personalized",
-]
+# Gates that run a Spark job while they are built (a streaming replay, an
+# ETL write), so they have no static plan to explain or audit.
+BUILD_TIME_PREFIXES = ("streaming_", "etl_")
 
-_R9_BACKLOG: list[str] = [
-    "sql_ch_dialect_vocab_r7c",
-    "streaming_scd2_apply",
-    "join_nearest_event",
-    "profile_psi_drift",
-    "sql_ch_dialect_vocab_r7d",
-    "funnel_time_to_convert",
-    "text_ngram_diversity",
-    "mv_incremental_join",
-    "ts_seasonal_naive_skill",
-    "cohort_churn_weekly",
-    "dedup_containment",
-    "attribution_linear",
-]
+_REPO = Path(REPO_ROOT)
+LEDGER = _REPO / "plans" / "fingerprints.json"
 
-# Hash-drift canaries: gates whose latest (only) driver-green row is from
-# round 1, oldest evidence in the record.  Re-confirming them guards
-# against silent drift in long-stable code paths.  Listed in fixed order;
-# only the first (50 - len(_R9_NEW) - len(_R9_BACKLOG)) get slots.
-_R1_CANARIES: list[str] = [
-    "agg_having",
-    "agg_count_distinct",
-    "agg_quantile",
-    "join_star_multi",
-    "join_left_lookup",
-    "join_theta",
-    "join_asof",
-    "join_range_buckets",
-    "join_semi_anti",
-    "join_full_outer",
-    "mv_incremental_daily_rollup",
-    "mv_hypertable_rollup",
-    "mv_populate_matches_incremental",
-    "setop_union_merge",
-    "sql_ch_dialect_translated",
-    "analytics_local_supplier_volume",
-    "engine_summing_rollup",
-    "engine_collapsing",
-    "engine_versioned_collapsing",
-    "agg_arg_max",
-    "agg_count_if",
-    "agg_grouping_sets",
-    "agg_rollup",
-    "filter_comparisons",
-    "filter_in_between",
-    "filter_like",
-    "filter_null_checks",
-    "filter_empty_in_is_false",
-    "filter_semantics_skip_and_empty_in",
-    "scalar_date_bucketing",
-    "scalar_json_extract",
-    "scalar_conversions",
-    "scalar_string_funcs",
-    "scalar_math_funcs",
-    "scalar_array_ops",
-    "scalar_conditionals",
-    "scalar_hash_md5",
-    "scalar_hour_bucketing",
-    "scalar_json_variant",
-    "semantic_dims_metrics_groupby",
-    "semantic_detail_mode",
-    "semantic_join_dimension_having",
-    "sql_guarded_limit",
-    "sql_template_params",
-]
 
-# Round-10 window: new gates lead (first driver hash on new code), then
-# the 18 remaining r1-only hash-drift canaries (_R1_CANARIES[26:] — round
-# 9 consumed the first 26), then the next-oldest evidence: gates whose
-# only green rows are from round 2.  Computed so each new r10 gate
-# automatically displaces the newest r2 canary while the meta-test's
-# exactly-50 invariant holds.
-_R10_NEW: list[str] = [
-    "similarity_graph_search",
-    "source_iceberg_rest_txn",
-    # graduated rows-only -> hard oracle this round (integer-exact power
-    # iteration): needs its first HASH row
-    "embedding_pca_project",
-    "agg_mann_whitney_utest",
-]
+def record_rounds() -> dict[int, Path]:
+    """{round: path} of the committed correctness records ``CORRECTNESS_r*.json``."""
+    return {
+        int(p.stem.removeprefix("CORRECTNESS_r")): p
+        for p in _REPO.glob("CORRECTNESS_r*.json")
+    }
 
-_R10_R1_CANARIES: list[str] = _R1_CANARIES[26:]
 
-# Gates whose latest driver-green row is from round 2 (next-oldest
-# evidence after the r1 set), fixed alphabetical order; only the first
-# (50 - len(_R10_NEW) - 18) get slots this round.
-_R2_CANARIES: list[str] = [
-    "agg_group_array",
-    "agg_salted_skew",
-    "agg_uniq_exact",
-    "decontam_ngram_overlap",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_pruned",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "etl_extract_transform_load",
-    "join_bucketed_colocated",
-    "multimodal_audio_features",
-    "multimodal_frame_sample",
-    "multimodal_image_features",
-    "setop_all_variants",
-    "setop_intersect_except",
-    "similarity_bruteforce_topk",
-    "similarity_ivf",
-    "sort_limit_clamp",
-    "sort_multikey_limit",
-    "sort_paginate",
-    "streaming_dlq_envelope",
-    "streaming_dlq_recovery",
-    "streaming_multi_route",
-    "streaming_stateful_user_stats",
-    "streaming_topic_sync",
-    "streaming_zero_or_many_transform",
-    "text_c4_quality_filter",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_pii_redact",
-    "text_quality_bucket",
-    "text_repetition_signals",
-    "text_rolling_fingerprint",
-    "text_stopword_ratio",
-    "text_token_stats",
-    "text_train_val_test_split",
-    "window_first_last",
-    "window_lag",
-    "window_lead_distribution",
-    "window_range_frame",
-    "window_rank_dense",
-    "window_row_number_topk",
-    "window_running_sum",
-]
+def last_green() -> dict[str, int]:
+    """{gate: newest round whose record has a ``hash_match`` row for it}."""
+    green: dict[str, int] = {}
+    for rnd, path in sorted(record_rounds().items()):
+        for name, row in json.loads(path.read_text()).items():
+            if isinstance(row, dict) and row.get("hash_match"):
+                green[name] = rnd
+    return green
 
-# Round-11 window (VERDICT r10 #7 + fix-round hygiene): no brand-new
-# operators this round — the leading slots instead go to every gate whose
-# EXECUTION PATH changed in the r11 perf work (cross-polytope auto
-# banding + new oracle; join-free ngram pair generation feeding the CC /
-# triangle / curation gates; vectorized knn ranking; shared banded-verify
-# rewrite; iceberg REST 204 transaction reply), so each gets a fresh
-# driver hash on the new code.  Then the 15 stale canaries the verdict
-# called out (whole text_*/window_* families, last green in r1/r2 —
-# _R2_CANARIES[28:], exactly the slice that missed the r10 window), then
-# the oldest remaining evidence: r3-latest gates, alphabetical.
-_R11_CHANGED: list[str] = [
-    "dedup_embedding_cosine_pruned_auto",
-    "dedup_embedding_cosine_pruned",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_connected_components",
-    "dedup_connected_components_star",
-    "dedup_connected_components_hybrid",
-    "graph_triangle_count",
-    "corpus_curation_pipeline",
-    "similarity_knn_graph",
-    "similarity_graph_search",
-    "source_iceberg_rest_txn",
-]
 
-_R11_STALE_R2: list[str] = _R2_CANARIES[28:]  # the verdict's 15
+def gate_fingerprints(
+    read: Callable[[str], Optional[bytes]] = lambda path: (_REPO / path).read_bytes(),
+) -> dict[str, str]:
+    """{gate: sha256 of the bytes of the module that defines it}.  ``read``
+    maps a repo-relative module path to its bytes (None: absent, and the
+    gate is left out); the default reads the working tree."""
+    shas = {}
+    for mod in {fn.__module__ for fn in QUERIES.values()}:
+        data = read(os.path.relpath(sys.modules[mod].__file__, _REPO))
+        if data is not None:
+            shas[mod] = hashlib.sha256(data).hexdigest()
+    return {n: shas[fn.__module__] for n, fn in QUERIES.items() if fn.__module__ in shas}
 
-# Gates whose latest driver-green row is from round 3 (oldest evidence
-# once the r2 tail above is re-confirmed), fixed alphabetical order;
-# only the first (50 - 12 - 15) = 23 get slots this round.
-_R3_CANARIES: list[str] = [
-    "agg_avg_weighted",
-    "agg_bit_ops",
-    "agg_corr_exact",
-    "agg_delta_sum",
-    "agg_histogram_fixed",
-    "agg_min_max_map",
-    "agg_pivot_event_counts",
-    "agg_quantile_weighted",
-    "agg_sequence_match",
-    "agg_sum_map",
-    "agg_top_k",
-    "agg_top_k_weighted",
-    "agg_uniq_up_to",
-    "analytics_idle_customers",
-    "analytics_large_orders",
-    "analytics_market_share",
-    "analytics_promo_revenue",
-    "analytics_returned_items",
-    "analytics_supplier_variety",
-    "analytics_volume_shipping",
-    "corpus_mix_weights",
-    "dedup_substring_runs",
-    "funnel_view_click_purchase",
-]
 
-_R11_WINDOW = (
-    _R11_CHANGED
-    + _R11_STALE_R2
-    + _R3_CANARIES[: 50 - len(_R11_CHANGED) - len(_R11_STALE_R2)]
-)
-
-# Round-12 window (VERDICT r11 #3): changed-execution-path gates first —
-# every gate whose runtime plan or oracle changed in the r12 work
-# (size-conditional ngram checkpoints feeding the pair/CC/triangle/
-# curation family; leaf-peel + single-checkpoint star rounds; Gaussian
-# cross-polytope projections with a regenerated auto oracle; the
-# id-validation/skew-guard touch to the shared banded verify; and
-# text_bpe_tokenize's graduation to a HARD oracle, which needs its first
-# hash row).  Then the stale tail the r11 rotation did not reach: the 23
-# remaining r3-latest gates (the alphabetical tail after _R3_CANARIES'
-# first 23), then the oldest 17 of the 47 r4-latest gates.  The 30 r4
-# gates that do not fit are pinned immediately after the window
-# (_AFTER_WINDOW) as next round's rotation head.
-_R12_CHANGED: list[str] = [
-    "text_bpe_tokenize",
-    "dedup_embedding_cosine_pruned_auto",
-    "dedup_embedding_cosine_pruned",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_connected_components",
-    "dedup_connected_components_star",
-    "dedup_connected_components_hybrid",
-    "graph_triangle_count",
-    "corpus_curation_pipeline",
-]
-
-# Gates whose latest driver-green row is round 3 (oldest evidence in the
-# record; the alphabetical tail that missed r11's 23 slots).
-_R12_STALE_R3: list[str] = [
-    "multimodal_audio_frames",
-    "multimodal_gif_features",
-    "multimodal_jpeg_features",
-    "multimodal_mp4_metadata",
-    "multimodal_mulaw_audio",
-    "multimodal_png_features",
-    "multimodal_resize_features",
-    "retention_weekly",
-    "sample_stratified",
-    "similarity_quantized_topk",
-    "sort_limit_by_group",
-    "source_csv_jsonl_roundtrip",
-    "sql_ch_dialect_extended",
-    "streaming_dedup_exact",
-    "streaming_hopping_agg",
-    "streaming_session_window",
-    "streaming_stream_join",
-    "streaming_upsert_latest",
-    "streaming_windowed_agg",
-    "text_bigram_rarity",
-    "text_keywords_tfdf",
-    "text_top_ngrams",
-    "ts_gap_fill_hourly",
-]
-
-# Gates whose latest driver-green row is round 4, fixed alphabetical
-# order; the first (50 - 10 - 23) = 17 get slots this round, the rest
-# queue in _AFTER_WINDOW for round 13.
-_R12_STALE_R4: list[str] = [
-    "agg_array_combinators",
-    "agg_bitmap_cardinalities",
-    "agg_bounding_ratio",
-    "agg_covar_kurt",
-    "agg_cramers_v",
-    "agg_entropy",
-    "agg_group_uniq_array",
-    "agg_hll_deterministic",
-    "agg_if_combinators",
-    "agg_interval_length_sum",
-    "agg_ks_test",
-    "agg_linreg_exact",
-    "agg_mann_whitney_u",
-    "agg_max_intersections",
-    "agg_moments_exact",
-    "agg_sequence_count",
-    "agg_spearman_corr",
-    "agg_theils_u",
-    "agg_unpivot_stack",
-    "agg_welch_ttest",
-    "agg_with_totals",
-    "analytics_customer_distribution",
-    "analytics_disjunctive_predicates",
-    "analytics_excess_suppliers",
-    "analytics_important_parts",
-    "analytics_min_cost_supplier",
-    "analytics_nation_profit",
-    "analytics_priority_class",
-    "analytics_priority_exists",
-    "analytics_small_quantity_revenue",
-    "analytics_top_supplier",
-    "analytics_waiting_suppliers",
-    "corpus_quality_ensemble",
-    "corpus_temperature_sample",
-    "dedup_cross_doc_lines",
-    "dedup_cross_doc_lines_clean",
-    "dedup_image_dhash_pairs",
-    "dedup_incremental_exact",
-    "funnel_strict_order",
-    "multimodal_image_dhash",
-    "streaming_cdc_apply",
-    "streaming_enrich_static",
-    "streaming_hll_distinct",
-    "streaming_stream_join_outer",
-    "streaming_window_topk",
-    "text_readability",
-    "ts_gap_fill_interpolate",
-]
-
-# Round-13 window (VERDICT r12 #2).  Head: every gate whose execution
-# path changed AFTER the r12 window was authored (dedup_minhash_lsh /
-# dedup_minhash_incremental — eebbaf2/cf4a06a landed the sized band
-# exchange post-626e34d, so r12 has no driver-green row for the round's
-# biggest touched path) plus every gate whose path changes in THIS
-# round's commits.  Rule adopted per the verdict: a commit that changes
-# a gate's execution path re-authors this list in the same commit.
-_R13_CHANGED: list[str] = [
-    # r12 post-window sized exchange + r13 int-sig band rows (dedup.py)
-    "dedup_minhash_lsh",
-    "dedup_minhash_incremental",
-    # r13 escalating-K propagation rounds (components.py _propagate)
-    "dedup_connected_components",
-    "dedup_connected_components_hybrid",
-    # r13 per-hop frontier checkpointing (similarity.py graph_search_topk)
-    "similarity_graph_search",
-]
-
-# Then the 30 r4-latest canaries queued in r12's _AFTER_WINDOW, then the
-# oldest r5-latest gates (alphabetical) to fill the 50 slots.
-_R13_STALE_R4: list[str] = _R12_STALE_R4[
-    50 - len(_R12_CHANGED) - len(_R12_STALE_R3):
-]
-
-_R13_STALE_R5: list[str] = [
-    "agg_group_array_sorted",
-    "agg_lttb_downsample",
-    "agg_quantile_approx",
-    "analytics_forecast_revenue",
-    "corpus_dsir_weights",
-    "dedup_semantic_cluster",
-    "dedup_simhash",
-    "join_asof_tolerance",
-    "join_dict_get",
-    "join_paste_positional",
-    "layout_zorder_index",
-    "multimodal_exif_metadata",
-    "profile_table_stats",
-    "sample_hash_mod",
-    "scalar_json_typed_paths",
-    "sessionize_batch",
-    "similarity_lsh_bucketed",
-    "similarity_pq_topk",
-]
-
-_WINDOW_PRIORITY = (
-    _R13_CHANGED
-    + _R13_STALE_R4
-    + _R13_STALE_R5[: 50 - len(_R13_CHANGED) - len(_R13_STALE_R4)]
-)
-
-# The explicit rotation backlog, pinned to positions 51+: the r5-latest
-# gates that missed the 50 slots — next round's rotation head, kept
-# directly behind the window so a wider driver check picks them up first.
-_AFTER_WINDOW: list[str] = _R13_STALE_R5[
-    50 - len(_R13_CHANGED) - len(_R13_STALE_R4):
-]
+def window_order(
+    names: list[str], oracled: set[str], green: dict[str, int], changed: set[str]
+) -> list[str]:
+    """``names`` in correctness-check order: rows-only last; never-green
+    first; then changed; then oldest last-green round; stable otherwise."""
+    return sorted(
+        names,
+        key=lambda n: (n not in oracled, n in green, n not in changed, green.get(n, 0)),
+    )
 
 
 def load_all() -> None:
-    """Import every operator module (side effect: registration)."""
-    from moosestack_spark.operators import (  # noqa: F401
-        aggregates,
-        aggregates_ext,
-        aggregates_stats,
-        analytics,
-        analytics3,
-        analytics_classics,
-        bucketed,
-        chsql_ext,
-        chsql_geo,
-        chsql_r7,
-        chsql_r8,
-        chsql_r9,
-        downsample,
-        engines,
-        filters,
-        funnel,
-        joins,
-        map_aggs,
-        mv,
-        scalar_funcs,
-        semantic,
-        setops,
-        skew,
-        sortlimit,
-        stats_tests,
-        streaming_ext,
-        streaming_ops,
-        timeseries,
-        windows,
-    )
-    from moosestack_spark.ops import (  # noqa: F401
-        avi,
-        bpe,
-        chunking,
-        clustering,
-        components,
-        corpus,
-        decontaminate,
-        dedup,
-        embedding,
-        graph,
-        layout,
-        linedup,
-        lm_score,
-        mp3,
-        multimodal,
-        multimodal_ext,
-        ogg,
-        phash,
-        profile,
-        retrieval,
-        similarity,
-        sketches,
-        text,
-    )
+    """Import every operator module (side effect: registration), then put
+    ``QUERIES`` in correctness-check order."""
+    from moosestack_spark import operators, ops
 
-    # Reorder the registry so the driver's 50-query correctness window covers
-    # the queries that most need a hard row this round (see _WINDOW_PRIORITY).
-    prioritized = [n for n in [*_WINDOW_PRIORITY, *_AFTER_WINDOW] if n in QUERIES]
-    rest = [n for n in QUERIES if n not in set(prioritized)]
-    reordered = {n: QUERIES[n] for n in [*prioritized, *rest]}
-    QUERIES.clear()
-    QUERIES.update(reordered)
+    for pkg in (operators, ops):
+        for mod in pkgutil.iter_modules(pkg.__path__, pkg.__name__ + "."):
+            importlib.import_module(mod.name)
+    checked = json.loads(LEDGER.read_text())["gates"] if LEDGER.exists() else {}
+    changed = {n for n, sha in gate_fingerprints().items() if checked.get(n) != sha}
+    for name in window_order(list(QUERIES), set(ORACLES), last_green(), changed):
+        QUERIES[name] = QUERIES.pop(name)
+
+
+def _git(*args: str) -> subprocess.CompletedProcess:
+    return subprocess.run(["git", "-C", str(_REPO), *args], capture_output=True)
+
+
+def write_ledger() -> dict:
+    """Rebuild the ledger from the committed records: each gate maps to its
+    module's fingerprint in the tree of the commit that added its newest
+    ``hash_match`` record (a record is committed on top of the code it checked)."""
+    load_all()
+    rounds, green, gates = record_rounds(), last_green(), {}
+    for rnd, path in sorted(rounds.items()):
+        added = _git("log", "--diff-filter=A", "--format=%H", "-1", "--", path.name)
+        if not (commit := added.stdout.decode().strip()):
+            raise SystemExit(f"{path.name} is not committed: commit it first")
+
+        def read(p: str) -> Optional[bytes]:
+            out = _git("show", f"{commit}:{p}")
+            return out.stdout if out.returncode == 0 else None
+
+        at = gate_fingerprints(read)
+        gates.update({n: sha for n, sha in at.items() if green.get(n) == rnd})
+    ledger = {"round": max(rounds, default=0), "gates": gates}
+    LEDGER.write_text(json.dumps(ledger, indent=1, sort_keys=True) + "\n")
+    return ledger
+
+
+if __name__ == "__main__":
+    # the gates register into the package module, not into this __main__
+    from moosestack_spark import registry
+
+    print(f"wrote {registry.LEDGER} (round {registry.write_ledger()['round']})")

@@ -22,6 +22,9 @@ from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
+# The checkout that holds this package.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """Half the host's MemTotal, in whole GiB (1-24g): the rest is left to
@@ -69,6 +72,12 @@ def get_spark(app_name: str = "moosestack-spark", **extra_conf: str) -> SparkSes
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
+    # Python workers import the gate kernels (mapInPandas, UDFs) by name, and
+    # the JVM launched here passes this PYTHONPATH on to them: put this
+    # checkout first, so they load the same code as the Spark driver from any cwd.
+    rest = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    rest = [p for p in rest if p and p != REPO_ROOT]
+    os.environ["PYTHONPATH"] = os.pathsep.join([REPO_ROOT, *rest])
     return builder.getOrCreate()
 
 

@@ -19,8 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from moosestack_spark import registry
 from moosestack_spark.session import get_spark
 
-SKIP_PREFIXES = ("streaming_", "etl_")
-
 
 def main() -> None:
     out_dir = sys.argv[1]
@@ -37,7 +35,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        if name.startswith(SKIP_PREFIXES):
+        if name.startswith(registry.BUILD_TIME_PREFIXES):
             with open(path, "w") as fh:
                 fh.write(
                     f"# {name}: streaming/etl query — executes at build "

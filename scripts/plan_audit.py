@@ -24,8 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from moosestack_spark import registry
 from moosestack_spark.session import get_spark
 
-SKIP_PREFIXES = ("streaming_", "etl_")  # execute-at-build, no static plan
-
 # reviewed exceptions — flag kinds that are the CORRECT plan for the query
 ALLOWED = {
     # full outer join cannot use a broadcast build side; sort-merge is the
@@ -132,7 +130,7 @@ def audit(sf_dir: str) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     n_flags = 0
     for name in sorted(registry.QUERIES):
-        if name.startswith(SKIP_PREFIXES):
+        if name.startswith(registry.BUILD_TIME_PREFIXES):
             print(f"{name:40s} SKIP (runs a job at build time)")
             continue
         df = registry.QUERIES[name](spark, sf_dir)

@@ -594,3 +594,32 @@ def test_cpus_default_follows_affinity(monkeypatch):
     assert default_cpus() == str(len(os.sched_getaffinity(0)))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cpus() == "3"
+
+
+def test_workers_import_the_engine_from_any_cwd(tmp_path, sf_dir):
+    """A mapInPandas gate run from outside the checkout with no PYTHONPATH:
+    the Python workers must import ``moosestack_spark`` from the same
+    checkout as the Spark driver (they used to raise ModuleNotFoundError)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from moosestack_spark import registry
+from moosestack_spark.session import get_spark, materialization_scope
+registry.load_all()
+spark = get_spark("worker-import-check")
+with materialization_scope(spark):
+    print("rows", registry.QUERIES["source_avro_roundtrip"](spark, {sf_dir!r}).count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-2:] == ["rows", "1"]
