@@ -9,21 +9,32 @@ Port target: packages/py-moose-lib/moose_lib/dmv2/olap_table.py —
 - isolate = binary-split retry batching (:821-874)
 - versioned physical name {name}_{version with _} (:422-440)
 
-Spark-first storage model:
+Storage model:
 - a table is a Parquet directory under the warehouse root; appends are new
-  files (the MergeTree append model); ORDER BY becomes sortWithinPartitions
-  on write (sorted parts -> row-group stat pruning); PARTITION BY becomes
-  partitionBy (partition pruning).
+  part files (the MergeTree append model) and every append commits a
+  snapshot manifest.
+- row appends (insert of dicts/models, IngestPipeline.ingest) are already
+  validated Python objects in the driver, so they are written there as
+  pyarrow part files (_write_arrow_part): the declared Spark schema and
+  footer, sorted by ORDER BY with nulls first, one file per
+  MAX_INSERT_BLOCK rows — the reference's validate-then-batch sync
+  (kafka_clickhouse_sync.rs:55-57), never a query-engine job per body.
+- DataFrame appends (insert(DataFrame), seed_from, streaming foreachBatch
+  sinks) and row appends that need a Spark writer feature (partitionBy,
+  projections, bloom-filter indexes, the S3 engine, ORDER BY expressions;
+  see _arrow_appendable) are Spark writes: ORDER BY becomes
+  sortWithinPartitions (sorted parts -> row-group stat pruning), PARTITION
+  BY becomes partitionBy (partition pruning).
 - engine read semantics (Replacing/Summing/Collapsing dedup-on-read) are
   applied by .read() via catalog.engine_views — deterministic, strictly
   more consistent than ClickHouse's eventual merges.
 - at 100 TB the same layout holds: partition columns shard the scan,
   sorted-by-key files give min/max pruning, and appends never rewrite.
 
-Validation runs through Pydantic (the model IS the schema) before rows
-reach the JVM; at cluster scale validation of large streams should go
-through the streaming path instead (foreachBatch + poison routing), which
-shares the same DLQ envelope.
+Validation runs through Pydantic (the model IS the schema) in the driver;
+at cluster scale validation of large streams should go through the
+streaming path instead (foreachBatch + poison routing), which shares the
+same DLQ envelope.
 """
 
 from __future__ import annotations
@@ -34,14 +45,20 @@ import os
 import re
 import shutil
 import threading
+import uuid
 from datetime import datetime, timedelta, timezone
-from collections.abc import Iterable, Iterator, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
 from dataclasses import dataclass, field
+from decimal import ROUND_HALF_UP, Context, Decimal
+from enum import Enum
 from typing import Any, Generic, Optional, TypeVar
 
+import pyspark
 from pydantic import BaseModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as st
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from moosestack_spark.catalog import engine_views
 from moosestack_spark.catalog.engines import (
@@ -62,7 +79,7 @@ from moosestack_spark.datamodel.reflection import to_columns, to_struct_type
 
 # Snapshot manifests are exactly v<digits>.json; anything else in the
 # snapshot dir is ignored (editor backups, OS metadata files, ...).
-_MANIFEST_RE = re.compile(r"^v\d+\.json$")
+_MANIFEST_RE = re.compile(r"^v[1-9]\d*\.json$")
 
 T = TypeVar("T", bound=BaseModel)
 
@@ -74,9 +91,10 @@ def path_lock(path: str) -> threading.RLock:
     """The in-process lock serializing appends and snapshot commits on one
     directory.  Two concurrent Spark appends to one path share its
     ``_temporary/0`` staging dir, so one fails with FileNotFoundException
-    (or TASK_WRITE_FAILED); two commits can both pick version max+1 and
-    one manifest is lost.  Re-entrant: an append holds it through its
-    commit."""
+    (or TASK_WRITE_FAILED); holding it from an append's publish through its
+    commit keeps each manifest's file list to the appends committed before
+    it.  Re-entrant.  Other processes are kept apart by the commit's
+    put-if-absent publish, not by this lock."""
     with _PATH_LOCKS_GUARD:
         return _PATH_LOCKS.setdefault(os.path.abspath(path), threading.RLock())
 
@@ -125,6 +143,136 @@ def kafka_value_frame(raw: DataFrame, schema) -> DataFrame:
         "partition",
         "offset",
     ).select("r.*", "topic", "partition", "offset")
+
+
+# Spark's parquet codec names -> pyarrow's (Spark's "lz4" and "lz4_raw" both
+# read back as LZ4; pyarrow has no lzo).  No codec means Spark's default.
+_ARROW_CODECS = {"none": "none", "uncompressed": "none", "snappy": "snappy",
+                 "gzip": "gzip", "brotli": "brotli", "lz4": "lz4",
+                 "lz4_raw": "lz4", "zstd": "zstd"}
+_DEFAULT_CODEC = "snappy"  # spark.sql.parquet.compression.codec
+
+
+def _arrow_value(dtype: st.DataType, nullable: bool, name: str) -> Callable[[Any], Any]:
+    """The converter of one value of ``dtype`` to what pyarrow takes for
+    ``to_arrow_type(dtype)``, doing what createDataFrame does to it:
+    timestamps and dates through Spark's own ``toInternal`` (a naive
+    datetime is local time, under any TZ), decimals rounded half-up to the
+    scale (raising past the precision), non-str values in a string column
+    as ``str()`` (bools as "true"/"false"), and a None in a non-nullable
+    field raised, as Spark's type verifier does."""
+    if isinstance(dtype, st.StructType):
+        fields = [(f.name, _arrow_value(f.dataType, f.nullable, f"{name}.{f.name}"))
+                  for f in dtype.fields]
+
+        def conv(v):
+            if isinstance(v, dict):
+                return {n: c(v.get(n)) for n, c in fields}
+            return {n: c(x) for (n, c), x in zip(fields, v, strict=True)}
+    elif isinstance(dtype, st.ArrayType):
+        elem = _arrow_value(dtype.elementType, dtype.containsNull, f"{name}[]")
+
+        def conv(v):
+            return [elem(x) for x in v]
+    elif isinstance(dtype, st.MapType):
+        key = _arrow_value(dtype.keyType, False, f"{name}.key")
+        val = _arrow_value(dtype.valueType, dtype.valueContainsNull, f"{name}.value")
+
+        def conv(v):
+            return [(key(k), val(x)) for k, x in v.items()]
+    elif isinstance(dtype, st.DecimalType):
+        quantum = Decimal(1).scaleb(-dtype.scale)
+        ctx = Context(prec=dtype.precision, rounding=ROUND_HALF_UP)
+
+        def conv(v):
+            return v.quantize(quantum, context=ctx)
+    elif isinstance(dtype, st.StringType):
+        def conv(v):
+            if type(v) is str:
+                return v
+            return str(v).lower() if isinstance(v, bool) else str(v)
+    elif dtype.needConversion():  # timestamp, timestamp_ntz, date
+        conv = dtype.toInternal
+    else:
+        def conv(v):
+            return v
+
+    def checked(v):
+        if v is None:
+            if not nullable:
+                raise ValueError(f"field {name}: not nullable, but got None")
+            return None
+        return conv(v)
+
+    return checked
+
+
+def _enum_values(v: Any) -> Any:
+    """Enum members -> their values, through dicts, lists and tuples: an
+    enum column stores its value (the reference's Enum columns), never
+    ``str(member)`` ("Baz.QUX")."""
+    if isinstance(v, Enum):
+        return v.value
+    if isinstance(v, dict):
+        return {k: _enum_values(x) for k, x in v.items()}
+    if type(v) in (list, tuple):
+        return type(v)(_enum_values(x) for x in v)
+    return v
+
+
+def _write_arrow_part(
+    path: str,
+    rows: list[dict],
+    spark_schema: st.StructType,
+    codec: Optional[str],
+    sort_by: Sequence[str],
+) -> None:
+    """Write validated rows into ``path`` as parquet part files from the
+    driver, with no Spark job: the file Spark's writer would make of
+    ``createDataFrame(rows, spark_schema)`` sorted within the part by
+    ``sort_by`` (nulls first, NaN last) — the same column types (INT96
+    timestamps, Spark's default), the same footer keys (so a schema-less
+    ``spark.read.parquet`` sees the declared schema and proleptic dates), one
+    file per MAX_INSERT_BLOCK rows.  Each file is written under a dot name
+    that readers skip and renamed to ``part-<uuid>.parquet`` when complete;
+    the caller holds ``path_lock(path)`` if it commits a snapshot."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    schema = to_arrow_schema(spark_schema).with_metadata({
+        "org.apache.spark.version": pyspark.__version__,
+        "org.apache.spark.sql.parquet.row.metadata": spark_schema.json(),
+    })
+    columns = []
+    for f in spark_schema.fields:
+        conv = _arrow_value(f.dataType, f.nullable, f.name)
+        columns.append(pa.array([conv(r.get(f.name)) for r in rows],
+                                type=schema.field(f.name).type))
+    table = pa.Table.from_arrays(columns, schema=schema)
+    if sort_by:
+        sort_cols = []
+        for k in sort_by:
+            col = table.column(k)
+            if pa.types.is_floating(col.type):
+                # Spark orders NaN above every number; Arrow puts it with nulls
+                sort_cols.append(pc.is_nan(col))
+            sort_cols.append(col)
+        keys = [str(i) for i in range(len(sort_cols))]
+        order = pc.sort_indices(
+            pa.table(sort_cols, names=keys),
+            sort_keys=[(k, "ascending") for k in keys],
+            null_placement="at_start",
+        )
+        table = table.take(order)
+    os.makedirs(path, exist_ok=True)
+    for start in range(0, table.num_rows, MAX_INSERT_BLOCK):
+        name = f"part-{uuid.uuid4()}"
+        tmp = os.path.join(path, f".{name}.tmp")
+        pq.write_table(table.slice(start, MAX_INSERT_BLOCK), tmp,
+                       compression=_ARROW_CODECS[codec or _DEFAULT_CODEC],
+                       use_deprecated_int96_timestamps=True)
+        os.rename(tmp, os.path.join(path, f"{name}.parquet"))
 
 
 @dataclass
@@ -237,7 +385,7 @@ class OlapTable(Generic[T]):
         insert-time checks the Spark types can't express.  Raises
         ValueError (Pydantic's ValidationError is one) on a bad row."""
         row = r.model_dump() if isinstance(r, BaseModel) else self.model(**r).model_dump()
-        row = self._split_json_columns(row)
+        row = self._split_json_columns(_enum_values(row))
         err = self._range_check(row)
         if err is not None:
             raise ValueError(err)
@@ -349,7 +497,7 @@ class OlapTable(Generic[T]):
             ),
         }
 
-    def _append_df(self, df: DataFrame) -> None:
+    def _check_writable(self) -> None:
         if self.config.life_cycle == LifeCycle.EXTERNALLY_MANAGED:
             raise PermissionError(f"{self.name} is EXTERNALLY_MANAGED (read-only)")
         eng = self.config.engine
@@ -357,6 +505,25 @@ class OlapTable(Generic[T]):
             raise PermissionError(
                 f"{self.name}: engine {eng.name} is read-only / consume-only"
             )
+
+    def _arrow_appendable(self) -> bool:
+        """Whether a row append can be a driver-side pyarrow part file.  Not
+        when it needs Spark's writer: partitionBy dirs, projection copies,
+        parquet bloom filters, the S3 engine's external path and format, a
+        SQL ORDER BY expression, or a codec pyarrow lacks."""
+        cfg = self.config
+        return not (
+            cfg.partition_by
+            or cfg.projections
+            or cfg.order_by_expression
+            or isinstance(cfg.engine, S3)
+            or self._parquet_index_options()
+            or (self._parquet_compression() or _DEFAULT_CODEC) not in _ARROW_CODECS
+        )
+
+    def _append_df(self, df: DataFrame) -> None:
+        self._check_writable()
+        eng = self.config.engine
         if isinstance(eng, S3):
             # direct-path engine: rows land at the external location
             # (s3a:// on a cluster; any hadoop-fs path locally) in the
@@ -400,7 +567,14 @@ class OlapTable(Generic[T]):
     # plans ONLY that manifest's files, so readers are isolated from
     # concurrent appends, any appended version can be re-read (rollback,
     # reproducible training runs), and the file-list DIFF between two
-    # versions is an incremental-consumption feed.  Append-only history is
+    # versions is an incremental-consumption feed.  Row appends publish a
+    # pyarrow part file by rename and DataFrame appends a Spark write; both
+    # then commit while holding path_lock, so within a process a manifest
+    # lists exactly the files of the appends committed before it.  Across
+    # processes the commit is put-if-absent: v{n}.json is published with
+    # os.link, which fails if another writer took n first, and the loser
+    # re-lists and retries at the next number.  A commit reads only the
+    # manifest NAMES (O(names), never O(history)).  Append-only history is
     # fully retained; full REWRITES (optimize / TTL / mutations) replace
     # the physical files, RETIRING earlier snapshots — read_at on a
     # retired version raises instead of returning partial data (a real
@@ -423,46 +597,55 @@ class OlapTable(Generic[T]):
                     )
         return sorted(out)
 
-    def _commit_snapshot(self, op: str) -> int:
-        import json as _json
-
-        os.makedirs(self._snapdir, exist_ok=True)
-        with path_lock(self.path):
-            # max+1, not count+1: vacuum may have dropped old manifests and
-            # a reused number would sort a NEW snapshot before the head
-            snaps = self.snapshots()
-            version = (snaps[-1]["version"] + 1) if snaps else 1
-            manifest = {"version": version, "op": op, "files": self._data_files()}
-            tmp = os.path.join(self._snapdir, f".v{version}.json.tmp")
-            with open(tmp, "w") as fh:
-                _json.dump(manifest, fh)
-            os.replace(tmp, os.path.join(self._snapdir, f"v{version}.json"))
-        return version
-
-    def snapshots(self) -> list[dict]:
-        import json as _json
-
+    def _versions(self) -> list[int]:
+        """Snapshot versions, ascending, from the manifest names alone.
+        Strict name match: a stray non-manifest file in the snapshot dir
+        (editor backup, "version.json") must not break every
+        snapshot/read_at/vacuum operation with a ValueError."""
         if not os.path.isdir(self._snapdir):
             return []
-        out = []
-        # Strict manifest-name match: a stray non-manifest file in the
-        # snapshot dir (editor backup, "version.json") must not break every
-        # snapshot/read_at/vacuum operation with a ValueError.
-        for f in sorted(
-            (f for f in os.listdir(self._snapdir) if _MANIFEST_RE.match(f)),
-            key=lambda f: int(f[1:-5]),
-        ):
-            out.append(_json.load(open(os.path.join(self._snapdir, f))))
-        return out
+        return sorted(
+            int(f[1:-5]) for f in os.listdir(self._snapdir) if _MANIFEST_RE.match(f)
+        )
+
+    def _manifest(self, version: int) -> dict:
+        with open(os.path.join(self._snapdir, f"v{version}.json")) as fh:
+            return json.load(fh)
+
+    def _commit_snapshot(self, op: str) -> int:
+        os.makedirs(self._snapdir, exist_ok=True)
+        with path_lock(self.path):
+            while True:
+                # max+1, not count+1: vacuum may have dropped old manifests
+                # and a reused number would sort a NEW snapshot before the
+                # head.  Versions are listed before files, so a writer that
+                # wins v{n} has seen every file committed below n.
+                versions = self._versions()
+                version = versions[-1] + 1 if versions else 1
+                manifest = {"version": version, "op": op, "files": self._data_files()}
+                tmp = os.path.join(self._snapdir, f".v{version}.{uuid.uuid4().hex}.tmp")
+                with open(tmp, "w") as fh:
+                    json.dump(manifest, fh)
+                try:
+                    os.link(tmp, os.path.join(self._snapdir, f"v{version}.json"))
+                    return version
+                except FileExistsError:
+                    continue  # another process committed v{version} first
+                finally:
+                    os.remove(tmp)
+
+    def snapshots(self) -> list[dict]:
+        return [self._manifest(v) for v in self._versions()]
 
     def _snapshot_by_version(self, version: int) -> dict:
         """Manifest lookup by version NUMBER (not list position — vacuum
         may have dropped older manifests)."""
-        for snap in self.snapshots():
-            if snap["version"] == version:
-                return snap
-        have = [s["version"] for s in self.snapshots()]
-        raise ValueError(f"{self.name}: no snapshot v{version} (have {have})")
+        try:
+            return self._manifest(version)
+        except FileNotFoundError:
+            raise ValueError(
+                f"{self.name}: no snapshot v{version} (have {self._versions()})"
+            ) from None
 
     def read_at(self, version: int) -> DataFrame:
         """The table as of snapshot `version` (1-based): scans ONLY that
@@ -499,16 +682,15 @@ class OlapTable(Generic[T]):
             # file would look unreferenced and be wiped); DELETION_PROTECTED
             # forbids the file removal outright
             raise PermissionError(f"{self.name} life_cycle forbids vacuum")
-        snaps = self.snapshots()
-        if not snaps:
+        versions = self._versions()
+        if not versions:
             # no manifests (pre-snapshot-era dir or external writes):
             # NOTHING is provably unreferenced — refuse to guess
             return 0, 0
-        keep = snaps[-keep_last:] if keep_last > 0 else snaps[-1:]
-        keep_versions = {s["version"] for s in keep}
+        keep = versions[-keep_last:] if keep_last > 0 else versions[-1:]
         referenced: set[str] = set()
-        for s in keep:
-            referenced.update(s["files"])
+        for v in keep:
+            referenced.update(self._manifest(v)["files"])
 
         files_removed = 0
         for f in self._data_files():
@@ -520,13 +702,10 @@ class OlapTable(Generic[T]):
             if root != self.path and not dirs and not files:
                 os.rmdir(root)
 
-        manifests_removed = 0
-        if os.path.isdir(self._snapdir):
-            for fn in list(os.listdir(self._snapdir)):
-                if _MANIFEST_RE.match(fn):
-                    if int(fn[1:-5]) not in keep_versions:
-                        os.remove(os.path.join(self._snapdir, fn))
-                        manifests_removed += 1
+        expired = versions[: len(versions) - len(keep)]
+        for v in expired:
+            os.remove(os.path.join(self._snapdir, f"v{v}.json"))
+        manifests_removed = len(expired)
         for tmp in _glob.glob(self.path + ".__*_tmp"):
             shutil.rmtree(tmp, ignore_errors=True)
         return manifests_removed, files_removed
@@ -615,14 +794,20 @@ class OlapTable(Generic[T]):
         return InsertResult(len(ok), len(failed), [e for _, e in failed])
 
     def _append_rows(self, rows: list[dict]) -> None:
-        """Append already-validated rows (_validate_row output)."""
-        df = self.spark.createDataFrame(rows, self.schema)
-        # one part file per ~MAX_INSERT_BLOCK rows, like a MergeTree
-        # insert writing one part per block — without this, a 1-row
-        # insert fans out into a file per default partition (32 mostly
-        # empty files per append: the small-files explosion)
-        n_files = max(1, math.ceil(len(rows) / MAX_INSERT_BLOCK))
-        self._append_df(df.coalesce(n_files))
+        """Append already-validated rows (_validate_row output) as one
+        part file per MAX_INSERT_BLOCK rows, like a MergeTree insert
+        writing one part per block."""
+        self._check_writable()
+        if not self._arrow_appendable():
+            # without the coalesce a 1-row insert fans out into a mostly
+            # empty file per default partition (the small-files explosion)
+            n_files = max(1, math.ceil(len(rows) / MAX_INSERT_BLOCK))
+            self._append_df(self.spark.createDataFrame(rows, self.schema).coalesce(n_files))
+            return
+        with path_lock(self.path):
+            _write_arrow_part(self.path, rows, self.schema, self._parquet_compression(),
+                              self.config.order_by_fields)
+            self._commit_snapshot("append")
 
     def _insert_isolate(self, rows: list, options: InsertOptions) -> InsertResult:
         """Binary-split retry (olap_table.py:821-874): try the whole block;
@@ -645,7 +830,7 @@ class OlapTable(Generic[T]):
         attempt(rows)
         self._check_thresholds(len(ok_rows), failures, options)
         if ok_rows:
-            self._append_df(self.spark.createDataFrame(ok_rows, self.schema))
+            self._append_rows(ok_rows)
         return InsertResult(len(ok_rows), len(failures), [e for _, e in failures])
 
     # -- reads -------------------------------------------------------------

@@ -10,7 +10,9 @@ Spark mapping (write path §3.2): ingest() validates rows (the HTTP
 endpoint's DataModelVisitor job) -> valid rows append to the table (the
 Kafka->ClickHouse sync job collapses into a direct append; with a real
 Kafka source the stream half runs via streaming.runner) -> invalid rows
-land in the DLQ table with the DeadLetterModel envelope.
+land in the DLQ table with the DeadLetterModel envelope.  Both appends are
+driver-side pyarrow part files (unless the table needs a Spark writer
+feature, OlapTable._arrow_appendable), so a request body runs no Spark job.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from pydantic import BaseModel, ValidationError
 from pyspark.sql import DataFrame, SparkSession
 
 from moosestack_spark.catalog.engines import OlapConfig
-from moosestack_spark.catalog.table import OlapTable, path_lock
+from moosestack_spark.catalog.table import OlapTable, _write_arrow_part
 from moosestack_spark.streaming.dlq import DLQ_SCHEMA
 from moosestack_spark.streaming.stream import Stream
 
@@ -130,10 +132,9 @@ class IngestPipeline(Generic[T]):
             }
             for rec, msg in failures
         ]
-        with path_lock(self.dlq_path):
-            self.spark.createDataFrame(dead, DLQ_SCHEMA).write.mode(
-                "append"
-            ).parquet(self.dlq_path)
+        # a pyarrow part file, like a table's row append; the DLQ has no
+        # snapshots, so the rename alone publishes it
+        _write_arrow_part(self.dlq_path, dead, DLQ_SCHEMA, None, ())
         return len(dead)
 
     def read_dlq(self) -> DataFrame:
