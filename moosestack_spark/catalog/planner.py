@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 from typing import Optional
@@ -361,9 +362,18 @@ def order_ops(ops: list[Op], target: InfraMap, current: InfraMap) -> list[Op]:
 
 
 def save_state(warehouse: str, m: InfraMap) -> None:
+    """Publish ``m`` as the warehouse's ``_state.json`` atomically: write a
+    temp file in the same directory, then ``os.replace`` it, so a write that
+    fails midway leaves the previous state loadable."""
     os.makedirs(warehouse, exist_ok=True)
-    with open(os.path.join(warehouse, "_state.json"), "w") as f:
-        f.write(m.to_json())
+    fd, tmp = tempfile.mkstemp(prefix="._state.", suffix=".tmp", dir=warehouse)
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(m.to_json())
+        os.replace(tmp, os.path.join(warehouse, "_state.json"))
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 def load_state(warehouse: str) -> InfraMap:

@@ -314,6 +314,7 @@ class OlapTable(Generic[T]):
         self.config.validate()
         self.schema = to_struct_type(model)
         self.columns = to_columns(model)
+        self._json_columns = [c for c in self.columns if c.annotations.get("ch_type") == "Json"]
         self.warehouse = warehouse
         os.makedirs(self.path, exist_ok=True)
         # lifecycle registry (dmv2/_registry.py): the CLI's plan/migrate
@@ -343,25 +344,27 @@ class OlapTable(Generic[T]):
     # -- validation --------------------------------------------------------
 
     def _split_json_columns(self, row: dict) -> dict:
-        """Typed-path Json columns (ClickHouseJson, data_models.py:597-637):
-        the Pydantic dump of an extra='allow' inner model carries typed
-        fields AND extras in one dict — split it into the struct shape the
-        schema declares: typed paths as native fields, every other path
-        serialized into the __dynamic JSON remainder, minus skip_paths /
-        skip_regexps (ClickHouse's SKIP / SKIP REGEXP never stores those)."""
-        import json as _json
-        import re as _re
-
+        """Json columns as stored.  A plain one (``Any``, ``dict[str, Any]``)
+        holds the value's ``json.dumps`` text.  A typed-path one
+        (ClickHouseJson, data_models.py:597-637): the Pydantic dump of an
+        extra='allow' inner model carries typed fields AND extras in one
+        dict — split it into the struct shape the schema declares: typed
+        paths as native fields, every other path serialized into the
+        __dynamic JSON remainder, minus skip_paths / skip_regexps
+        (ClickHouse's SKIP / SKIP REGEXP never stores those)."""
         from moosestack_spark.datamodel.types import JSON_DYNAMIC_FIELD
 
-        for col in self.columns:
+        for col in self._json_columns:
+            if isinstance(col.data_type, st.StringType) and row.get(col.name) is not None:
+                row = {**row, col.name: json.dumps(row[col.name], default=str)}
+                continue
             typed = col.annotations.get("json_typed_paths")
             if typed is None or not isinstance(row.get(col.name), dict):
                 continue
             val = row[col.name]
             skips = set(col.annotations.get("json_skip_paths", ()))
             regexps = [
-                _re.compile(p)
+                re.compile(p)
                 for p in col.annotations.get("json_skip_regexps", ())
             ]
             out = {k: val.get(k) for k in typed}
@@ -373,7 +376,7 @@ class OlapTable(Generic[T]):
                 and not any(r.search(k) for r in regexps)
             }
             out[JSON_DYNAMIC_FIELD] = (
-                _json.dumps(dyn, sort_keys=True, separators=(",", ":"))
+                json.dumps(dyn, sort_keys=True, separators=(",", ":"))
                 if dyn
                 else None
             )

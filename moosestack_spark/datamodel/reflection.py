@@ -25,8 +25,8 @@ Type mapping (SURVEY.md §1.3):
 | list[T]                   | array<T>                               |
 | dict[K,V]                 | map<K,V>                               |
 | nested BaseModel          | struct                                 |
-| Optional[T]               | nullable=True                          |
-| Any / Json                | string (JSON text; get_json_object)    |
+| Optional[T] / `= None`    | nullable=True                          |
+| Any / dict[str, Any]      | string (JSON text; get_json_object)    |
 | UUID                      | string                                 |
 | IPv4Address/IPv6Address   | string + validation                    |
 | bytes                     | binary                                 |
@@ -264,7 +264,8 @@ def _py_type_to_spark(tp: Any, annotations: dict) -> tuple[st.DataType, bool]:
     if origin is dict:
         args = get_args(tp)
         if not args:
-            return st.StringType(), False  # dict[str, Any] == Json (:597-637)
+            annotations["ch_type"] = "Json"  # bare dict == Json (:597-637)
+            return st.StringType(), False
         k, v = args
         if v is Any:
             annotations["ch_type"] = "Json"
@@ -334,6 +335,8 @@ def to_columns(model: type[BaseModel]) -> list[Column]:
         ann: dict = {}
         tp = hints.get(name, fld.annotation)
         dtype, nullable = _py_type_to_spark(tp, ann)
+        # a field that defaults to None (``x: Any = None``) is optional
+        nullable = nullable or (not fld.is_required() and fld.default is None)
         primary_key = bool(ann.pop("_primary_key", False))
         default = ann.pop("_default", None)
         materialized = ann.pop("_materialized", None)

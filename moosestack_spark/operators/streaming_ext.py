@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from moosestack_spark.operators._determinism import dsum, sql_dsum
 from moosestack_spark.registry import query
 from moosestack_spark.streaming.runner import available_now, commit_table
-from moosestack_spark.tables import normalize_event_ts
+from moosestack_spark.tables import normalize_event_ts, t
 
 
 @query(
@@ -156,7 +156,7 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     up automatically.  The aggregate accumulates across batches through a
     latest-wins upsert on the group key (count monotonicity makes
     last-write-wins correct under availableNow replay)."""
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    dim = t(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("segment")
     )
     with available_now(spark) as r:
@@ -748,7 +748,7 @@ def streaming_space_saving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sketch = r.to_memory(stream, "update")
         # batch-side exact counts (what the oracle replays)
         exact = (
-            keyed(normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet")))
+            keyed(t(spark, sf_dir, "events"))
             .groupBy("cohort", "key")
             .agg(F.count(F.lit(1)).alias("exact_cnt"))
         )
@@ -859,7 +859,7 @@ def streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     for this streaming op."""
     with available_now(spark) as r:
         src_dir, table_dir = r.dir("slices"), r.dir("table")
-        ev = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+        ev = t(spark, sf_dir, "events")
         # three deterministic time slices -> three ordered source files
         bounds = ev.agg(
             F.expr("percentile_approx(event_id, 0.34, 10000)").alias("b1"),

@@ -22,6 +22,7 @@ Scale design:
 
 from __future__ import annotations
 
+import os
 import warnings
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -31,28 +32,48 @@ from pyspark.sql import functions as F
 from moosestack_spark.registry import query
 from moosestack_spark.tables import t
 
-def _est_input_bytes(df: DataFrame) -> int | None:
-    """Cheap (job-free) input-size estimate: sum of the plan's source file
-    sizes via df.inputFiles().  None when the plan has no file sources
-    (in-memory frames) or the files are not local — callers treat unknown
-    as LARGE (the scale-safe default)."""
-    import os
-
+def _local_input_files(df: DataFrame) -> list[str] | None:
+    """The plan's source files as local paths, via df.inputFiles() (no
+    job).  None when the plan has no file sources (in-memory frames) or a
+    file is not local — callers treat unknown as LARGE (the scale-safe
+    default)."""
     try:
         files = df.inputFiles()
     except Exception:
         return None
     if not files:
         return None
-    total = 0
+    paths = []
     for f in files:
         path = f[7:] if f.startswith("file:///") else f
         path = path if path.startswith("/") else "/" + path.lstrip("/")
-        try:
-            total += os.path.getsize(path)
-        except OSError:
+        if not os.path.isfile(path):
             return None
-    return total
+        paths.append(path)
+    return paths
+
+
+def _est_input_bytes(df: DataFrame) -> int | None:
+    """Cheap (job-free) input-size estimate: the summed size of the plan's
+    source files; None when unknown (see _local_input_files)."""
+    paths = _local_input_files(df)
+    return None if paths is None else sum(os.path.getsize(p) for p in paths)
+
+
+def _footer_rows(df: DataFrame) -> int | None:
+    """Job-free row-count upper bound for a plan that filters or projects
+    its sources but never multiplies rows: the summed parquet footer
+    ``num_rows`` of its source files, read with pyarrow.  None when unknown
+    (see _local_input_files) or a file is not parquet."""
+    import pyarrow.parquet as pq
+
+    paths = _local_input_files(df)
+    if paths is None:
+        return None
+    try:
+        return sum(pq.read_metadata(p).num_rows for p in paths)
+    except (OSError, ValueError):  # ArrowInvalid: not a parquet file
+        return None
 
 
 # Below this input size the two ngram_jaccard_pairs localCheckpoints cost
@@ -471,13 +492,6 @@ N_BANDS = 8  # 4 rows/band; threshold ~ (1/b)^(1/r) ~ 0.59
 # optimizer's plan (ENSURE_REQUIREMENTS exchange + partial window-group
 # limit + AQE) is strictly better, above it bounded sorts win.
 _BAND_ROWS_PER_PART = 120_000  # rows/partition when we size the exchange
-# Conservative floor on compressed parquet bytes per document: the skip
-# gate estimates a doc-count UPPER BOUND as est_bytes / _MIN_DOC_BYTES, so
-# the count job is only skipped when even a corpus of degenerate 32-byte
-# docs could not reach the row trigger (ADVICE r12: the old flat 32 MB
-# byte gate did not scale with the row-based trigger — a well-compressed
-# small-doc corpus under it could exceed the 2x row trigger silently).
-_MIN_DOC_BYTES = 32
 
 
 def _shuffle_parts(df: DataFrame) -> int:
@@ -496,33 +510,30 @@ def _size_band_exchange(
     src_df,
     id_col: str,
     n_bands: int,
-    est_bytes: int | None = -1,
+    est_rows: int | None = -1,
     count_rows=None,
 ):
     """Repartition the band-row table on (band, bh) iff the corpus is big
     enough that the session-default exchange would sort > 2x the target
     rows per partition.  The row count costs one column-pruned scan, and
-    is itself skipped (via the job-free file-size estimate and the
-    conservative _MIN_DOC_BYTES doc-count bound) when the trigger is
-    provably unreachable.  The window and groupBy downstream both cluster
-    on (band, bh), so when the repartition fires it REPLACES their
-    exchange rather than adding one (any hash partitioning on those keys
-    satisfies ClusteredDistribution; plan-pinned in test_plans).
+    is itself skipped when the job-free footer row count (an upper bound,
+    see _footer_rows) shows the trigger is unreachable.  The window and
+    groupBy downstream both cluster on (band, bh), so when the repartition
+    fires it REPLACES their exchange rather than adding one (any hash
+    partitioning on those keys satisfies ClusteredDistribution;
+    plan-pinned in test_plans).
 
-    ``est_bytes`` / ``count_rows`` let the incremental path reuse this
-    logic with its combined existing+new estimate and two-sided count
-    (ADVICE r12: the inline copy had already drifted): est_bytes=-1 means
-    "estimate from src_df", None means "unknown — treat as LARGE";
+    ``est_rows`` / ``count_rows`` let the incremental path reuse this
+    logic with its combined existing+new bound and two-sided count
+    (ADVICE r12: the inline copy had already drifted): est_rows=-1 means
+    "bound from src_df", None means "unknown — treat as LARGE";
     count_rows (callable) overrides the source row count, evaluated only
     past the skip gate."""
-    if est_bytes == -1:
-        est_bytes = _est_input_bytes(src_df)
+    if est_rows == -1:
+        est_rows = _footer_rows(src_df)
     parts = _shuffle_parts(src_df)
     trigger_rows = parts * 2 * _BAND_ROWS_PER_PART
-    if (
-        est_bytes is not None
-        and (est_bytes // _MIN_DOC_BYTES) * n_bands <= trigger_rows
-    ):
+    if est_rows is not None and est_rows * n_bands <= trigger_rows:
         return bands
     if count_rows is None:
         count_rows = lambda: src_df.select(id_col).count()  # noqa: E731
@@ -870,15 +881,15 @@ def minhash_lsh_pairs_incremental(
     # _size_band_exchange): the window sort's per-partition volume must not
     # grow linearly with the INDEX side — the whole point of the
     # incremental path is that a 100 TB existing index is in play.  The
-    # trigger/skip conditions are evaluated on the combined input size.
-    est_e = _est_input_bytes(existing)
-    est_n = _est_input_bytes(new)
+    # trigger/skip conditions are evaluated on the combined footer rows.
+    est_e = _footer_rows(existing)
+    est_n = _footer_rows(new)
     members = _size_band_exchange(
         members,
         existing,
         id_col,
         n_bands,
-        est_bytes=(None if est_e is None or est_n is None else est_e + est_n),
+        est_rows=(None if est_e is None or est_n is None else est_e + est_n),
         count_rows=lambda: existing.select(id_col).count()
         + new.select(id_col).count(),
     )

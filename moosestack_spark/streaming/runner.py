@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from moosestack_spark.streaming.stream import Stream
+from moosestack_spark.tables import checked_schema
 
 # One state store per shuffle partition: the bounded gate replays hold a few
 # thousand windows/sessions, where 32 stores are pure per-batch overhead
@@ -71,14 +72,15 @@ class Replay:
         return path
 
     def source(self, path: str, links: int = 1) -> DataFrame:
-        """Stream the parquet file at ``path`` as stored (ts as nanos-long)
-        from a dir of ``links`` symlinks to it: FileStreamSource needs a
-        directory, and each extra link replays the file again."""
+        """Stream the table file at ``path`` as stored (ts as
+        nanos-long) from a dir of ``links`` symlinks to it: FileStreamSource
+        needs a directory, and each extra link replays the file again.  The
+        schema is the table's declared one (``tables.checked_schema``)."""
         src = self.dir("src")
         name = os.path.basename(path)
         for i in range(links):
             os.symlink(os.path.abspath(path), os.path.join(src, f"{i}_{name}"))
-        schema = self.spark.read.parquet(path).schema
+        schema = checked_schema(name.removesuffix(".parquet"), path)
         return self.spark.readStream.schema(schema).parquet(src)
 
     def _run(self, writer: DataStreamWriter) -> None:

@@ -17,7 +17,7 @@ import time
 import uuid
 from decimal import Decimal
 from enum import Enum
-from typing import Annotated, Literal, Optional
+from typing import Annotated, Any, Literal, Optional
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
@@ -208,6 +208,35 @@ def test_ingest_runs_no_spark_job(spark, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert pipe.table.read().count() == 99
     assert json.loads(pipe.read_dlq().collect()[0].original_record)["id"] == 37
+
+
+class Doc(BaseModel):
+    id: Key[int]
+    payload: dict[str, Any]
+    extra: Any = None
+
+
+@pytest.mark.parametrize("config", [OlapConfig(order_by_fields=["id"]),
+                                    OlapConfig(order_by_expression="id")],
+                         ids=["arrow", "spark"])
+def test_json_fields_store_json_text(spark, tmp_path, config):
+    """Any and dict[str, Any] fields are stored as json.dumps text on both
+    append paths, and an insert may omit the optional ``extra: Any = None``."""
+    t = OlapTable("docs", Doc, spark, str(tmp_path / "wh"), config=config, register=False)
+    assert t._arrow_appendable() == (config.order_by_expression is None)
+    assert t.schema["extra"].nullable and not t.schema["payload"].nullable
+    rows = [{"id": 0, "payload": {"q": 1, "tags": ["a"]}, "extra": {"k": None}},
+            {"id": 1, "payload": {}, "extra": "s"},
+            {"id": 2, "payload": {"q": 2.5}}]
+    assert t.insert(rows).inserted == 3
+    got = {r.id: (r.payload, r.extra) for r in t.read().collect()}
+    assert got[2][1] is None
+    assert {i: (json.loads(p), e if e is None else json.loads(e))
+            for i, (p, e) in got.items()} == {
+        0: ({"q": 1, "tags": ["a"]}, {"k": None}),
+        1: ({}, "s"),
+        2: ({"q": 2.5}, None),
+    }
 
 
 def test_isolate_insert_adds_one_data_file(spark, tmp_path):

@@ -545,7 +545,7 @@ def test_size_band_exchange_trigger(spark):
     # unknown combined estimate must be treated as LARGE (count runs),
     # and the count_rows override must feed the partition sizing
     out = _size_band_exchange(
-        bands, small_src, "doc_id", 8, est_bytes=None, count_rows=lambda: big_n
+        bands, small_src, "doc_id", 8, est_rows=None, count_rows=lambda: big_n
     )
     analyzed = out._jdf.queryExecution().analyzed().toString()
     repart_lines = [
@@ -555,7 +555,44 @@ def test_size_band_exchange_trigger(spark):
     assert any(f", {want}" in ln for ln in repart_lines), (want, repart_lines)
     # a small known combined estimate skips both the count and the exchange
     out = _size_band_exchange(
-        bands, small_src, "doc_id", 8, est_bytes=1024,
+        bands, small_src, "doc_id", 8, est_rows=1024,
         count_rows=lambda: (_ for _ in ()).throw(AssertionError("counted")),
     )
     assert "RepartitionByExpression" not in out._jdf.queryExecution().analyzed().toString()
+
+
+def test_size_band_exchange_counts_a_well_compressed_corpus(spark, tmp_path):
+    """The skip gate bounds the doc count by the parquet footers' num_rows,
+    not by a bytes-per-doc floor: a corpus that compresses below 32 B/doc
+    yet reaches the row trigger must still be counted and get the sized
+    exchange."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from moosestack_spark.ops.dedup import (
+        _BAND_ROWS_PER_PART,
+        _footer_rows,
+        _shuffle_parts,
+        _size_band_exchange,
+    )
+
+    bands = spark.range(10).selectExpr(
+        "id AS band", "id AS bh", "named_struct('doc', id, 'sig', array(id)) AS m"
+    )
+    trigger_rows = _shuffle_parts(bands) * 2 * _BAND_ROWS_PER_PART
+    n = trigger_rows // 8 + 10_000
+    path = str(tmp_path / "corpus.parquet")
+    pq.write_table(pa.table({"doc_id": pa.array(np.arange(n))}), path)
+    # a 32 B/doc bound would call this corpus too small to count
+    assert os.path.getsize(path) // 32 * 8 <= trigger_rows
+    src = spark.read.parquet(path)
+    assert _footer_rows(src) == n
+    counted = []
+    out = _size_band_exchange(
+        bands, src, "doc_id", 8, count_rows=lambda: counted.append(n) or n
+    )
+    assert counted == [n]
+    assert "RepartitionByExpression" in out._jdf.queryExecution().analyzed().toString()

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from moosestack_spark.catalog.planner import (
     ColumnSpec,
     InfraMap,
@@ -110,6 +112,17 @@ def test_state_roundtrip(tmp_path):
     assert back.materialized_views["mv"].source_tables == ("a",)
     assert plan_changes(back, m) == []  # no drift
     assert load_state(str(tmp_path / "missing")).tables == {}
+
+
+def test_failed_state_write_keeps_previous_state(tmp_path):
+    good = InfraMap(tables={"a": _t("a", [("id", "bigint")])})
+    save_state(str(tmp_path), good)
+    # a value to_json cannot encode fails the write midway
+    bad = InfraMap(views={"v": ViewSpec("v", object(), ("a",))})
+    with pytest.raises(TypeError):
+        save_state(str(tmp_path), bad)
+    assert os.listdir(tmp_path) == ["_state.json"]
+    assert plan_changes(load_state(str(tmp_path)), good) == []
 
 
 # -- reality check (infra_reality_checker.rs) --------------------------------

@@ -62,9 +62,13 @@ def test_spark_sequence_count_on_planted_events(spark, tmp_path):
             eid += 1
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, ts_s string"
-    ).withColumn("ts", F.col("ts_s").cast("timestamp"))
+    ).withColumn("ts", F.col("ts_s").cast("timestamp_ntz"))
     out = str(tmp_path / "events.parquet")
-    df.select("event_id", "ts", "user_id", "event_type").write.parquet(out)
+    # the full declared events shape: tables.t() rejects any other
+    df.select(
+        "event_id", "ts", "user_id", "event_type",
+        F.lit(0.0).alias("value"), F.lit("{}").alias("props"),
+    ).write.parquet(out)
     # point the operator at a directory shaped like a sf_dir
     from moosestack_spark import registry
 
