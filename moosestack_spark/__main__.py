@@ -181,32 +181,26 @@ def cmd_restore(args) -> int:
     removed = table.restore(args.version)
     print(
         f"restored {table.name} to snapshot v{args.version} "
-        f"({removed} file(s) removed)"
+        f"({removed} file(s) removed from the live set, none deleted)"
     )
     return 0
 
 
 def cmd_metrics(args) -> int:
     """Table health at a glance (the reference's metrics-console shape):
-    rows, files, bytes, snapshots, then the one-pass per-column profile."""
-    import os as _os
-
+    rows, then the head snapshot's files and bytes and the number of
+    versions in the log, then the one-pass per-column profile."""
     _, table = _table(args)
-    files = [
-        _os.path.join(root, f)
-        for root, _d, fs in _os.walk(table.path)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
-    total = sum(_os.path.getsize(f) for f in files)
+    head = table._log.head()
+    files = head.files.values() if head else ()
     print(
         json.dumps(
             {
                 "table": table.name,
                 "rows": table.read_raw().count(),
                 "files": len(files),
-                "bytes": total,
-                "snapshots": len(table.snapshots()),
+                "bytes": sum(a["size"] for a in files),
+                "snapshots": len(table._log.versions()),
             }
         )
     )
@@ -219,10 +213,10 @@ def cmd_metrics(args) -> int:
 
 def cmd_vacuum(args) -> int:
     _, table = _table(args)
-    manifests, files = table.vacuum(args.keep_last)
+    versions, files = table.vacuum(args.keep_last)
     print(
-        f"vacuumed {table.name}: {manifests} manifest(s), "
-        f"{files} orphan file(s) removed"
+        f"vacuumed {table.name}: {versions} version(s) expired, "
+        f"{files} unreferenced file(s) deleted"
     )
     return 0
 

@@ -9,8 +9,10 @@ format.  Implements the public Delta transaction protocol
   (protocol / metaData / add / remove / commitInfo);
 - snapshot construction by replaying adds minus removes up to a version
   (time travel = stop early);
-- ``_last_checkpoint`` + ``<version>.checkpoint.parquet`` (read via Spark,
-  so checkpoint scanning is executor-side);
+- ``_last_checkpoint`` + ``<version>.checkpoint.parquet`` (read and
+  written with pyarrow by the shared log, catalog/txlog.py, which also
+  checkpoints every 10th version and publishes every commit
+  put-if-absent);
 - partition pruning on ``add.partitionValues`` before any file is opened;
 - data scan via ``spark.read.option("basePath", ...).parquet(<files>)`` —
   Delta data files do NOT carry partition columns in-file (Hive-style
@@ -38,30 +40,43 @@ Honest boundaries (raise, never silently wrong): generated columns,
 reader protocol > 3 or reader features beyond
 deletionVectors/columnMapping (e.g. v2Checkpoint).
 
-The writer emits protocol-shaped commits (and optional checkpoints) so
-tables can be planted, appended, and time-traveled in tests/gates.
+The writer emits protocol-shaped commits so tables can be planted,
+appended, and time-traveled in tests/gates.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_LOG_RE = re.compile(r"^(\d{20})\.json$")
-_CKPT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
+from moosestack_spark.catalog.txlog import TxLog, partition_values
+
+
+def _dv_file(table_path: str, storage: str, dv: str) -> str:
+    """The file behind a file-backed deletionVector descriptor: an absolute
+    path ("p") or a relative UUID ("u", optional prefix directory + 20-char
+    z85 UUID)."""
+    from moosestack_spark.catalog.roaring import z85_decode
+
+    if storage == "p":
+        return dv
+    if storage != "u":
+        raise NotImplementedError(f"DV storageType {storage!r}")
+    u = uuid.UUID(bytes=z85_decode(dv[-20:]))
+    return os.path.join(table_path, dv[:-20], f"deletion_vector_{u}.bin")
 
 
 def _dv_positions(
     table_path: str, storage: str, dv: str, off: int, size: int
 ) -> list[int]:
-    """Decode one deletionVector descriptor to its deleted row indices.
-    Handles all three storage types: inline ("i", unframed + padded z85,
-    ``size`` restores the exact byte length), absolute path ("p"), and
-    relative UUID ("u", optional prefix directory + 20-char z85 UUID)."""
+    """Decode one deletionVector descriptor to its deleted row indices:
+    inline ("i", unframed + padded z85, ``size`` restores the exact byte
+    length) or file-backed (_dv_file)."""
     from moosestack_spark.catalog.roaring import (
         bitmap_array_decode,
         dv_read_blob,
@@ -70,23 +85,18 @@ def _dv_positions(
 
     if storage == "i":
         return bitmap_array_decode(z85_decode(dv)[:size])
-    if storage == "p":
-        dv_path = dv
-    elif storage == "u":
-        import uuid as _uuid
-
-        prefix, suffix = dv[:-20], dv[-20:]
-        u = _uuid.UUID(bytes=z85_decode(suffix))
-        name = f"deletion_vector_{u}.bin"
-        dv_path = (
-            os.path.join(table_path, prefix, name)
-            if prefix
-            else os.path.join(table_path, name)
-        )
-    else:
-        raise NotImplementedError(f"DV storageType {storage!r}")
-    with open(dv_path, "rb") as fh:
+    with open(_dv_file(table_path, storage, dv), "rb") as fh:
         return dv_read_blob(fh.read(), off)
+
+
+def _physical_names(schema: dict) -> dict[str, str]:
+    """Logical -> physical column names (identity without column mapping)."""
+    return {
+        f["name"]: (f.get("metadata") or {}).get(
+            "delta.columnMapping.physicalName", f["name"]
+        )
+        for f in schema["fields"]
+    }
 
 
 def _spark_type_name(dt: str) -> str:
@@ -108,18 +118,13 @@ class DeltaNativeTable:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
-        self.log_dir = os.path.join(path, "_delta_log")
+        self.log = TxLog(os.path.join(path, "_delta_log"))
+        self.log_dir = self.log.log_dir
 
     # -- log inspection ------------------------------------------------------
 
     def versions(self) -> list[int]:
-        if not os.path.isdir(self.log_dir):
-            return []
-        return sorted(
-            int(m.group(1))
-            for f in os.listdir(self.log_dir)
-            if (m := _LOG_RE.match(f))
-        )
+        return self.log.versions()
 
     def latest_version(self) -> int:
         vs = self.versions()
@@ -128,83 +133,32 @@ class DeltaNativeTable:
         return vs[-1]
 
     def _actions(self, version: int) -> list[dict]:
-        out = []
-        with open(os.path.join(self.log_dir, f"{version:020d}.json")) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    out.append(json.loads(line))
-        return out
+        return self.log.actions(version)
 
     # -- snapshot construction ----------------------------------------------
 
     def snapshot(self, version: int | None = None) -> tuple[dict, dict[str, dict]]:
         """-> (metaData action, {relative path: add action}) at ``version``
-        (default latest).  Prefers the newest checkpoint at or below the
-        requested version, then replays the JSON tail."""
-        target = version if version is not None else self.latest_version()
-        if target not in self.versions():
-            raise ValueError(
-                f"Delta version {target} not found; have {self.versions()}"
+        (default latest), replayed by the shared log from the newest
+        checkpoint at or below it."""
+        snap = self.log.snapshot(version)
+        p = snap.protocol or {}
+        rv = p.get("minReaderVersion", 1)
+        feats = set(p.get("readerFeatures") or [])
+        # rv 1: base.  rv 2: column mapping (supported — the reader maps
+        # physical->logical names).  rv 3 + explicit feature list limited
+        # to deletionVectors/columnMapping: supported.  Anything else (rv 3
+        # without a feature list, unknown features) refuses.
+        if rv not in (1, 2) and not (
+            rv == 3 and feats and feats <= {"deletionVectors", "columnMapping"}
+        ):
+            raise NotImplementedError(
+                f"Delta reader protocol {rv} with features {sorted(feats)} "
+                "unsupported (deletionVectors and columnMapping only)"
             )
-        meta: dict | None = None
-        files: dict[str, dict] = {}
-        start = 0
-        ckpt = self._checkpoint_at_or_below(target)
-        if ckpt is not None:
-            ckpt_version, ckpt_path = ckpt
-            for row in self.spark.read.parquet(ckpt_path).collect():
-                d = row.asDict(recursive=True)
-                md, add = d.get("metaData"), d.get("add")
-                # this writer's checkpoints store actions as JSON strings
-                # (see write_checkpoint); decode symmetrically
-                if md is not None:
-                    meta = json.loads(md) if isinstance(md, str) else md
-                if add is not None:
-                    add = json.loads(add) if isinstance(add, str) else add
-                    files[add["path"]] = add
-            start = ckpt_version + 1
-        for v in range(start, target + 1):
-            if v not in self.versions():
-                continue
-            for action in self._actions(v):
-                if "protocol" in action:
-                    p = action["protocol"]
-                    rv = p.get("minReaderVersion", 1)
-                    feats = set(p.get("readerFeatures") or [])
-                    # rv 1: base.  rv 2: column mapping (supported — the
-                    # reader maps physical->logical names).  rv 3 +
-                    # explicit feature list limited to deletionVectors/
-                    # columnMapping: supported.  Anything else (rv 3
-                    # without a feature list, unknown features) refuses.
-                    if rv not in (1, 2) and not (
-                        rv == 3
-                        and feats
-                        and feats <= {"deletionVectors", "columnMapping"}
-                    ):
-                        raise NotImplementedError(
-                            f"Delta reader protocol {rv} with features "
-                            f"{sorted(feats)} unsupported (deletionVectors "
-                            "and columnMapping only)"
-                        )
-                if "metaData" in action:
-                    meta = action["metaData"]
-                if "add" in action:
-                    files[action["add"]["path"]] = action["add"]
-                if "remove" in action:
-                    files.pop(action["remove"]["path"], None)
-        if meta is None:
+        if snap.meta is None:
             raise ValueError("Delta log has no metaData action")
-        return meta, files
-
-    def _checkpoint_at_or_below(self, version: int) -> tuple[int, str] | None:
-        best = None
-        for f in os.listdir(self.log_dir):
-            m = _CKPT_RE.match(f)
-            if m and int(m.group(1)) <= version:
-                if best is None or int(m.group(1)) > best[0]:
-                    best = (int(m.group(1)), os.path.join(self.log_dir, f))
-        return best
+        return snap.meta, snap.files
 
     # -- read ----------------------------------------------------------------
 
@@ -215,14 +169,8 @@ class DeltaNativeTable:
     ) -> DataFrame:
         meta, files = self.snapshot(version)
         part_cols = meta.get("partitionColumns", [])
-        schema0 = json.loads(meta["schemaString"])
-        # logical -> physical name map (identity when no column mapping)
-        phys_of = {
-            f["name"]: (f.get("metadata") or {}).get(
-                "delta.columnMapping.physicalName", f["name"]
-            )
-            for f in schema0["fields"]
-        }
+        schema = json.loads(meta["schemaString"])
+        phys_of = _physical_names(schema)
         for k in partition_filter or {}:
             if k not in part_cols:
                 raise ValueError(
@@ -253,7 +201,6 @@ class DeltaNativeTable:
                     )
                 )
         if not chosen:
-            schema = json.loads(meta["schemaString"])
             cols = ", ".join(
                 f"CAST(NULL AS {_delta_to_sql(f['type'])}) AS {f['name']}"
                 for f in schema["fields"]
@@ -263,7 +210,6 @@ class DeltaNativeTable:
         # Spark's partition-dir discovery type-infers values (a "2" dir
         # becomes INT); Delta's schemaString is authoritative — cast the
         # partition columns back to their declared types
-        schema = schema0
         declared = {f["name"]: _delta_to_sql(f["type"]) for f in schema["fields"]}
         for c in part_cols:
             pc = phys_of.get(c, c)
@@ -282,9 +228,7 @@ class DeltaNativeTable:
         if mode in ("name", "id"):
             sel = []
             for f in schema["fields"]:
-                phys = (f.get("metadata") or {}).get(
-                    "delta.columnMapping.physicalName", f["name"]
-                )
+                phys = phys_of[f["name"]]
                 if phys not in out.columns:
                     raise ValueError(
                         f"mapped physical column {phys!r} (logical "
@@ -354,15 +298,13 @@ class DeltaNativeTable:
         path: str,
         partition_by: str | None = None,
         mode: str = "overwrite",
-        checkpoint: bool = False,
         cluster_by: tuple[str, str] | None = None,
         cluster_files: int = 8,
     ) -> "DeltaNativeTable":
         """Commit ``df`` as a new Delta version.  overwrite on an existing
         table emits remove actions for every live file first (the protocol
-        shape of INSERT OVERWRITE); append only adds.  ``checkpoint``
-        additionally writes a <version>.checkpoint.parquet + _last_checkpoint.
-        ``cluster_by=(x, y)`` Hilbert-clusters an unpartitioned write into
+        shape of INSERT OVERWRITE); append only adds.  ``cluster_by=(x,
+        y)`` Hilbert-clusters an unpartitioned write into
         ``cluster_files`` stat-tight files — the OPTIMIZE ZORDER layout
         shape, same semantics as IcebergNativeTable.write(cluster_by=...)."""
         if cluster_by and partition_by:
@@ -372,14 +314,12 @@ class DeltaNativeTable:
             )
         spark = df.sparkSession
         table = cls(spark, path)
-        os.makedirs(table.log_dir, exist_ok=True)
         existing = table.versions()
-        version = (existing[-1] + 1) if existing else 0
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
 
         actions: list[dict] = []
-        if version == 0:
+        if not existing:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
@@ -411,61 +351,16 @@ class DeltaNativeTable:
             }
         }
 
-        batch = f"b{version}"
-        adds: list[dict] = []
-        if partition_by:
-            n_vals = df.select(partition_by).distinct().count()
-            if n_vals > cls.PARTITION_CAP:
-                raise ValueError(
-                    f"{n_vals} distinct partition values (cap "
-                    f"{cls.PARTITION_CAP})"
-                )
-            # ONE data pass (the old spelling ran a full filter+write job
-            # per partition value): Hive partitionBy drops the partition
-            # column from the files — exactly Delta's physical contract —
-            # then each partition dir moves into the table's
-            # <col>=<v>/<batch> layout the reader's basePath discovery
-            # expects.  NULL partition rows land in the Hive default dir
-            # and keep a null partitionValue (the old filter dropped them).
-            import shutil as _shutil
-            import urllib.parse as _up
+        if cluster_by:
+            from moosestack_spark.ops.layout import cluster_by_hilbert
 
-            tmp_dir = os.path.join(path, f"_tmp_{batch}")
-            df.write.partitionBy(partition_by).mode("overwrite").parquet(
-                tmp_dir
-            )
-            for child in sorted(os.listdir(tmp_dir)):
-                if not child.startswith(f"{partition_by}="):
-                    continue
-                raw = child.split("=", 1)[1]
-                val = (
-                    None
-                    if raw == "__HIVE_DEFAULT_PARTITION__"
-                    else _up.unquote(raw)
-                )
-                dest = os.path.join(path, child, batch)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                if os.path.exists(dest):
-                    _shutil.rmtree(dest)
-                os.rename(os.path.join(tmp_dir, child), dest)
-                adds.extend(
-                    cls._adds_for_dir(path, dest, {partition_by: val})
-                )
-            _shutil.rmtree(tmp_dir, ignore_errors=True)
-        else:
-            out_df = df
-            if cluster_by:
-                from moosestack_spark.ops.layout import cluster_by_hilbert
-
-                cx, cy = cluster_by
-                out_df = cluster_by_hilbert(
-                    df, cx, cy,
-                    num_partitions=cluster_files,
-                    out_col="__delta_hilbert",
-                ).drop("__delta_hilbert")
-            out_dir = os.path.join(path, batch)
-            out_df.write.mode("overwrite").parquet(out_dir)
-            adds = cls._adds_for_dir(path, out_dir, {})
+            cx, cy = cluster_by
+            df = cluster_by_hilbert(
+                df, cx, cy,
+                num_partitions=cluster_files,
+                out_col="__delta_hilbert",
+            ).drop("__delta_hilbert")
+        adds = cls._write_files(df, path, partition_by)
 
         actions.append(meta_action)
         actions.extend(removes)
@@ -478,35 +373,48 @@ class DeltaNativeTable:
                 }
             }
         )
-        log_path = os.path.join(table.log_dir, f"{version:020d}.json")
-        tmp = log_path + ".tmp"
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
-        os.replace(tmp, log_path)
-        if checkpoint:
-            table.write_checkpoint(version)
+        table.log.commit(actions)
         return table
 
     @classmethod
-    def _adds_for_dir(cls, root: str, out_dir: str, pv: dict) -> list[dict]:
-        adds = []
-        for f in sorted(os.listdir(out_dir)):
-            if not f.endswith(".parquet"):
-                continue
-            fp = os.path.join(out_dir, f)
-            adds.append(
-                {
-                    "add": {
-                        "path": os.path.relpath(fp, root),
-                        "partitionValues": pv,
-                        "size": os.path.getsize(fp),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                    }
-                }
-            )
-        return adds
+    def _write_files(
+        cls, df: DataFrame, path: str, partition_by: str | None
+    ) -> list[dict]:
+        """Write ``df`` as new data files under ``path`` and return their
+        add actions.  One data pass: Hive partitionBy drops the partition
+        column from the files — exactly Delta's physical contract — then
+        each partition dir moves into the table's <col>=<v>/<batch> layout
+        the reader's basePath discovery expects.  NULL partition rows land
+        in the Hive default dir and keep a null partitionValue."""
+        batch = f"b{uuid.uuid4().hex[:16]}"
+        if not partition_by:
+            df.write.parquet(os.path.join(path, batch))
+            dirs = [batch]
+        else:
+            n_vals = df.select(partition_by).distinct().count()
+            if n_vals > cls.PARTITION_CAP:
+                raise ValueError(
+                    f"{n_vals} distinct partition values (cap "
+                    f"{cls.PARTITION_CAP})"
+                )
+            tmp_dir = os.path.join(path, f"_tmp_{batch}")
+            df.write.partitionBy(partition_by).parquet(tmp_dir)
+            dirs = []
+            for child in sorted(os.listdir(tmp_dir)):
+                if child.startswith(f"{partition_by}="):
+                    os.makedirs(os.path.join(path, child), exist_ok=True)
+                    os.rename(os.path.join(tmp_dir, child),
+                              os.path.join(path, child, batch))
+                    dirs.append(os.path.join(child, batch))
+            shutil.rmtree(tmp_dir, ignore_errors=True)
+        return [
+            {"add": {"path": rel, "partitionValues": partition_values(rel),
+                     "size": os.path.getsize(os.path.join(path, rel)),
+                     "modificationTime": 0, "dataChange": True}}
+            for d in dirs
+            for rel in (os.path.join(d, f) for f in sorted(os.listdir(os.path.join(path, d))))
+            if rel.endswith(".parquet")
+        ]
 
     # positions for a delete commit are collected driver-side (bounded by
     # the DELETED cardinality, not table size) — refuse unbounded collects
@@ -521,12 +429,9 @@ class DeltaNativeTable:
         A file's new DV contains the union of its old DV and the new
         matches (a descriptor REPLACES, never stacks).  Returns the number
         of newly deleted rows."""
-        import uuid as _uuid
-
         from moosestack_spark.catalog.roaring import dv_blob, z85_encode
 
         meta, files = self.snapshot()
-        version = self.latest_version() + 1
         cond = F.expr(condition) if isinstance(condition, str) else condition
         live = self.read()  # existing DVs already applied
         matches = (
@@ -571,7 +476,7 @@ class DeltaNativeTable:
                 )
             )
 
-        dv_uuid = _uuid.uuid5(_uuid.NAMESPACE_URL, f"{self.path}#dv{version}")
+        dv_uuid = uuid.uuid4()
         dv_name = f"deletion_vector_{dv_uuid}.bin"
         buf = bytearray(b"\x01")
         descriptors: dict[str, dict] = {}
@@ -617,12 +522,7 @@ class DeltaNativeTable:
                 }
             }
         )
-        log_path = os.path.join(self.log_dir, f"{version:020d}.json")
-        tmp = log_path + ".tmp"
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
-        os.replace(tmp, log_path)
+        self.log.commit(actions)
         return n
 
     # -- maintenance -----------------------------------------------------------
@@ -634,47 +534,19 @@ class DeltaNativeTable:
         stay time-travelable until vacuum().  Returns the new version."""
         meta, files = self.snapshot()
         part_cols = meta.get("partitionColumns", [])
-        version = self.latest_version() + 1
         live = self.read()
         # column mapping: read() returned LOGICAL names, but rewritten
         # data files must carry PHYSICAL names or the next read's mapping
         # select would find nothing — rename back before writing
-        schema_m = json.loads(meta["schemaString"])
-        phys_of = {
-            f["name"]: (f.get("metadata") or {}).get(
-                "delta.columnMapping.physicalName", f["name"]
-            )
-            for f in schema_m["fields"]
-        }
+        phys_of = _physical_names(json.loads(meta["schemaString"]))
         if (meta.get("configuration") or {}).get("delta.columnMapping.mode"):
             live = live.select(
                 *[F.col(c).alias(phys_of.get(c, c)) for c in live.columns]
             )
         if target_partitions:
             live = live.repartition(target_partitions)
-        batch = f"b{version}_compact"
-        adds: list[dict] = []
-        if part_cols:
-            pcol = phys_of.get(part_cols[0], part_cols[0])
-            values = [r[0] for r in live.select(pcol).distinct().collect()]
-            if len(values) > self.PARTITION_CAP:
-                raise ValueError(
-                    f"{len(values)} distinct partition values (cap "
-                    f"{self.PARTITION_CAP})"
-                )
-            for v in sorted(values, key=str):
-                rel_dir = f"{pcol}={v}"
-                out_dir = os.path.join(self.path, rel_dir, batch)
-                live.filter(F.col(pcol) == F.lit(v)).drop(pcol).write.mode(
-                    "overwrite"
-                ).parquet(out_dir)
-                adds.extend(
-                    self._adds_for_dir(self.path, out_dir, {pcol: str(v)})
-                )
-        else:
-            out_dir = os.path.join(self.path, batch)
-            live.write.mode("overwrite").parquet(out_dir)
-            adds = self._adds_for_dir(self.path, out_dir, {})
+        pcol = phys_of.get(part_cols[0], part_cols[0]) if part_cols else None
+        adds = self._write_files(live, self.path, pcol)
         actions: list[dict] = [
             {"remove": {"path": rel, "dataChange": False}} for rel in files
         ]
@@ -687,13 +559,7 @@ class DeltaNativeTable:
                 }
             }
         )
-        log_path = os.path.join(self.log_dir, f"{version:020d}.json")
-        tmp = log_path + ".tmp"
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(json.dumps(a) + "\n")
-        os.replace(tmp, log_path)
-        return version
+        return self.log.commit(actions)
 
     def vacuum(self, keep_last: int = 1) -> int:
         """Delete data and deletion-vector files not referenced by the
@@ -710,26 +576,9 @@ class DeltaNativeTable:
                 referenced.add(os.path.abspath(os.path.join(self.path, rel)))
                 dv = add.get("deletionVector")
                 if dv and dv["storageType"] in ("u", "p"):
-                    # resolve via the shared helper; positions are not
-                    # needed, only the backing file path — recompute it
-                    if dv["storageType"] == "p":
-                        referenced.add(os.path.abspath(dv["pathOrInlineDv"]))
-                    else:
-                        import uuid as _uuid
-
-                        from moosestack_spark.catalog.roaring import z85_decode
-
-                        d = dv["pathOrInlineDv"]
-                        u = _uuid.UUID(bytes=z85_decode(d[-20:]))
-                        prefix = d[:-20]
-                        name = f"deletion_vector_{u}.bin"
-                        referenced.add(
-                            os.path.abspath(
-                                os.path.join(self.path, prefix, name)
-                                if prefix
-                                else os.path.join(self.path, name)
-                            )
-                        )
+                    referenced.add(os.path.abspath(_dv_file(
+                        self.path, dv["storageType"], dv["pathOrInlineDv"]
+                    )))
         removed = 0
         for root, dirs, fnames in os.walk(self.path):
             if os.path.abspath(root).startswith(
@@ -747,67 +596,9 @@ class DeltaNativeTable:
 
     def write_checkpoint(self, version: int | None = None) -> str:
         """Materialize the snapshot at ``version`` as a checkpoint parquet
-        + _last_checkpoint pointer (readers then skip the JSON prefix)."""
-        v = version if version is not None else self.latest_version()
-        meta, files = self.snapshot(v)
-        # the protocol's checkpoint layout: one row per action with TYPED
-        # struct columns (metaData / add), absent action = null struct.
-        # snapshot() handles both this and the older JSON-string layout.
-        meta_struct = (
-            "metaData struct<id string, "
-            "format struct<provider string>, "
-            "schemaString string, partitionColumns array<string>, "
-            "configuration map<string,string>>"
-        )
-        add_struct = (
-            "add struct<path string, partitionValues map<string,string>, "
-            "size long, modificationTime long, dataChange boolean, "
-            "deletionVector struct<storageType string, "
-            "pathOrInlineDv string, offset long, sizeInBytes long, "
-            "cardinality long>>"
-        )
-        rows = [
-            (
-                {
-                    "id": meta.get("id"),
-                    "format": {"provider": meta["format"]["provider"]},
-                    "schemaString": meta["schemaString"],
-                    "partitionColumns": meta.get("partitionColumns", []),
-                    "configuration": meta.get("configuration", {}) or {},
-                },
-                None,
-            )
-        ] + [
-            (
-                None,
-                {
-                    "path": add["path"],
-                    "partitionValues": {
-                        k: str(val)
-                        for k, val in (add.get("partitionValues") or {}).items()
-                    },
-                    "size": int(add.get("size", 0)),
-                    "modificationTime": int(add.get("modificationTime", 0)),
-                    "dataChange": bool(add.get("dataChange", True)),
-                    "deletionVector": add.get("deletionVector"),
-                },
-            )
-            for add in files.values()
-        ]
-        sdf = self.spark.createDataFrame(
-            rows, f"{meta_struct}, {add_struct}"
-        )
-        ckpt_dir = os.path.join(self.log_dir, f"__ckpt_{v}")
-        sdf.coalesce(1).write.mode("overwrite").parquet(ckpt_dir)
-        part = [f for f in os.listdir(ckpt_dir) if f.endswith(".parquet")][0]
-        final = os.path.join(self.log_dir, f"{v:020d}.checkpoint.parquet")
-        os.replace(os.path.join(ckpt_dir, part), final)
-        import shutil
-
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        with open(os.path.join(self.log_dir, "_last_checkpoint"), "w") as fh:
-            json.dump({"version": v, "size": len(rows)}, fh)
-        return final
+        + _last_checkpoint pointer (readers then skip the JSON prefix).
+        Commits already checkpoint every 10th version."""
+        return self.log.write_checkpoint(version)
 
 
 def _delta_to_sql(t) -> str:

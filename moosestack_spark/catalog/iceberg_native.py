@@ -68,6 +68,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from moosestack_spark.catalog.avro import read_container, write_container
+from moosestack_spark.catalog.txlog import publish
+
+
+def _commit_metadata(
+    meta_dir: str, version: int, meta: dict, staging_salt: str | None = None
+) -> None:
+    """Publish ``v{version}.metadata.json`` put-if-absent, so a writer that
+    lost the race for ``version`` raises FileExistsError instead of erasing
+    the winner's commit, then point version-hint.text at it (replaced
+    atomically).  A salted (staged) commit writes
+    ``v{version}-{salt}.metadata.json`` and leaves the hint alone."""
+    name = f"v{version}" if staging_salt is None else f"v{version}-{staging_salt}"
+    publish(os.path.join(meta_dir, f"{name}.metadata.json"), json.dumps(meta, indent=1))
+    if staging_salt is None:
+        hint = os.path.join(meta_dir, "version-hint.text")
+        tmp = f"{hint}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as fh:
+            fh.write(str(version))
+        os.replace(tmp, hint)
 
 # ---------------------------------------------------------------------------
 # Avro schemas for manifest list + manifest (spec appendix; field-id
@@ -624,21 +643,9 @@ class IcebergNativeTable:
         data_dir = os.path.join(path, "data")
         os.makedirs(table.meta_dir, exist_ok=True)
 
-        prev_meta = None
-        version = 1
-        seq = 1
+        prev_meta, version, seq = None, 1, 1
         if mode == "append":
-            prev_meta = table.metadata()
-            version = (
-                int(
-                    re.match(
-                        r"^v(\d+)\.metadata\.json$",
-                        os.path.basename(table._current_metadata_path()),
-                    ).group(1)
-                )
-                + 1
-            )
-            seq = prev_meta["last-sequence-number"] + 1
+            prev_meta, version, seq = table._next_version_seq()
         elif mode != "overwrite":
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
 
@@ -886,20 +893,7 @@ class IcebergNativeTable:
             "snapshots": prev_snapshots + [snapshot],
             "properties": {},
         }
-        meta_name = (
-            f"v{version}.metadata.json"
-            if staging_salt is None
-            else f"v{version}-{staging_salt}.metadata.json"
-        )
-        meta_path = os.path.join(table.meta_dir, meta_name)
-        tmp = meta_path + ".tmp"
-        json.dump(meta, open(tmp, "w"), indent=1)
-        os.replace(tmp, meta_path)
-        if staging_salt is None:
-            with open(
-                os.path.join(table.meta_dir, "version-hint.text"), "w"
-            ) as fh:
-                fh.write(str(version))
+        _commit_metadata(table.meta_dir, version, meta, staging_salt)
         return table
 
     def _entries_for_dir(
@@ -1055,20 +1049,7 @@ class IcebergNativeTable:
         meta["last-updated-ms"] = version
         meta["current-snapshot-id"] = snap_id
         meta["snapshots"] = prev_meta["snapshots"] + [snapshot]
-        meta_name = (
-            f"v{version}.metadata.json"
-            if staging_salt is None
-            else f"v{version}-{staging_salt}.metadata.json"
-        )
-        meta_path = os.path.join(self.meta_dir, meta_name)
-        tmp = meta_path + ".tmp"
-        json.dump(meta, open(tmp, "w"), indent=1)
-        os.replace(tmp, meta_path)
-        if staging_salt is None:
-            with open(
-                os.path.join(self.meta_dir, "version-hint.text"), "w"
-            ) as fh:
-                fh.write(str(version))
+        _commit_metadata(self.meta_dir, version, meta, staging_salt)
 
     def delete_where(self, condition, staging_salt: str | None = None) -> int:
         """Commit a POSITION-delete snapshot removing current rows matching
@@ -1252,12 +1233,7 @@ class IcebergNativeTable:
         meta["last-updated-ms"] = version
         meta["current-snapshot-id"] = snap_id
         meta["snapshots"] = prev_meta["snapshots"] + [snapshot]
-        meta_path = os.path.join(self.meta_dir, f"v{version}.metadata.json")
-        tmp = meta_path + ".tmp"
-        json.dump(meta, open(tmp, "w"), indent=1)
-        os.replace(tmp, meta_path)
-        with open(os.path.join(self.meta_dir, "version-hint.text"), "w") as fh:
-            fh.write(str(version))
+        _commit_metadata(self.meta_dir, version, meta)
         return self
 
     def expire_snapshots(self, keep_last: int = 1) -> tuple[int, int]:
@@ -1307,12 +1283,7 @@ class IcebergNativeTable:
         meta = dict(prev_meta)
         meta["snapshots"] = kept
         meta["last-updated-ms"] = version
-        meta_path = os.path.join(self.meta_dir, f"v{version}.metadata.json")
-        tmp = meta_path + ".tmp"
-        json.dump(meta, open(tmp, "w"), indent=1)
-        os.replace(tmp, meta_path)
-        with open(os.path.join(self.meta_dir, "version-hint.text"), "w") as fh:
-            fh.write(str(version))
+        _commit_metadata(self.meta_dir, version, meta)
         return (len(snaps) - len(kept), deleted)
 
 

@@ -48,6 +48,7 @@ import re
 import threading
 import urllib.error
 import urllib.request
+import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
 
@@ -74,6 +75,13 @@ class _CatalogState:
         self.ns_props: dict[str, dict] = {}
         self.tables: dict[tuple[str, str], str] = {}
         self.lock = threading.Lock()
+
+
+def _stage_salt() -> str:
+    """A staging salt no other writer or attempt, in any process or table
+    handle, shares: staged metadata is published put-if-absent, so a
+    shared salt would make the second stager fail."""
+    return f"w{uuid.uuid4().hex[:12]}"
 
 
 def _meta_version(metadata_location: str) -> int:
@@ -680,19 +688,13 @@ class IcebergRestTable:
         rejected on every retry stays invisible to directory-catalog
         readers of the same path — the staged-write invariant holds for
         deletes too, and concurrent delete stagers never collide."""
-        import threading
-
         last: Exception | None = None
         for _ in range(max_retries):
             loaded = self.catalog.load_table(self.ns, self.name)
             pinned = _pinned_table_cls(loaded["metadata-location"])(
                 spark, loaded["metadata"]["location"]
             )
-            self._attempt = getattr(self, "_attempt", 0) + 1
-            salt = (
-                f"w{os.getpid()}t{threading.get_ident() % 100000}"
-                f"a{self._attempt}"
-            )
+            salt = _stage_salt()
             n = pinned.delete_where(condition, staging_salt=salt)
             if n == 0:
                 return 0  # nothing matched: no snapshot staged, no commit
@@ -714,10 +716,7 @@ class IcebergRestTable:
         concurrent writers (or a retry racing its own past attempt) never
         collide on staged file names — the commit protocol alone decides
         the winner, exactly the real-Iceberg model."""
-        import threading
-
-        self._attempt = getattr(self, "_attempt", 0) + 1
-        salt = f"w{os.getpid()}t{threading.get_ident() % 100000}a{self._attempt}"
+        salt = _stage_salt()
         table_path = loaded["metadata"]["location"]
         _pinned_table_cls(loaded["metadata-location"]).write(
             df, table_path, mode="append", staging_salt=salt

@@ -27,6 +27,8 @@ from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 from typing import Optional
 
+from moosestack_spark.catalog.table import is_sibling_dir, remove_table_dirs
+
 
 @dataclass(frozen=True)
 class ColumnSpec:
@@ -450,17 +452,8 @@ def check_reality(
             continue
         for entry in sorted(os.listdir(db_dir)):
             p = os.path.join(db_dir, entry)
-            # skip infra siblings: projections (table__proj_x), DLQs
-            # (name__dlq), rewrite temps (name.__*_tmp) — they belong to
-            # their base table's lifecycle.  Match the exact sibling
-            # patterns: a user table legitimately named "a__b" must NOT
-            # be filtered out (it would be falsely re-created).
-            is_sibling = (
-                "__proj_" in entry
-                or entry.endswith("__dlq")
-                or (".__" in entry and entry.endswith("_tmp"))
-            )
-            if not os.path.isdir(p) or is_sibling:
+            # a table's log, projections and DLQ belong to its lifecycle
+            if not os.path.isdir(p) or is_sibling_dir(entry):
                 continue
             logical = phys_to_logical.get((db, entry))
             if logical is not None:
@@ -533,9 +526,8 @@ def execute_ops(
     COALESCE-to-default read path, gated by source_schema_evolution_defaults)
     — exactly the cheap-ALTER discipline the reference's diff strategy
     prefers; views/MVs materialize at query time so their ops are also
-    state-only.  Returns the ops actually applied."""
-    import shutil
-
+    state-only.  A dropped table's log and projections go with it.
+    Returns the ops actually applied."""
     def _dir(m: Optional[InfraMap], name: str) -> Optional[str]:
         spec = m.tables.get(name) if m is not None else None
         return table_dir(warehouse, spec, database) if spec is not None else None
@@ -552,12 +544,12 @@ def execute_ops(
         if op.kind == "create_table":
             os.makedirs(tgt_dir, exist_ok=True)
         elif op.kind == "drop_table":
-            shutil.rmtree(cur_dir, ignore_errors=True)
+            remove_table_dirs(cur_dir)
         elif op.kind == "recreate_table":
             # a version/database change moves the directory: remove where
             # the table IS, create where it SHOULD BE
-            shutil.rmtree(cur_dir, ignore_errors=True)
-            shutil.rmtree(tgt_dir, ignore_errors=True)
+            remove_table_dirs(cur_dir)
+            remove_table_dirs(tgt_dir)
             os.makedirs(tgt_dir, exist_ok=True)
         # add_column / drop_column / modify_column / modify_settings /
         # view + mv ops: metadata-only (folded into save_state by migrate)

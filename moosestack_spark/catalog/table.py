@@ -10,9 +10,15 @@ Port target: packages/py-moose-lib/moose_lib/dmv2/olap_table.py —
 - versioned physical name {name}_{version with _} (:422-440)
 
 Storage model:
-- a table is a Parquet directory under the warehouse root; appends are new
-  part files (the MergeTree append model) and every append commits a
-  snapshot manifest.
+- a table is a Parquet directory under the warehouse root plus its commit
+  log, the sibling directory {path}__snapshots (catalog/txlog.py, the Delta
+  log shape).  The log is the table: read(), read_at() and the base read of
+  read_for_predicate() scan exactly the files of a snapshot, so a file that
+  no commit added (a crashed or failed write) or that a commit removed (a
+  merged, mutated or restored-away part) is never read.  A directory with
+  no log (an EXTERNALLY_MANAGED table) is read as the directory.
+- appends write new part files and commit their add actions (the MergeTree
+  append model: a part is visible once committed).
 - row appends (insert of dicts/models, IngestPipeline.ingest) are already
   validated Python objects in the driver, so they are written there as
   pyarrow part files (_write_arrow_part): the declared Spark schema and
@@ -25,6 +31,11 @@ Storage model:
   see _arrow_appendable) are Spark writes: ORDER BY becomes
   sortWithinPartitions (sorted parts -> row-group stat pruning), PARTITION
   BY becomes partitionBy (partition pruning).
+- rewrites (optimize, TTL, delete_where/update_where, restore, truncate)
+  write new files and commit "remove what I read + add what I wrote": like
+  a MergeTree merge swapping parts, a rewrite never touches the files it
+  replaces, so every earlier version stays readable until vacuum(), the
+  only code that deletes data files.
 - engine read semantics (Replacing/Summing/Collapsing dedup-on-read) are
   applied by .read() via catalog.engine_views — deterministic, strictly
   more consistent than ClickHouse's eventual merges.
@@ -39,12 +50,14 @@ same DLQ envelope.
 
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
 import re
 import shutil
 import threading
+import time
 import uuid
 from datetime import datetime, timedelta, timezone
 from collections.abc import Callable, Iterable, Iterator, Sequence
@@ -75,11 +88,8 @@ from moosestack_spark.catalog.engines import (
     SummingMergeTree,
     VersionedCollapsingMergeTree,
 )
+from moosestack_spark.catalog.txlog import TxLog, partition_values
 from moosestack_spark.datamodel.reflection import to_columns, to_struct_type
-
-# Snapshot manifests are exactly v<digits>.json; anything else in the
-# snapshot dir is ignored (editor backups, OS metadata files, ...).
-_MANIFEST_RE = re.compile(r"^v[1-9]\d*\.json$")
 
 T = TypeVar("T", bound=BaseModel)
 
@@ -88,15 +98,43 @@ _PATH_LOCKS_GUARD = threading.Lock()
 
 
 def path_lock(path: str) -> threading.RLock:
-    """The in-process lock serializing appends and snapshot commits on one
-    directory.  Two concurrent Spark appends to one path share its
-    ``_temporary/0`` staging dir, so one fails with FileNotFoundException
-    (or TASK_WRITE_FAILED); holding it from an append's publish through its
-    commit keeps each manifest's file list to the appends committed before
-    it.  Re-entrant.  Other processes are kept apart by the commit's
-    put-if-absent publish, not by this lock."""
+    """The in-process lock serializing the writers of one table.  Every
+    writer holds it from its first file write through its commit, and
+    vacuum() holds it too, so within a process a rewrite never races
+    another rewrite and vacuum never deletes a written but not yet
+    committed file.  Re-entrant.  Other processes are kept apart by the
+    log's put-if-absent commit and its check that removed files are still
+    live (catalog/txlog.py), not by this lock."""
     with _PATH_LOCKS_GUARD:
         return _PATH_LOCKS.setdefault(os.path.abspath(path), threading.RLock())
+
+
+SNAPSHOTS_SUFFIX = "__snapshots"
+
+
+def is_sibling_dir(name: str) -> bool:
+    """Whether a warehouse directory named ``name`` belongs to a table
+    rather than being one: its commit log ({t}__snapshots), a projection
+    copy ({t}__proj_{p}) or its pipeline's dead-letter queue ({t}__dlq).
+    Exact patterns: a user table legitimately named "a__b" is a table."""
+    return "__proj_" in name or name.endswith((SNAPSHOTS_SUFFIX, "__dlq"))
+
+
+def remove_table_dirs(path: str) -> None:
+    """Delete the table at ``path``: its data dir, its log and its
+    projection copies, so a table created there later has no history."""
+    for d in [path, path + SNAPSHOTS_SUFFIX, *glob.glob(glob.escape(path) + "__proj_*")]:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _scan_files(spark: SparkSession, root: str, files: Iterable[str],
+                schema: Optional[st.StructType] = None) -> DataFrame:
+    """Read exactly ``files`` (paths relative to ``root``), with partition
+    columns taken from their Hive directories under ``root``."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.option("basePath", root).parquet(
+        *(os.path.join(root, f) for f in files)
+    )
 
 
 STREAM_INSERT_BATCH = 1000  # olap_table.py:961
@@ -226,7 +264,7 @@ def _write_arrow_part(
     spark_schema: st.StructType,
     codec: Optional[str],
     sort_by: Sequence[str],
-) -> None:
+) -> list[str]:
     """Write validated rows into ``path`` as parquet part files from the
     driver, with no Spark job: the file Spark's writer would make of
     ``createDataFrame(rows, spark_schema)`` sorted within the part by
@@ -234,8 +272,8 @@ def _write_arrow_part(
     timestamps, Spark's default), the same footer keys (so a schema-less
     ``spark.read.parquet`` sees the declared schema and proleptic dates), one
     file per MAX_INSERT_BLOCK rows.  Each file is written under a dot name
-    that readers skip and renamed to ``part-<uuid>.parquet`` when complete;
-    the caller holds ``path_lock(path)`` if it commits a snapshot."""
+    that readers skip and renamed to ``part-<uuid>.parquet`` when complete.
+    Returns the names written, for the caller's commit."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -266,6 +304,7 @@ def _write_arrow_part(
         )
         table = table.take(order)
     os.makedirs(path, exist_ok=True)
+    names = []
     for start in range(0, table.num_rows, MAX_INSERT_BLOCK):
         name = f"part-{uuid.uuid4()}"
         tmp = os.path.join(path, f".{name}.tmp")
@@ -273,6 +312,8 @@ def _write_arrow_part(
                        compression=_ARROW_CODECS[codec or _DEFAULT_CODEC],
                        use_deprecated_int96_timestamps=True)
         os.rename(tmp, os.path.join(path, f"{name}.parquet"))
+        names.append(f"{name}.parquet")
+    return names
 
 
 @dataclass
@@ -547,7 +588,7 @@ class OlapTable(Generic[T]):
                 if e.strip()
             ]
             writer = df.sortWithinPartitions(*exprs)
-        out = writer.write.mode("append")
+        out = writer.write
         codec = self._parquet_compression()
         if codec:
             out = out.option("compression", codec)
@@ -556,195 +597,158 @@ class OlapTable(Generic[T]):
         if self.config.partition_by:
             out = out.partitionBy(self.config.partition_by)
         with path_lock(self.path):
-            out.parquet(self.path)
+            added = self._stage(out.parquet)
             if self.config.projections:
                 self._write_projections(df)
-            self._commit_snapshot("append")
+            self._commit("append", added)
 
-    # -- snapshots / time travel --------------------------------------------
+    # -- the commit log / time travel ----------------------------------------
     #
-    # Every mutation commits a manifest (the full data-file list) to the
-    # SIBLING dir {path}__snapshots/v{n}.json (outside the data dir, like
-    # projections, so base rewrites never destroy history) — the
-    # Iceberg/Delta snapshot model reduced to its read side: read_at(v)
-    # plans ONLY that manifest's files, so readers are isolated from
-    # concurrent appends, any appended version can be re-read (rollback,
-    # reproducible training runs), and the file-list DIFF between two
-    # versions is an incremental-consumption feed.  Row appends publish a
-    # pyarrow part file by rename and DataFrame appends a Spark write; both
-    # then commit while holding path_lock, so within a process a manifest
-    # lists exactly the files of the appends committed before it.  Across
-    # processes the commit is put-if-absent: v{n}.json is published with
-    # os.link, which fails if another writer took n first, and the loser
-    # re-lists and retries at the next number.  A commit reads only the
-    # manifest NAMES (O(names), never O(history)).  Append-only history is
-    # fully retained; full REWRITES (optimize / TTL / mutations) replace
-    # the physical files, RETIRING earlier snapshots — read_at on a
-    # retired version raises instead of returning partial data (a real
-    # lake keeps old files until VACUUM; rewrite-in-place is this
-    # warehouse's documented trade-off).  At lake scale manifests record
-    # per-commit file deltas compacted periodically; the full-list
-    # spelling keeps the semantics identical with less machinery.
+    # The log lives in the SIBLING dir {path}__snapshots (outside the data
+    # dir, so no data scan sees it); versions count from 1.  read_at(v)
+    # plans ONLY v's files, so readers are isolated from concurrent writes,
+    # any version reads back (rollback, reproducible training runs) until
+    # vacuum(), and the file-list DIFF between two versions is an
+    # incremental-consumption feed.
 
     @property
-    def _snapdir(self) -> str:
-        return self.path + "__snapshots"
+    def _log(self) -> TxLog:
+        return TxLog(self.path + SNAPSHOTS_SUFFIX, first=1)
 
-    def _data_files(self) -> list[str]:
-        out: list[str] = []
-        for root, _dirs, files in os.walk(self.path):
+    def _stage(self, write: Callable[[str], None]) -> list[str]:
+        """Run a Spark ``write`` into a fresh hidden staging dir, move its
+        part files to their place in the table's layout
+        (``[col=value/]part-*.parquet``; Spark's part names carry the write
+        job's UUID, so they never collide) and return their paths relative
+        to the table dir.  Until a commit adds them nobody reads them."""
+        stage = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
+        write(stage)
+        added = []
+        for root, _dirs, files in os.walk(stage):
             for f in files:
                 if f.endswith(".parquet"):
-                    out.append(
-                        os.path.relpath(os.path.join(root, f), self.path)
-                    )
-        return sorted(out)
+                    rel = os.path.relpath(os.path.join(root, f), stage)
+                    dest = os.path.join(self.path, rel)
+                    os.makedirs(os.path.dirname(dest), exist_ok=True)
+                    os.rename(os.path.join(root, f), dest)
+                    added.append(rel)
+        shutil.rmtree(stage)
+        return added
 
-    def _versions(self) -> list[int]:
-        """Snapshot versions, ascending, from the manifest names alone.
-        Strict name match: a stray non-manifest file in the snapshot dir
-        (editor backup, "version.json") must not break every
-        snapshot/read_at/vacuum operation with a ValueError."""
-        if not os.path.isdir(self._snapdir):
-            return []
-        return sorted(
-            int(f[1:-5]) for f in os.listdir(self._snapdir) if _MANIFEST_RE.match(f)
-        )
-
-    def _manifest(self, version: int) -> dict:
-        with open(os.path.join(self._snapdir, f"v{version}.json")) as fh:
-            return json.load(fh)
-
-    def _commit_snapshot(self, op: str) -> int:
-        os.makedirs(self._snapdir, exist_ok=True)
-        with path_lock(self.path):
-            while True:
-                # max+1, not count+1: vacuum may have dropped old manifests
-                # and a reused number would sort a NEW snapshot before the
-                # head.  Versions are listed before files, so a writer that
-                # wins v{n} has seen every file committed below n.
-                versions = self._versions()
-                version = versions[-1] + 1 if versions else 1
-                manifest = {"version": version, "op": op, "files": self._data_files()}
-                tmp = os.path.join(self._snapdir, f".v{version}.{uuid.uuid4().hex}.tmp")
-                with open(tmp, "w") as fh:
-                    json.dump(manifest, fh)
-                try:
-                    os.link(tmp, os.path.join(self._snapdir, f"v{version}.json"))
-                    return version
-                except FileExistsError:
-                    continue  # another process committed v{version} first
-                finally:
-                    os.remove(tmp)
-
-    def snapshots(self) -> list[dict]:
-        return [self._manifest(v) for v in self._versions()]
-
-    def _snapshot_by_version(self, version: int) -> dict:
-        """Manifest lookup by version NUMBER (not list position — vacuum
-        may have dropped older manifests)."""
-        try:
-            return self._manifest(version)
-        except FileNotFoundError:
-            raise ValueError(
-                f"{self.name}: no snapshot v{version} (have {self._versions()})"
-            ) from None
-
-    def read_at(self, version: int) -> DataFrame:
-        """The table as of snapshot `version` (1-based): scans ONLY that
-        manifest's files, with the engine's read semantics applied.
-        Raises on a version retired by a later rewrite (missing files)."""
-        files = [
-            os.path.join(self.path, f)
-            for f in self._snapshot_by_version(version)["files"]
+    def _commit(self, op: str, added: Iterable[str] = (), removed: Iterable[str] = ()) -> int:
+        """Commit one version: ``removed`` leave the table and ``added``
+        (files already in place) join it.  Returns the version."""
+        now = int(time.time() * 1000)
+        actions: list[dict] = [
+            {"remove": {"path": f, "deletionTimestamp": now, "dataChange": True}}
+            for f in removed
         ]
-        missing = [f for f in files if not os.path.exists(f)]
-        if missing:
-            raise FileNotFoundError(
-                f"{self.name}: snapshot v{version} was retired by a later "
-                f"rewrite ({len(missing)} file(s) gone)"
-            )
+        actions += [
+            {"add": {"path": f, "partitionValues": partition_values(f),
+                     "size": os.path.getsize(os.path.join(self.path, f)),
+                     "modificationTime": now, "dataChange": True}}
+            for f in added
+        ]
+        actions.append({"commitInfo": {"timestamp": now, "operation": op}})
+        with path_lock(self.path):
+            return self._log.commit(actions)
+
+    def _head_files(self) -> list[str]:
+        snap = self._log.head()
+        return list(snap.files) if snap else []
+
+    def _read_head(self) -> tuple[list[str], DataFrame]:
+        """The head snapshot's files and a scan of exactly those files.  A
+        table with no log is its directory, and a rewrite of it replaces
+        nothing the log knows of."""
+        snap = self._log.head()
+        if snap is None:
+            return [], self.spark.read.schema(self._storage_schema()).parquet(self.path)
+        return list(snap.files), self._scan(snap.files)
+
+    def _scan(self, files: Iterable[str]) -> DataFrame:
+        files = list(files)
         if not files:
             return self.spark.createDataFrame([], self._storage_schema())
-        raw = self.spark.read.schema(self._storage_schema()).parquet(*files)
-        return self._with_engine_semantics(raw)
+        return _scan_files(self.spark, self.path, files, self._storage_schema())
+
+    def snapshots(self) -> list[dict]:
+        """One record per version in the log: its number, the operation
+        that committed it and its file list."""
+        log = self._log
+        out = []
+        for v in log.versions():
+            op = next(a["commitInfo"]["operation"] for a in log.actions(v)
+                      if "commitInfo" in a)
+            out.append({"version": v, "op": op, "files": sorted(log.snapshot(v).files)})
+        return out
+
+    def read_at(self, version: int) -> DataFrame:
+        """The table as of snapshot `version`: scans ONLY that version's
+        files, with the engine's read semantics applied.  Every version in
+        the log reads back until vacuum() expires it."""
+        return self._with_engine_semantics(self._scan(self._log.snapshot(version).files))
 
     def vacuum(self, keep_last: int = 10) -> tuple[int, int]:
-        """Trim snapshot history and remove unreferenced data files — the
-        lake VACUUM/expire-snapshots job.  Keeps the most recent
-        ``keep_last`` manifests; deletes (1) older manifests and (2) data
-        files referenced by NO kept manifest (orphans of restores and
-        crashed writes), plus stale rewrite temp dirs.  Returns
-        (manifests_removed, files_removed).  read_at/changed_files on an
-        expired version raise with the surviving version list — the same
-        contract as a rewrite-retired snapshot."""
-        import glob as _glob
-
+        """Trim history and delete unreferenced data files — the lake
+        VACUUM/expire-snapshots job, and the only code that deletes data
+        files.  Keeps the most recent ``keep_last`` versions (at least 1);
+        deletes every data file none of them references (the parts earlier
+        versions removed, and the orphans of crashed writes) and drops the
+        older versions from the log.  Returns (versions_removed,
+        files_removed).  read_at/changed_files of an expired version raise
+        with the surviving version list.  Another process's write in flight
+        is not seen; run vacuum when no other process writes the table."""
         if self.config.life_cycle != LifeCycle.FULLY_MANAGED:
-            # EXTERNALLY_MANAGED data was never snapshot-committed (every
-            # file would look unreferenced and be wiped); DELETION_PROTECTED
-            # forbids the file removal outright
+            # EXTERNALLY_MANAGED data was never committed (every file would
+            # look unreferenced and be wiped); DELETION_PROTECTED forbids
+            # the file removal outright
             raise PermissionError(f"{self.name} life_cycle forbids vacuum")
-        versions = self._versions()
-        if not versions:
-            # no manifests (pre-snapshot-era dir or external writes):
-            # NOTHING is provably unreferenced — refuse to guess
-            return 0, 0
-        keep = versions[-keep_last:] if keep_last > 0 else versions[-1:]
-        referenced: set[str] = set()
-        for v in keep:
-            referenced.update(self._manifest(v)["files"])
-
-        files_removed = 0
-        for f in self._data_files():
-            if f not in referenced:
-                os.remove(os.path.join(self.path, f))
-                files_removed += 1
-        # prune now-empty partition dirs so the scan doesn't trip on them
-        for root, dirs, files in os.walk(self.path, topdown=False):
-            if root != self.path and not dirs and not files:
-                os.rmdir(root)
-
-        expired = versions[: len(versions) - len(keep)]
-        for v in expired:
-            os.remove(os.path.join(self._snapdir, f"v{v}.json"))
-        manifests_removed = len(expired)
-        for tmp in _glob.glob(self.path + ".__*_tmp"):
-            shutil.rmtree(tmp, ignore_errors=True)
-        return manifests_removed, files_removed
+        log = self._log
+        with path_lock(self.path):
+            versions = log.versions()
+            if not versions:
+                # no log (files written by another engine): NOTHING is
+                # provably unreferenced — refuse to guess
+                return 0, 0
+            keep = versions[-max(keep_last, 1):]
+            referenced = set().union(*(log.snapshot(v).files for v in keep))
+            files_removed = 0
+            for root, _dirs, files in os.walk(self.path, topdown=False):
+                for f in files:
+                    rel = os.path.relpath(os.path.join(root, f), self.path)
+                    if f.endswith(".parquet") and rel not in referenced:
+                        os.remove(os.path.join(root, f))
+                        files_removed += 1
+                # a dir left without data (an emptied partition, a crashed
+                # write's staging dir) goes too, so no scan trips on it
+                if root != self.path and not any(
+                    e.endswith(".parquet") or os.path.isdir(os.path.join(root, e))
+                    for e in os.listdir(root)
+                ):
+                    shutil.rmtree(root)
+            return log.expire(keep[0]), files_removed
 
     def changed_files(self, from_version: int, to_version: int) -> list[str]:
         """Files ADDED between two snapshots — the incremental-consumption
         feed (a downstream job reads only these, never re-scans history)."""
-        before = (
-            set(self._snapshot_by_version(from_version)["files"])
-            if from_version >= 1
-            else set()
-        )
-        after = set(self._snapshot_by_version(to_version)["files"])
-        return sorted(after - before)
+        before = set(self._log.snapshot(from_version).files) if from_version >= 1 else set()
+        return sorted(set(self._log.snapshot(to_version).files) - before)
 
     def restore(self, version: int) -> int:
-        """Roll the live table back to snapshot `version` by DELETING the
-        data files later snapshots added — zero data copy (append-only
-        history means the target files are still on disk; a version retired
-        by a rewrite raises first).  Commits a new snapshot, so the restore
-        itself is in the history.  Returns files removed."""
-        want = set(self._snapshot_by_version(version)["files"])
-        missing = [f for f in want if not os.path.exists(os.path.join(self.path, f))]
-        if missing:
-            raise FileNotFoundError(
-                f"{self.name}: snapshot v{version} was retired by a later "
-                f"rewrite ({len(missing)} file(s) gone)"
-            )
-        removed = 0
-        for f in self._data_files():
-            if f not in want:
-                os.remove(os.path.join(self.path, f))
-                removed += 1
-        self._rebuild_projections()
-        self._commit_snapshot(f"restore v{version}")
-        return removed
+        """Roll the live table back to snapshot `version` by committing its
+        file set: the files later versions added leave the table, the ones
+        they removed come back.  No data is copied or deleted, so the
+        versions after `version` stay readable too, and the restore itself
+        is in the history.  Returns the number of files the commit
+        removed."""
+        with path_lock(self.path):
+            want = self._log.snapshot(version).files
+            have = self._head_files()
+            removed = [f for f in have if f not in want]
+            self._commit(f"restore v{version}", [f for f in want if f not in have], removed)
+            self._rebuild_projections()
+        return len(removed)
 
     def insert(
         self,
@@ -808,9 +812,10 @@ class OlapTable(Generic[T]):
             self._append_df(self.spark.createDataFrame(rows, self.schema).coalesce(n_files))
             return
         with path_lock(self.path):
-            _write_arrow_part(self.path, rows, self.schema, self._parquet_compression(),
-                              self.config.order_by_fields)
-            self._commit_snapshot("append")
+            added = _write_arrow_part(self.path, rows, self.schema,
+                                      self._parquet_compression(),
+                                      self.config.order_by_fields)
+            self._commit("append", added)
 
     def _insert_isolate(self, rows: list, options: InsertOptions) -> InsertResult:
         """Binary-split retry (olap_table.py:821-874): try the whole block;
@@ -869,27 +874,33 @@ class OlapTable(Generic[T]):
                 f"{self.name}: Kafka engine tables are streaming-only — "
                 "use stream_reader()"
             )
-        try:
-            return self.spark.read.schema(self._storage_schema()).parquet(self.path)
-        except Exception:
-            return self.spark.createDataFrame([], self.schema)
+        return self._read_head()[1]
 
     def _merge_union(self, eng: Merge) -> DataFrame:
         """Merge engine (blocks.py:512-533): unionByName over warehouse
-        tables whose physical name matches the regex; columns missing from a
-        member surface as NULLs (allowMissingColumns)."""
+        tables whose physical name matches the regex, each read through its
+        own log (a logless member as its directory; an empty member is
+        skipped); columns missing from a member surface as NULLs
+        (allowMissingColumns)."""
+        from pyspark.errors import AnalysisException
+
         db_dir = os.path.join(self.warehouse, self.config.database or "default")
         pat = re.compile(eng.table_regex)
         out: Optional[DataFrame] = None
         for name in sorted(os.listdir(db_dir)) if os.path.isdir(db_dir) else []:
             tdir = os.path.join(db_dir, name)
-            if name == self.physical_name or not os.path.isdir(tdir):
+            if (name == self.physical_name or is_sibling_dir(name)
+                    or not pat.fullmatch(name) or not os.path.isdir(tdir)):
                 continue
-            if not pat.fullmatch(name):
-                continue
-            try:
-                member = self.spark.read.parquet(tdir)
-            except Exception:
+            snap = TxLog(tdir + SNAPSHOTS_SUFFIX, first=1).head()
+            if snap is None:
+                try:
+                    member = self.spark.read.parquet(tdir)
+                except AnalysisException:  # no parquet to infer a schema from
+                    continue
+            elif snap.files:
+                member = _scan_files(self.spark, tdir, snap.files)
+            else:
                 continue
             out = member if out is None else out.unionByName(
                 member, allowMissingColumns=True
@@ -976,13 +987,14 @@ class OlapTable(Generic[T]):
     # -- maintenance (moose truncate / peek, cli/commands.rs) --------------
 
     def truncate(self) -> None:
+        """Commit an empty version; the data stays readable at the earlier
+        versions until vacuum()."""
         if self.config.life_cycle != LifeCycle.FULLY_MANAGED:
             raise PermissionError(f"{self.name} life_cycle forbids truncate")
-        shutil.rmtree(self.path, ignore_errors=True)
-        os.makedirs(self.path, exist_ok=True)
-        for proj in self.config.projections:
-            shutil.rmtree(self._projection_path(proj.name), ignore_errors=True)
-        self._commit_snapshot("truncate")
+        with path_lock(self.path):
+            self._commit("truncate", removed=self._head_files())
+            for proj in self.config.projections:
+                shutil.rmtree(self._projection_path(proj.name), ignore_errors=True)
 
     def peek(self, n: int = 10) -> list[dict]:
         """moose peek (cli/commands.rs:104-118)."""
@@ -991,7 +1003,8 @@ class OlapTable(Generic[T]):
     def drop(self) -> None:
         if self.config.life_cycle == LifeCycle.DELETION_PROTECTED:
             raise PermissionError(f"{self.name} is DELETION_PROTECTED")
-        shutil.rmtree(self.path, ignore_errors=True)
+        with path_lock(self.path):
+            remove_table_dirs(self.path)
         # a dropped table must leave the lifecycle registry, or the next
         # plan/migrate re-creates it from the dangling entry
         from moosestack_spark.catalog import resources
@@ -1090,7 +1103,7 @@ class OlapTable(Generic[T]):
         Rewrites the table into `target_files` files, each internally sorted
         by the ORDER BY key, so parquet row-group min/max stats prune range
         scans; partitioned tables keep their partitioning.  Returns the
-        file count after compaction.  At 100 TB run per partition (only
+        number of files written.  At 100 TB run per partition (only
         partitions with small-file buildup), never table-wide.
 
         ``zorder_by=(x, y)`` clusters by the Morton interleave of two
@@ -1099,50 +1112,35 @@ class OlapTable(Generic[T]):
         covers a small rectangle of BOTH dimensions, so min/max file stats
         prune on either predicate.
         """
-        df = self.read_raw()
-        n_rows = df.count()
-        if target_files is None:
-            # ~128MB-file heuristic is meaningless on toy data; default to
-            # one file per shuffle partition bounded by row count
-            target_files = max(1, min(8, n_rows // 10_000 or 1))
-        if zorder_by is not None:
-            from moosestack_spark.ops.layout import cluster_by_zorder
+        with path_lock(self.path):
+            files, df = self._read_head()
+            n_rows = df.count()
+            if target_files is None:
+                # ~128MB-file heuristic is meaningless on toy data; default to
+                # one file per shuffle partition bounded by row count
+                target_files = max(1, min(8, n_rows // 10_000 or 1))
+            if zorder_by is not None:
+                from moosestack_spark.ops.layout import cluster_by_zorder
 
-            if len(zorder_by) != 2:
-                raise ValueError("zorder_by takes exactly two columns")
-            # reserved temp column: never clobber a user column (a table
-            # column literally named "zorder" would otherwise be silently
-            # overwritten and dropped by the rewrite)
-            zcol = "__zorder_opt"
-            if zcol in df.columns:
-                raise ValueError(
-                    f"optimize(zorder_by=...): column {zcol!r} is reserved"
-                )
-            out = cluster_by_zorder(
-                df, zorder_by[0], zorder_by[1],
-                num_partitions=target_files, out_col=zcol,
-            ).drop(zcol)
-        elif keys := self._sort_keys():
-            out = df.repartitionByRange(target_files, *keys).sortWithinPartitions(*keys)
-        else:
-            out = df.coalesce(target_files)
-        tmp = self.path + ".__optimize_tmp"
-        writer = out.write.mode("overwrite")
-        for k, v in self._parquet_index_options().items():
-            writer = writer.option(k, v)
-        if self.config.partition_by:
-            writer = writer.partitionBy(self.config.partition_by)
-        writer.parquet(tmp)
-        shutil.rmtree(self.path, ignore_errors=True)
-        os.rename(tmp, self.path)
-        self._rebuild_projections()
-        self._commit_snapshot("rewrite")
-        return sum(
-            1
-            for root, _, files in os.walk(self.path)
-            for f in files
-            if f.endswith(".parquet")
-        )
+                if len(zorder_by) != 2:
+                    raise ValueError("zorder_by takes exactly two columns")
+                # reserved temp column: never clobber a user column (a table
+                # column literally named "zorder" would otherwise be silently
+                # overwritten and dropped by the rewrite)
+                zcol = "__zorder_opt"
+                if zcol in df.columns:
+                    raise ValueError(
+                        f"optimize(zorder_by=...): column {zcol!r} is reserved"
+                    )
+                out = cluster_by_zorder(
+                    df, zorder_by[0], zorder_by[1],
+                    num_partitions=target_files, out_col=zcol,
+                ).drop(zcol)
+            elif keys := self._sort_keys():
+                out = df.repartitionByRange(target_files, *keys).sortWithinPartitions(*keys)
+            else:
+                out = df.coalesce(target_files)
+            return len(self._rewrite(out, files))
 
     _TTL_RE = r"^\s*(\w+)\s*\+\s*INTERVAL\s+(\d+)\s+(\w+)\s*$"
     _TTL_SECONDS = {
@@ -1172,22 +1170,22 @@ class OlapTable(Generic[T]):
         ttl_cols = [c for c in self.columns if c.ttl]
         if not ttl_cols:
             return {}
-        df = self.read_raw()
-        cleared: dict[str, int] = {}
-        out = df
-        for c in ttl_cols:
-            ts_col, cutoff = self._ttl_cutoff(c.ttl, now)
-            expired = (F.col(ts_col) <= F.lit(cutoff)) & F.col(c.name).isNotNull()
-            cleared[c.name] = df.filter(expired).count()
-            out = out.withColumn(
-                c.name,
-                F.when(F.col(ts_col) <= F.lit(cutoff), F.lit(None)).otherwise(
-                    F.col(c.name)
-                ),
-            )
-        if not any(cleared.values()):
-            return cleared
-        self._rewrite_base(out, ".__colttl_tmp")
+        with path_lock(self.path):
+            files, df = self._read_head()
+            cleared: dict[str, int] = {}
+            out = df
+            for c in ttl_cols:
+                ts_col, cutoff = self._ttl_cutoff(c.ttl, now)
+                expired = (F.col(ts_col) <= F.lit(cutoff)) & F.col(c.name).isNotNull()
+                cleared[c.name] = df.filter(expired).count()
+                out = out.withColumn(
+                    c.name,
+                    F.when(F.col(ts_col) <= F.lit(cutoff), F.lit(None)).otherwise(
+                        F.col(c.name)
+                    ),
+                )
+            if any(cleared.values()):
+                self._rewrite(out, files)
         return cleared
 
     def apply_ttl(self, now: Optional[datetime] = None) -> int:
@@ -1206,18 +1204,11 @@ class OlapTable(Generic[T]):
             return 0
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
         ts_col, cutoff = self._ttl_cutoff(self.config.ttl, now)
-
-        df = self.read_raw()
-        total = df.count()
         # NULL TTL timestamps never expire (CH semantics: a NULL TTL
         # expression row is kept) — a bare > predicate would silently
         # delete them
-        kept = df.filter(F.col(ts_col).isNull() | (F.col(ts_col) > F.lit(cutoff)))
-        n_kept = kept.count()
-        if n_kept == total:
-            return 0
-        self._rewrite_base(kept, ".__ttl_tmp")
-        return total - n_kept
+        expired = F.col(ts_col) <= F.lit(cutoff)
+        return self._mutate(expired, lambda df: df.filter(~F.coalesce(expired, F.lit(False))))
 
     def delete_where(self, predicate: str) -> int:
         """``ALTER TABLE ... DELETE WHERE <predicate>`` (the CH mutation the
@@ -1227,46 +1218,12 @@ class OlapTable(Generic[T]):
         rows are kept (CH mutation semantics).  Returns rows deleted.
 
         Scale shape: on a partitioned table only the partitions containing
-        matching rows are rewritten (Spark dynamic partition overwrite —
-        the direct analogue of CH mutating only parts that contain matching
-        rows); untouched partitions are never read or written.  Partitions
-        whose rows are ALL deleted are dropped explicitly (dynamic
-        overwrite leaves a partition untouched when the frame contains no
-        rows for it)."""
+        matching rows are rewritten (the direct analogue of CH mutating only
+        parts that contain matching rows); untouched partitions are never
+        read or written, and a partition whose rows are ALL deleted leaves
+        the table with its files."""
         pred = F.expr(predicate)
-        df = self.read_raw()
-        n_del = df.filter(pred).count()
-        if n_del == 0:
-            return 0
-        keep = ~F.coalesce(pred, F.lit(False))
-        pb = self.config.partition_by
-        if not pb:
-            self._rewrite_base(df.filter(keep), ".__del_tmp")
-            return n_del
-        affected = self._affected_partition_values(df, pred, pb)
-        kept_affected = df.filter(F.col(pb).isin(affected)).filter(keep)
-        survivors = {r[0] for r in kept_affected.select(pb).distinct().collect()}
-        prev_mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            if survivors:
-                (
-                    kept_affected.localCheckpoint()  # plan reads files the write replaces
-                    .write.mode("overwrite")
-                    .partitionBy(pb)
-                    .parquet(self.path)
-                )
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-        for val in set(affected) - survivors:
-            shutil.rmtree(
-                os.path.join(self.path, f"{pb}={val}"), ignore_errors=True
-            )
-        self._rebuild_projections()
-        self._commit_snapshot("rewrite")
-        return n_del
+        return self._mutate(pred, lambda df: df.filter(~F.coalesce(pred, F.lit(False))))
 
     def update_where(self, assignments: dict[str, str], predicate: str) -> int:
         """``ALTER TABLE ... UPDATE col = expr WHERE <predicate>`` (the other
@@ -1280,9 +1237,7 @@ class OlapTable(Generic[T]):
         move rows between partitions mid-rewrite.  Returns rows updated.
 
         Scale shape mirrors delete_where: on a partitioned table only the
-        partitions containing matching rows are rewritten via dynamic
-        partition overwrite; since UPDATE never removes rows and key columns
-        are immutable, no partition can become empty or change its key."""
+        partitions containing matching rows are rewritten."""
         if not assignments:
             return 0
         key_cols = set(self.config.order_by_fields or ())
@@ -1291,65 +1246,37 @@ class OlapTable(Generic[T]):
         banned = key_cols & set(assignments)
         if banned:
             raise ValueError(f"cannot UPDATE key column(s): {sorted(banned)}")
-        df = self.read_raw()
-        unknown = set(assignments) - set(df.columns)
+        types = dict((f.name, f.dataType) for f in self._storage_schema().fields)
+        unknown = set(assignments) - set(types)
         if unknown:
             raise ValueError(f"unknown column(s) in UPDATE: {sorted(unknown)}")
         pred = F.expr(predicate)
-        n_upd = df.filter(pred).count()
-        if n_upd == 0:
-            return 0
         cond = F.coalesce(pred, F.lit(False))
-        types = dict(df.dtypes)
 
         def _apply(frame: DataFrame) -> DataFrame:
-            cols = []
-            for c in frame.columns:
-                if c in assignments:
-                    cols.append(
-                        F.when(cond, F.expr(assignments[c]).cast(types[c]))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                    )
-                else:
-                    cols.append(F.col(c))
-            return frame.select(*cols)
+            return frame.select(*(
+                F.when(cond, F.expr(assignments[c]).cast(types[c]))
+                .otherwise(F.col(c)).alias(c)
+                if c in assignments else F.col(c)
+                for c in frame.columns
+            ))
 
-        pb = self.config.partition_by
-        if not pb:
-            self._rewrite_base(_apply(df), ".__upd_tmp")
-            return n_upd
-        affected = self._affected_partition_values(df, pred, pb)
-        updated_affected = _apply(df.filter(F.col(pb).isin(affected)))
-        prev_mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                updated_affected.localCheckpoint()  # plan reads files the write replaces
-                .write.mode("overwrite")
-                .partitionBy(pb)
-                .parquet(self.path)
-            )
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-        self._rebuild_projections()
-        self._commit_snapshot("rewrite")
-        return n_upd
+        return self._mutate(pred, _apply)
 
     # Mutations collect the distinct partition values a predicate touches so
-    # dynamic-overwrite only rewrites those partitions.  On a sane layout
-    # that is bounded by partition count; a table partitioned by a
-    # high-cardinality column would turn this into an unbounded driver
-    # collect, so count in-plan first and refuse loudly above this cap.
+    # only those partitions are rewritten.  On a sane layout that is bounded
+    # by partition count; a table partitioned by a high-cardinality column
+    # would turn this into an unbounded driver collect, so count in-plan
+    # first and refuse loudly above this cap.
     MUTATION_PARTITION_CAP = 100_000
 
-    def _affected_partition_values(self, df: DataFrame, pred, pb: str) -> list:
-        """Distinct ``pb`` values among rows matching ``pred``, guarded by
-        MUTATION_PARTITION_CAP (count runs in-plan; the collect only happens
-        once the cardinality is known to be bounded)."""
-        distinct_vals = df.filter(pred).select(pb).distinct()
+    def _affected_partitions(self, df: DataFrame, pred, pb: str) -> set[Optional[str]]:
+        """The ``pb`` partition values, as spelled in partition paths, of the
+        rows matching ``pred``, guarded by MUTATION_PARTITION_CAP (count runs
+        in-plan; the collect only happens once the cardinality is known to
+        be bounded).  An empty string is stored as the default (null)
+        partition."""
+        distinct_vals = df.filter(pred).select(F.col(pb).cast("string")).distinct()
         n = distinct_vals.count()
         if n > self.MUTATION_PARTITION_CAP:
             raise ValueError(
@@ -1359,23 +1286,39 @@ class OlapTable(Generic[T]):
                 "driver-unbounded — repartition the table or widen the "
                 "predicate to full-table rewrite"
             )
-        return [r[0] for r in distinct_vals.collect()]
+        return {r[0] or None for r in distinct_vals.collect()}
 
-    def _rewrite_base(self, df: DataFrame, tmp_suffix: str) -> None:
-        """Atomically replace the base files with ``df``, preserving the
-        table's partition layout.  TTL rewrites previously wrote flat files;
-        on a partitioned table the next _append_df then writes key=value
-        subdirs and reads of the mixed layout silently drop the partitioned
-        rows — every base rewrite must go through the same partitionBy as
-        _append_df/optimize."""
-        tmp = self.path + tmp_suffix
-        writer = df.write.mode("overwrite")
+    def _mutate(self, pred, apply: Callable[[DataFrame], DataFrame]) -> int:
+        """Rewrite through ``apply`` the files that hold rows matching
+        ``pred`` — on a partitioned table the files of the partitions that
+        hold them, on any other table all of its files — and commit the
+        result in their place.  Returns the number of matching rows."""
+        with path_lock(self.path):
+            files, df = self._read_head()
+            n = df.filter(pred).count()
+            if n == 0:
+                return 0
+            pb = self.config.partition_by
+            if pb and files:
+                affected = self._affected_partitions(df, pred, pb)
+                files = [f for f in files if partition_values(f).get(pb) in affected]
+                df = self._scan(files)
+            self._rewrite(apply(df), files)
+        return n
+
+    def _rewrite(self, df: DataFrame, removed: Sequence[str]) -> list[str]:
+        """Write ``df`` as new files in the table's layout (the same
+        partitionBy and bloom-filter options as _append_df, or reads of a
+        mixed layout would drop rows) and commit them in place of
+        ``removed``, the files ``df`` was read from.  The caller holds
+        path_lock from its read through here.  Projections are re-derived
+        from the result.  Returns the files written."""
+        writer = df.write
         for k, v in self._parquet_index_options().items():
             writer = writer.option(k, v)
         if self.config.partition_by:
             writer = writer.partitionBy(self.config.partition_by)
-        writer.parquet(tmp)
-        shutil.rmtree(self.path, ignore_errors=True)
-        os.rename(tmp, self.path)
+        added = self._stage(writer.parquet)
+        self._commit("rewrite", added, removed)
         self._rebuild_projections()
-        self._commit_snapshot("rewrite")
+        return added

@@ -12,6 +12,10 @@ a 1000-executor cluster against ~100 TB:
 - session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are cluster-location independent
 - Arrow enabled for the Pandas-UDF paths (dedup/similarity/multimodal ops)
+- file listing stays on the driver up to 10k paths: a table read passes
+  its snapshot's file list (catalog/txlog.py), and above Spark's default of
+  32 paths the listing becomes a job of one task per path (10.8 s to build
+  a 2000-file read on 4 cores, against 0.5-1 s listed by the driver)
 """
 
 from __future__ import annotations
@@ -61,6 +65,7 @@ def get_spark(app_name: str = "moosestack-spark", **extra_conf: str) -> SparkSes
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
         # events.parquet stores TIMESTAMP(NANOS) which Spark's reader
         # rejects; read as long and convert in tables.t().
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

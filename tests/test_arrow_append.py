@@ -27,6 +27,7 @@ from pyspark.sql import types as st
 
 from moosestack_spark.catalog.engines import OlapConfig
 from moosestack_spark.catalog.table import InsertOptions, OlapTable, _write_arrow_part
+from moosestack_spark.catalog.txlog import TxLog
 from moosestack_spark.datamodel import ClickHouseJson, Float32, Int8, Key, clickhouse_decimal
 from moosestack_spark.pipeline import IngestPipeline
 
@@ -159,10 +160,10 @@ def test_arrow_part_matches_spark_write(spark, tmp_path, rows):
     )
     assert (arrow_err is None) == (spark_err is None), (arrow_err, spark_err)
     if arrow_err is not None:
-        assert arrow._data_files() == [] and arrow._versions() == []
+        assert os.listdir(arrow.path) == [] and arrow._log.versions() == []
         return
 
-    assert len(arrow._data_files()) == 1
+    assert len(arrow._head_files()) == 1
     for read in (lambda t: t.read(), lambda t: spark.read.parquet(t.path)):
         a, s = read(arrow), read(spark_t)
         assert a.schema == s.schema
@@ -245,21 +246,24 @@ def test_isolate_insert_adds_one_data_file(spark, tmp_path):
     rows[3]["kind"] = rows[8]["kind"] = "bogus"
     res = t.insert(rows, InsertOptions(strategy="isolate"))
     assert (res.inserted, res.failed) == (8, 2)
-    assert len(t._data_files()) == 1
-    assert t.snapshots()[-1]["files"] == t._data_files()
+    files = t.snapshots()[-1]["files"]
+    assert len(files) == 1 and os.listdir(t.path) == files
 
 
 def test_commit_reads_no_manifest(spark, tmp_path, monkeypatch):
+    """An append commit lists the log's names and reads none of its
+    commits or checkpoints, however long the history."""
     t = OlapTable("hist", Ev, spark, str(tmp_path / "wh"), register=False)
     t.insert([{"id": 0, "kind": "a", "amount": 0.0}])
     for _ in range(199):
-        t._commit_snapshot("append")
+        t._commit("append")
     assert [s["version"] for s in t.snapshots()] == list(range(1, 201))
-    loads = []
-    real_load = json.load
-    monkeypatch.setattr(json, "load", lambda *a, **k: loads.append(1) or real_load(*a, **k))
+    reads = []
+    for name in ("actions", "_read_checkpoint"):
+        real = getattr(TxLog, name)
+        monkeypatch.setattr(TxLog, name, lambda self, v, real=real: reads.append(v) or real(self, v))
     t.insert([{"id": 1, "kind": "b", "amount": 1.0}])
-    assert loads == []
+    assert reads == []
     monkeypatch.undo()
     head = t.snapshots()[-1]
     assert head["version"] == 201 and len(head["files"]) == 2
@@ -307,9 +311,9 @@ def test_two_processes_append_to_one_table(spark, tmp_path):
             p.kill()
     assert [p.returncode for p in procs] == [0, 0], errors
     t = OlapTable("shared", Ev, spark, wh, register=False)
-    assert t._versions() == list(range(1, 41))
+    assert t._log.versions() == list(range(1, 41))
     head = t.snapshots()[-1]["files"]
-    assert len(head) == 40 and head == t._data_files()
+    assert len(head) == 40 and head == sorted(os.listdir(t.path))
     assert sorted(r.id for r in t.read().collect()) == sorted(
         1000 * k + i for k in range(2) for i in range(20)
     )

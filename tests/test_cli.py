@@ -4,6 +4,7 @@ tables — the `moose dev/plan/migrate` UX reduced to the library planner."""
 
 from __future__ import annotations
 
+import os
 import sys
 import textwrap
 
@@ -178,12 +179,11 @@ def test_optimize_and_restore_cli(app_module, tmp_path, capsys, spark):
         capsys,
     )
     assert rc == 0 and "optimized events into 1 file(s)" in out
-    assert len(tbl._data_files()) == 1
+    assert len(tbl._head_files()) == 1
     assert sorted(r.id for r in tbl.read().collect()) == [0, 1, 2]
 
-    # restore to v1 (first insert) — only possible pre-rewrite versions
-    # raise after compaction retired their files, so restore to the
-    # post-optimize snapshot is the valid target
+    # restore to the post-optimize snapshot drops the later insert's file
+    # from the live set and deletes nothing
     rc, out = _run(
         ["snapshots", "--app", app_module, "--warehouse", wh, "--table", "events"],
         capsys,
@@ -199,7 +199,16 @@ def test_optimize_and_restore_cli(app_module, tmp_path, capsys, spark):
         capsys,
     )
     assert rc == 0 and f"restored events to snapshot v{head}" in out
+    assert "(1 file(s) removed from the live set, none deleted)" in out
     assert sorted(r.id for r in tbl.read().collect()) == [0, 1, 2]
+    # a version from before the optimize is still there to restore
+    rc, out = _run(
+        ["restore", "--app", app_module, "--warehouse", wh,
+         "--table", "events", "1"],
+        capsys,
+    )
+    assert "(1 file(s) removed from the live set, none deleted)" in out
+    assert [r.id for r in tbl.read().collect()] == [0]
 
 
 def test_ttl_cli(tmp_path, capsys, spark, monkeypatch):
@@ -264,13 +273,21 @@ def test_vacuum_cli(app_module, tmp_path, capsys, spark):
     tbl = importlib.import_module(app_module).TABLES["events"]
     for i in range(4):
         tbl.insert([{"id": i, "kind": "k", "amount": float(i)}])
+    tbl.optimize(target_files=1)  # v5 removes the 4 insert files
     rc, out = _run(
         ["vacuum", "--app", app_module, "--warehouse", wh,
          "--table", "events", "--keep-last", "2"],
         capsys,
     )
-    assert rc == 0 and "2 manifest(s)" in out  # 4 insert snapshots; keep 2
+    # keeping v4 and v5 keeps the insert files v4 reads
+    assert rc == 0 and "3 version(s) expired, 0 unreferenced file(s) deleted" in out
     assert len(tbl.snapshots()) == 2
+    rc, out = _run(
+        ["vacuum", "--app", app_module, "--warehouse", wh,
+         "--table", "events", "--keep-last", "1"],
+        capsys,
+    )
+    assert rc == 0 and "1 version(s) expired, 4 unreferenced file(s) deleted" in out
     assert tbl.read().count() == 4
 
 
@@ -292,7 +309,8 @@ def test_metrics_cli(app_module, tmp_path, capsys, spark):
     assert rc == 0
     lines = [_json.loads(line) for line in out.strip().splitlines()]
     head = lines[0]
-    assert head["rows"] == 2 and head["files"] >= 1 and head["bytes"] > 0
+    assert (head["rows"], head["files"], head["snapshots"]) == (2, 1, 1)
+    assert head["bytes"] == os.path.getsize(os.path.join(tbl.path, tbl._head_files()[0]))
     prof = {r["column"]: r for r in lines[1:]}
     assert prof["kind"]["n_distinct"] == 2
     assert prof["id"]["min_str"] == "1" and prof["id"]["max_str"] == "2"

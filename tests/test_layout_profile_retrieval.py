@@ -148,11 +148,13 @@ def test_optimize_zorder_rewrites_clustered_files(spark, tmp_path):
         (r["x"], r["y"]) for r in rows
     )
     # recompute each file's morton range: ranges must be pairwise disjoint
-    import glob as _glob
+    # (the head snapshot's files: the pre-optimize part stays on disk until
+    # vacuum)
+    import os
 
     ranges = []
-    for f in sorted(_glob.glob(tbl.path + "/*.parquet")):
-        t = pq.read_table(f).to_pylist()
+    for f in sorted(tbl._head_files()):
+        t = pq.read_table(os.path.join(tbl.path, f)).to_pylist()
         zs = [
             int(spark.sql(
                 f"SELECT {morton_expr(str(r['x']), str(r['y']), 6)} AS z"

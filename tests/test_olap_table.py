@@ -391,24 +391,16 @@ def test_optimize_compacts_and_sorts(spark, warehouse):
     # 6 separate appends -> many small files
     for i in range(6):
         t.insert([{"id": 100 - 10 * i - j, "v": float(i)} for j in range(3)])
-    files_before = sum(
-        1 for _, _, fs in os.walk(t.path) for f in fs if f.endswith(".parquet")
-    )
+    files_before = len(t._head_files())
     assert files_before >= 6
     rows_before = sorted(r["id"] for r in t.read().collect())
     n_after = t.optimize(target_files=2)
-    assert n_after <= 2 < files_before
+    assert n_after == len(t._head_files()) <= 2 < files_before
     assert sorted(r["id"] for r in t.read().collect()) == rows_before
-    # each surviving file is internally sorted by the ORDER BY key
-    for root, _, fs in os.walk(t.path):
-        for f in fs:
-            if not f.endswith(".parquet"):
-                continue
-            ids = [
-                r["id"]
-                for r in spark.read.parquet(os.path.join(root, f)).collect()
-            ]
-            assert ids == sorted(ids)
+    # each file of the new head is internally sorted by the ORDER BY key
+    for f in t._head_files():
+        ids = [r["id"] for r in spark.read.parquet(os.path.join(t.path, f)).collect()]
+        assert ids == sorted(ids)
 
 
 def test_projection_maintained_and_routed(spark, warehouse):
@@ -599,6 +591,14 @@ def test_delete_where_null_predicate_rows_kept(spark, warehouse):
     assert sorted(r.id for r in t.read().collect()) == [2, 3]
 
 
+def _files_by_partition(t) -> dict[str, set[str]]:
+    """The head snapshot's files, grouped by their partition directory."""
+    out: dict[str, set[str]] = {}
+    for f in t._head_files():
+        out.setdefault(f.rsplit("/", 1)[0], set()).add(f)
+    return out
+
+
 def test_delete_where_partitioned_prunes(spark, warehouse):
     import os
 
@@ -613,24 +613,16 @@ def test_delete_where_partitioned_prunes(spark, warehouse):
     t.insert(
         [{"id": i, "d": f"d{i % 3}", "amount": float(i)} for i in range(12)]
     )
-    parts_before = {
-        p: os.path.getmtime(os.path.join(t.path, p))
-        for p in os.listdir(t.path)
-        if p.startswith("d=")
-    }
+    before = _files_by_partition(t)
     # delete everything in partition d0 and one row of d1
     n = t.delete_where("d = 'd0' OR id = 1")
     assert n == 5
     left = sorted(r.id for r in t.read().collect())
     assert left == [2, 4, 5, 7, 8, 10, 11]
-    parts_after = {
-        p: os.path.getmtime(os.path.join(t.path, p))
-        for p in os.listdir(t.path)
-        if p.startswith("d=")
-    }
+    after = _files_by_partition(t)
     # fully-deleted partition dropped; untouched partition files not rewritten
-    assert "d=d0" not in parts_after
-    assert parts_after["d=d2"] == parts_before["d=d2"]
+    assert "d=d0" not in after
+    assert after["d=d2"] == before["d=d2"] and after["d=d1"] != before["d=d1"]
 
 
 def test_update_where_unpartitioned(spark, warehouse):
@@ -687,24 +679,16 @@ def test_update_where_partitioned_prunes(spark, warehouse):
 
     t = OlapTable("updp", P, spark, warehouse, OlapConfig(partition_by="d"))
     t.insert([{"id": i, "d": f"d{i % 3}", "amount": float(i)} for i in range(12)])
-    parts_before = {
-        p: os.path.getmtime(os.path.join(t.path, p))
-        for p in os.listdir(t.path)
-        if p.startswith("d=")
-    }
+    before = _files_by_partition(t)
     n = t.update_where({"amount": "amount + 0.5"}, "d = 'd0'")
     assert n == 4
     got = {r.id: r.amount for r in t.read().collect()}
     assert got[0] == 0.5 and got[3] == 3.5 and got[6] == 6.5 and got[9] == 9.5
     assert got[1] == 1.0 and got[2] == 2.0
-    parts_after = {
-        p: os.path.getmtime(os.path.join(t.path, p))
-        for p in os.listdir(t.path)
-        if p.startswith("d=")
-    }
+    after = _files_by_partition(t)
     # untouched partitions not rewritten
-    assert parts_after["d=d1"] == parts_before["d=d1"]
-    assert parts_after["d=d2"] == parts_before["d=d2"]
+    assert after["d=d1"] == before["d=d1"] and after["d=d2"] == before["d=d2"]
+    assert after["d=d0"] != before["d=d0"]
 
 
 def test_update_where_casts_to_declared_type(spark, warehouse):
@@ -722,8 +706,6 @@ def test_bloom_filter_index_writes_parquet_blooms(spark, tmp_path):
     filter for that column — verified behaviorally: the bloom-indexed
     write is measurably larger than the identical write without the
     index (the filter bytes), and survives optimize()."""
-    import glob
-
     from pydantic import BaseModel
 
     from moosestack_spark.catalog.engines import OlapConfig, TableIndex
@@ -736,9 +718,7 @@ def test_bloom_filter_index_writes_parquet_blooms(spark, tmp_path):
     rows = [{"id": i, "user": f"u{i % 500}"} for i in range(20_000)]
 
     def total_bytes(tbl):
-        return sum(
-            os.path.getsize(f) for f in glob.glob(tbl.path + "/*.parquet")
-        )
+        return sum(os.path.getsize(os.path.join(tbl.path, f)) for f in tbl._head_files())
 
     plain = OlapTable("bf_plain", Row, spark, str(tmp_path), register=False)
     plain.insert(rows)

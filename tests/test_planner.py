@@ -166,7 +166,7 @@ def test_reality_check_detects_external_mutation(spark, tmp_path):
     assert ops == [] and disc.is_empty()
 
     # external mutation: someone rewrote the table dropping a column
-    mutated = spark.read.parquet(tbl.path).drop("v")
+    mutated = tbl.read_raw().drop("v")
     mutated.write.mode("overwrite").parquet(str(tmp_path / "rewrite"))
     import shutil as _sh
 
@@ -304,6 +304,52 @@ def test_reality_check_double_underscore_table_not_missing(spark, tmp_path):
     disc = check_reality(spark, wh, saved)
     assert disc.missing_tables == []
     assert disc.is_empty()
+
+
+def test_reality_check_skips_table_logs(spark, tmp_path):
+    """A table's log dir holds checkpoint parquet once it reaches its 10th
+    version; it is the table's, not an unmapped table."""
+    import os
+
+    from pydantic import BaseModel
+
+    from moosestack_spark.catalog.planner import check_reality
+    from moosestack_spark.catalog.table import OlapTable
+
+    class M(BaseModel):
+        id: int
+
+    wh = str(tmp_path)
+    tbl = OlapTable("logged", M, spark, wh, register=False)
+    for i in range(10):
+        tbl.insert([{"id": i}])
+    log_dir = tbl.path + "__snapshots"
+    assert any(f.endswith(".checkpoint.parquet") for f in os.listdir(log_dir))
+    disc = check_reality(spark, wh, InfraMap(tables={"logged": _spec_of(tbl)}))
+    assert disc.is_empty(), disc
+
+
+def test_dropped_table_leaves_no_history(spark, tmp_path):
+    """A drop_table op removes the table's log with its data, so a table
+    created again at that path starts at version 1 and reads."""
+    from pydantic import BaseModel
+
+    from moosestack_spark.catalog.planner import execute_ops
+    from moosestack_spark.catalog.table import OlapTable
+
+    class M(BaseModel):
+        id: int
+
+    wh = str(tmp_path)
+    tbl = OlapTable("gone", M, spark, wh, register=False)
+    tbl.insert([{"id": 1}])
+    tbl.insert([{"id": 2}])
+    current = InfraMap(tables={"gone": _spec_of(tbl)})
+    execute_ops(wh, plan_changes(current, InfraMap()), current=current, target=InfraMap())
+    again = OlapTable("gone", M, spark, wh, register=False)
+    again.insert([{"id": 3}])
+    assert [s["version"] for s in again.snapshots()] == [1]
+    assert [r.id for r in again.read().collect()] == [3]
 
 
 def test_enum_equivalence_requires_bijection():

@@ -1,5 +1,6 @@
-"""Snapshot / time-travel semantics on OlapTable: per-append manifests,
-read_at isolation, incremental file feed, rewrite retirement, truncate."""
+"""Snapshot / time-travel semantics on OlapTable: one log commit per
+write, read_at isolation, incremental file feed, pre-rewrite versions
+readable until vacuum, truncate, drop."""
 
 from __future__ import annotations
 
@@ -51,18 +52,27 @@ def test_changed_files_is_the_incremental_feed(table, spark):
     assert {r.kind for r in delta.collect()} == {"b"} and delta.count() == 3
 
 
-def test_rewrite_retires_earlier_snapshots(table):
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_pre_rewrite_versions_read_back_until_vacuum(table):
+    """A rewrite commits remove + add and deletes nothing, so every version
+    before it reads back identically until vacuum expires it."""
     table.insert(_rows(0, 5, "a"))
     table.insert(_rows(5, 5, "b"))
-    deleted = table.delete_where("kind = 'a'")
-    assert deleted == 5
+    before = {v: _sorted_rows(table.read_at(v)) for v in (1, 2)}
+    assert table.delete_where("kind = 'a'") == 5
+    table.update_where({"amount": "amount + 1"}, "id = 7")
+    table.optimize(target_files=1)
     snaps = table.snapshots()
-    assert snaps[-1]["op"] == "rewrite"
-    # latest snapshot reads fine; pre-rewrite versions raise, never
-    # silently return partial data
-    assert table.read_at(len(snaps)).count() == 5
-    with pytest.raises(FileNotFoundError, match="retired"):
-        table.read_at(1)
+    assert [s["op"] for s in snaps] == ["append", "append", "rewrite", "rewrite", "rewrite"]
+    assert table.read_at(5).count() == 5
+    assert {v: _sorted_rows(table.read_at(v)) for v in (1, 2)} == before
+    table.vacuum(keep_last=1)
+    with pytest.raises(ValueError, match="no snapshot v2"):
+        table.read_at(2)
+    assert _sorted_rows(table.read()) == _sorted_rows(table.read_at(5))
 
 
 def test_truncate_commits_empty_snapshot_keeps_history(table):
@@ -71,7 +81,19 @@ def test_truncate_commits_empty_snapshot_keeps_history(table):
     snaps = table.snapshots()
     assert snaps[-1]["op"] == "truncate" and snaps[-1]["files"] == []
     assert table.read_at(len(snaps)).count() == 0
-    assert len(snaps) == 2  # history retained (sibling dir survives rmtree)
+    assert len(snaps) == 2 and table.read_at(1).count() == 4  # history retained
+
+
+def test_drop_removes_history(table):
+    """A table re-created under a dropped table's name starts with no
+    history: the log and projection siblings go with the data."""
+    table.insert(_rows(0, 4, "a"))
+    table.insert(_rows(4, 2, "b"))
+    table.drop()
+    again = OlapTable("snap_events", Ev, table.spark, table.warehouse)
+    again.insert(_rows(0, 1, "c"))
+    assert [s["version"] for s in again.snapshots()] == [1]
+    assert again.read_at(1).count() == 1
 
 
 def test_restore_rolls_back_without_copying(table):
@@ -83,10 +105,12 @@ def test_restore_rolls_back_without_copying(table):
     assert {r.kind for r in table.read().collect()} == {"a"}
     snaps = table.snapshots()
     assert snaps[-1]["op"] == "restore v1"
-    # restoring to a later-rewritten version fails loudly
+    # the version the restore rolled back stays readable, and a version
+    # from before a rewrite can still be restored
+    assert table.read_at(2).count() == 8
     table.delete_where("id = 0")
-    with pytest.raises(FileNotFoundError, match="retired"):
-        table.restore(1)
+    table.restore(2)
+    assert table.read().count() == 8
 
 
 def test_streaming_foreachbatch_appends_commit_snapshots(table, spark, tmp_path):
@@ -119,7 +143,7 @@ def test_streaming_foreachbatch_appends_commit_snapshots(table, spark, tmp_path)
 
 
 def test_vacuum_expires_history_and_orphans(spark, tmp_path):
-    """VACUUM: old manifests go, data files no kept manifest references
+    """VACUUM: old versions go, data files no kept version references
     go, surviving versions stay readable BY NUMBER, and the next commit
     does not reuse an expired version number."""
     import os
@@ -139,8 +163,8 @@ def test_vacuum_expires_history_and_orphans(spark, tmp_path):
         tbl.insert([{"id": i}])
     assert [s["version"] for s in tbl.snapshots()] == [1, 2, 3, 4, 5]
 
-    # restore to v2 orphans the files v3-v5 added (restore deletes them),
-    # then vacuum keep_last=2 trims manifests to the last two
+    # restore to v2 removes the files v3-v5 added from the live set (and
+    # deletes nothing), then vacuum keep_last=2 trims history to the last two
     tbl.restore(2)  # commits v6
     man_rm, files_rm = tbl.vacuum(keep_last=2)
     assert man_rm == 4  # v1..v4 gone, v5+v6 kept
@@ -159,17 +183,18 @@ def test_vacuum_expires_history_and_orphans(spark, tmp_path):
     assert [s["version"] for s in tbl.snapshots()] == [5, 6, 7]
     assert sorted(r.id for r in tbl.read().collect()) == [0, 1, 99]
 
-    # vacuum removed any data file only v1-v4 referenced... but v5 kept
-    # the full pre-restore file list, so nothing was orphaned; a second
-    # vacuum to 1 manifest drops v5's (now partially missing) references
-    man_rm, _ = tbl.vacuum(keep_last=1)
+    # v5 still references the files v3-v5 added, so they stayed; keeping
+    # only v7 makes them unreferenced, and vacuum deletes them
+    assert files_rm == 0
+    man_rm, files_rm = tbl.vacuum(keep_last=1)
     assert man_rm == 2 and [s["version"] for s in tbl.snapshots()] == [7]
+    assert files_rm == 3
     assert sorted(r.id for r in tbl.read().collect()) == [0, 1, 99]
 
 
 def test_vacuum_refuses_unmanaged_and_empty_history(spark, tmp_path):
     """Review r5: vacuum must never wipe a table it cannot prove
-    referenced — no manifests means no-op, non-FULLY_MANAGED lifecycles
+    referenced — no log means no-op, non-FULLY_MANAGED lifecycles
     refuse outright."""
     import os
 
@@ -201,14 +226,14 @@ def test_vacuum_refuses_unmanaged_and_empty_history(spark, tmp_path):
 
 
 def test_stray_files_in_snapshot_dir_are_ignored(table):
-    """A non-manifest file in the snapshot dir (editor backup, version.json)
-    must not break snapshots()/read_at()/vacuum() — strict ^v\\d+\\.json$
-    match only (round-6 ADVICE fix)."""
+    """A file in the log dir that is not a commit or a checkpoint (editor
+    backup, version.json) must not break snapshots()/read_at()/vacuum() —
+    strict name match only (round-6 ADVICE fix)."""
     import os
 
     table.insert(_rows(0, 4, "a"))
     table.insert(_rows(4, 2, "b"))
-    snapdir = table._snapdir
+    snapdir = table._log.log_dir
     for stray in ["version.json", "v1.json~", "vfinal.json", ".DS_Store"]:
         with open(os.path.join(snapdir, stray), "w") as fh:
             fh.write("{}")
