@@ -55,6 +55,18 @@ Honest boundaries (raise, never silently wrong):
 The writer exists so tables can be planted and appended in tests/gates
 (this repo's codec-oracle policy); it emits spec-shaped v2 metadata that
 the reader — or any Iceberg client — can walk.
+
+Writes and concurrency: every writer (write, delete_where,
+delete_equality, compact) writes its parquet files into a fresh
+``data/<uuid4>/``, stages one manifest and one manifest list under uuid4
+names with a random snapshot id (``_stage`` returns the next metadata
+dict), and publishes that dict put-if-absent as the version after the one
+it read.  Of two writers racing for one version, the loser raises
+FileExistsError and every file of the winner's stays as it was; the
+loser's files stay unreferenced until expire_snapshots removes them.  The
+REST catalog (catalog/iceberg_rest.py) stages through the same ``_stage``
+and sends the returned snapshot in its commit; it publishes no metadata
+file here.
 """
 
 from __future__ import annotations
@@ -62,31 +74,39 @@ from __future__ import annotations
 import json
 import os
 import re
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from moosestack_spark.catalog.avro import read_container, write_container
-from moosestack_spark.catalog.txlog import publish
+from moosestack_spark.catalog.txlog import partition_values, publish
 
 
-def _commit_metadata(
-    meta_dir: str, version: int, meta: dict, staging_salt: str | None = None
-) -> None:
+_VERSION_RE = re.compile(r"^v(\d+)\.metadata\.json$")
+
+
+def metadata_version(path: str) -> int:
+    """The n of a ``v{n}.metadata.json`` path."""
+    m = _VERSION_RE.match(os.path.basename(path))
+    if not m:
+        raise ValueError(f"unparseable metadata filename: {path}")
+    return int(m.group(1))
+
+
+def _commit_metadata(meta_dir: str, version: int, meta: dict) -> None:
     """Publish ``v{version}.metadata.json`` put-if-absent, so a writer that
     lost the race for ``version`` raises FileExistsError instead of erasing
     the winner's commit, then point version-hint.text at it (replaced
-    atomically).  A salted (staged) commit writes
-    ``v{version}-{salt}.metadata.json`` and leaves the hint alone."""
-    name = f"v{version}" if staging_salt is None else f"v{version}-{staging_salt}"
-    publish(os.path.join(meta_dir, f"{name}.metadata.json"), json.dumps(meta, indent=1))
-    if staging_salt is None:
-        hint = os.path.join(meta_dir, "version-hint.text")
-        tmp = f"{hint}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, hint)
+    atomically)."""
+    publish(os.path.join(meta_dir, f"v{version}.metadata.json"), json.dumps(meta, indent=1))
+    hint = os.path.join(meta_dir, "version-hint.text")
+    tmp = f"{hint}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(str(version))
+    os.replace(tmp, hint)
+
 
 # ---------------------------------------------------------------------------
 # Avro schemas for manifest list + manifest (spec appendix; field-id
@@ -171,18 +191,123 @@ def _manifest_schema(partition_fields: list[tuple[str, str]]) -> dict:
 
 
 _SPARK_TO_ICEBERG = {
-    "long": ("long", "long"),
-    "bigint": ("long", "long"),
-    "int": ("int", "int"),
-    "integer": ("int", "int"),
-    "double": ("double", "double"),
-    "float": ("float", "float"),
-    "string": ("string", "string"),
-    "boolean": ("boolean", "boolean"),
-    "date": ("date", "int"),
-    "timestamp": ("timestamp", "long"),
-    "timestamp_ntz": ("timestamp", "long"),
+    "long": "long",
+    "bigint": "long",
+    "int": "int",
+    "integer": "int",
+    "double": "double",
+    "float": "float",
+    "string": "string",
+    "boolean": "boolean",
+    "date": "date",
+    "timestamp": "timestamp",
+    "timestamp_ntz": "timestamp",
 }
+
+_ICEBERG_TO_AVRO = {
+    "long": "long", "int": "int", "double": "double", "float": "float",
+    "string": "string", "boolean": "boolean", "date": "int", "timestamp": "long",
+}
+
+# a Hive partition dir's value text -> the partition value, by avro type
+_AVRO_PARSE = {
+    "int": int, "long": int, "double": float, "float": float,
+    "boolean": lambda s: s == "true",
+}
+
+
+def _schema_fields(df: DataFrame) -> list[dict]:
+    """Iceberg schema fields (ids from 1) for ``df``'s columns."""
+    fields = []
+    for i, (name, dt) in enumerate(df.dtypes, start=1):
+        if dt not in _SPARK_TO_ICEBERG:
+            raise NotImplementedError(
+                f"column {name!r}: Spark type {dt} has no Iceberg "
+                "mapping in the native writer"
+            )
+        fields.append(
+            {"id": i, "name": name, "required": False, "type": _SPARK_TO_ICEBERG[dt]}
+        )
+    return fields
+
+
+def _spec(df: DataFrame, spec_by: list[tuple[str, str]]) -> list[dict]:
+    """Partition-spec fields for ``spec_by=[(transform, source), ...]``
+    over ``df``'s columns; refuses a transform the writer cannot compute
+    for the source's type."""
+    dts = dict(df.dtypes)
+    fields = []
+    for j, (tf, src) in enumerate(spec_by):
+        dt = dts.get(src)
+        if dt is None:
+            raise ValueError(f"partition source column {src!r} not in df")
+        if tf.startswith(("bucket[", "truncate[")) and dt not in (
+            "bigint", "int", "smallint", "tinyint",
+        ):
+            raise NotImplementedError(
+                f"{tf} over {dt} column {src!r}: this writer "
+                "hashes/truncates INTEGER keys only (string/"
+                "decimal bucket hashing is not implemented — a "
+                "silent CAST would null out the key)"
+            )
+        if tf in ("year", "month", "day", "hour") and dt not in (
+            "date", "timestamp", "timestamp_ntz",
+        ):
+            raise NotImplementedError(
+                f"{tf} over {dt} column {src!r} (date/timestamp only)"
+            )
+        suffix = re.sub(r"\W+", "", tf.split("[")[0])
+        fields.append({
+            "name": src if tf == "identity" else f"{src}_{suffix}",
+            "transform": tf,
+            "source-id": df.columns.index(src) + 1,
+            "field-id": 1000 + j,
+        })
+    return fields
+
+
+def _spec_of(meta: dict) -> dict:
+    return {s["spec-id"]: s for s in meta["partition-specs"]}[meta["default-spec-id"]]
+
+
+def _partition_fields(meta: dict) -> list[tuple[str, str, str, str]]:
+    """(name, transform, source column, avro type of the value) for each
+    field of the table's default partition spec."""
+    cols = {f["id"]: f for f in meta["schemas"][0]["fields"]}
+    out = []
+    for f in _spec_of(meta)["fields"]:
+        tf, src = f["transform"], cols[f["source-id"]]
+        if tf.startswith(("bucket[", "year", "month", "day")):
+            avro_t = "int"
+        elif tf.startswith(("truncate[", "hour")):
+            avro_t = "long"
+        else:
+            avro_t = _ICEBERG_TO_AVRO[src["type"]]
+        out.append((f["name"], tf, src["name"], avro_t))
+    return out
+
+
+def _new_metadata(path: str, df: DataFrame, spec_by: list[tuple[str, str]]) -> dict:
+    """Metadata of a table without a snapshot yet: ``df``'s schema and the
+    ``spec_by`` partition spec."""
+    schema = _schema_fields(df)
+    return {
+        "format-version": 2,
+        "table-uuid": str(uuid.uuid4()),
+        "location": path,
+        "last-sequence-number": 0,
+        "last-updated-ms": 0,
+        "last-column-id": len(schema),
+        "current-schema-id": 0,
+        "schemas": [{"type": "struct", "schema-id": 0, "fields": schema}],
+        "default-spec-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": _spec(df, spec_by)}],
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "current-snapshot-id": None,
+        "snapshots": [],
+        "properties": {},
+    }
 
 
 def murmur3_32_long(v: int, seed: int = 0) -> int:
@@ -335,8 +460,8 @@ def iceberg_bucket_sql(col: str, n: int) -> str:
 class IcebergNativeTable:
     """A directory-layout ("Hadoop catalog") Iceberg v2 table."""
 
-    # identity partitioning by a high-cardinality column would make the
-    # writer's per-partition loop driver-unbounded — refuse loudly (same
+    # identity partitioning by a high-cardinality column would make one
+    # dir and one manifest entry per value — refuse loudly (same
     # discipline as OlapTable.MUTATION_PARTITION_CAP)
     PARTITION_CAP = 10_000
 
@@ -350,19 +475,20 @@ class IcebergNativeTable:
     def _current_metadata_path(self) -> str:
         hint = os.path.join(self.meta_dir, "version-hint.text")
         if os.path.exists(hint):
-            v = int(open(hint).read().strip())
+            with open(hint) as fh:
+                v = int(fh.read().strip())
             return os.path.join(self.meta_dir, f"v{v}.metadata.json")
         versions = [
             int(m.group(1))
             for f in os.listdir(self.meta_dir)
-            if (m := re.match(r"^v(\d+)\.metadata\.json$", f))
+            if (m := _VERSION_RE.match(f))
         ]
         if not versions:
             raise FileNotFoundError(f"no metadata json under {self.meta_dir}")
         return os.path.join(self.meta_dir, f"v{max(versions)}.metadata.json")
 
     def metadata(self) -> dict:
-        return json.load(open(self._current_metadata_path()))
+        return self._head()[1]
 
     def snapshots(self) -> list[dict]:
         return self.metadata().get("snapshots", [])
@@ -393,30 +519,20 @@ class IcebergNativeTable:
             raise ValueError(
                 f"snapshot {snap_id} not found; have {sorted(snaps)}"
             )
-        spec = {s["spec-id"]: s for s in meta["partition-specs"]}[
-            meta["default-spec-id"]
-        ]
-        part_names = [f["name"] for f in spec["fields"]]
+        fields = _partition_fields(meta)
+        part_names = [name for name, *_ in fields]
         # resolve the caller's filter onto partition-FIELD space: identity
-        # fields match by field/source name; bucket[N] fields accept a
-        # filter on the SOURCE column and hash it to the bucket value
-        src_names = {
-            f["id"]: f["name"] for f in meta["schemas"][0]["fields"]
-        }
+        # fields match by field/source name; transformed fields accept a
+        # filter on the SOURCE column and transform it to the field value
         if partition_filter:
             resolved: dict = {}
             unresolved = dict(partition_filter)
-            for f in spec["fields"]:
-                tf = f["transform"]
-                src = src_names.get(f["source-id"])
-                if f["name"] in unresolved:
-                    resolved[f["name"]] = unresolved.pop(f["name"])
+            for name, tf, src, _ in fields:
+                if name in unresolved:
+                    resolved[name] = unresolved.pop(name)
                 elif src in unresolved:
                     val = unresolved.pop(src)
-                    if tf == "identity":
-                        resolved[f["name"]] = val
-                    else:
-                        resolved[f["name"]] = iceberg_transform(tf, val)
+                    resolved[name] = val if tf == "identity" else iceberg_transform(tf, val)
             if unresolved:
                 raise ValueError(
                     f"filter keys {sorted(unresolved)} match no partition "
@@ -597,7 +713,7 @@ class IcebergNativeTable:
     def _local(self, p: str) -> str:
         return p[7:] if p.startswith("file://") else p
 
-    # -- write path ----------------------------------------------------------
+    # -- write path (files -> _stage -> _commit_metadata) ---------------------
 
     @classmethod
     def write(
@@ -611,13 +727,14 @@ class IcebergNativeTable:
         spec_by: list[tuple[str, str]] | None = None,
         cluster_by: tuple[str, str] | None = None,
         cluster_files: int = 8,
-        staging_salt: str | None = None,
     ) -> "IcebergNativeTable":
-        """Write ``df`` as an Iceberg v2 table (new snapshot per call).
-        mode='overwrite' starts v1; mode='append' adds a snapshot whose
-        manifest list references all prior manifests plus the new one.
-        Data files are written by Spark executors; only the (bounded,
-        partition-count-sized) manifest bookkeeping runs on the driver.
+        """Write ``df`` as a new snapshot.  mode='overwrite' creates the
+        table (v1) and raises FileExistsError if one exists at ``path``;
+        mode='append' adds a snapshot whose manifest list references all
+        prior manifests plus the new one, under the table's own spec and
+        schema.  Data files are written by Spark executors; only the
+        (bounded, partition-count-sized) manifest bookkeeping runs on the
+        driver.
 
         ``bucket_by=(col, N)`` partitions by the spec's bucket[N]
         transform (murmur3 of the long's little-endian bytes, computed
@@ -629,7 +746,8 @@ class IcebergNativeTable:
         partition spec — the shape real tables use, e.g.
         ``[("day", "ts"), ("bucket[4]", "key")]`` — with 'identity'
         accepted as a transform name.  The PARTITION_CAP applies to the
-        count of distinct transformed COMBINATIONS.
+        count of distinct transformed COMBINATIONS.  An append that names
+        a spec must name the table's.
 
         ``cluster_by=(x, y)`` Hilbert-clusters an UNPARTITIONED write
         (the Delta OPTIMIZE ZORDER / Iceberg rewrite_data_files
@@ -638,44 +756,13 @@ class IcebergNativeTable:
         file's parquet min/max stats cover a small rectangle of BOTH
         columns and Spark's scan-side row-group pruning becomes selective
         on either — results are identical, only the layout changes."""
-        spark = df.sparkSession
-        table = cls(spark, path)
-        data_dir = os.path.join(path, "data")
-        os.makedirs(table.meta_dir, exist_ok=True)
-
-        prev_meta, version, seq = None, 1, 1
-        if mode == "append":
-            prev_meta, version, seq = table._next_version_seq()
-        elif mode != "overwrite":
-            raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-
-        # staging_salt: CONCURRENT stagers (REST-catalog optimistic
-        # writers) must not collide on file names before the commit
-        # protocol picks a winner — real Iceberg writers embed a unique
-        # write UUID in every file name for exactly this reason.  The
-        # salt feeds snapshot id, manifest names, the data batch dir and
-        # the staged metadata filename; it never updates version-hint, so
-        # directory-catalog readers cannot observe a half-staged write.
-        tag = f"{version}" if staging_salt is None else f"{version}#{staging_salt}"
-        snap_id = int(uuid.uuid5(uuid.NAMESPACE_URL, f"{path}#{tag}").int % (1 << 62))
-        commit_uuid = str(uuid.uuid5(uuid.NAMESPACE_URL, f"{path}#commit{tag}"))
-        batch_dir = os.path.join(
-            data_dir,
-            f"b{version}" if staging_salt is None else f"b{version}_{staging_salt}",
-        )
-
+        table = cls(df.sparkSession, path)
         if sum(
             x is not None for x in (partition_by, bucket_by, transform_by, spec_by)
         ) > 1:
             raise ValueError(
                 "pass exactly one of partition_by, bucket_by, transform_by, "
                 "spec_by"
-            )
-        if cluster_by and (partition_by or bucket_by or transform_by or spec_by):
-            raise ValueError(
-                "cluster_by applies to unpartitioned writes (cluster "
-                "WITHIN partitions is not implemented — partition pruning "
-                "already covers the partitioned dims)"
             )
         # every legacy single-field knob is sugar for a 1-entry spec_by
         if bucket_by:
@@ -684,312 +771,134 @@ class IcebergNativeTable:
             spec_by = [transform_by]
         elif partition_by:
             spec_by = [("identity", partition_by)]
-        # ---- data files (executor-side parquet write) ----
-        part_fields: list[tuple[str, str]] = []
-        spec_fields_meta: list[tuple[str, str, str]] = []  # (fname, tf, src)
-        entries: list[dict] = []
-        if spec_by:
-            dts = dict(df.dtypes)
-            bdf = df
-            fnames: list[str] = []
-            for j, (tf, bcol) in enumerate(spec_by):
-                dt = dts.get(bcol)
-                if dt is None:
-                    raise ValueError(f"partition source column {bcol!r} not in df")
-                if tf == "identity":
-                    fname, avro_t = bcol, _SPARK_TO_ICEBERG[dt][1]
-                    bdf = bdf.withColumn(f"__ib{j}", F.col(bcol))
-                else:
-                    if tf.startswith(("bucket[", "truncate[")) and dt not in (
-                        "bigint", "int", "smallint", "tinyint",
-                    ):
-                        raise NotImplementedError(
-                            f"{tf} over {dt} column {bcol!r}: this writer "
-                            "hashes/truncates INTEGER keys only (string/"
-                            "decimal bucket hashing is not implemented — a "
-                            "silent CAST would null out the key)"
-                        )
-                    if tf in ("year", "month", "day", "hour") and dt not in (
-                        "date", "timestamp", "timestamp_ntz",
-                    ):
-                        raise NotImplementedError(
-                            f"{tf} over {dt} column {bcol!r} (date/timestamp only)"
-                        )
-                    suffix = re.sub(r"\W+", "", tf.split("[")[0])
-                    fname = f"{bcol}_{suffix}"
-                    avro_t = (
-                        "int"
-                        if tf.startswith(("bucket", "year", "month", "day"))
-                        else "long"
-                    )
-                    bdf = bdf.withColumn(
-                        f"__ib{j}", F.expr(iceberg_transform_sql(tf, bcol))
-                    )
-                part_fields.append((fname, avro_t))
-                spec_fields_meta.append((fname, tf, bcol))
-                fnames.append(fname)
-            ibcols = [f"__ib{j}" for j in range(len(spec_by))]
-            n_combos = bdf.select(*ibcols).distinct().count()
-            if n_combos > cls.PARTITION_CAP:
+        if mode == "append":
+            version, base = table._head()
+            if spec_by is not None and _spec(df, spec_by) != _spec_of(base)["fields"]:
                 raise ValueError(
-                    f"{n_combos} distinct partition values "
-                    f"({len(spec_by)}-field combinations; cap "
-                    f"{cls.PARTITION_CAP}): partitioning by a "
-                    "high-cardinality key"
+                    f"append partitions by {spec_by}, unlike the table's spec "
+                    "(partition evolution is not implemented)"
                 )
-            # ONE data pass: Hive-layout partitionBy on the SYNTHETIC
-            # transform columns.  They are copies, so the source columns
-            # stay in the data files as Iceberg requires — partitionBy
-            # drops only the __ib* helpers.  The old spelling ran one full
-            # filter+write job PER partition value (P scans of the input —
-            # unusable at scale and the dominant cost of the bucket gate);
-            # this is a single job regardless of P.  Dirs are then renamed
-            # from __ibJ=v to <field>=v for the spec-shaped layout.
-            bdf.write.partitionBy(*ibcols).mode("overwrite").parquet(
-                batch_dir
-            )
-            import urllib.parse as _up
-
-            def _parse_part_val(s: str, avro_t: str):
-                if s == "__HIVE_DEFAULT_PARTITION__":
-                    return None
-                s = _up.unquote(s)
-                if avro_t in ("int", "long"):
-                    return int(s)
-                if avro_t in ("double", "float"):
-                    return float(s)
-                if avro_t == "boolean":
-                    return s == "true"
-                return s
-
-            levels: list[list[str]] = [[batch_dir]]
-            for j in range(len(ibcols)):
-                nxt: list[str] = []
-                for parent in levels[-1]:
-                    for child in sorted(os.listdir(parent)):
-                        if not child.startswith(f"__ib{j}="):
-                            continue
-                        new_name = f"{fnames[j]}={child.split('=', 1)[1]}"
-                        os.rename(
-                            os.path.join(parent, child),
-                            os.path.join(parent, new_name),
-                        )
-                        nxt.append(os.path.join(parent, new_name))
-                levels.append(nxt)
-            for leaf in levels[-1]:
-                rel = os.path.relpath(leaf, batch_dir).split(os.sep)
-                part_dict = {
-                    part_fields[j][0]: _parse_part_val(
-                        p.split("=", 1)[1], part_fields[j][1]
-                    )
-                    for j, p in enumerate(rel)
-                }
-                entries.extend(
-                    table._entries_for_dir(leaf, part_dict, snap_id, seq)
+        elif mode == "overwrite":
+            if os.path.exists(os.path.join(table.meta_dir, "v1.metadata.json")):
+                raise FileExistsError(
+                    f"an Iceberg table exists at {path}; mode='append' adds "
+                    "a snapshot to it"
                 )
+            version, base = 0, _new_metadata(path, df, spec_by or [])
         else:
-            out_df = df
-            if cluster_by:
-                from moosestack_spark.ops.layout import cluster_by_hilbert
-
-                cx, cy = cluster_by
-                out_df = cluster_by_hilbert(
-                    df, cx, cy,
-                    num_partitions=cluster_files,
-                    out_col="__ice_hilbert",
-                ).drop("__ice_hilbert")
-            out_df.write.mode("overwrite").parquet(batch_dir)
-            entries = table._entries_for_dir(batch_dir, {}, snap_id, seq)
-
-        # ---- manifest ----
-        manifest_path = os.path.join(table.meta_dir, f"{commit_uuid}-m0.avro")
-        write_container(manifest_path, _manifest_schema(part_fields), entries)
-        n_rows = sum(e["data_file"]["record_count"] for e in entries)
-        new_manifest = {
-            "manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": _summaries_for(entries, part_fields) if part_fields else None,
-        }
-        manifests = [new_manifest]
-        if prev_meta is not None:
-            prev_snap = {
-                s["snapshot-id"]: s for s in prev_meta["snapshots"]
-            }[prev_meta["current-snapshot-id"]]
-            _, prev_manifests = read_container(
-                table._local(prev_snap["manifest-list"])
-            )
-            manifests = prev_manifests + [new_manifest]
-
-        mlist_path = os.path.join(
-            table.meta_dir, f"snap-{snap_id}-1-{commit_uuid}.avro"
-        )
-        write_container(mlist_path, _MANIFEST_LIST_SCHEMA, manifests)
-
-        # ---- metadata json ----
-        schema_fields = []
-        for i, (name, dt) in enumerate(df.dtypes, start=1):
-            ice_t = _SPARK_TO_ICEBERG.get(dt)
-            if ice_t is None:
-                raise NotImplementedError(
-                    f"column {name!r}: Spark type {dt} has no Iceberg "
-                    "mapping in the native writer"
+            raise ValueError(f"mode must be overwrite|append, got {mode!r}")
+        if cluster_by:
+            if _partition_fields(base):
+                raise ValueError(
+                    "cluster_by applies to unpartitioned writes (cluster "
+                    "WITHIN partitions is not implemented — partition pruning "
+                    "already covers the partitioned dims)"
                 )
-            schema_fields.append(
-                {"id": i, "name": name, "required": False, "type": ice_t[0]}
-            )
-        snapshot = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": version,  # deterministic (no wall clock in tests)
-            "manifest-list": mlist_path,
-            "summary": {"operation": "append"},
-            "schema-id": 0,
-        }
-        prev_snapshots = prev_meta["snapshots"] if prev_meta else []
-        meta = {
-            "format-version": 2,
-            "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, path)),
-            "location": path,
-            "last-sequence-number": seq,
-            "last-updated-ms": version,
-            "last-column-id": len(schema_fields),
-            "current-schema-id": 0,
-            "schemas": [
-                {"type": "struct", "schema-id": 0, "fields": schema_fields}
-            ],
-            "default-spec-id": 0,
-            "partition-specs": [
-                {
-                    "spec-id": 0,
-                    "fields": [
-                        {
-                            "name": n,
-                            "transform": tf,
-                            "source-id": [
-                                f["id"]
-                                for f in schema_fields
-                                if f["name"] == src
-                            ][0],
-                            "field-id": 1000 + i,
-                        }
-                        for i, (n, tf, src) in enumerate(spec_fields_meta)
-                    ],
-                }
-            ],
-            "default-sort-order-id": 0,
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "current-snapshot-id": snap_id,
-            "snapshots": prev_snapshots + [snapshot],
-            "properties": {},
-        }
-        _commit_metadata(table.meta_dir, version, meta, staging_salt)
+            from moosestack_spark.ops.layout import cluster_by_hilbert
+
+            df = cluster_by_hilbert(
+                df, *cluster_by, num_partitions=cluster_files,
+                out_col="__ice_hilbert",
+            ).drop("__ice_hilbert")
+        files = table._append_files(df, base)
+        _commit_metadata(
+            table.meta_dir, version + 1, table._stage(base, files, "append")
+        )
         return table
 
-    def _entries_for_dir(
-        self, pdir: str, partition: dict, snap_id: int, seq: int
-    ) -> list[dict]:
-        entries = []
-        for f in sorted(os.listdir(pdir)):
-            if not f.endswith(".parquet"):
-                continue
-            fp = os.path.join(pdir, f)
-            n = self.spark.read.parquet(fp).count()
-            entries.append(
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snap_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": fp,
-                        "file_format": "PARQUET",
-                        "partition": partition,
-                        "record_count": n,
-                        "file_size_in_bytes": os.path.getsize(fp),
-                        "equality_ids": None,
-                    },
-                }
+    def _head(self) -> tuple[int, dict]:
+        """(version, metadata) of the current metadata file: the base a
+        writer stages on; it commits ``version + 1``."""
+        path = self._current_metadata_path()
+        with open(path) as fh:
+            return metadata_version(path), json.load(fh)
+
+    def _append_files(self, df: DataFrame, base: dict) -> list[tuple[str, dict, int]]:
+        """Write ``df``'s rows as data files under ``base``'s spec.  Rows
+        whose schema differs from the table's are refused: a commit here
+        carries no schema change."""
+        if _schema_fields(df) != base["schemas"][0]["fields"]:
+            raise NotImplementedError(
+                "the rows' schema differs from the table's; schema evolution "
+                "(add-schema/set-current-schema updates) is not implemented — "
+                "evolve the schema first or write a new table"
             )
-        return entries
+        return self._write_files(df, _partition_fields(base))
 
-    # -- row-level deletes (writer) -------------------------------------------
+    def _write_files(
+        self, df: DataFrame, fields: list[tuple[str, str, str, str]]
+    ) -> list[tuple[str, dict, int]]:
+        """The one file writer: a single Spark write of ``df`` into a fresh
+        ``data/<uuid4>/``, Hive-partitioned by the spec ``fields``
+        [(name, transform, source, avro type)].  Returns (path, partition,
+        record_count) per non-empty file, the count read from its parquet
+        footer."""
+        import pyarrow.parquet as pq
 
-    def _next_version_seq(self) -> tuple[dict, int, int]:
-        prev_meta = self.metadata()
-        version = (
-            int(
-                re.match(
-                    r"^v(\d+)\.metadata\.json$",
-                    os.path.basename(self._current_metadata_path()),
-                ).group(1)
+        cols = [f"__ib{j}" for j in range(len(fields))]
+        for c, (_, tf, src, _) in zip(cols, fields):
+            df = df.withColumn(
+                c,
+                F.col(src) if tf == "identity"
+                else F.expr(iceberg_transform_sql(tf, src)),
             )
-            + 1
-        )
-        return prev_meta, version, prev_meta["last-sequence-number"] + 1
+        if cols:
+            n = df.select(*cols).distinct().count()
+            if n > self.PARTITION_CAP:
+                raise ValueError(
+                    f"{n} distinct partition values ({len(cols)}-field "
+                    f"combinations; cap {self.PARTITION_CAP}): partitioning "
+                    "by a high-cardinality key"
+                )
+        out_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
+        # the __ib* columns are copies, so the source columns stay in the
+        # files as Iceberg requires; partitionBy drops only the copies
+        df.write.partitionBy(*cols).parquet(out_dir)
+        parents = [out_dir]  # rename __ibJ=v dirs to <field>=v, level by level
+        for c, (name, *_) in zip(cols, fields):
+            renamed = []
+            for parent in parents:
+                for child in os.listdir(parent):
+                    if child.startswith(f"{c}="):
+                        renamed.append(os.path.join(parent, name + child[len(c):]))
+                        os.rename(os.path.join(parent, child), renamed[-1])
+            parents = renamed
+        files = []
+        for root, dirs, names in os.walk(out_dir):
+            dirs.sort()
+            for f in sorted(names):
+                fp = os.path.join(root, f)
+                if f.endswith(".parquet") and (n := pq.read_metadata(fp).num_rows):
+                    raw = partition_values(os.path.relpath(fp, out_dir))
+                    part = {
+                        name: raw[name] and _AVRO_PARSE.get(t, str)(raw[name])
+                        for name, _, _, t in fields
+                    }
+                    files.append((fp, part, n))
+        return files
 
-    def _part_avro_fields(self, meta: dict) -> list[tuple[str, str]]:
-        spec = {s["spec-id"]: s for s in meta["partition-specs"]}[
-            meta["default-spec-id"]
-        ]
-        types = {f["id"]: f["type"] for f in meta["schemas"][0]["fields"]}
-        ice_to_avro = {
-            "long": "long", "int": "int", "double": "double",
-            "float": "float", "string": "string", "boolean": "boolean",
-            "date": "int", "timestamp": "long",
-        }
-        def avro_t(f: dict) -> str:
-            tf = f["transform"]
-            # mirror the writer's rule exactly, so appended manifests use
-            # the same partition-value avro types as the original ones
-            if tf.startswith(("bucket[", "year", "month", "day")):
-                return "int"
-            if tf.startswith(("truncate[", "hour")):
-                return "long"
-            return ice_to_avro[types[f["source-id"]]]
-
-        return [(f["name"], avro_t(f)) for f in spec["fields"]]
-
-    def _commit_delete_snapshot(
+    def _stage(
         self,
-        delete_files: list[tuple[str, int]],
-        content: int,
-        equality_ids: list[int] | None,
+        base: dict,
+        files: list[tuple[str, dict, int]],
         operation: str,
-        staging_salt: str | None = None,
-    ) -> None:
-        """Append a snapshot whose new manifest (content=1 in the manifest
-        list) carries the given delete files.  Prior manifests are reused
-        untouched, so existing data files keep their sequence numbers.
-
-        staging_salt: same contract as the append writer's (line ~645) —
-        a salted commit writes `v{version}-{salt}.metadata.json` and does
-        NOT touch version-hint.text, so a REST-catalog deleter whose
-        commit is ultimately rejected stays invisible to directory-catalog
-        readers of the same path."""
-        prev_meta, version, seq = self._next_version_seq()
-        tag = f"{version}" if staging_salt is None else f"{version}#{staging_salt}"
-        snap_id = int(
-            uuid.uuid5(uuid.NAMESPACE_URL, f"{self.path}#{tag}").int % (1 << 62)
-        )
-        commit_uuid = str(
-            uuid.uuid5(uuid.NAMESPACE_URL, f"{self.path}#commit{tag}")
-        )
-        part_fields = self._part_avro_fields(prev_meta)
+        content: int = 0,
+        equality_ids: list[int] | None = None,
+    ) -> dict:
+        """Stage a snapshot of ``base`` adding ``files`` — data files, or
+        delete files when ``content`` is 1 (position) or 2 (equality): one
+        manifest and one manifest list under uuid4 names and a random
+        snapshot id.  Returns the next metadata; publishes nothing.  A
+        'replace' snapshot (compact) lists only the new manifest; any other
+        keeps the base snapshot's manifests, so their files keep their
+        sequence numbers."""
+        os.makedirs(self.meta_dir, exist_ok=True)
+        snap_id = uuid.uuid4().int >> 66  # a positive 62-bit long
+        seq = base["last-sequence-number"] + 1
+        part_fields = [(name, t) for name, _, _, t in _partition_fields(base)]
         entries = [
             {
-                "status": 1,
+                "status": 1,  # ADDED
                 "snapshot_id": snap_id,
                 "sequence_number": seq,
                 "file_sequence_number": seq,
@@ -997,69 +906,86 @@ class IcebergNativeTable:
                     "content": content,
                     "file_path": fp,
                     "file_format": "PARQUET",
-                    # delete files are not partition-scoped here; the
-                    # reader never prunes delete manifests, so null
-                    # partition values stay correct (see _scan docstring)
-                    "partition": {n: None for n, _ in part_fields},
-                    "record_count": n_rows,
+                    # delete files carry null partition values; the reader
+                    # never prunes delete manifests (see _scan)
+                    "partition": {name: part.get(name) for name, _ in part_fields},
+                    "record_count": n,
                     "file_size_in_bytes": os.path.getsize(fp),
                     "equality_ids": equality_ids,
                 },
             }
-            for fp, n_rows in delete_files
+            for fp, part, n in files
         ]
-        manifest_path = os.path.join(self.meta_dir, f"{commit_uuid}-m0.avro")
+        name = uuid.uuid4()
+        manifest_path = os.path.join(self.meta_dir, f"{name}-m0.avro")
         write_container(manifest_path, _manifest_schema(part_fields), entries)
-        new_manifest = {
+        rows = sum(n for _, _, n in files)
+        manifests = [{
             "manifest_path": manifest_path,
             "manifest_length": os.path.getsize(manifest_path),
             "partition_spec_id": 0,
-            "content": 1,  # deletes
+            "content": 1 if content else 0,
             "sequence_number": seq,
             "min_sequence_number": seq,
             "added_snapshot_id": snap_id,
             "added_files_count": len(entries),
             "existing_files_count": 0,
             "deleted_files_count": 0,
-            "added_rows_count": 0,
+            "added_rows_count": 0 if content else rows,
             "existing_rows_count": 0,
-            "deleted_rows_count": sum(n for _, n in delete_files),
-            "partitions": None,
-        }
-        prev_snap = {s["snapshot-id"]: s for s in prev_meta["snapshots"]}[
-            prev_meta["current-snapshot-id"]
-        ]
-        _, prev_manifests = read_container(self._local(prev_snap["manifest-list"]))
-        mlist_path = os.path.join(
-            self.meta_dir, f"snap-{snap_id}-1-{commit_uuid}.avro"
-        )
-        write_container(
-            mlist_path, _MANIFEST_LIST_SCHEMA, prev_manifests + [new_manifest]
-        )
+            "deleted_rows_count": rows if content else 0,
+            "partitions": _summaries_for(entries, part_fields)
+            if part_fields and not content
+            else None,
+        }]
+        if operation != "replace" and base["snapshots"]:
+            prev = {s["snapshot-id"]: s for s in base["snapshots"]}[
+                base["current-snapshot-id"]
+            ]
+            manifests = read_container(self._local(prev["manifest-list"]))[1] + manifests
+        mlist_path = os.path.join(self.meta_dir, f"snap-{snap_id}-1-{name}.avro")
+        write_container(mlist_path, _MANIFEST_LIST_SCHEMA, manifests)
+        now = int(time.time() * 1000)
         snapshot = {
             "snapshot-id": snap_id,
             "sequence-number": seq,
-            "timestamp-ms": version,
+            "timestamp-ms": now,
             "manifest-list": mlist_path,
             "summary": {"operation": operation},
             "schema-id": 0,
         }
-        meta = dict(prev_meta)
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = version
-        meta["current-snapshot-id"] = snap_id
-        meta["snapshots"] = prev_meta["snapshots"] + [snapshot]
-        _commit_metadata(self.meta_dir, version, meta, staging_salt)
+        return {
+            **base,
+            "last-sequence-number": seq,
+            "last-updated-ms": now,
+            "current-snapshot-id": snap_id,
+            "snapshots": base["snapshots"] + [snapshot],
+        }
 
-    def delete_where(self, condition, staging_salt: str | None = None) -> int:
+    # -- row-level deletes (writer) -------------------------------------------
+
+    def delete_where(self, condition) -> int:
         """Commit a POSITION-delete snapshot removing current rows matching
-        ``condition`` (SQL string or Column).  The (file_path, pos)
-        identities come from the same executor-side scan the reader uses
-        (_metadata.file_path / row_index), written spec-sorted by
-        (file_path, pos).  Returns the number of deleted positions."""
+        ``condition`` (SQL string or Column).  Returns the number of
+        deleted positions; when nothing matches, no snapshot is
+        committed."""
+        version, base = self._head()
+        files = self._position_deletes(condition)
+        if files:
+            _commit_metadata(
+                self.meta_dir, version + 1,
+                self._stage(base, files, "delete", content=1),
+            )
+        return sum(n for _, _, n in files)
+
+    def _position_deletes(self, condition) -> list[tuple[str, dict, int]]:
+        """Position-delete files for the current rows matching
+        ``condition``.  The (file_path, pos) identities come from the same
+        executor-side scan the reader uses (_metadata.file_path /
+        row_index), written spec-sorted by (file_path, pos)."""
         scan = self._scan()
         if not scan["data"]:
-            return 0
+            return []
         cond = F.expr(condition) if isinstance(condition, str) else condition
         matches = (
             self.spark.read.parquet(*[p for p, _ in scan["data"]])
@@ -1074,166 +1000,47 @@ class IcebergNativeTable:
             )
             .orderBy("file_path", "pos")
         )
-        _, version, _ = self._next_version_seq()
-        ddir = (
-            f"b{version}_pos_deletes"
-            if staging_salt is None
-            else f"b{version}_{staging_salt}_pos_deletes"
-        )
-        out_dir = os.path.join(self.path, "data", ddir)
-        matches.write.mode("overwrite").parquet(out_dir)
-        files = [
-            (fp, self.spark.read.parquet(fp).count())
-            for f in sorted(os.listdir(out_dir))
-            if f.endswith(".parquet") and (fp := os.path.join(out_dir, f))
-        ]
-        n = sum(c for _, c in files)
-        if n == 0:
-            return 0  # nothing matched: no snapshot to commit
-        self._commit_delete_snapshot(
-            [f for f in files if f[1] > 0], 1, None, "delete",
-            staging_salt=staging_salt,
-        )
-        return n
+        return self._write_files(matches, [])
 
     def delete_equality(self, keys: DataFrame) -> int:
         """Commit an EQUALITY-delete snapshot: current and PRIOR-sequence
         rows whose values null-safely match any row of ``keys`` (a
         DataFrame whose columns name the equality fields) are deleted.
         Returns the number of key rows written."""
-        meta = self.metadata()
-        col_ids = {f["name"]: f["id"] for f in meta["schemas"][0]["fields"]}
+        version, base = self._head()
+        col_ids = {f["name"]: f["id"] for f in base["schemas"][0]["fields"]}
         missing = [c for c in keys.columns if c not in col_ids]
         if missing:
             raise ValueError(f"equality columns not in table schema: {missing}")
-        _, version, _ = self._next_version_seq()
-        out_dir = os.path.join(self.path, "data", f"b{version}_eq_deletes")
-        keys.distinct().write.mode("overwrite").parquet(out_dir)
-        files = [
-            (fp, self.spark.read.parquet(fp).count())
-            for f in sorted(os.listdir(out_dir))
-            if f.endswith(".parquet") and (fp := os.path.join(out_dir, f))
-        ]
-        n = sum(c for _, c in files)
-        if n == 0:
-            return 0
-        self._commit_delete_snapshot(
-            [f for f in files if f[1] > 0],
-            2,
-            [col_ids[c] for c in keys.columns],
-            "delete",
-        )
-        return n
+        files = self._write_files(keys.distinct(), [])
+        if files:
+            _commit_metadata(
+                self.meta_dir, version + 1,
+                self._stage(
+                    base, files, "delete", content=2,
+                    equality_ids=[col_ids[c] for c in keys.columns],
+                ),
+            )
+        return sum(n for _, _, n in files)
 
     # -- maintenance -----------------------------------------------------------
 
     def compact(self, target_partitions: int | None = None) -> "IcebergNativeTable":
         """OPTIMIZE: materialize the CURRENT live rows (all position and
-        equality deletes applied) into fresh data files and commit a
-        REPLACE snapshot whose manifest list holds ONLY the new manifest —
-        delete files stop being consulted, small files merge, and prior
-        snapshots stay time-travelable until expire_snapshots().  The row
-        rewrite is a distributed Spark write; only manifest bookkeeping
-        runs on the driver."""
-        prev_meta, version, seq = self._next_version_seq()
-        spec = {s["spec-id"]: s for s in prev_meta["partition-specs"]}[
-            prev_meta["default-spec-id"]
-        ]
-        part_names = [f["name"] for f in spec["fields"]]
+        equality deletes applied) into fresh data files under the table's
+        own spec and commit a REPLACE snapshot whose manifest list holds
+        ONLY the new manifest — delete files stop being consulted, small
+        files merge, and prior snapshots stay time-travelable until
+        expire_snapshots().  The row rewrite is one distributed Spark
+        write; only manifest bookkeeping runs on the driver."""
+        version, base = self._head()
         live = self.read()
         if target_partitions:
             live = live.repartition(target_partitions)
-        batch_dir = os.path.join(self.path, "data", f"b{version}_compact")
-        part_fields = self._part_avro_fields(prev_meta)
-        entries: list[dict] = []
-        snap_id = int(
-            uuid.uuid5(uuid.NAMESPACE_URL, f"{self.path}#{version}").int % (1 << 62)
+        files = self._write_files(live, _partition_fields(base))
+        _commit_metadata(
+            self.meta_dir, version + 1, self._stage(base, files, "replace")
         )
-        if part_names and spec["fields"][0]["transform"] != "identity":
-            # transformed partitioning: the partition value is not a data
-            # column — recompute it from the source column with the same
-            # JVM expression the writer used
-            fld = spec["fields"][0]
-            src = {
-                f["id"]: f["name"] for f in prev_meta["schemas"][0]["fields"]
-            }[fld["source-id"]]
-            bdf = live.withColumn(
-                "__ib", F.expr(iceberg_transform_sql(fld["transform"], src))
-            )
-            for bv in sorted(
-                r[0] for r in bdf.select("__ib").distinct().collect()
-            ):
-                pdir = os.path.join(batch_dir, f"{part_names[0]}={bv}")
-                bdf.filter(F.col("__ib") == bv).drop("__ib").write.mode(
-                    "overwrite"
-                ).parquet(pdir)
-                entries.extend(
-                    self._entries_for_dir(
-                        pdir, {part_names[0]: int(bv)}, snap_id, seq
-                    )
-                )
-        elif part_names:
-            values = [
-                r[0] for r in live.select(part_names[0]).distinct().collect()
-            ]
-            if len(values) > self.PARTITION_CAP:
-                raise ValueError(
-                    f"{len(values)} distinct partition values (cap "
-                    f"{self.PARTITION_CAP})"
-                )
-            for v in sorted(values, key=str):
-                pdir = os.path.join(batch_dir, f"{part_names[0]}={v}")
-                live.filter(F.col(part_names[0]) == F.lit(v)).write.mode(
-                    "overwrite"
-                ).parquet(pdir)
-                entries.extend(
-                    self._entries_for_dir(pdir, {part_names[0]: v}, snap_id, seq)
-                )
-        else:
-            live.write.mode("overwrite").parquet(batch_dir)
-            entries = self._entries_for_dir(batch_dir, {}, snap_id, seq)
-        commit_uuid = str(
-            uuid.uuid5(uuid.NAMESPACE_URL, f"{self.path}#commit{version}")
-        )
-        manifest_path = os.path.join(self.meta_dir, f"{commit_uuid}-m0.avro")
-        write_container(manifest_path, _manifest_schema(part_fields), entries)
-        n_rows = sum(e["data_file"]["record_count"] for e in entries)
-        new_manifest = {
-            "manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_files_count": len(entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": _summaries_for(entries, part_fields)
-            if part_fields
-            else None,
-        }
-        mlist_path = os.path.join(
-            self.meta_dir, f"snap-{snap_id}-1-{commit_uuid}.avro"
-        )
-        write_container(mlist_path, _MANIFEST_LIST_SCHEMA, [new_manifest])
-        snapshot = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": version,
-            "manifest-list": mlist_path,
-            "summary": {"operation": "replace"},
-            "schema-id": 0,
-        }
-        meta = dict(prev_meta)
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = version
-        meta["current-snapshot-id"] = snap_id
-        meta["snapshots"] = prev_meta["snapshots"] + [snapshot]
-        _commit_metadata(self.meta_dir, version, meta)
         return self
 
     def expire_snapshots(self, keep_last: int = 1) -> tuple[int, int]:
@@ -1243,14 +1050,14 @@ class IcebergNativeTable:
         remove_orphan_files maintenance pair.  Returns (snapshots_dropped,
         files_deleted).  Time travel to expired snapshots stops working,
         exactly as in Iceberg."""
-        prev_meta, version, _ = self._next_version_seq()
-        snaps = prev_meta["snapshots"]
+        version, base = self._head()
+        snaps = base["snapshots"]
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         if len(snaps) <= keep_last:
             return (0, 0)
         kept = snaps[-keep_last:]
-        if prev_meta["current-snapshot-id"] not in {
+        if base["current-snapshot-id"] not in {
             s["snapshot-id"] for s in kept
         }:
             raise ValueError("expire would drop the current snapshot")
@@ -1280,10 +1087,10 @@ class IcebergNativeTable:
             if f.endswith(".avro") and fp not in referenced:
                 os.remove(fp)
                 deleted += 1
-        meta = dict(prev_meta)
-        meta["snapshots"] = kept
-        meta["last-updated-ms"] = version
-        _commit_metadata(self.meta_dir, version, meta)
+        _commit_metadata(
+            self.meta_dir, version + 1,
+            {**base, "snapshots": kept, "last-updated-ms": int(time.time() * 1000)},
+        )
         return (len(snaps) - len(kept), deleted)
 
 

@@ -32,33 +32,38 @@ version-hint.
 Scale notes (100 TB): the catalog exchange is O(metadata) — a LoadTable
 response carries one JSON document and commits carry one snapshot; no
 data moves through the catalog.  All data-file I/O stays on executors via
-IcebergNativeTable.  The optimistic-concurrency loop is the standard
-multi-writer story: conflicts cost one re-stage of *manifest bookkeeping*
-(driver-side, manifest-count-sized), never a rewrite of data files
-already staged — the rebase reuses them only when partitioning allows;
-this implementation restages the batch, which is the safe general answer
-for the append-only shapes it serves.
+IcebergNativeTable.
+
+Staging and concurrency: a writer stages on the metadata the catalog
+served, with the native table's own stager (``IcebergNativeTable._stage``:
+one manifest and one manifest list under uuid4 names, a random snapshot
+id), and builds its commit body from the metadata dict that returns; it
+publishes no metadata file, so directory-catalog readers of the same path
+never see a staged write.  An append writes its data files once; a 409
+reloads the table and re-stages only the manifests on the new snapshot.
+A delete re-scans on every attempt, since its position-delete files name
+rows of the snapshot it read.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import threading
 import urllib.error
 import urllib.request
-import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from moosestack_spark.catalog.iceberg_native import IcebergNativeTable
+from moosestack_spark.catalog.iceberg_native import IcebergNativeTable, metadata_version
+from moosestack_spark.catalog.txlog import CommitConflict
 
 
-class CommitConflict(Exception):
-    """Server rejected a commit requirement (HTTP 409): reload and rebase."""
+def _load_json(path: str) -> dict:
+    with open(path) as fh:
+        return json.load(fh)
 
 
 class _CatalogState:
@@ -66,8 +71,8 @@ class _CatalogState:
 
     The authoritative pointer is ``tables[(ns, name)] = metadata_location``;
     server-authored metadata versions are written next to the table under
-    ``<location>/rest-metadata/v{n}.metadata.json`` so they never collide
-    with client STAGED files in ``<location>/metadata/``.
+    ``<location>/rest-metadata/v{n}.metadata.json``, apart from the
+    directory catalog's ``<location>/metadata/`` versions.
     """
 
     def __init__(self) -> None:
@@ -75,23 +80,6 @@ class _CatalogState:
         self.ns_props: dict[str, dict] = {}
         self.tables: dict[tuple[str, str], str] = {}
         self.lock = threading.Lock()
-
-
-def _stage_salt() -> str:
-    """A staging salt no other writer or attempt, in any process or table
-    handle, shares: staged metadata is published put-if-absent, so a
-    shared salt would make the second stager fail."""
-    return f"w{uuid.uuid4().hex[:12]}"
-
-
-def _meta_version(metadata_location: str) -> int:
-    m = re.match(
-        r"^v(\d+)(-[\w.-]+)?\.metadata\.json$",
-        os.path.basename(metadata_location),
-    )
-    if not m:
-        raise ValueError(f"unparseable metadata filename: {metadata_location}")
-    return int(m.group(1))
 
 
 def _check_requirements(reqs: list[dict], current: Optional[dict]) -> Optional[str]:
@@ -176,7 +164,7 @@ def _validate_table_change(
     the same code/ordering the single-table route has always used (409
     before 404: a failed requirement wins over table-missing)."""
     loc = st.tables.get((ns, tbl))
-    current = json.load(open(loc)) if loc else None
+    current = _load_json(loc) if loc else None
     fail = _check_requirements(reqs, current)
     if fail:
         raise _CommitError(409, f"{ns}.{tbl}: {fail}", "CommitFailedException")
@@ -195,10 +183,10 @@ def _write_new_version(loc: str, new_meta: dict) -> str:
     transaction can write every file before swapping ANY pointer."""
     out_dir = os.path.join(new_meta["location"], "rest-metadata")
     os.makedirs(out_dir, exist_ok=True)
-    new_v = _meta_version(loc) + 1
-    new_loc = os.path.join(out_dir, f"v{new_v}.metadata.json")
+    new_loc = os.path.join(out_dir, f"v{metadata_version(loc) + 1}.metadata.json")
     tmp = new_loc + ".tmp"
-    json.dump(new_meta, open(tmp, "w"), indent=1)
+    with open(tmp, "w") as fh:
+        json.dump(new_meta, fh, indent=1)
     os.replace(tmp, new_loc)
     return new_loc
 
@@ -323,7 +311,7 @@ class IcebergRestCatalogServer:
                         200,
                         {
                             "metadata-location": loc,
-                            "metadata": json.load(open(loc)),
+                            "metadata": _load_json(loc),
                             "config": {},
                         },
                     )
@@ -374,7 +362,7 @@ class IcebergRestCatalogServer:
                         200,
                         {
                             "metadata-location": loc,
-                            "metadata": json.load(open(loc)),
+                            "metadata": _load_json(loc),
                         },
                     )
                 elif (
@@ -600,16 +588,53 @@ class IcebergRestCatalog:
         )
 
 
-def _pinned_table_cls(metadata_path: str) -> type:
-    """An IcebergNativeTable subclass whose current metadata is the
-    CATALOG-provided location (not the directory's version-hint) — reads
-    and staged appends both base on the catalog's view of the table."""
+def _pinned(spark: SparkSession, loaded: dict) -> IcebergNativeTable:
+    """A native table whose current metadata is the CATALOG-served
+    location of ``loaded`` (not the directory's version-hint) — reads and
+    staged writes both base on the catalog's view of the table."""
 
     class _Pinned(IcebergNativeTable):
         def _current_metadata_path(self) -> str:
-            return metadata_path
+            return loaded["metadata-location"]
 
-    return _Pinned
+    return _Pinned(spark, loaded["metadata"]["location"])
+
+
+def _commit_body(loaded: dict, staged: dict) -> tuple[list[dict], list[dict]]:
+    """(requirements, updates) that commit the newest snapshot of the
+    ``staged`` metadata dict on top of the ``loaded`` table."""
+    snap = staged["snapshots"][-1]
+    reqs = [
+        {
+            "type": "assert-ref-snapshot-id",
+            "ref": "main",
+            "snapshot-id": loaded["metadata"].get("current-snapshot-id"),
+        }
+    ]
+    updates = [
+        {"action": "add-snapshot", "snapshot": snap},
+        {
+            "action": "set-snapshot-ref",
+            "ref-name": "main",
+            "type": "branch",
+            "snapshot-id": snap["snapshot-id"],
+        },
+    ]
+    return reqs, updates
+
+
+def _retrying(what: str, attempt, max_retries: int):
+    """Run ``attempt()`` until it returns without a 409, at most
+    ``max_retries`` times."""
+    last: Exception | None = None
+    for _ in range(max_retries):
+        try:
+            return attempt()
+        except CommitConflict as exc:
+            last = exc
+    raise CommitConflict(
+        f"{what} lost {max_retries} optimistic races; last server answer: {last}"
+    )
 
 
 class IcebergRestTable:
@@ -646,11 +671,7 @@ class IcebergRestTable:
         current metadata retains is readable — same contract as the
         directory-catalog reader)."""
         loaded = self.catalog.load_table(self.ns, self.name)
-        loc = loaded["metadata-location"]
-        table_path = loaded["metadata"]["location"]
-        return _pinned_table_cls(loc)(spark, table_path).read(
-            snapshot_id=snapshot_id
-        )
+        return _pinned(spark, loaded).read(snapshot_id=snapshot_id)
 
     def snapshots(self, spark: SparkSession = None) -> list[dict]:
         return self.catalog.load_table(self.ns, self.name)["metadata"].get(
@@ -658,132 +679,68 @@ class IcebergRestTable:
         )
 
     def append(self, df: DataFrame, max_retries: int = 3) -> dict:
-        """Load → stage append on the loaded metadata → commit with
-        ``assert-ref-snapshot-id``; on 409 reload and rebase (restage).
-        Returns the server's CommitTableResponse."""
-        last: Exception | None = None
-        for _ in range(max_retries):
+        """Write ``df``'s data files once, then load → stage on the loaded
+        metadata → commit with ``assert-ref-snapshot-id``; on 409 reload
+        and re-stage the manifests.  Returns the server's
+        CommitTableResponse."""
+        files = self._write(df)
+
+        def attempt() -> dict:
             loaded = self.catalog.load_table(self.ns, self.name)
-            reqs, updates = self._stage(df, loaded)
-            try:
-                return self.catalog.commit_table(
-                    self.ns, self.name, reqs, updates
-                )
-            except CommitConflict as exc:
-                last = exc
-        raise CommitConflict(
-            f"append to {self.ns}.{self.name} lost {max_retries} optimistic "
-            f"races; last server answer: {last}"
-        )
+            return self.catalog.commit_table(
+                self.ns, self.name, *self._stage(df, loaded, files)
+            )
+
+        return _retrying(f"append to {self.ns}.{self.name}", attempt, max_retries)
 
     def delete_where(self, spark: SparkSession, condition, max_retries: int = 3) -> int:
-        """Row-level delete through the commit protocol: stage a position-
-        delete snapshot with the native writer (pinned to the catalog's
-        metadata), then commit it with the same optimistic retry loop as
-        append.  Returns the number of deleted positions.
+        """Row-level delete through the commit protocol: each attempt scans
+        the catalog's current snapshot, writes the position-delete files of
+        its matching rows, stages them and commits with the same optimistic
+        retry loop as append.  Returns the number of deleted positions; 0
+        when nothing matched, without a commit."""
 
-        Delete staging gets the SAME salt treatment as appends (_stage):
-        the staged metadata is `v{N}-{salt}.metadata.json` and
-        version-hint.text is untouched, so a delete whose REST commit is
-        rejected on every retry stays invisible to directory-catalog
-        readers of the same path — the staged-write invariant holds for
-        deletes too, and concurrent delete stagers never collide."""
-        last: Exception | None = None
-        for _ in range(max_retries):
+        def attempt() -> int:
             loaded = self.catalog.load_table(self.ns, self.name)
-            pinned = _pinned_table_cls(loaded["metadata-location"])(
-                spark, loaded["metadata"]["location"]
-            )
-            salt = _stage_salt()
-            n = pinned.delete_where(condition, staging_salt=salt)
-            if n == 0:
-                return 0  # nothing matched: no snapshot staged, no commit
-            reqs, updates = self._commit_body_from_staged(loaded, salt=salt)
-            try:
-                self.catalog.commit_table(self.ns, self.name, reqs, updates)
-                return n
-            except CommitConflict as exc:
-                last = exc
-        raise CommitConflict(
-            f"delete on {self.ns}.{self.name} lost {max_retries} optimistic "
-            f"races; last server answer: {last}"
-        )
+            table = _pinned(spark, loaded)
+            files = table._position_deletes(condition)
+            if files:
+                staged = table._stage(loaded["metadata"], files, "delete", content=1)
+                self.catalog.commit_table(
+                    self.ns, self.name, *_commit_body(loaded, staged)
+                )
+            return sum(n for _, _, n in files)
 
-    def _stage(self, df: DataFrame, loaded: dict) -> tuple[list[dict], list[dict]]:
-        """Write data files + manifests + a staged metadata json BASED ON
-        the loaded metadata-location, and build the commit body from the
-        staged snapshot.  Every attempt stages under a UNIQUE salt so
-        concurrent writers (or a retry racing its own past attempt) never
-        collide on staged file names — the commit protocol alone decides
-        the winner, exactly the real-Iceberg model."""
-        salt = _stage_salt()
-        table_path = loaded["metadata"]["location"]
-        _pinned_table_cls(loaded["metadata-location"]).write(
-            df, table_path, mode="append", staging_salt=salt
-        )
-        return self._commit_body_from_staged(loaded, salt=salt)
+        return _retrying(f"delete on {self.ns}.{self.name}", attempt, max_retries)
 
-    def _commit_body_from_staged(
-        self, loaded: dict, salt: Optional[str] = None
+    def _write(self, df: DataFrame) -> list[tuple[str, dict, int]]:
+        """Write ``df``'s data files under the catalog's current spec."""
+        loaded = self.catalog.load_table(self.ns, self.name)
+        return _pinned(df.sparkSession, loaded)._append_files(df, loaded["metadata"])
+
+    def _stage(
+        self, df: DataFrame, loaded: dict, files: Optional[list] = None
     ) -> tuple[list[dict], list[dict]]:
-        """Build (requirements, updates) from the staged metadata file the
-        native writer just produced: always base_version + 1 (the writer
-        parses the pinned basename), salt-suffixed when staged via
-        _stage."""
-        base_meta = loaded["metadata"]
-        base_snap = base_meta.get("current-snapshot-id")
-        meta_dir = os.path.join(base_meta["location"], "metadata")
-        staged_v = _meta_version(loaded["metadata-location"]) + 1
-        staged_name = (
-            f"v{staged_v}.metadata.json"
-            if salt is None
-            else f"v{staged_v}-{salt}.metadata.json"
-        )
-        staged_meta = json.load(open(os.path.join(meta_dir, staged_name)))
-        # The commit body carries ONLY snapshot updates; a staged write
-        # whose schema drifted from the catalog's would silently leave the
-        # server metadata describing columns the new files don't have (or
-        # miss ones they do).  Spec-correct schema evolution is an
-        # add-schema/set-current-schema update pair — not wired yet, so
-        # refuse loudly instead of corrupting the table description.
-        if staged_meta["schemas"] != base_meta.get("schemas"):
-            raise NotImplementedError(
-                "staged write changes the table schema; schema evolution "
-                "through the REST commit protocol (add-schema/"
-                "set-current-schema updates) is not implemented — evolve "
-                "the schema first or write a new table"
-            )
-        snap = staged_meta["snapshots"][-1]
-        reqs = [
-            {
-                "type": "assert-ref-snapshot-id",
-                "ref": "main",
-                "snapshot-id": base_snap,
-            }
-        ]
-        updates = [
-            {"action": "add-snapshot", "snapshot": snap},
-            {
-                "action": "set-snapshot-ref",
-                "ref-name": "main",
-                "type": "branch",
-                "snapshot-id": snap["snapshot-id"],
-            },
-        ]
-        return reqs, updates
+        """Commit body appending ``df`` to the ``loaded`` table: its data
+        files (``files`` if already written, else written now) staged on the
+        loaded metadata."""
+        table = _pinned(df.sparkSession, loaded)
+        if files is None:
+            files = table._append_files(df, loaded["metadata"])
+        return _commit_body(loaded, table._stage(loaded["metadata"], files, "append"))
 
 
 def multi_table_append(
     handles_dfs: list[tuple["IcebergRestTable", DataFrame]],
     max_retries: int = 3,
 ) -> dict:
-    """ATOMIC multi-table append through the transaction protocol: stage
-    every table's append on its catalog-loaded metadata, then one
-    transactions/commit carrying assert-ref-snapshot-id for EVERY table —
-    either all tables advance or none do (the server validates all, then
-    swaps all pointers under its lock).  On 409 reload + restage every
-    table and retry: a conflict on ANY table rebases the WHOLE
-    transaction, the all-or-nothing analogue of append()'s loop.
+    """ATOMIC multi-table append through the transaction protocol: write
+    every table's data files once, stage each on its catalog-loaded
+    metadata, then one transactions/commit carrying assert-ref-snapshot-id
+    for EVERY table — either all tables advance or none do (the server
+    validates all, then swaps all pointers under its lock).  On 409 reload
+    + re-stage every table and retry: a conflict on ANY table rebases the
+    WHOLE transaction, the all-or-nothing analogue of append()'s loop.
 
     Return contract (changed in r11, ADVICE r11): the server answers a
     spec-compliant 204 No Content, so the returned summary is synthesized
@@ -804,27 +761,18 @@ def multi_table_append(
         raise ValueError(
             f"multi_table_append: duplicate table in transaction: {names}"
         )
-    last: Exception | None = None
-    for _ in range(max_retries):
-        changes = []
-        for h, df in handles_dfs:
-            loaded = cat.load_table(h.ns, h.name)
-            reqs, updates = h._stage(df, loaded)
-            changes.append((h.ns, h.name, reqs, updates))
-        try:
-            cat.commit_transaction(changes)  # 204 No Content per spec
-            # the server body is empty by spec; build the summary
-            # client-side (identifiers only — metadata locations are one
-            # load_table away for callers that need them)
-            return {
-                "results": [
-                    {"identifier": {"namespace": [ns], "name": name}}
-                    for ns, name in names
-                ]
-            }
-        except CommitConflict as exc:
-            last = exc
-    raise CommitConflict(
-        f"transaction over {names} lost {max_retries} optimistic races; "
-        f"last server answer: {last}"
-    )
+    files = [h._write(df) for h, df in handles_dfs]
+
+    def attempt() -> dict:
+        cat.commit_transaction([  # 204 No Content per spec
+            (h.ns, h.name, *h._stage(df, cat.load_table(h.ns, h.name), fs))
+            for (h, df), fs in zip(handles_dfs, files)
+        ])
+        return {
+            "results": [
+                {"identifier": {"namespace": [ns], "name": name}}
+                for ns, name in names
+            ]
+        }
+
+    return _retrying(f"transaction over {names}", attempt, max_retries)

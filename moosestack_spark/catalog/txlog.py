@@ -42,7 +42,9 @@ _CKPT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
 
 
 class CommitConflict(RuntimeError):
-    """A commit removes a file that a concurrent commit already removed."""
+    """A commit lost an optimistic race: it removes a file that a
+    concurrent commit already removed, or (the Iceberg REST client) the
+    catalog refused its requirements with HTTP 409."""
 
 
 def publish(path: str, text: str) -> None:

@@ -77,6 +77,34 @@ def test_append_creates_snapshot_and_time_travel(table, spark):
     assert hint.strip() == "2"
 
 
+def test_overwrite_of_an_existing_table_raises_and_keeps_its_rows(table, spark):
+    with pytest.raises(FileExistsError):
+        IcebergNativeTable.write(_df(spark, 500, 510), table.path, partition_by="p")
+    assert sorted(r.id for r in table.read().collect()) == list(range(90))
+    assert len(table.snapshots()) == 1
+
+
+def test_write_jobs_do_not_grow_with_file_count(spark, tmp_path):
+    """Record counts come from the parquet footers: a 16-bucket write runs
+    as many Spark jobs as a 4-bucket write of the same rows."""
+    import uuid
+
+    df = spark.range(0, 5000).selectExpr("id AS k")
+    sc = spark.sparkContext
+    jobs, files = {}, {}
+    for n in (4, 16):
+        group = f"ice-write-{n}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "iceberg write")
+        try:
+            t = IcebergNativeTable.write(df, str(tmp_path / f"b{n}"), bucket_by=("k", n))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        files[n] = len(t.data_files())
+    assert files[16] > files[4] >= 4
+    assert jobs[16] == jobs[4]
+
+
 def test_unknown_snapshot_raises(table):
     with pytest.raises(ValueError, match="snapshot"):
         table.read(snapshot_id=999)
@@ -358,7 +386,7 @@ except ImportError:  # pragma: no cover
 
 def test_multifield_spec_write_append_prune(spark, tmp_path):
     """2-field spec (identity(cat), bucket[2](id)): write, append a second
-    snapshot (exercising _part_avro_fields on a multi-field spec), read
+    snapshot (exercising _partition_fields on a multi-field spec), read
     back everything, and prune on both source columns at once."""
     df = spark.range(40).selectExpr(
         "id", "CAST(id % 3 AS STRING) AS cat", "id * 10 AS v"

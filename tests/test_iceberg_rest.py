@@ -5,6 +5,7 @@ rebase), read-after-commit, bearer auth, and server-side update validation.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -209,8 +210,8 @@ def test_schema_drift_refused_on_commit(spark, cat, warehouse):
 
 def test_concurrent_appenders_all_land_exactly_once(spark, cat, warehouse):
     """4 threads x 2 appends race on one table through the commit
-    protocol: salted staging means no writer ever overwrites another's
-    staged files, 409s force rebases, and the final table holds every
+    protocol: uuid-named staging means no writer ever overwrites
+    another's staged files, 409s force rebases, and the final table holds every
     batch exactly once with 1 + 8 snapshots."""
     import threading
 
@@ -405,3 +406,54 @@ def test_racing_transactions_overlapping_tables(spark, cat, warehouse):
         list(range(5)) + list(range(200, 205))
     # the shared table saw both transactions: 1 create + 2 txn snapshots
     assert len(hy.snapshots()) == 3
+
+
+def test_commit_conflict_is_the_table_log_error():
+    """catalog/ has one "lost an optimistic commit" error."""
+    from moosestack_spark.catalog import txlog
+
+    assert CommitConflict is txlog.CommitConflict
+
+
+def test_rest_staging_publishes_no_metadata_file(spark, cat, warehouse):
+    """Appends and deletes through the catalog stage manifests only: the
+    table's own metadata dir keeps just the v1 it was created with."""
+    cat.create_namespace("ns")
+    h = IcebergRestTable.create(
+        cat, "ns", "t7", _rows(spark, 0, 10), warehouse + "/t7"
+    )
+    h.append(_rows(spark, 10, 20))
+    assert h.delete_where(spark, "k = 3") == 1
+    meta_dir = os.path.join(warehouse, "t7", "metadata")
+    assert [f for f in os.listdir(meta_dir) if f.endswith(".json")] == [
+        "v1.metadata.json"
+    ]
+    assert sorted(r.k for r in h.read(spark).collect()) == [
+        k for k in range(20) if k != 3
+    ]
+
+
+def test_append_retry_restages_manifests_only(spark, cat, warehouse, monkeypatch):
+    """A 409 on the first commit: the retry re-stages on the reloaded
+    metadata and reuses the data files the append already wrote."""
+    from moosestack_spark.catalog.iceberg_rest import IcebergRestCatalog
+
+    cat.create_namespace("ns")
+    h = IcebergRestTable.create(
+        cat, "ns", "t8", _rows(spark, 0, 10), warehouse + "/t8"
+    )
+    real = IcebergRestCatalog.commit_table
+    calls = []
+
+    def conflict_once(self, *a, **kw):
+        calls.append(a)
+        if len(calls) == 1:
+            raise CommitConflict("injected 409")
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(IcebergRestCatalog, "commit_table", conflict_once)
+    h.append(_rows(spark, 10, 20))
+    assert len(calls) == 2
+    # one data dir for the create, one for the append: written once
+    assert len(os.listdir(os.path.join(warehouse, "t8", "data"))) == 2
+    assert sorted(r.k for r in h.read(spark).collect()) == list(range(20))

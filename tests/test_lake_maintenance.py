@@ -74,14 +74,23 @@ def test_iceberg_expire_keeps_current(spark, tmp_path):
     assert table.expire_snapshots(keep_last=5) == (0, 0)
 
 
-def test_iceberg_compact_partitioned(spark, tmp_path):
+@pytest.mark.parametrize(
+    "spec",
+    [{"partition_by": "p"}, {"spec_by": [("bucket[4]", "k"), ("identity", "p")]}],
+    ids=["identity", "bucket_identity"],
+)
+def test_iceberg_compact_partitioned(spark, tmp_path, spec):
     path = str(tmp_path / "t")
-    table = IcebergNativeTable.write(_df(spark), path, partition_by="p")
+    table = IcebergNativeTable.write(_df(spark), path, **spec)
     table.delete_where("k % 7 = 2")
     pre = sorted(r.k for r in table.read(partition_filter={"p": "1"}).collect())
     table.compact()
     post = sorted(r.k for r in table.read(partition_filter={"p": "1"}).collect())
     assert post == pre == [k for k in range(80) if k % 3 == 1 and k % 7 != 2]
+    # the rewrite keeps the table's layout: one dir level per spec field
+    fields = [f["name"] for f in table.metadata()["partition-specs"][0]["fields"]]
+    for f in table.data_files():
+        assert [d.split("=")[0] for d in f.split(os.sep)[-len(fields) - 1:-1]] == fields
 
 
 def test_delta_compact_materializes_dvs(spark, tmp_path):

@@ -292,3 +292,31 @@ def test_iceberg_commit_race_loser_raises(spark, tmp_path, monkeypatch):
     table = ice.IcebergNativeTable(spark, path)
     assert open(os.path.join(table.meta_dir, "version-hint.text")).read() == "2"
     assert sorted(r.id for r in table.read().collect()) == list(range(8))
+
+
+def test_iceberg_late_writer_leaves_the_winners_rows(spark, tmp_path, monkeypatch):
+    """A rival appends and commits v2 after this writer read v1 as its base:
+    the late writer raises, and the table reads exactly the committed rows
+    (the two writers share no data dir and no manifest name)."""
+    from moosestack_spark.catalog import iceberg_native as ice
+
+    path = str(tmp_path / "t")
+    ice.IcebergNativeTable.write(spark.range(5).selectExpr("id"), path)
+    real = ice.IcebergNativeTable._current_metadata_path
+    late = {}
+
+    def base_then_a_rival(self):
+        if not late:  # the late writer resolves its base, then a rival commits
+            late.update(table=self, base=real(self))
+            ice.IcebergNativeTable.write(spark.range(5, 8).selectExpr("id"), path,
+                                         mode="append")
+        return late["base"] if self is late["table"] else real(self)
+
+    monkeypatch.setattr(ice.IcebergNativeTable, "_current_metadata_path",
+                        base_then_a_rival)
+    with pytest.raises(FileExistsError):
+        ice.IcebergNativeTable.write(spark.range(100, 103).selectExpr("id"), path,
+                                     mode="append")
+    assert os.path.basename(late["base"]) == "v1.metadata.json"
+    table = ice.IcebergNativeTable(spark, path)
+    assert sorted(r.id for r in table.read().collect()) == list(range(8))
